@@ -53,7 +53,7 @@ object ProfileOptimize {
       val schema = DataType.fromJson(
         spark.table(s"$w.ns.pts").schema.json).asInstanceOf[StructType]
       val (rows, _) = t("read segments")(
-        segs.toArray.flatMap(p => GraftSegmentIO.read(p, schema)))
+        segs.toArray.flatMap(p => GraftSegmentIO.readAll(p, schema)))
       println(s"  rows: ${rows.length}")
       val (key, _) = t("zcurve keyFn")(
         GraftZCurve.keyFn(schema, Seq("x", "y"), rows))

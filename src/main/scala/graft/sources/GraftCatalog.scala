@@ -9267,35 +9267,48 @@ case class GraftKeyedSegmentPartition(segs: Seq[GraftSegmentScanPartition],
   override def partitionKey(): InternalRow = key
 }
 
-/** Executor-side segment materialization shared by every reader that
-  * consumes a [[GraftSegmentScanPartition]]. */
+/** Executor-side segment streaming shared by every reader that
+  * consumes a [[GraftSegmentScanPartition]]: one parquet open per
+  * partition, decoding only the projected columns, with delete-vector
+  * and position-view filtering by ORIGINAL file position. */
 private[sources] object GraftSegmentReads {
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-  import org.apache.spark.sql.types.IntegerType
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 
   def rowsOf(s: GraftSegmentScanPartition): Iterator[InternalRow] = {
     val fileSchema = DataType.fromJson(s.schemaJson)
       .asInstanceOf[StructType]
-    val all = GraftSegmentIO.read(java.nio.file.Paths.get(s.ref), fileSchema)
+    val path = java.nio.file.Paths.get(s.ref)
+    // live positions: off the delete vector and, for a position view,
+    // inside (or, with `selExclude`, outside) its selection
+    val dead =
+      if (s.dead.isEmpty) null
+      else scala.collection.immutable.BitSet(s.dead: _*)
+    val selBs =
+      if (s.sel.isEmpty && !s.selExclude) null
+      else scala.collection.immutable.BitSet(s.sel: _*)
+    def live(p: Int): Boolean =
+      (dead == null || !dead.contains(p)) &&
+        (selBs == null || selBs.contains(p) != s.selExclude)
     if (s.metaCols.nonEmpty) {
       // metadata-augmented read: emit live positions with their
       // ORIGINAL row addresses (_file_id, _row_pos). A position view's
       // selection filters WHICH positions emit; the addresses stay the
-      // base file's (the view and the base agree on every shared row)
-      val dead =
-        if (s.dead.isEmpty) scala.collection.immutable.BitSet.empty
-        else scala.collection.immutable.BitSet(s.dead: _*)
-      val selBs =
-        if (s.sel.isEmpty && !s.selExclude) null
-        else scala.collection.immutable.BitSet(s.sel: _*)
+      // base file's (the view and the base agree on every shared row).
+      // `_row_probe` hashes the whole stored row, so only it makes the
+      // read decode every column
+      val probing = s.metaCols.contains("_row_probe")
+      val rows = GraftSegmentIO.read(path, fileSchema,
+        if (probing) null else s.project)
+      val width = if (probing) fileSchema.length else s.project.length
       val proj = UnsafeProjection.create(
-        s.project.toIndexedSeq.map(i => BoundReference(i,
-          fileSchema.fields(i).dataType, fileSchema.fields(i).nullable)
-          : org.apache.spark.sql.catalyst.expressions.Expression) ++
+        s.project.toIndexedSeq.zipWithIndex.map { case (i, j) =>
+          BoundReference(if (probing) i else j,
+            fileSchema.fields(i).dataType, fileSchema.fields(i).nullable)
+            : Expression
+        } ++
         s.metaCols.zipWithIndex.map { case (n, j) =>
-          BoundReference(fileSchema.length + j, GraftTable.metaTypeOf(n),
-            nullable = GraftTable.metaNullable(n))
-            : org.apache.spark.sql.catalyst.expressions.Expression
+          BoundReference(width + j, GraftTable.metaTypeOf(n),
+            nullable = GraftTable.metaNullable(n)): Expression
         })
       val joined = new JoinedRow
       val refStr =
@@ -9303,11 +9316,10 @@ private[sources] object GraftSegmentReads {
       // row tracking: arithmetic from the shipped (base, ver), or the
       // explicit sidecar vectors loaded once per partition, executor-side
       lazy val sidecar: (Array[Long], Array[Long]) =
-        GraftRowIdSidecar.read(java.nio.file.Paths.get(s.ref))
+        GraftRowIdSidecar.read(path)
       lazy val probeProj = UnsafeProjection.create(
         fileSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i, f.dataType, f.nullable)
-            : org.apache.spark.sql.catalyst.expressions.Expression
+          BoundReference(i, f.dataType, f.nullable): Expression
         })
       def idOf(p: Int): Any =
         if (!s.tracked) null
@@ -9317,46 +9329,22 @@ private[sources] object GraftSegmentReads {
         if (!s.tracked) null
         else if (s.trackExplicit) (sidecar._2(p): java.lang.Long): Any
         else (s.trackVer: java.lang.Long): Any
-      Iterator.range(0, all.length)
-        .filter(p => !dead.contains(p) &&
-          (selBs == null || selBs.contains(p) != s.selExclude))
-        .map { p =>
-          val meta = new GenericInternalRow(s.metaCols.map {
-            case "_file_id" => s.fid: Any
-            case "_row_pos" => p: Any
-            case "_file_ref" => refStr: Any
-            case "_row_id" => idOf(p)
-            case "_row_commit_version" => verOf(p)
-            case "_row_probe" =>
-              (GraftReplaceDataOps.probeOf(probeProj, all(p))
-                : java.lang.Long): Any
-          }.toArray)
-          proj(joined.apply(all(p), meta))
-        }
-    } else {
-      val afterSel =
-        if (s.sel.isEmpty && !s.selExclude) all
-        else {
-          val bs = scala.collection.immutable.BitSet(s.sel: _*)
-          if (s.selExclude) GraftDataFile.liveRows(all, bs)
-          else s.sel.map(all(_)) // ascending positions — order preserved
-        }
-      val rows =
-        if (s.dead.isEmpty) afterSel
-        else GraftDataFile.liveRows(afterSel,
-          scala.collection.immutable.BitSet(s.dead: _*))
-      val isIdentity = s.project.length == fileSchema.length &&
-        s.project.indices.forall(i => s.project(i) == i)
-      if (isIdentity) rows.iterator
-      else {
-        // per-reader projection; the reader contract allows the
-        // returned row buffer to be reused between next() calls
-        val proj = UnsafeProjection.create(
-          s.project.toIndexedSeq.map(i => BoundReference(i,
-            fileSchema.fields(i).dataType,
-            fileSchema.fields(i).nullable)))
-        rows.iterator.map(proj(_))
+      rows.zipWithIndex.collect { case (r, p) if live(p) =>
+        val meta = new GenericInternalRow(s.metaCols.map {
+          case "_file_id" => s.fid: Any
+          case "_row_pos" => p: Any
+          case "_file_ref" => refStr: Any
+          case "_row_id" => idOf(p)
+          case "_row_commit_version" => verOf(p)
+          case "_row_probe" =>
+            (GraftReplaceDataOps.probeOf(probeProj, r): java.lang.Long): Any
+        }.toArray)
+        proj(joined.apply(r, meta))
       }
+    } else {
+      val rows = GraftSegmentIO.read(path, fileSchema, s.project)
+      if (dead == null && selBs == null) rows
+      else rows.zipWithIndex.collect { case (r, p) if live(p) => r }
     }
   }
 }
@@ -9834,9 +9822,10 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
 
 /** The ONE reader factory for every partition kind this store plans:
   * row-carrying (heap files, key-grouped SPJ groups), segment-reference
-  * scan partitions (executor-side parquet streaming with DV skip +
-  * column pruning), and the row-level rewrite's group-filtered segment
-  * partitions. */
+  * scan partitions (executor-side parquet streaming that decodes only
+  * the projected columns — every column when `_row_probe` is asked
+  * for — and skips delete-vector positions), and the row-level
+  * rewrite's group-filtered segment partitions (full-width, streamed). */
 case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
 
@@ -9847,6 +9836,8 @@ case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
     case s: GraftSegmentPartition =>
       val schema = DataType.fromJson(s.schemaJson)
         .asInstanceOf[StructType]
+      // every column: the key re-filter and the row probe read the
+      // whole stored row
       val rows = GraftSegmentIO.read(
         java.nio.file.Paths.get(s.ref), schema)
       // enumerate (row, ORIGINAL position) first: the row-tracking
@@ -9857,11 +9848,11 @@ case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
           val dts = s.keyOrds.map(i =>
             if (i >= 0) schema.fields(i).dataType
             else org.apache.spark.sql.types.NullType)
-          rows.iterator.zipWithIndex.filter { case (r, _) =>
+          rows.zipWithIndex.filter { case (r, _) =>
             p(s.keyOrds.toSeq.lazyZip(dts).map((i, dt) =>
               if (i < 0 || r.isNullAt(i)) null else r.get(i, dt)))
           }
-        case None => rows.iterator.zipWithIndex
+        case None => rows.zipWithIndex
       }
       if (!s.trackMeta) positioned.map(_._1)
       else {

@@ -104,7 +104,7 @@ private[sources] final class GraftTableDurability(val log: GraftTableLog) {
   * is never read (executor-side partition readers count too). */
 final class GraftSegmentHandle(val path: Path, val schema: StructType) {
   def reads: Long = GraftSegmentIO.readsOf(path)
-  def load(): Array[InternalRow] = GraftSegmentIO.read(path, schema)
+  def load(): Array[InternalRow] = GraftSegmentIO.readAll(path, schema)
 }
 
 /** The portability seam of the commit protocol — Delta's `LogStore`.
@@ -691,8 +691,8 @@ private[sources] final class GraftTableLog(val dir: Path,
       (0 until n).foreach { i =>
         val p = ckptPartPath(v, i, n)
         if (Files.exists(p))
-          GraftSegmentIO.read(p, GraftLogCodec.CheckpointPartSchema)
-            .foreach(r => out += r.getUTF8String(0).toString)
+          GraftSegmentIO.read(p, GraftLogCodec.CheckpointPartSchema,
+            Array(0)).foreach(r => out += r.getUTF8String(0).toString)
       }
     }
     out.toSet
@@ -910,6 +910,17 @@ private[sources] final class GraftTableLog(val dir: Path,
         else None
       def dead(name: String, ref: String, live: Set[String]): Boolean =
         !live.contains(ref) && (minAgeMillis <= 0L || !youngEnough(name))
+      // a segment temp lives only while its encode runs, in this process
+      // or another: it sweeps once past the orphan grace, even under
+      // RETAIN-0 — a younger one may be a sibling's in-flight write
+      val tempCutoff = System.currentTimeMillis() -
+        math.max(minAgeMillis, GraftTable.orphanGraceMillis)
+      def staleTemp(name: String): Boolean =
+        (name.endsWith(".parquet.tmp") ||
+          name.endsWith(".parquet.tmp.crc")) &&
+        (try Files.getLastModifiedTime(dataDir.resolve(name))
+          .toMillis <= tempCutoff
+        catch { case _: java.io.IOException => false })
       // RETAIN-0 sweeps RE-VALIDATE their candidates against a FRESH
       // sibling/tag union (the caller's pinnedLiveRefs re-run): the
       // caller's union is a leaseless point-in-time scan, and a sibling
@@ -946,9 +957,10 @@ private[sources] final class GraftTableLog(val dir: Path,
           case Some(ref) =>
             if (dead(name, ref, live)) Files.deleteIfExists(p)
           case None =>
-            if ((name.contains(GraftBloomSidecar.Suffix + ".tmp-") ||
-                 name.contains(GraftRowIdSidecar.Suffix + ".tmp-"))
-                && (minAgeMillis <= 0L || !youngEnough(name)))
+            if (staleTemp(name) ||
+                ((name.contains(GraftBloomSidecar.Suffix + ".tmp-") ||
+                  name.contains(GraftRowIdSidecar.Suffix + ".tmp-"))
+                 && (minAgeMillis <= 0L || !youngEnough(name))))
               Files.deleteIfExists(p)
         }
         ()
@@ -1543,7 +1555,8 @@ private[sources] object GraftLogCodec {
               .parallelize(paths.zipWithIndex.toSeq, n)
               .map { case (p, i) =>
                 (i, GraftSegmentIO.read(java.nio.file.Paths.get(p),
-                  CheckpointPartSchema).map(_.getUTF8String(3).toString))
+                  CheckpointPartSchema, Array(3))
+                  .map(_.getUTF8String(0).toString).toArray)
               }
               .collect().sortBy(_._1).iterator
               .flatMap(_._2).toVector
@@ -1552,8 +1565,8 @@ private[sources] object GraftLogCodec {
             import scala.concurrent.duration.Duration
             import scala.concurrent.ExecutionContext.Implicits.global
             val slices = (0 until n).map(i => Future {
-              GraftSegmentIO.read(partReader(i, n), CheckpointPartSchema)
-                .toVector.map(_.getUTF8String(3).toString)
+              GraftSegmentIO.read(partReader(i, n), CheckpointPartSchema,
+                Array(3)).map(_.getUTF8String(0).toString).toVector
             })
             Await.result(Future.sequence(slices), Duration.Inf)
               .toVector.flatten

@@ -2,11 +2,14 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.conf.HadoopParquetConfiguration
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -99,11 +102,18 @@ private[sources] object GraftSegmentIO {
       }
     })
 
-  private def writeConf(schema: StructType): Configuration = {
+  /** A Hadoop conf that loads no default resources (no per-segment
+    * parse of core-default.xml). Local-filesystem only: segment paths
+    * are java.nio paths on the warehouse volume; a cluster deployment
+    * swaps in its Hadoop conf. */
+  private def baseConf(): Configuration = {
     val conf = new Configuration(false)
-    // local-filesystem only: segment paths are java.nio paths on the
-    // warehouse volume; a cluster deployment swaps in its Hadoop conf
     conf.set("fs.defaultFS", "file:///")
+    conf
+  }
+
+  private def writeConf(schema: StructType): Configuration = {
+    val conf = baseConf()
     ParquetWriteSupport.setSchema(withParquetIds(schema), conf)
     conf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key, "false")
     conf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
@@ -122,8 +132,7 @@ private[sources] object GraftSegmentIO {
   }
 
   private def readConf(schema: StructType): Configuration = {
-    val conf = new Configuration(false)
-    conf.set("fs.defaultFS", "file:///")
+    val conf = baseConf()
     conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
       withParquetIds(schema).json)
     conf.set(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, "true")
@@ -135,101 +144,111 @@ private[sources] object GraftSegmentIO {
     conf
   }
 
+  /** The hidden `.<name>.crc` checksum sibling Hadoop's local
+    * filesystem writes next to every file it creates. */
+  private[sources] def checksumOf(p: java.nio.file.Path): java.nio.file.Path =
+    p.resolveSibling(s".${p.getFileName}.crc")
+
   /** Write `rows` (layout = `schema`) as one parquet file at `file`.
     * Returns the file's size in bytes. Writes to a temp sibling first
     * and renames into place, so a crashed writer never leaves a
-    * truncated segment behind a name the log could reference. */
+    * truncated segment behind a name the log could reference; an encode
+    * that throws deletes its temp. */
   def write(file: java.nio.file.Path, schema: StructType,
             rows: Array[InternalRow]): Long = {
-    val counts = if (org.apache.spark.TaskContext.get() != null)
+    val counts = if (TaskContext.get() != null)
       taskWriteCounts else driverWriteCounts
     bump(counts, file.toAbsolutePath.normalize.toString)
     java.nio.file.Files.createDirectories(file.getParent)
     val tmp = file.resolveSibling(file.getFileName.toString + ".tmp")
     java.nio.file.Files.deleteIfExists(tmp)
-    val writer = new ParquetWriter[InternalRow](
-      new Path(tmp.toUri),
-      new ParquetWriteSupport().asInstanceOf[WriteSupport[InternalRow]],
-      CompressionCodecName.SNAPPY,
-      ParquetWriter.DEFAULT_BLOCK_SIZE,
-      ParquetWriter.DEFAULT_PAGE_SIZE,
-      ParquetWriter.DEFAULT_PAGE_SIZE,
-      ParquetWriter.DEFAULT_IS_DICTIONARY_ENABLED,
-      false, // validating
-      ParquetWriter.DEFAULT_WRITER_VERSION,
-      writeConf(schema))
-    try rows.foreach(writer.write) finally writer.close()
-    java.nio.file.Files.move(tmp, file,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    try {
+      val writer = new ParquetWriter[InternalRow](
+        new Path(tmp.toUri),
+        new ParquetWriteSupport().asInstanceOf[WriteSupport[InternalRow]],
+        CompressionCodecName.SNAPPY,
+        ParquetWriter.DEFAULT_BLOCK_SIZE,
+        ParquetWriter.DEFAULT_PAGE_SIZE,
+        ParquetWriter.DEFAULT_PAGE_SIZE,
+        ParquetWriter.DEFAULT_IS_DICTIONARY_ENABLED,
+        false, // validating
+        ParquetWriter.DEFAULT_WRITER_VERSION,
+        writeConf(schema))
+      try rows.foreach(writer.write) finally writer.close()
+      java.nio.file.Files.move(tmp, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case t: Throwable =>
+        // a failed encode must not strand its temp: nothing references
+        // it (a crashed process's temp is VACUUM's age-gated sweep)
+        java.nio.file.Files.deleteIfExists(tmp)
+        java.nio.file.Files.deleteIfExists(checksumOf(tmp))
+        throw t
+    }
+    // the checksum the local filesystem wrote beside the temp guards
+    // nothing once the temp is renamed away
+    java.nio.file.Files.deleteIfExists(checksumOf(tmp))
     java.nio.file.Files.size(file)
   }
 
-  /** Read a whole segment back as compact UnsafeRows in file order. */
   /** EXISTS_DEFAULT backfill (r19 — `ADD COLUMN ... DEFAULT`): the
-    * output projection for reading `file` at `schema`. A requested
-    * field carrying an EXISTS_DEFAULT whose field id is ABSENT from
-    * the file's FOOTER reads the default constant; a field the file
-    * stores reads its bytes (stored NULLs stay NULL). Stateless by
-    * design — the footer is the one source of truth that survives
-    * checkpoint folds, clones and foreign processes — and the footer
-    * probe only runs for schemas that carry a default at all (zero
-    * cost on every other table). An unreadable footer degrades to the
-    * plain read (NULL padding), never an error here — the row read
-    * right after will surface real corruption loudly. */
-  private def existsDefaultFill(file: java.nio.file.Path,
-      schema: StructType)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal}
-    val base: IndexedSeq[Expression] =
-      schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, f.nullable): Expression
-      }
-    val withDefault = schema.fields.zipWithIndex
-      .filter(_._1.metadata.contains("EXISTS_DEFAULT"))
-    if (withDefault.isEmpty) return base
-    // segments are IMMUTABLE once committed (writes land by atomic
-    // rename and never mutate in place), so the footer's field-id set
-    // memoizes per normalized path: one ParquetFileReader.open per
-    // (JVM, file), not one per scan — a cache-miss read of a
-    // defaults-carrying table costs a single footer parse ever
-    // (r19 ADVICE: the double-open ran per read)
+    * output expressions for reading the fields `out` of `schema` from
+    * `file`, where the decoded row holds the fields `req` (ascending,
+    * distinct) in that order. A requested field carrying an
+    * EXISTS_DEFAULT whose field id is ABSENT from the file's FOOTER
+    * reads the default constant; a field the file stores reads its
+    * bytes (stored NULLs stay NULL). Stateless by design — the footer
+    * is the one source of truth that survives checkpoint folds, clones
+    * and foreign processes — and the footer probe only runs when a
+    * requested field carries a default at all (zero cost on every
+    * other read). An unreadable footer degrades to the plain read
+    * (NULL padding), never an error here — the row read right after
+    * will surface real corruption loudly. */
+  private def outputExprs(file: java.nio.file.Path, schema: StructType,
+      req: Array[Int], out: Array[Int]): Seq[Expression] = {
+    lazy val fileIds = footerIds(file)
+    out.toIndexedSeq.map { c =>
+      val f = schema.fields(c)
+      val absent = f.metadata.contains("EXISTS_DEFAULT") &&
+        FieldIds.idOf(f).exists(id => fileIds.exists(!_.contains(id)))
+      if (absent) {
+        // evaluate under the zone CAPTURED at declaration — executor
+        // session zones must not skew a timezone-sensitive default
+        val tz = GraftTable.defaultTzOf(f)
+        val v = defaultLitCache.computeIfAbsent(
+          (f.metadata.getString("EXISTS_DEFAULT"), f.dataType, tz),
+          { case (sql, dt, z) => GraftTable.evalDefault(sql, dt, z) })
+        Literal(v, f.dataType)
+      } else
+        BoundReference(java.util.Arrays.binarySearch(req, c), f.dataType,
+          f.nullable)
+    }
+  }
+
+  /** The field ids `file`'s footer stores, or None when the footer is
+    * unreadable. Segments are IMMUTABLE once committed (writes land by
+    * atomic rename and never mutate in place), so the set memoizes per
+    * normalized path: one ParquetFileReader.open per (JVM, file), not
+    * one per scan (r19 ADVICE: the double-open ran per read). */
+  private def footerIds(file: java.nio.file.Path): Option[Set[Long]] = {
     val key = file.toAbsolutePath.normalize.toString
     val cached = footerIdCache.get(key)
-    val fileIds: Set[Long] =
-      if (cached != null) cached
-      else {
-        val ids: Set[Long] =
-          try {
-            val conf = new Configuration(false)
-            conf.set("fs.defaultFS", "file:///")
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new Path(file.toUri), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try {
-              import scala.jdk.CollectionConverters._
-              r.getFileMetaData.getSchema.getFields.asScala
-                .flatMap(t => Option(t.getId).map(_.intValue().toLong))
-                .toSet
-            } finally r.close()
-          } catch {
-            case scala.util.control.NonFatal(_) => return base
-          }
-        footerIdCache.put(key, ids)
-        ids
-      }
-    withDefault.foldLeft(base) { case (acc, (f, i)) =>
-      FieldIds.idOf(f) match {
-        case Some(id) if !fileIds.contains(id) =>
-          // evaluate under the zone CAPTURED at declaration — executor
-          // session zones must not skew a timezone-sensitive default
-          val tz = GraftTable.defaultTzOf(f)
-          val v = defaultLitCache.computeIfAbsent(
-            (f.metadata.getString("EXISTS_DEFAULT"), f.dataType, tz),
-            { case (sql, dt, z) => GraftTable.evalDefault(sql, dt, z) })
-          acc.updated(i, Literal(v, f.dataType))
-        case _ => acc
-      }
+    if (cached != null) return Some(cached)
+    try {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new Path(file.toUri), baseConf()))
+      val ids =
+        try {
+          import scala.jdk.CollectionConverters._
+          r.getFileMetaData.getSchema.getFields.asScala
+            .flatMap(t => Option(t.getId).map(_.intValue().toLong))
+            .toSet
+        } finally r.close()
+      footerIdCache.put(key, ids)
+      Some(ids)
+    } catch {
+      case scala.util.control.NonFatal(_) => None
     }
   }
 
@@ -244,30 +263,84 @@ private[sources] object GraftSegmentIO {
   private val defaultLitCache = new java.util.concurrent.ConcurrentHashMap[
     (String, org.apache.spark.sql.types.DataType, String), Any]()
 
-  def read(file: java.nio.file.Path, schema: StructType)
-      : Array[InternalRow] = {
-    bump(readCounts, file.toAbsolutePath.normalize.toString)
-    if (org.apache.spark.TaskContext.get() == null)
-      bump(driverReadCounts, file.toAbsolutePath.normalize.toString)
+  /** Read `file`, a segment laid out as `schema`, as a stream of rows in
+    * file order. Only the fields at ordinals `cols` of `schema` are
+    * requested from parquet (default: all of them), and each row
+    * carries them in `cols` order; field ids resolve per requested
+    * field, and one whose EXISTS_DEFAULT column the file lacks reads
+    * the default. One parquet open per call, counted in the read
+    * census; the reader works over this call's own configuration, so
+    * no default-loading Hadoop `Configuration` is built per segment.
+    * Rows are REUSED between `next()` calls — copy one to keep it. The
+    * reader closes when the rows run out, on `close()`, or when the
+    * running Spark task completes. A missing file fails loudly with
+    * the VACUUM message, never reads as empty. */
+  def read(file: java.nio.file.Path, schema: StructType,
+           cols: Array[Int] = null): SegmentRows = {
+    val key = file.toAbsolutePath.normalize.toString
+    bump(readCounts, key)
+    if (TaskContext.get() == null) bump(driverReadCounts, key)
     if (!java.nio.file.Files.exists(file))
       throw new java.io.FileNotFoundException(
         s"segment $file is gone — VACUUM reclaimed it, or a shallow " +
           "clone's source was vacuumed (clones share segments by " +
           "reference; vacuuming the source invalidates them)")
-    val reader = ParquetReader
-      .builder[InternalRow](new ParquetReadSupport(), new Path(file.toUri))
-      .withConf(readConf(schema))
-      .build()
-    val out = Array.newBuilder[InternalRow]
-    // the materializer reuses its row buffer; project to fresh UnsafeRows
-    val toUnsafe = UnsafeProjection.create(existsDefaultFill(file, schema))
-    try {
-      var r = reader.read()
-      while (r != null) {
-        out += toUnsafe(r).copy()
-        r = reader.read()
+    val out = if (cols == null) schema.indices.toArray else cols
+    val req = out.distinct.sorted
+    // the materializer reuses its row buffer; the projection lays the
+    // requested fields out as compact UnsafeRows (reused too)
+    val toOut = UnsafeProjection.create(outputExprs(file, schema, req, out))
+    val conf = readConf(StructType(req.map(schema.fields(_))))
+    val in = HadoopInputFile.fromPath(new Path(file.toUri), conf)
+    val reader = new ParquetReader.Builder[InternalRow](in,
+        new HadoopParquetConfiguration(conf)) {
+      override protected def getReadSupport(): ReadSupport[InternalRow] =
+        new ParquetReadSupport()
+    }.build()
+    new SegmentRows(reader, toOut)
+  }
+
+  /** Every row of a segment, copied, for callers that need random
+    * access (partition splits, compaction, the driver's lazily-loaded
+    * file rows) — the same one-open read, drained. */
+  def readAll(file: java.nio.file.Path, schema: StructType)
+      : Array[InternalRow] = {
+    val rows = read(file, schema)
+    try rows.map(_.copy(): InternalRow).toArray
+    finally rows.close()
+  }
+
+  /** One open segment's rows: a single pass over the parquet reader. */
+  final class SegmentRows private[GraftSegmentIO] (
+      opened: ParquetReader[InternalRow], toOut: UnsafeProjection)
+      extends Iterator[InternalRow] with AutoCloseable {
+    // dropped at close: a task streaming many segments keeps no closed
+    // reader's buffers alive until it completes
+    private var reader = opened
+    private var pending: InternalRow = _
+    Option(TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => close()))
+
+    override def hasNext: Boolean = {
+      if (pending == null && reader != null) {
+        pending = reader.read()
+        if (pending == null) close()
       }
-    } finally reader.close()
-    out.result()
+      pending != null
+    }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("segment exhausted")
+      val r = pending
+      pending = null
+      toOut(r)
+    }
+
+    override def close(): Unit = if (reader != null) {
+      val r = reader
+      reader = null
+      pending = null
+      r.close()
+    }
   }
 }

@@ -475,7 +475,7 @@ private[sources] object GraftSplit {
     val (p, sj, dead) = job.seg
     val segSchema = DataType.fromJson(sj).asInstanceOf[StructType]
     val path = java.nio.file.Paths.get(p)
-    val all = GraftSegmentIO.read(path, segSchema)
+    val all = GraftSegmentIO.readAll(path, segSchema)
     val deadBs =
       if (dead.isEmpty) scala.collection.immutable.BitSet.empty
       else scala.collection.immutable.BitSet.fromSpecific(dead)
@@ -531,7 +531,7 @@ private[sources] object GraftCompaction {
       case ((p, sj, dead), segIdx) =>
         val segSchema = DataType.fromJson(sj).asInstanceOf[StructType]
         val path = java.nio.file.Paths.get(p)
-        val all = GraftSegmentIO.read(path, segSchema)
+        val all = GraftSegmentIO.readAll(path, segSchema)
         val deadBs =
           if (dead.isEmpty) scala.collection.immutable.BitSet.empty
           else scala.collection.immutable.BitSet.fromSpecific(dead)
