@@ -43,54 +43,58 @@ object BenchGate {
 
 object Bench {
 
+  /** Crash-safe cache of a derived sf1 table under the shared tmp dir
+    * `dirName`: `derive` writes `table` as parquet to the path it is
+    * given, which sits under a temp name, and the whole directory then
+    * renames into place. Validity keys on Spark's `_SUCCESS` marker, so
+    * a killed or racing run can never leave a partial cache that later
+    * runs silently measure. */
+  private def cachedDerivation(dirName: String, table: String)(
+      derive: String => Unit): java.nio.file.Path = {
+    val root = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      dirName)
+    val marker = root.resolve(table).resolve("_SUCCESS")
+    if (!Files.exists(marker)) {
+      val tmp = root.resolveSibling(s"$dirName.tmp-" +
+        java.util.UUID.randomUUID().toString.take(8))
+      derive(tmp.resolve(table).toString)
+      // sweep any partial cache, then move the derived dir in whole;
+      // losing the install race to a concurrent deriver is fine — the
+      // foreign copy is equivalent data
+      if (Files.exists(root)) deleteTree(root)
+      try Files.move(tmp, root)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException
+            if Files.exists(marker) => deleteTree(tmp)
+      }
+    }
+    root
+  }
+
+  private def deleteTree(dir: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+    finally walk.close()
+  }
+
   /** Derive the sf1 lineitem — `sfDir`'s replicated 10x with per-copy
     * day-shifted ship dates, so the natural keys (which contain the
     * date) genuinely multiply instead of deduping back — into a shared
-    * tmp cache. CRASH-SAFE: the parquet lands under a temp name and
-    * the whole directory renames into place; validity keys on Spark's
-    * `_SUCCESS` marker, so a killed or racing run can never leave a
-    * partial cache that later runs silently measure. Shared by the
-    * bench's g2@sf1 leg and G2ScaleSanitySpec — one derivation, one
-    * definition. */
+    * tmp cache ([[cachedDerivation]]). Shared by the bench's g2@sf1 leg
+    * and G2ScaleSanitySpec — one derivation, one definition. */
   def deriveSf1Lineitem(spark: SparkSession,
-                        sfDir: String): java.nio.file.Path = {
-    import org.apache.spark.sql.functions._
-    val root = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft-sf1-derived")
-    val marker = root.resolve("lineitem.parquet").resolve("_SUCCESS")
-    if (!Files.exists(marker)) {
-      val tmp = root.resolveSibling("graft-sf1-derived.tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
+                        sfDir: String): java.nio.file.Path =
+    cachedDerivation("graft-sf1-derived", "lineitem.parquet") { out =>
+      import org.apache.spark.sql.functions._
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
       (0 until 10).map { i =>
         li.withColumn("l_shipdate",
             date_add(col("l_shipdate").cast("date"), i * 11))
           .withColumn("l_orderkey", col("l_orderkey") + lit(i * 10000000L))
       }.reduce(_ unionAll _)
-        .write.mode("overwrite")
-        .parquet(tmp.resolve("lineitem.parquet").toString)
-      // sweep any partial cache, then move the derived dir in whole;
-      // losing the install race to a concurrent deriver is fine — the
-      // foreign copy is equivalent data
-      import scala.jdk.CollectionConverters._
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists)
-        finally walk.close()
-      }
-      try Files.move(tmp, root)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException
-            if Files.exists(marker) =>
-          val walk = Files.walk(tmp)
-          try walk.iterator().asScala.toSeq.reverse
-            .foreach(Files.deleteIfExists)
-          finally walk.close()
-      }
+        .write.mode("overwrite").parquet(out)
     }
-    root
-  }
 
   /** Derive the sf1 documents — replicated 10x with per-copy shifted
     * doc_ids AND a copy-marker PREFIX token. The prefix moves the
@@ -98,17 +102,12 @@ object Bench {
     * and form genuine 10-member NEAR-dup clusters — the hard case the
     * curation flagship's scale posture claims to handle (a plain copy
     * would collapse at the exact-dedup window and the later stages
-    * would run at sf0.1). Same crash-safe cache protocol as
+    * would run at sf0.1). Same crash-safe cache as
     * [[deriveSf1Lineitem]]. */
   def deriveSf1Documents(spark: SparkSession,
-                         sfDir: String): java.nio.file.Path = {
-    import org.apache.spark.sql.functions._
-    val root = Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft-sf1-docs")
-    val marker = root.resolve("documents.parquet").resolve("_SUCCESS")
-    if (!Files.exists(marker)) {
-      val tmp = root.resolveSibling("graft-sf1-docs.tmp-" +
-        java.util.UUID.randomUUID().toString.take(8))
+                         sfDir: String): java.nio.file.Path =
+    cachedDerivation("graft-sf1-docs", "documents.parquet") { out =>
+      import org.apache.spark.sql.functions._
       val d = spark.read.parquet(s"$sfDir/documents.parquet")
       (0 until 10).map { i =>
         d.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))
@@ -117,27 +116,8 @@ object Bench {
           // the original corpus while separating the copies
           .withColumn("text", concat(lit(s"c$i "), col("text")))
       }.reduce(_ unionAll _)
-        .write.mode("overwrite")
-        .parquet(tmp.resolve("documents.parquet").toString)
-      import scala.jdk.CollectionConverters._
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists)
-        finally walk.close()
-      }
-      try Files.move(tmp, root)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException
-            if Files.exists(marker) =>
-          val walk = Files.walk(tmp)
-          try walk.iterator().asScala.toSeq.reverse
-            .foreach(Files.deleteIfExists)
-          finally walk.close()
-      }
+        .write.mode("overwrite").parquet(out)
     }
-    root
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

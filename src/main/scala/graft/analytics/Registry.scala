@@ -2,24 +2,11 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One driver-verifiable query: a Spark DataFrame program plus (where the
-  * semantics are ANSI-SQL-expressible) a DuckDB oracle that must produce a
-  * bit-identical result on the same parquet tables.
+/** One driver-verifiable query: a Spark DataFrame program plus a DuckDB
+  * oracle that must produce a bit-identical result on the same parquet
+  * tables.
   *
   * @param survey SURVEY.md §2 operator ids this query demonstrates.
   */
-final case class Q(
-    name: String,
-    survey: String,
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String])
-
-object Q {
-  def apply(name: String, survey: String, oracle: String)(
-      fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, survey, fn, Some(oracle))
-
-  def noOracle(name: String, survey: String)(
-      fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, survey, fn, None)
-}
+final case class Q(name: String, survey: String, oracle: String)(
+    val fn: (SparkSession, String) => DataFrame)

@@ -7,11 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
+import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Literal, NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.filter.{Or, Predicate}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -43,17 +42,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * task's commit message becomes one [[GraftDataFile]] (split per
   * partition group when the table is partitioned), each carrying per-
   * column min/max/null-count ZONE MAPS computed at commit time. The scan
-  * ([[GraftScanBuilder]]) implements `SupportsPushDownFilters` and prunes
+  * ([[GraftScanBuilder]]) implements `SupportsPushDownV2Filters` and prunes
   * whole files against those zone maps before a row is read — the Delta
   * data-skipping path the reference's platform provides
   * (Notebooks/Batch_Bronze_to_Silver.Notebook/notebook-content.py:200
-  * writes Delta), served natively. The scan also reports statistics
-  * (`SupportsReportStatistics`), so Catalyst auto-broadcasts dim-sized
-  * catalog tables without hints. This catalog is the SQL-route ADAPTER,
-  * sized for the dim/changelog tables MERGE targets in this pipeline;
-  * a production deployment backs the same Table/Scan surface with a real
-  * file format; the scale path for fact-sized merges remains the operator
-  * route, whose plans are oracle- and shape-verified (s11/s19).
+  * writes Delta), served natively. One evaluator, [[ZonePredicate]],
+  * tests every v2 predicate (pushed, runtime, partition delete and
+  * overwrite) against zones; partition drops take only its `exact`
+  * results, a partition key being a zone whose min equals its max. The
+  * scan also reports statistics (`SupportsReportStatistics`), so
+  * Catalyst auto-broadcasts dim-sized catalog tables without hints.
+  * This catalog is the SQL-route ADAPTER, sized for the dim/changelog
+  * tables MERGE targets in this pipeline; a production deployment
+  * backs the same Table/Scan surface with a real file format; the scale
+  * path for fact-sized merges remains the operator route, whose plans
+  * are oracle- and shape-verified (s11/s19).
   */
 class GraftCatalog extends TableCatalog with FunctionCatalog
     with SupportsNamespaces with StagingTableCatalog with ViewCatalog {
@@ -1284,7 +1287,8 @@ final class GraftDataFile private (
     // it to canonicalize a restored census onto the LIVE identities, so
     // unchanged files stay "shared" and the restore's CDC stays
     // delta-sized instead of recording whole-table churn
-    private[sources] val degroupedFrom: GraftDataFile = null) {
+    private[sources] val degroupedFrom: GraftDataFile = null)
+    extends ZoneView[Int] {
 
   def this(rows: Array[InternalRow], zones: Array[ColZone], sizeBytes: Long,
            groupKey: Option[Seq[Any]]) =
@@ -1317,10 +1321,14 @@ final class GraftDataFile private (
     bloomsCache = loaded
     loaded
   }
-  private[sources] def bloomAt(i: Int): GraftBloom = {
+  def bloom(i: Int): GraftBloom = {
     val b = blooms
     if (i < b.length) b(i) else null
   }
+
+  /** Zone of schema ordinal `i`; null for an unsupported type, or past
+    * the zones of a file written before the schema grew. */
+  def zone(i: Int): ColZone = if (i < zones.length) zones(i) else null
 
   /** Non-null ⇒ a DERIVED pseudo-file (the CDC feed): rows are COMPUTED
     * from other files' segments by a serializable partition recipe —
@@ -1612,9 +1620,9 @@ object GraftDataFile {
       out.result()
     }
 
-  /** Types whose internal values are Comparable and whose pushed-filter
-    * literals convert losslessly — the zone-map-eligible set. Binary,
-    * arrays, maps and structs get no zones (files always scan). */
+  /** Types whose internal values have an SQL ordering the zones can
+    * bound — the zone-map-eligible set. Binary, arrays, maps and structs
+    * get no zones (files always scan). */
   def statsSupported(dt: DataType): Boolean = {
     import org.apache.spark.sql.types._
     dt match {
@@ -1625,9 +1633,6 @@ object GraftDataFile {
       case _ => false
     }
   }
-
-  private def cmp(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
 
   /** Build a file over `rows`, computing zone maps + size in one pass.
     * `keyOf` (partitioned tables) detects a uniform partition-group key,
@@ -1726,8 +1731,8 @@ object GraftDataFile {
               if (r.isNullAt(i)) nullCount += 1
               else {
                 val v = r.get(i, dt)
-                if (mins(i) == null || cmp(v, mins(i)) < 0) mins(i) = v
-                if (maxs(i) == null || cmp(v, maxs(i)) > 0) maxs(i) = v
+                if (mins(i) == null || ColZone.cmp(v, mins(i)) < 0) mins(i) = v
+                if (maxs(i) == null || ColZone.cmp(v, maxs(i)) > 0) maxs(i) = v
               }
               j += 1
             }
@@ -4682,10 +4687,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
         org.apache.spark.sql.types.BooleanType, nullable = true)))
     val rows = snap.iterator.zipWithIndex.map { case (f, i) =>
       val zones = s.fields.iterator.zipWithIndex.flatMap { case (fl, j) =>
-        if (j < f.zones.length && f.zones(j) != null) {
-          val z = f.zones(j)
-          Some(s"${fl.name}:[${z.min}..${z.max}] nulls=${z.nullCount}")
-        } else None
+        Option(f.zone(j)).map(z =>
+          s"${fl.name}:[${z.min}..${z.max}] nulls=${z.nullCount}")
       }.mkString("; ")
       new GenericInternalRow(Array[Any](i, f.rowCount, f.sizeBytes,
         utf8(f.groupKey.map(_.mkString("/")).orNull),
@@ -5157,8 +5160,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
     // column proves the pair shares nothing
     def disjoint(a: GraftDataFile, b: GraftDataFile): Boolean =
       ordMap.exists { j =>
-        j >= 0 && j < a.zones.length && j < b.zones.length && {
-          val za = a.zones(j); val zb = b.zones(j)
+        j >= 0 && {
+          val za = a.zone(j); val zb = b.zone(j)
           za != null && zb != null &&
             za.nullCount == 0L && zb.nullCount == 0L &&
             za.min != null && zb.min != null && {
@@ -5213,8 +5216,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
         z(3 + i) =
           if (j < 0) ColZone(null, null, claimed.toLong) // null-padded col
           else {
-            val zs = members.map(f =>
-              if (j < f.zones.length) f.zones(j) else null)
+            val zs = members.map(_.zone(j))
             if (zs.contains(null)) null
             else if (members.lengthCompare(1) == 0) zs.head // exact
             else {
@@ -5397,17 +5399,13 @@ class GraftTable(initialName: String, initialSchema: StructType,
   // "atomic swap" hold under concurrent writers; readers stay lock-free
   // (volatile read of an immutable vector).
 
-  /** Per-task delivered batches → data files: one file per non-empty
-    * task batch, split per partition group on partitioned tables (a real
-    * format's writer does exactly this), zone maps computed here — the
-    * "stats at commit time" half of data skipping. */
-  private def buildFiles(batches: Array[Array[InternalRow]]): Vector[GraftDataFile] =
-    buildFiles(GraftDeliveries.rows(batches))
-
-  /** Delivery-based twin: rows deliveries build files here (heap mode);
-    * file deliveries are ALREADY split/stat'd/persisted by their writer
-    * task and adopt by reference — the driver never touches their
-    * rows. */
+  /** Per-task deliveries → data files. A rows delivery (heap mode)
+    * builds one file per non-empty task batch here, split per partition
+    * group on partitioned tables (a real format's writer does exactly
+    * this), zone maps computed here — the "stats at commit time" half of
+    * data skipping. File deliveries are ALREADY split/stat'd/persisted
+    * by their writer task and adopt by reference — the driver never
+    * touches their rows. */
   private def buildFiles(ds: Array[GraftDelivery]): Vector[GraftDataFile] =
     ds.iterator.flatMap {
       case GraftFilesDelivery(fs) => fs.iterator
@@ -6369,8 +6367,11 @@ class GraftTable(initialName: String, initialSchema: StructType,
     filters.isEmpty || filters.forall(_.name == "ALWAYS_TRUE")
 
   override def canDeleteWhere(filters: Array[Predicate]): Boolean =
-    alwaysTrueOnly(filters) ||
-      GroupPredicates.keyPredicate(filters, partitionCols).isDefined
+    alwaysTrueOnly(filters) || groupKeyTest(filters).isDefined
+
+  /** The filters as an exact partition-group test ([[ZonePredicate]]). */
+  private def groupKeyTest(filters: Array[Predicate]) =
+    ZonePredicate.groupKeyTest(filters, partitionCols, tableSchema)
 
   override def deleteWhere(filters: Array[Predicate]): Unit = mutate {
     val gone =
@@ -6378,7 +6379,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
         val old = cdcLiveView(files); files = Vector.empty; old
       }
       else {
-        val pred = GroupPredicates.keyPredicate(filters, partitionCols)
+        val pred = groupKeyTest(filters)
           .getOrElse(throw new UnsupportedOperationException(
             s"deleteWhere called with inexpressible filters " +
               s"${filters.mkString(", ")} — canDeleteWhere should have " +
@@ -6595,8 +6596,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
       }
       ds.foreach {
         case GraftFilesDelivery(files) => files.foreach { f =>
-          if (id.ord < f.zones.length && f.zones(id.ord) != null)
-            fold(f.zones(id.ord).max)
+          Option(f.zone(id.ord)).foreach(z => fold(z.max))
         }
         case GraftRowsDelivery(rows, _, _) =>
           val dt = fs.schema.fields(id.ord).dataType
@@ -6737,10 +6737,9 @@ class GraftTable(initialName: String, initialSchema: StructType,
   // groups the new rows land in). canOverwrite = false makes Spark's
   // V2Writes raise an analysis error — for OVERWRITE there is NO
   // rewrite fallback (unlike DELETE), so an inexpressible predicate
-  // (e.g. a static PARTITION spec on a multi-column-partitioned table,
-  // which GroupPredicates doesn't evaluate) fails loudly instead of
-  // silently overwriting the wrong rows; truncate and dynamic modes
-  // remain available for such tables.
+  // (one the zone evaluator cannot decide exactly per partition group)
+  // fails loudly instead of silently overwriting the wrong rows;
+  // truncate and dynamic modes remain available for such tables.
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate with SupportsOverwriteV2
       with SupportsDynamicOverwrite {
@@ -6831,13 +6830,12 @@ class GraftTable(initialName: String, initialSchema: StructType,
       override def truncate(): WriteBuilder = { install = installReplace; this }
 
       override def canOverwrite(filters: Array[Predicate]): Boolean =
-        filters.forall(_.name == "ALWAYS_TRUE") ||
-          GroupPredicates.keyPredicate(filters, partitionCols).isDefined
+        alwaysTrueOnly(filters) || groupKeyTest(filters).isDefined
 
       override def overwrite(filters: Array[Predicate]): WriteBuilder = {
-        if (filters.forall(_.name == "ALWAYS_TRUE")) install = installReplace
+        if (alwaysTrueOnly(filters)) install = installReplace
         else {
-          val pred = GroupPredicates.keyPredicate(filters, partitionCols)
+          val pred = groupKeyTest(filters)
             .getOrElse(throw new UnsupportedOperationException(
               s"overwrite called with inexpressible filters " +
                 s"${filters.mkString(", ")} — canOverwrite should have " +
@@ -7045,7 +7043,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
                     trackExplicit = trk != null && trk.explicit,
                     trackBase = if (trk != null) trk.base else -1L,
                     trackVer = if (trk != null) trk.ver else -1L),
-                  Map.empty, None, f.rowCount - dead.size,
+                  ScanChunk.NoZones, None, f.rowCount - dead.size,
                   () =>
                     if (trackMeta.isEmpty)
                       GraftDataFile.liveRows(f.rows, dead)
@@ -7053,8 +7051,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
                       f.track))
               } else ScanChunk(
                 if (trackMeta.isEmpty) GraftDataFile.liveRows(f.rows, dead)
-                else GraftTable.trackAugment(f.rows, tableSchema, f.track),
-                Map.empty)
+                else GraftTable.trackAugment(f.rows, tableSchema, f.track))
             }.toArray
             new GraftScan(outSchema, chunks,
               math.max(1L, st._1.iterator.map(_.sizeBytes).sum))
@@ -8236,9 +8233,10 @@ object GraftMaintenance {
   * projected to the partition columns) and calls [[filter]] with the
   * partition values that actually contain matched rows. The scan then
   * returns only those groups' rows, records the group set, and the
-  * table's commit replaces exactly that set. An unrecognized predicate
-  * shape degrades to no pruning — a whole-table rewrite is correct,
-  * just not delta-sized. */
+  * table's commit replaces exactly that set. A predicate that
+  * [[ZonePredicate.groupKeyTest]] cannot decide exactly per group
+  * degrades to no pruning — a whole-table rewrite is correct, just not
+  * delta-sized. */
 class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
                         allFiles: Vector[GraftDataFile],
                         groupKeyOf: InternalRow => Seq[Any],
@@ -8276,7 +8274,19 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
     Array(Expressions.column(partCols.head))
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    GroupPredicates.keyPredicate(predicates, partCols).foreach { pred =>
+    // NULL-SAFE membership: the runtime IN lists the matched rows' group
+    // values, the NULL group as a NULL literal, which SQL's IN never
+    // matches — that group's matched rows would escape the rewrite
+    val isNull: Expression => Boolean = {
+      case l: Literal[_] => l.value == null; case _ => false }
+    val nullSafe = predicates.map(p => p.children().toSeq match {
+      case c +: ls if p.name() == "IN" && ls.exists(isNull) =>
+        val nullKey = new Predicate("IS_NULL", Array(c))
+        if (ls.forall(isNull)) nullKey else new Or(nullKey,
+          new Predicate("IN", (c +: ls.filterNot(isNull)).toArray))
+      case _ => p
+    })
+    ZonePredicate.groupKeyTest(nullSafe, partCols, schema).foreach { pred =>
       kept = allFiles.filter(f => f.groupKey match {
         case Some(k) => pred(k) // file-level: untouched groups never read
         case None => true // group-spanning: row-filtered in rowsOf
@@ -8352,7 +8362,7 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
   * rows: the reader opens the file at execution. For a group-spanning
   * file under a runtime group filter, `keyOrds` (partition-column
   * ordinals in THIS segment's schema) + `keyPred` (a literal-capturing
-  * group-key predicate from [[GroupPredicates]]) encode the re-filter
+  * exact group-key test, [[ZonePredicate.groupKeyTest]]) encode the re-filter
   * as serializable data; the reader rebuilds the row predicate. */
 case class GraftSegmentPartition(ref: String, schemaJson: String,
     keyOrds: Array[Int],
@@ -8367,227 +8377,17 @@ case class GraftSegmentPartition(ref: String, schemaJson: String,
     trackBase: Long = -1L,
     trackVer: Long = -1L) extends InputPartition
 
-/** Conservative evaluator for the partition predicates Spark hands the
-  * metadata-delete / partition-overwrite / runtime-group-filter paths:
-  * compiles IN / = / <=> over identity partition columns plus AND/OR
-  * composition into a GROUP-KEY PREDICATE (`Seq[Any] => Boolean` over
-  * the partition-column values in declaration order). Returns None for
-  * any unrecognized shape — the caller then falls back to the row-level
-  * rewrite, which is always correct.
-  *
-  * Compiling to a predicate rather than enumerating a key set supports
-  * MULTI-COLUMN identity partitioning and PARTIAL constraints: on a
-  * (year, state) table, `DELETE WHERE year = 2023` is metadata-only
-  * (every (2023, *) group drops) even though the matching key set is
-  * not enumerable up front — the Delta/Hive partition-predicate
-  * semantics, not just single-value partition specs. */
-private[sources] object GroupPredicates {
-
-  // the public v2 literal interface (LiteralValue itself is private[sql])
-  private type Lit = org.apache.spark.sql.connector.expressions.Literal[_]
-
-  /** Some(group-key predicate) when EVERY predicate compiles (multiple
-    * predicates AND together — Spark splits conjunctions before handing
-    * them over); None otherwise. */
-  def keyPredicate(predicates: Array[Predicate],
-                   partCols: Seq[String]): Option[Seq[Any] => Boolean] = {
-    if (partCols.isEmpty || predicates.isEmpty) return None
-    val compiled = predicates.toSeq.map(p => eval(p, partCols))
-    if (compiled.contains(None)) None
-    else Some(key => compiled.forall(_.get(key)))
-  }
-
-  private def ordOf(e: org.apache.spark.sql.connector.expressions.Expression,
-                    partCols: Seq[String]): Option[Int] = e match {
-    case r: NamedReference if r.fieldNames.length == 1 =>
-      partCols.indexWhere(_.equalsIgnoreCase(r.fieldNames.head)) match {
-        case -1 => None
-        case i => Some(i)
-      }
-    case _ => None
-  }
-
-  private def eval(p: Predicate,
-                   partCols: Seq[String]): Option[Seq[Any] => Boolean] =
-    p.name() match {
-      case "IN" =>
-        val ch = p.children()
-        for {
-          i <- if (ch.length >= 2) ordOf(ch.head, partCols) else None
-          if ch.tail.forall(_.isInstanceOf[Lit])
-        } yield {
-          val set = ch.tail.map(_.asInstanceOf[Lit].value: Any).toSet
-          (key: Seq[Any]) => set.contains(key(i))
-        }
-      case "=" | "<=>" =>
-        (p.children() match {
-          case Array(r, l: Lit) => ordOf(r, partCols).map((_, l.value: Any))
-          case Array(l: Lit, r) => ordOf(r, partCols).map((_, l.value: Any))
-          case _ => None
-        }).map { case (i, v) => (key: Seq[Any]) => key(i) == v }
-      case "AND" =>
-        val ch = p.children().collect { case q: Predicate => q }
-        if (ch.length != 2) None
-        else for (a <- eval(ch(0), partCols); b <- eval(ch(1), partCols))
-          yield (key: Seq[Any]) => a(key) && b(key)
-      case "OR" =>
-        val ch = p.children().collect { case q: Predicate => q }
-        if (ch.length != 2) None
-        else for (a <- eval(ch(0), partCols); b <- eval(ch(1), partCols))
-          yield (key: Seq[Any]) => a(key) || b(key)
-      case _ => None
-    }
-}
-
-/** Zone-map may-match tests for the v1 pushdown [[Filter]]s: compiles a
-  * filter into a per-file predicate that returns FALSE only when NO row
-  * in the file can satisfy it — the data-skipping decision. Everything
-  * unsupported compiles to None and is simply not used for skipping
-  * (the scan returns every filter as a residual anyway, so skipping is
-  * purely an I/O optimization and can never change results). */
-private[sources] object ZonePredicates {
-  import org.apache.spark.sql.sources._
-  import org.apache.spark.unsafe.types.UTF8String
-
-  private def cmp(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
-
-  /** Compile `filter` against `schema` into a file-level may-match test;
-    * None when the filter shape/type can't drive skipping. */
-  def compile(filter: Filter,
-              schema: StructType): Option[GraftDataFile => Boolean] = {
-
-    def ord(name: String): Option[Int] =
-      schema.fields.indexWhere(_.name == name) match {
-        case -1 => None
-        case i if GraftDataFile.statsSupported(schema.fields(i).dataType) =>
-          Some(i)
-        case _ => None
-      }
-
-    // pushed-filter literals arrive as EXTERNAL values (String,
-    // java.sql.Date, BigDecimal ...); convert once per filter to the
-    // internal representation the zones hold
-    def internal(name: String, v: Any): Option[(Int, Any)] =
-      for {
-        i <- ord(name)
-        iv <- if (v == null) None
-        else try Option(org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(schema.fields(i).dataType)(v))
-        catch { case scala.util.control.NonFatal(_) => None }
-      } yield (i, iv)
-
-    // zone lookup with the defensive cases: a file written mid-evolution
-    // may carry fewer zones than the current schema (treat as unknown);
-    // a null zone entry = unsupported type
-    def zone(f: GraftDataFile, i: Int): Option[ColZone] =
-      if (i < f.zones.length) Option(f.zones(i)) else None
-
-    def rangeTest(name: String, v: Any)(
-        test: (ColZone, Any) => Boolean): Option[GraftDataFile => Boolean] =
-      internal(name, v).map { case (i, iv) =>
-        f => zone(f, i) match {
-          case Some(z) if z.min != null => test(z, iv)
-          case Some(z) => false // all-null column: no value comparison matches
-          case None => true
-        }
-      }
-
-    // point-lookup refinement: after the zone envelope admits the file,
-    // a per-file Bloom filter (bloom.columns) can still prove the exact
-    // value absent — the skip zone maps cannot make on an UNCLUSTERED
-    // high-cardinality key, whose every file spans the whole value
-    // range. No filter ⇒ true (conservative); no false negatives by
-    // construction, and the pushed filters are re-applied row-level, so
-    // a false positive costs I/O, never correctness.
-    def bloomPass(f: GraftDataFile, i: Int, iv: Any): Boolean = {
-      val b = f.bloomAt(i)
-      b == null || !GraftBloom.supported(schema.fields(i).dataType) ||
-        b.mightContain(GraftBloom.hashOf(iv))
-    }
-    def pointTest(name: String, v: Any): Option[GraftDataFile => Boolean] =
-      internal(name, v).map { case (i, iv) =>
-        f => (zone(f, i) match {
-          case Some(z) if z.min != null =>
-            cmp(z.min, iv) <= 0 && cmp(z.max, iv) >= 0
-          case Some(_) => false
-          case None => true
-        }) && bloomPass(f, i, iv)
-      }
-
-    filter match {
-      case EqualTo(c, v) => pointTest(c, v)
-      case EqualNullSafe(c, null) =>
-        ord(c).map(i => f => zone(f, i).forall(_.nullCount > 0))
-      case EqualNullSafe(c, v) => pointTest(c, v)
-      case GreaterThan(c, v) => rangeTest(c, v)((z, iv) => cmp(z.max, iv) > 0)
-      case GreaterThanOrEqual(c, v) =>
-        rangeTest(c, v)((z, iv) => cmp(z.max, iv) >= 0)
-      case LessThan(c, v) => rangeTest(c, v)((z, iv) => cmp(z.min, iv) < 0)
-      case LessThanOrEqual(c, v) =>
-        rangeTest(c, v)((z, iv) => cmp(z.min, iv) <= 0)
-      case In(c, vs) =>
-        val nonNull = vs.filter(_ != null)
-        val converted = nonNull.flatMap(v => internal(c, v))
-        // EVERY value must convert, or skipping is not conservative: a
-        // dropped unconvertible value could match rows inside a file the
-        // remaining values' envelopes exclude — and a pruned file is
-        // gone for good (no residual re-check can read it)
-        if (converted.isEmpty || converted.length != nonNull.length) None
-        else ord(c).map { i =>
-          f => zone(f, i) match {
-            case Some(z) if z.min != null => converted.exists { case (_, iv) =>
-              cmp(z.min, iv) <= 0 && cmp(z.max, iv) >= 0 &&
-                bloomPass(f, i, iv)
-            }
-            case Some(_) => false
-            case None => true
-          }
-        }
-      case IsNull(c) =>
-        ord(c).map(i => f => zone(f, i).forall(_.nullCount > 0))
-      case IsNotNull(c) =>
-        ord(c).map(i => f => zone(f, i).forall(_.nullCount < f.rowCount))
-      case StringStartsWith(c, prefix) if prefix != null =>
-        ord(c).map { i =>
-          val p = UTF8String.fromString(prefix)
-          f => zone(f, i) match {
-            case Some(z) if z.min != null =>
-              val minS = z.min.asInstanceOf[UTF8String]
-              val maxS = z.max.asInstanceOf[UTF8String]
-              // strings with prefix p all sort >= p; skip when max < p,
-              // or when even min's own prefix already sorts past p
-              maxS.compareTo(p) >= 0 && {
-                if (minS.numChars() <= p.numChars()) true
-                else minS.substring(0, p.numChars()).compareTo(p) <= 0
-              }
-            case Some(_) => false
-            case None => true
-          }
-        }
-      case And(l, r) =>
-        (compile(l, schema), compile(r, schema)) match {
-          case (None, None) => None
-          case (a, b) =>
-            Some(f => a.forall(_(f)) && b.forall(_(f)))
-        }
-      case Or(l, r) =>
-        // both arms must be decidable: an unsupported arm could match
-        for (a <- compile(l, schema); b <- compile(r, schema))
-          yield (f: GraftDataFile) => a(f) || b(f)
-      case _ => None
-    }
-  }
-}
-
-/** Scan builder with column pruning, FILTER PUSHDOWN (zone-map data
-  * skipping), AGGREGATE PUSHDOWN (metadata-only MIN/MAX/COUNT), LIMIT
+/** Scan builder with column pruning, v2 PREDICATE PUSHDOWN (zone-map
+  * data skipping), AGGREGATE PUSHDOWN (metadata-only MIN/MAX/COUNT), LIMIT
   * pushdown, and statistics. A query projecting 2 of 30 columns reads
   * 2-column rows, and a query whose predicate excludes a file's min/max
   * envelope never reads that file — the two DSv2 contracts every real
-  * format honors, here over the in-JVM file store. All pushed filters
-  * are ALSO returned as residuals, so Spark re-applies them row-level:
-  * skipping is an I/O optimization, provably unable to change results.
+  * format honors, here over the in-JVM file store. Predicates compile
+  * through the one zone evaluator, [[ZonePredicate]], whose may-match
+  * test any compiled result serves (its `exact` flag matters only to
+  * partition drops). All pushed predicates are ALSO returned as
+  * residuals, so Spark re-applies them row-level: skipping is an I/O
+  * optimization, provably unable to change results.
   * `files` is passed as a thunk so the scan binds the table's CURRENT
   * contents at build time, after any earlier statement in the same query
   * plan committed; `census` reports what was skipped.
@@ -8615,11 +8415,11 @@ class GraftScanBuilder(tableSchema: StructType,
                        cdfBase: Option[GraftTable] = None)
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters
+    with org.apache.spark.sql.connector.read.SupportsPushDownV2Filters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
   private var required: StructType = tableSchema
-  private var pushed: Array[Filter] = Array.empty
+  private var pushed: Array[Predicate] = Array.empty
   private var tests: Array[GraftDataFile => Boolean] = Array.empty
   // (agg output schema, final rows, file snapshot the answer derives from)
   private var aggResult: Option[(StructType, Array[InternalRow], Int, Long)] =
@@ -8645,9 +8445,17 @@ class GraftScanBuilder(tableSchema: StructType,
   // file-skip filters DERIVED through generated columns (census label)
   private var derivedShown: Seq[String] = Nil
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val compiled = filters.flatMap(f =>
-      ZonePredicates.compile(f, tableSchema).map(t => (f, t)))
+  /** A zone-backed column: its ordinal in the files' zones and its type. */
+  private def fileColumn(name: String): Option[(Int, DataType)] =
+    Some(tableSchema.fields.indexWhere(_.name == name)).filter(i =>
+      i >= 0 && GraftDataFile.statsSupported(tableSchema(i).dataType)
+    ).map(i => (i, tableSchema(i).dataType))
+
+  override def pushPredicates(predicates: Array[Predicate])
+      : Array[Predicate] = {
+    val compiled = predicates.flatMap(p =>
+      ZonePredicate.compile(Seq(p), fileColumn).map(p -> _))
+    pushed = compiled.map(_._1)
     // generated-column partition pruning (Delta's): an equality/IN
     // filter on a generation SOURCE column derives the generated
     // column's value by evaluating the generation expression on the
@@ -8658,12 +8466,11 @@ class GraftScanBuilder(tableSchema: StructType,
     // row with src = lit has gen = f(lit) exactly — a file whose
     // gen-zone excludes f(lit) holds no matching row. Any derivation
     // failure skips silently (pruning lost, rows never).
-    val derived = deriveGenerated(filters)
-    pushed = compiled.map(_._1)
-    tests = compiled.map(_._2) ++
-      derived.flatMap(ZonePredicates.compile(_, tableSchema))
+    val derived = deriveGenerated(predicates)
+    tests = (compiled.map(_._2) ++ ZonePredicate.compile(derived, fileColumn))
+      .map(_.mayMatch)
     derivedShown = derived.map(d => s"derived:$d")
-    filters // everything stays a residual: Spark re-applies row-level
+    predicates // everything stays a residual: Spark re-applies row-level
   }
 
   /** True when the generation expression is provably NON-DECREASING in
@@ -8682,11 +8489,11 @@ class GraftScanBuilder(tableSchema: StructType,
     * b div 86400` and reads only those days' files. */
   private def monotoneNonDecreasing(
       e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Divide, IntegralDivide}
+    import org.apache.spark.sql.catalyst.expressions.{BinaryArithmetic,
+      BoundReference, Cast, Divide, Expression, IntegralDivide}
     // foldable, not Literal: the dialect's widening pass wraps an INT
     // literal in Cast(…, BIGINT) when the source is BIGINT
-    def positiveLit(
-        x: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+    def positiveLit(x: Expression): Boolean =
       x.foldable && (try x.eval(null) match {
         case v: Number => v.doubleValue > 0
         case v: org.apache.spark.sql.types.Decimal => v.toDouble > 0
@@ -8700,15 +8507,12 @@ class GraftScanBuilder(tableSchema: StructType,
     // this path may never have. Double division is IEEE-monotone for
     // ANY positive divisor (overflow saturates to ±Infinity, order
     // preserved), so fractional divisors are fine there.
-    def decimal(
-        x: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
+    def decimal(x: Expression): Boolean =
       x.dataType.isInstanceOf[org.apache.spark.sql.types.DecimalType]
     e match {
       case _: BoundReference => true
-      case d: IntegralDivide =>
-        !decimal(d.left) && !decimal(d) &&
-          positiveLit(d.right) && monotoneNonDecreasing(d.left)
-      case d: Divide =>
+      case d: BinaryArithmetic
+          if d.isInstanceOf[IntegralDivide] || d.isInstanceOf[Divide] =>
         !decimal(d.left) && !decimal(d) &&
           positiveLit(d.right) && monotoneNonDecreasing(d.left)
       case c: Cast =>
@@ -8716,19 +8520,20 @@ class GraftScanBuilder(tableSchema: StructType,
         // order-preserving; string casts order differently — excluded
         c.child.dataType != org.apache.spark.sql.types.StringType &&
           c.dataType != org.apache.spark.sql.types.StringType &&
-          org.apache.spark.sql.catalyst.expressions.Cast
-            .canUpCast(c.child.dataType, c.dataType) &&
+          Cast.canUpCast(c.child.dataType, c.dataType) &&
           monotoneNonDecreasing(c.child)
       case _ => false
     }
   }
 
-  private def deriveGenerated(filters: Array[Filter]): Seq[Filter] = {
-    import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+  private def deriveGenerated(predicates: Array[Predicate]): Seq[Predicate] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      EqualTo, GenericInternalRow, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
     val gens = try GraftFill.generatedCols(tableSchema) catch {
       case scala.util.control.NonFatal(_) => Nil
     }
     if (gens.isEmpty) return Nil
+    val leaves = predicates.toSeq.flatMap(ZonePredicate.leaf)
     gens.flatMap { g =>
       // only single-source expressions derive: the literal binds one
       // ordinal, and every other reference would read an unbound NULL
@@ -8736,54 +8541,50 @@ class GraftScanBuilder(tableSchema: StructType,
         case b: org.apache.spark.sql.catalyst.expressions.BoundReference =>
           b.ordinal
       }.distinct
-      if (refs.length != 1) Nil
+      val genField = tableSchema.fields(g.ord)
+      // ...and only into the column's own type: a write stores the
+      // expression's value as it evaluates
+      if (refs.length != 1 || g.check.expr.dataType != genField.dataType) Nil
       else {
         val srcField = tableSchema.fields(refs.head)
-        val genField = tableSchema.fields(g.ord)
         // range filters derive only through the monotone whitelist:
         // src >= L implies gen >= f(L) (and symmetrically above), with
         // the derived bound always INCLUSIVE — f collapses values, so
         // a strict source bound still admits gen = f(L)
         val mono = monotoneNonDecreasing(g.check.expr)
-        val toInternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(srcField.dataType)
-        val toExternal = org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToScalaConverter(genField.dataType)
+        // literals arrive Catalyst-internal, the form the generation
+        // expression evaluates over and the zones hold
         def derive(v: Any): Option[Any] =
           if (v == null) None
           else try {
-            val row = new org.apache.spark.sql.catalyst.expressions
-              .GenericInternalRow(tableSchema.length)
-            row.update(refs.head, toInternal(v))
-            Option(g.check.expr.eval(row)).map(toExternal)
+            val row = new GenericInternalRow(tableSchema.length)
+            row.update(refs.head, v)
+            Option(g.check.expr.eval(row))
           } catch { case scala.util.control.NonFatal(_) => None }
-        filters.toSeq.flatMap {
-          case EqualTo(a, v) if a == srcField.name =>
-            derive(v).map(dv => EqualTo(genField.name, dv): Filter)
-          case In(a, vs) if a == srcField.name && vs != null && vs.nonEmpty =>
-            val dvs = vs.toSeq.map(derive)
-            // one underivable value poisons the set (the row could land
-            // in any file) — derive only when every value maps
-            if (dvs.forall(_.isDefined))
-              Some(In(genField.name, dvs.map(_.get).toArray): Filter)
-            else None
-          case GreaterThan(a, v) if mono && a == srcField.name =>
-            derive(v).map(dv =>
-              GreaterThanOrEqual(genField.name, dv): Filter)
-          case GreaterThanOrEqual(a, v) if mono && a == srcField.name =>
-            derive(v).map(dv =>
-              GreaterThanOrEqual(genField.name, dv): Filter)
-          case LessThan(a, v) if mono && a == srcField.name =>
-            derive(v).map(dv => LessThanOrEqual(genField.name, dv): Filter)
-          case LessThanOrEqual(a, v) if mono && a == srcField.name =>
-            derive(v).map(dv => LessThanOrEqual(genField.name, dv): Filter)
-          case _ => None
+        val gen = AttributeReference(genField.name, genField.dataType)()
+        leaves.filter(l => l.column == srcField.name &&
+            l.values.forall(_.dataType == srcField.dataType)).flatMap { l =>
+          val dvs = l.values.map(v => derive(v.value))
+          // one underivable IN value poisons the set (the row could land
+          // in any file) — derive only when every value maps
+          if (!dvs.forall(_.isDefined)) None
+          else {
+            val lits = dvs.flatten.map(Literal(_, genField.dataType))
+            (l.op match {
+              case "=" => Some(EqualTo(gen, lits.head))
+              case "IN" => Some(In(gen, lits))
+              case ">" | ">=" if mono => Some(GreaterThanOrEqual(gen, lits.head))
+              case "<" | "<=" if mono => Some(LessThanOrEqual(gen, lits.head))
+              case _ => None
+            }).flatMap(new org.apache.spark.sql.catalyst.util
+              .V2ExpressionBuilder(_, true).buildPredicate())
+          }
         }
       }
     }
   }
 
-  override def pushedFilters(): Array[Filter] = pushed
+  override def pushedPredicates(): Array[Predicate] = pushed
 
   // ---- LIMIT pushdown: partial (Spark re-applies the limit), so the
   // scan may stop delivering rows past the mark — composed with zone
@@ -8849,7 +8650,7 @@ class GraftScanBuilder(tableSchema: StructType,
         .filter(_ >= 0)
         // every file must carry a zone for the column (mid-evolution
         // files may be narrower; unsupported types have null zones)
-        .filter(i => fs.forall(f => i < f.zones.length && f.zones(i) != null))
+        .filter(i => fs.forall(_.zone(i) != null))
 
     val aggFns: Seq[Option[(StructField, Seq[GraftDataFile] => Any)]] =
       agg.aggregateExpressions.toSeq.map {
@@ -8905,18 +8706,19 @@ class GraftScanBuilder(tableSchema: StructType,
     * stays invisible here, which errs toward refusing (loud), never
     * toward serving a crossing read. */
   private def cdfLowerBound: Option[Int] = {
-    import org.apache.spark.sql.sources._
-    def boundOf(f: Filter): Option[Int] = f match {
-      case GreaterThan("_commit_version", v: Number) => Some(v.intValue + 1)
-      case GreaterThanOrEqual("_commit_version", v: Number) =>
-        Some(v.intValue)
-      case EqualTo("_commit_version", v: Number) => Some(v.intValue)
-      case In("_commit_version", vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Number]) =>
-        Some(vs.iterator.map(_.asInstanceOf[Number].intValue).min)
-      case And(l, r) => (boundOf(l).toSeq ++ boundOf(r).toSeq).maxOption
-      case _ => None
-    }
+    def boundOf(p: Predicate): Option[Int] =
+      if (p.name == "AND")
+        p.children.collect { case q: Predicate => q }.flatMap(boundOf).maxOption
+      else ZonePredicate.leaf(p).filter(l => l.column == "_commit_version" &&
+          l.values.nonEmpty && l.values.forall(_.value.isInstanceOf[Number]))
+        .flatMap { l =>
+          val ns = l.values.map(_.value.asInstanceOf[Number].intValue)
+          l.op match {
+            case ">" => Some(ns.head + 1)
+            case ">=" | "=" | "IN" => Some(ns.min)
+            case _ => None
+          }
+        }
     pushed.flatMap(boundOf).maxOption
   }
 
@@ -8929,7 +8731,7 @@ class GraftScanBuilder(tableSchema: StructType,
     aggResult.foreach { case (schema, rows, nFiles, nRows) =>
       // metadata-only answer: zero data rows read
       census(ScanCensus(nFiles, 0, nRows, 0, Seq("aggregate: pushed")))
-      return new GraftScan(schema, Array(ScanChunk(rows, Map.empty)),
+      return new GraftScan(schema, Array(ScanChunk(rows)),
         math.max(1L, rows.length.toLong * math.max(1, schema.defaultSize)))
     }
     val (all, dvm) = state()
@@ -8941,8 +8743,7 @@ class GraftScanBuilder(tableSchema: StructType,
     // file ordinals ride along: they are the `_file_id` metadata value
     // and must survive zone/limit pruning (t$files numbers the SAME way)
     val zoneSurviving =
-      if (tests.isEmpty) all.zipWithIndex
-      else all.zipWithIndex.filter { case (f, _) => tests.forall(_(f)) }
+      all.zipWithIndex.filter { case (f, _) => tests.forall(_(f)) }
     // partial limit: stop delivering files once `limit` rows are reached
     // (Spark re-applies the limit; fewer whole files read is pure I/O win)
     val surviving = limit match {
@@ -8971,22 +8772,7 @@ class GraftScanBuilder(tableSchema: StructType,
       else required.length.toDouble / tableSchema.length
     val bytes = math.max(1L,
       (surviving.iterator.map(_._1.sizeBytes).sum * colFrac).toLong)
-    // per-chunk zones keyed by COLUMN NAME: names survive column pruning
-    // (runtime filters reference output columns), ordinals do not
-    def zonesByName(f: GraftDataFile): Map[String, ColZone] =
-      tableSchema.fields.iterator.zipWithIndex.flatMap { case (fl, i) =>
-        if (i < f.zones.length && f.zones(i) != null) Some(fl.name -> f.zones(i))
-        else None
-      }.toMap
-    // by-name thunk: building the map forces the file's (possibly
-    // sidecar-backed) filter load — only a runtime point/IN refinement
-    // should pay it, so the chunk defers until actually consulted
-    def bloomsByName(f: GraftDataFile): () => Map[String, GraftBloom] =
-      () =>
-        if (f.bloomRefs == null || f.blooms.isEmpty) Map.empty
-        else tableSchema.fields.iterator.zipWithIndex.flatMap {
-          case (fl, i) => Option(f.bloomAt(i)).map(fl.name -> _)
-        }.toMap
+    val zonesByName = ScanChunk.zonesByName(tableSchema)
     // storage-partitioned-join eligibility: the scan can report a
     // key-grouped layout only when the partition (or bucket-source)
     // columns survive into the output (join keys must resolve against it)
@@ -9096,7 +8882,7 @@ class GraftScanBuilder(tableSchema: StructType,
               GraftMetaWrapPartition(rcp.partition(dataIdx),
                 required.json, metaCols, fid),
               zonesByName(f), f.groupKey, f.rowCount,
-              () => eagerMeta(f, fid), bloomsByName(f))
+              () => eagerMeta(f, fid))
           case None if f.persisted =>
             // LAZY: the metadata-augmented projection runs in the
             // partition reader, executor-side — a MOR operation's scan
@@ -9114,9 +8900,9 @@ class GraftScanBuilder(tableSchema: StructType,
                 trackBase = if (trk != null) trk.base else -1L,
                 trackVer = if (trk != null) trk.ver else -1L),
               zonesByName(f), f.groupKey, f.rowCount - dead.size,
-              () => eagerMeta(f, fid), bloomsByName(f))
+              () => eagerMeta(f, fid))
           case None => ScanChunk(eagerMeta(f, fid), zonesByName(f),
-            f.groupKey, bloomsByName(f))
+            f.groupKey)
         }
       }.toArray
       new GraftScan(outSchema, chunks, bytes, census,
@@ -9161,9 +8947,8 @@ class GraftScanBuilder(tableSchema: StructType,
               f.segment.schema.json, idx, dead.toArray, Nil, -1,
               sel, selEx),
             zonesByName(f), f.groupKey, f.rowCount - dead.size,
-            () => materialize(f), bloomsByName(f))
-        case None => ScanChunk(materialize(f), zonesByName(f), f.groupKey,
-          bloomsByName(f))
+            () => materialize(f))
+        case None => ScanChunk(materialize(f), zonesByName(f), f.groupKey)
       }
       new GraftScan(if (identityProj) tableSchema else required,
         surviving.map { case (f, _) => chunkOf(f) }.toArray,
@@ -9174,7 +8959,7 @@ class GraftScanBuilder(tableSchema: StructType,
 }
 
 /** One surviving data file inside a [[GraftScan]]: its (possibly
-  * column-pruned) rows plus its zone maps keyed by column name — kept on
+  * column-pruned) rows plus its zones by column name — kept on
   * the scan so RUNTIME filters (DPP subquery results) can skip whole
   * chunks after planning, not just the static pushdown at build time.
   * `groupKey` (partition-column values, when the file is wholly owned by
@@ -9190,34 +8975,43 @@ class GraftScanBuilder(tableSchema: StructType,
   * `rows` materializer. */
 private[sources] final class ScanChunk(
     rowsFn: () => Array[InternalRow],
-    val zones: Map[String, ColZone],
+    val zones: ZoneView[String],
     val groupKey: Option[Seq[Any]],
     val rowCount: Int,
-    val lazySeg: Option[InputPartition],
-    // by-name: forcing it may read a bloom SIDECAR, which only a
-    // runtime point/IN refinement should pay for — never plain planning
-    bloomsFn: () => Map[String, GraftBloom] = () => Map.empty) {
+    val lazySeg: Option[InputPartition]) {
   lazy val rows: Array[InternalRow] = rowsFn()
-  lazy val blooms: Map[String, GraftBloom] = bloomsFn()
   /** Runtime-filter exclusion under key-grouped reporting: same
     * partition value, zero rows, zero I/O. */
   def emptied: ScanChunk =
-    new ScanChunk(() => Array.empty, zones, groupKey, 0, None, bloomsFn)
+    new ScanChunk(() => Array.empty, zones, groupKey, 0, None)
 }
 
 private[sources] object ScanChunk {
-  def apply(rows: Array[InternalRow], zones: Map[String, ColZone],
-            groupKey: Option[Seq[Any]] = None,
-            blooms: () => Map[String, GraftBloom] = () => Map.empty)
-      : ScanChunk =
-    new ScanChunk(() => rows, zones, groupKey, rows.length, None, blooms)
+  val NoZones: ZoneView[String] = new ZoneView[String] {
+    def zone(col: String): ColZone = null
+    def bloom(col: String): GraftBloom = null
+  }
 
-  def lazily(seg: InputPartition, zones: Map[String, ColZone],
+  /** A file's zones by COLUMN NAME of `schema`: names survive column
+    * pruning (runtime filters reference output columns), ordinals do
+    * not. A Bloom filter (possibly a sidecar read) loads only when a
+    * runtime point or IN test consults it, never at plain planning. */
+  def zonesByName(schema: StructType): GraftDataFile => ZoneView[String] = {
+    val ordOf = schema.fieldNames.zipWithIndex.toMap
+    f => new ZoneView[String] {
+      def zone(col: String): ColZone = ordOf.get(col).map(f.zone).orNull
+      def bloom(col: String): GraftBloom = ordOf.get(col).map(f.bloom).orNull
+    }
+  }
+
+  def apply(rows: Array[InternalRow], zones: ZoneView[String] = NoZones,
+            groupKey: Option[Seq[Any]] = None): ScanChunk =
+    new ScanChunk(() => rows, zones, groupKey, rows.length, None)
+
+  def lazily(seg: InputPartition, zones: ZoneView[String],
              groupKey: Option[Seq[Any]], rowCount: Int,
-             loader: () => Array[InternalRow],
-             blooms: () => Map[String, GraftBloom] = () => Map.empty)
-      : ScanChunk =
-    new ScanChunk(loader, zones, groupKey, rowCount, Some(seg), blooms)
+             loader: () => Array[InternalRow]): ScanChunk =
+    new ScanChunk(loader, zones, groupKey, rowCount, Some(seg))
 }
 
 /** A plain-scan partition that carries a parquet segment REFERENCE plus
@@ -9473,75 +9267,6 @@ private[sources] object GraftChangeReads {
   }
 }
 
-/** Zone-map may-match tests for the V2 [[Predicate]]s a runtime filter
-  * delivers (`col IN (v...)` / `col = v` from an executed DPP subquery,
-  * AND/OR composition). Values arrive in Catalyst-internal form, the same
-  * representation the zones hold. Conservative: compiles to None (no
-  * pruning) for unrecognized shapes, returns false only when NO row in
-  * the chunk can satisfy the predicate; a type mismatch (cast-wrapped
-  * join key) falls back to may-match instead of mis-pruning. */
-private[sources] object ZonePredicatesV2 {
-  private type Lit = org.apache.spark.sql.connector.expressions.Literal[_]
-
-  private def cmp(a: Any, b: Any): Int =
-    a.asInstanceOf[Comparable[Any]].compareTo(b)
-
-  private def nameOf(
-      e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-    e match {
-      case r: NamedReference if r.fieldNames.length == 1 =>
-        Some(r.fieldNames.head)
-      case _ => None
-    }
-
-  private def inTest(name: String, vs: Seq[Any]): ScanChunk => Boolean =
-    c => c.zones.get(name) match {
-      case Some(z) if z.min != null =>
-        try vs.exists { v =>
-          v != null && cmp(z.min, v) <= 0 && cmp(z.max, v) >= 0 &&
-            // bloom refinement of the runtime IN-set (DPP key values):
-            // exact-value absence skips the chunk the envelope admits
-            (c.blooms.get(name) match {
-              case Some(b) =>
-                try b.mightContain(GraftBloom.hashOf(v))
-                catch { case _: IllegalArgumentException => true }
-              case None => true
-            })
-        }
-        catch { case _: ClassCastException => true } // cast-wrapped key
-      case Some(_) => false // all-null column never equi-matches
-      case None => true
-    }
-
-  def compile(p: Predicate): Option[ScanChunk => Boolean] = p.name() match {
-    case "IN" =>
-      val ch = p.children()
-      for {
-        n <- if (ch.length >= 2) nameOf(ch.head) else None
-        if ch.tail.forall(_.isInstanceOf[Lit])
-      } yield inTest(n, ch.tail.toSeq.map(_.asInstanceOf[Lit].value: Any))
-    case "=" | "<=>" =>
-      (p.children() match {
-        case Array(r, l: Lit) => nameOf(r).map((_, l.value: Any))
-        case Array(l: Lit, r) => nameOf(r).map((_, l.value: Any))
-        case _ => None
-      }).map { case (n, v) => inTest(n, Seq(v)) }
-    case "AND" =>
-      val ch = p.children().collect { case q: Predicate => q }
-      if (ch.length != 2) None
-      else (compile(ch(0)), compile(ch(1))) match {
-        case (None, None) => None
-        case (a, b) => Some(c => a.forall(_(c)) && b.forall(_(c)))
-      }
-    case "OR" =>
-      val ch = p.children().collect { case q: Predicate => q }
-      if (ch.length != 2) None
-      else for (a <- compile(ch(0)); b <- compile(ch(1)))
-        yield (c: ScanChunk) => a(c) || b(c)
-    case _ => None
-  }
-}
-
 /** Scan over the surviving data files (one chunk per file), split into
   * enough input partitions that downstream operators parallelize even
   * over a single large file. Reports `SupportsReportStatistics` — size
@@ -9556,8 +9281,10 @@ private[sources] object ZonePredicatesV2 {
   * excludes every key drop BEFORE any row is read. That is dynamic file
   * skipping (the Iceberg/Delta runtime-filter read path): the static
   * half (predicate literals) prunes at build, this half prunes from
-  * runtime join keys. Always safe: the join re-applies its condition, so
-  * over-retention costs only I/O, and the zone test is conservative. */
+  * runtime join keys, both through the same [[ZonePredicate]] may-match
+  * test (any compiled result serves; `exact` is not needed). Always
+  * safe: the join re-applies its condition, so over-retention costs only
+  * I/O, and the zone test is conservative. */
 class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
                 sizeBytes: Long, census: ScanCensus => Unit = _ => (),
                 staticPushed: Seq[String] = Nil,
@@ -9648,16 +9375,17 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
     }
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    val tests = predicates.flatMap(ZonePredicatesV2.compile)
-    if (tests.nonEmpty) {
+    ZonePredicate.compile(predicates, name =>
+      schema.find(_.name == name).map(f => (name, f.dataType))
+    ).foreach { t =>
       // under key-grouped reporting the partition-value set must be
       // PRESERVED (Spark asserts the runtime filter kept the layout):
       // excluded chunks empty out instead of dropping — same I/O win,
       // stable partitioning
       chunks =
         if (spjActive)
-          chunks.map(c => if (tests.forall(_(c))) c else c.emptied)
-        else chunks.filter(c => tests.forall(_(c)))
+          chunks.map(c => if (t.mayMatch(c.zones)) c else c.emptied)
+        else chunks.filter(c => t.mayMatch(c.zones))
       val live = chunks.count(_.rowCount > 0)
       census(ScanCensus(chunks0.length, live, totalRows,
         chunks.iterator.map(_.rowCount.toLong).sum,
@@ -9936,7 +9664,7 @@ case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
 object GraftScan {
   /** Single-chunk, zone-less scan over loose rows (row-level path). */
   def of(schema: StructType, rows: Array[InternalRow]): GraftScan =
-    new GraftScan(schema, Array(ScanChunk(rows, Map.empty)),
+    new GraftScan(schema, Array(ScanChunk(rows)),
       math.max(1L, rows.length.toLong * math.max(1, schema.defaultSize)))
 }
 

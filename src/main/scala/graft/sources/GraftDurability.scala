@@ -1087,11 +1087,9 @@ private[sources] object GraftLogCodec {
         k.lazyZip(kts).map((v, t) => encodeValue(t, v)).toList): JValue)
         .getOrElse(JNull: JValue),
       "zones" -> (JArray(schema.fields.toList.zipWithIndex.map { case (fl, i) =>
-        if (i < f.zones.length && f.zones(i) != null) {
-          val z = f.zones(i)
-          JArray(List(encodeValue(fl.dataType, z.min),
-            encodeValue(fl.dataType, z.max), JLong(z.nullCount)))
-        } else JNull
+        Option(f.zone(i)).map(z => JArray(List(encodeValue(fl.dataType, z.min),
+          encodeValue(fl.dataType, z.max), JLong(z.nullCount))): JValue)
+          .getOrElse(JNull)
       }): JValue))
     // position views (CDC records): positions, never rows — "sel" =
     // included positions, "xsel" = excluded (a DV's live complement)

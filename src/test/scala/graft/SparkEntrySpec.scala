@@ -5,16 +5,11 @@ package graft
   * (one fewer CORRECTNESS row, no error anywhere). */
 class SparkEntrySpec extends SparkSpec {
 
-  test("registry names are unique and every query ships an oracle") {
+  test("registry names are unique") {
     val names = SparkEntry.registry.map(_.name)
     val dups = names.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
     assert(dups.isEmpty, s"duplicate query names: $dups")
     assert(SparkEntry.queries.size === SparkEntry.registry.size)
-    // every registered query currently carries a DuckDB oracle (non-SQL
-    // ops would use Q.noOracle and downgrade to a rows-only check; none
-    // do today — this catches an accidental omission)
-    val missing = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
-    assert(missing.isEmpty, s"queries missing an oracle: $missing")
   }
 
   test("flagship entry returns rows on sf0.001") {

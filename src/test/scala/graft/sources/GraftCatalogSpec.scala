@@ -146,6 +146,100 @@ class GraftCatalogSpec extends SparkSpec {
       === Seq((1L, 1, "a")))
   }
 
+  /** A table PARTITIONED BY (part) with rows in parts 1, 2 and NULL. */
+  private def nullPartTable(name: String): String = {
+    val t = freshTable(name)
+    spark.sql(
+      s"CREATE TABLE $t (id BIGINT, part INT, v STRING) PARTITIONED BY (part)")
+    spark.sql(s"INSERT INTO $t VALUES (1, 1, 'a'), (2, 2, 'b'), " +
+      "(3, NULL, 'c'), (4, 2, 'd')")
+    t
+  }
+
+  private def rowsOf(t: String): Seq[(Long, Option[Int], String)] =
+    spark.table(t).orderBy("id").collect().toSeq.map(r =>
+      (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Int]), r.getString(2)))
+
+  test("DELETE with a NULL in a partition IN list keeps the NULL partition") {
+    // `part IN (2, NULL)` is never TRUE for a NULL part: under SQL
+    // semantics the NULL partition survives, whatever path serves it
+    val t = nullPartTable("t_pdel_innull")
+    spark.sql(s"DELETE FROM $t WHERE part IN (2, NULL)")
+    assert(rowsOf(t) === Seq((1L, Some(1), "a"), (3L, None, "c")))
+  }
+
+  test("overwrite with a NULL in a partition IN list keeps the NULL partition") {
+    val t = nullPartTable("t_povr_innull")
+    Seq((9L, 2, "z")).toDF("id", "part", "v").writeTo(t)
+      .overwrite(org.apache.spark.sql.functions.expr("part IN (2, NULL)"))
+    assert(rowsOf(t) ===
+      Seq((1L, Some(1), "a"), (3L, None, "c"), (9L, Some(2), "z")))
+  }
+
+  // the row-level rewrite's runtime group filter lists the matched rows'
+  // partition values, the NULL partition as a NULL literal: that group
+  // must still be selected and replaced
+  test("copy-on-write DELETE rewrites a matched row in the NULL partition") {
+    val t = nullPartTable("t_cowdel_null")
+    spark.sql(s"DELETE FROM $t WHERE v = 'c'")
+    assert(rowsOf(t) ===
+      Seq((1L, Some(1), "a"), (2L, Some(2), "b"), (4L, Some(2), "d")))
+    assert(spark.table(s"graft_cat.ns.`t_cowdel_null$$history`")
+      .filter("operation = 'DELETE'").select("parameters").as[String]
+      .collect().toSeq === Seq(s"mode=${GraftTable.CopyOnWrite}"))
+  }
+
+  test("copy-on-write UPDATE rewrites a matched row in the NULL partition") {
+    val t = nullPartTable("t_cowupd_null")
+    spark.sql(s"UPDATE $t SET v = 'x' WHERE v = 'c'")
+    assert(rowsOf(t) === Seq((1L, Some(1), "a"), (2L, Some(2), "b"),
+      (3L, None, "x"), (4L, Some(2), "d")))
+  }
+
+  test("a range DELETE on the partition column is a metadata-only drop") {
+    // a partition key is a zone whose min equals its max, so `part < 3`
+    // decides every group exactly: parts 1 and 2 drop from metadata
+    val t = freshTable("t_pdel_range")
+    spark.sql(
+      s"CREATE TABLE $t (id BIGINT, part INT, v STRING) PARTITIONED BY (part)")
+    spark.sql(s"INSERT INTO $t VALUES (1, 1, 'a'), (2, 2, 'b'), " +
+      "(3, 3, 'c'), (4, 4, 'd'), (5, 3, 'e')")
+    val table = GraftTableStore.tables((Seq("ns"), "t_pdel_range"))
+    val survivorsBefore = identitySet(table.currentRows.filter(_.getInt(1) >= 3))
+    spark.sql(s"DELETE FROM $t WHERE part < 3")
+    assert(spark.table(t).orderBy("id").as[(Long, Int, String)].collect().toSeq
+      === Seq((3L, 3, "c"), (4L, 4, "d"), (5L, 3, "e")))
+    // every surviving row is the SAME object: nothing was rewritten
+    assert(table.currentRows.length === 3)
+    table.currentRows.foreach(r => assert(survivorsBefore.contains(r),
+      "metadata delete must not rewrite surviving rows"))
+    // the commit is the metadata delete's (a row-level rewrite records
+    // its write mode instead of the predicate)
+    val params = spark.table(s"graft_cat.ns.`t_pdel_range$$history`")
+      .filter("operation = 'DELETE'").select("parameters").as[String]
+      .collect().toSeq
+    assert(params.length === 1 && params.head.startsWith("predicate="),
+      s"DELETE history: $params")
+  }
+
+  test("a prefix DELETE on a string partition column lands through the " +
+      "row-level rewrite") {
+    // STARTS_WITH is only an envelope test (key 'b' passes prefix 'ab'),
+    // so it never drops partitions from metadata
+    val t = freshTable("t_pdel_prefix")
+    spark.sql(
+      s"CREATE TABLE $t (id BIGINT, pr STRING) PARTITIONED BY (pr)")
+    spark.sql(s"INSERT INTO $t VALUES (1, 'a'), (2, 'ab'), (3, 'b'), " +
+      "(4, 'ba'), (5, 'c'), (6, NULL)")
+    spark.sql(s"DELETE FROM $t WHERE pr LIKE 'b%'")
+    assert(spark.table(t).orderBy("id").collect().toSeq
+      .map(r => (r.getLong(0), Option(r.getString(1)))) ===
+      Seq((1L, Some("a")), (2L, Some("ab")), (5L, Some("c")), (6L, None)))
+    assert(spark.table(s"graft_cat.ns.`t_pdel_prefix$$history`")
+      .filter("operation = 'DELETE'").select("parameters").as[String]
+      .collect().toSeq === Seq(s"mode=${GraftTable.CopyOnWrite}"))
+  }
+
   test("INSERT OVERWRITE: dynamic replaces only landed partitions, static the table") {
     val t = freshTable("t_povr")
     spark.sql(
