@@ -1351,13 +1351,6 @@ final class GraftDataFile private (
       : Option[(scala.collection.immutable.BitSet, Boolean)] =
     Option(sel).map((_, selExclude))
 
-  /** [[viewSel]] in the serializable shape scan partitions carry:
-    * (ascending positions, exclude flag); (empty, false) = no view. */
-  private[sources] def selArrays: (Array[Int], Boolean) = viewSel match {
-    case Some((bs, ex)) => (bs.toArray, ex)
-    case None => (Array.empty[Int], false)
-  }
-
   /** ROW-TRACKING state (null = untracked). Assigned ONCE — at the
     * commit that adds the file (snap mints arithmetic tracks; rewrites
     * attach explicit vectors before install) or at log decode — and
@@ -1438,7 +1431,7 @@ final class GraftDataFile private (
   * toward the limit, which only ever errs toward reading more. */
 private[sources] final class GraftDeriveRecipe(
     val exactCount: Boolean,
-    val partition: Array[Int] => org.apache.spark.sql.connector.read.InputPartition,
+    val partition: Array[Int] => GraftScanPartition,
     val driverRows: () => Array[InternalRow],
     // true only when BOTH the row count and every zone (min/max AND
     // nullCount) describe the emitted rows exactly — what aggregate
@@ -5190,19 +5183,10 @@ class GraftTable(initialName: String, initialSchema: StructType,
       ai += 1
     }
     val trackedCdc = rowTrackingEnabled
-    def segOf(f: GraftDataFile): GraftSegmentScanPartition = {
-      val fs = f.segment.schema
-      val (sel, selEx) = f.selArrays
-      val t = f.track
-      GraftSegmentScanPartition(f.segment.path.toString, fs.json,
-        Array.tabulate(fs.length)(identity), Array.empty,
-        if (trackedCdc) Seq("_row_id") else Nil, -1,
-        sel, selEx,
-        tracked = trackedCdc && t != null,
-        trackExplicit = t != null && t.explicit,
-        trackBase = if (t != null) t.base else -1L,
-        trackVer = if (t != null) t.ver else -1L)
-    }
+    def segOf(f: GraftDataFile): GraftSegmentScanPartition =
+      GraftSegmentScanPartition.of(f,
+        Array.tabulate(f.segment.schema.length)(identity),
+        metaCols = if (trackedCdc) Seq("_row_id") else Nil)
     def zonesFor(tagMin: String, tagMax: String,
         members: Seq[GraftDataFile], claimed: Int): Array[ColZone] = {
       val z = new Array[ColZone](outSchema.length)
@@ -6998,11 +6982,11 @@ class GraftTable(initialName: String, initialSchema: StructType,
       override def command(): RowLevelOperation.Command = info.command()
 
       // the operation's scan defines the rewritten group set: for a
-      // partitioned table a runtime-filterable scan (Spark's group-filter
-      // subquery narrows it to the partitions with matched rows); for an
-      // unpartitioned table the whole table. No column pruning in either —
-      // the rewrite re-writes complete rows. The scanned FILE VECTOR is
-      // captured for the commit's write-conflict check.
+      // partitioned table Spark's group-filter subquery narrows it to
+      // the partitions with matched rows; an unpartitioned table is one
+      // group, the whole table. No column pruning — the rewrite re-writes
+      // complete rows. The scanned FILE VECTOR is captured for the
+      // commit's write-conflict check.
       @volatile private var rlScan: GraftRowLevelScan = _
       @volatile private var scannedFiles: Vector[GraftDataFile] = _
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -7018,51 +7002,12 @@ class GraftTable(initialName: String, initialSchema: StructType,
             if (rowTrackingEnabled)
               Seq("_row_id", "_row_commit_version", "_row_probe")
             else Nil
-          val outSchema =
-            if (trackMeta.isEmpty) tableSchema
-            else StructType(tableSchema.fields ++ trackMeta.map(n =>
-              org.apache.spark.sql.types.StructField(n,
-                GraftTable.metaTypeOf(n), nullable = true)))
-          if (partitionCols.isEmpty) {
-            // unpartitioned: the whole table is ONE group — the rewrite
-            // reads everything by definition (COW tables carry no DVs),
-            // but persisted segments still STREAM through partition
-            // readers; the driver handles references only
-            val idx = Array.tabulate(tableSchema.length)(identity)
-            val chunks = st._1.zipWithIndex.map { case (f, fid) =>
-              val dead = st._2.getOrElse(f,
-                scala.collection.immutable.BitSet.empty)
-              if (f.persisted) {
-                val (sel, selEx) = f.selArrays
-                val trk = f.track
-                ScanChunk.lazily(
-                  GraftSegmentScanPartition(f.segment.path.toString,
-                    f.segment.schema.json, idx, dead.toArray, trackMeta,
-                    fid, sel, selEx,
-                    tracked = trackMeta.nonEmpty && trk != null,
-                    trackExplicit = trk != null && trk.explicit,
-                    trackBase = if (trk != null) trk.base else -1L,
-                    trackVer = if (trk != null) trk.ver else -1L),
-                  ScanChunk.NoZones, None, f.rowCount - dead.size,
-                  () =>
-                    if (trackMeta.isEmpty)
-                      GraftDataFile.liveRows(f.rows, dead)
-                    else GraftTable.trackAugment(f.rows, tableSchema,
-                      f.track))
-              } else ScanChunk(
-                if (trackMeta.isEmpty) GraftDataFile.liveRows(f.rows, dead)
-                else GraftTable.trackAugment(f.rows, tableSchema, f.track))
-            }.toArray
-            new GraftScan(outSchema, chunks,
-              math.max(1L, st._1.iterator.map(_.sizeBytes).sum))
-          } else {
-            // partitioned: hand the scan FILES, not rows — the runtime
-            // group filter drops untouched partitions' files before a
-            // row (or, durable, a segment byte) is ever read
-            rlScan = new GraftRowLevelScan(outSchema, partitionCols,
-              st._1, boundGroupKey(), trackMeta.nonEmpty)
-            rlScan
-          }
+          // hand the scan FILES, not rows — the runtime group filter
+          // drops untouched partitions' files before a row (or, durable,
+          // a segment byte) is ever read
+          rlScan = new GraftRowLevelScan(tableSchema, partitionCols,
+            st._1, st._2, boundGroupKey(), trackMeta)
+          rlScan
         }
 
       // group-based COW: the write receives the COMPLETE post-operation
@@ -7262,57 +7207,86 @@ object GraftTable {
         "canonical data-row hash (rewrite-internal)",
         colNullable = true))
 
-  /** Catalyst type of one metadata column (the scan builds meta rows
-    * and projections by NAME). */
-  def metaTypeOf(name: String): DataType = name match {
-    case "_file_ref" => org.apache.spark.sql.types.StringType
-    case "_row_id" | "_row_commit_version" | "_row_probe" =>
-      org.apache.spark.sql.types.LongType
-    case _ => org.apache.spark.sql.types.IntegerType
+  private val metaColumnOf: Map[String, MetadataColumn] =
+    (MetaColumns ++ TrackMetaColumns).map(c => c.name -> c).toMap
+
+  /** Is `name` one of the metadata columns declared above? */
+  def isMetaColumn(name: String): Boolean = metaColumnOf.contains(name)
+
+  /** The output field of one metadata column: its type and nullability
+    * as declared above (scans build meta schemas by NAME). */
+  def metaField(name: String): org.apache.spark.sql.types.StructField = {
+    val c = metaColumnOf(name)
+    org.apache.spark.sql.types.StructField(name, c.dataType, c.isNullable)
   }
 
-  /** Is `name` a nullable meta column? (Schema builders and row
-    * augmenters share this single definition.) */
-  def metaNullable(name: String): Boolean =
-    name == "_file_ref" || name == "_row_id" ||
-      name == "_row_commit_version" || name == "_row_probe"
-
-  /** Append each row's (_row_id, _row_commit_version) — driver-side
-    * twin of the partition readers' augmentation, for heap files on
-    * the row-level rewrite scans. Positions are ROW INDICES: callers
-    * pass whole-file row arrays (COW tables carry no delete vectors,
-    * so index = original position). `track` null serves nulls. */
-  private[sources] def trackAugment(rows: Array[InternalRow],
-      dataSchema: StructType, track: GraftRowTrack): Array[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-    def longRef(i: Int) =
-      BoundReference(i, org.apache.spark.sql.types.LongType,
-        nullable = true)
-        : org.apache.spark.sql.catalyst.expressions.Expression
-    val proj = UnsafeProjection.create(
-      dataSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, f.nullable)
-          : org.apache.spark.sql.catalyst.expressions.Expression
-      } ++ Seq(longRef(dataSchema.length), longRef(dataSchema.length + 1),
-        longRef(dataSchema.length + 2)))
-    val probeProj = UnsafeProjection.create(
-      dataSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, f.nullable)
-          : org.apache.spark.sql.catalyst.expressions.Expression
+  /** THE metadata-column projector: the only code that turns a data row
+    * plus its ORIGINAL position into the `project`ed data columns
+    * followed by `metaCols`. Built once per file or partition:
+    * `inSchema` is the incoming rows' layout (`_row_probe` hashes the
+    * whole incoming row, so a caller asking for it passes whole rows),
+    * `fid` the file's scan ordinal, `ref` its physical segment (null for
+    * heap and derived rows) and `track` its row track (null serves NULL
+    * ids and versions). The returned row is reused: copy it to keep it. */
+  private[sources] def metaProjector(inSchema: StructType,
+      project: Array[Int], metaCols: Seq[String], fid: Int, ref: String,
+      track: GraftRowTrack): (InternalRow, Int) => InternalRow = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
+    def refs(ords: Seq[Int]): Seq[Expression] = ords.map(i =>
+      BoundReference(i, inSchema(i).dataType, inSchema(i).nullable))
+    val proj = UnsafeProjection.create(refs(project.toIndexedSeq) ++
+      metaCols.zipWithIndex.map { case (n, j) =>
+        val f = metaField(n)
+        BoundReference(inSchema.length + j, f.dataType, f.nullable)
       })
+    lazy val probeProj = UnsafeProjection.create(refs(inSchema.indices))
+    val refStr =
+      if (ref == null) null
+      else org.apache.spark.unsafe.types.UTF8String.fromString(ref)
+    val values: Array[(InternalRow, Int) => Any] = metaCols.map {
+      case "_file_id" => (_: InternalRow, _: Int) => fid: Any
+      case "_row_pos" => (_: InternalRow, p: Int) => p: Any
+      case "_file_ref" => (_: InternalRow, _: Int) => refStr: Any
+      case "_row_id" => (_: InternalRow, p: Int) =>
+        if (track == null) null else (track.idAt(p): java.lang.Long): Any
+      case "_row_commit_version" => (_: InternalRow, p: Int) =>
+        if (track == null) null else (track.verAt(p): java.lang.Long): Any
+      case "_row_probe" => (r: InternalRow, _: Int) =>
+        (GraftReplaceDataOps.probeOf(probeProj, r): java.lang.Long): Any
+    }.toArray
+    val meta = new GenericInternalRow(values.length)
     val joined = new JoinedRow
-    Array.tabulate(rows.length) { p =>
-      val (id, ver): (Any, Any) =
-        if (track == null) (null, null)
-        else ((track.idAt(p): java.lang.Long): Any,
-              (track.verAt(p): java.lang.Long): Any)
-      val probe: Any =
-        (GraftReplaceDataOps.probeOf(probeProj, rows(p)): java.lang.Long)
-      proj(joined.apply(rows(p),
-        new GenericInternalRow(Array[Any](id, ver, probe)))).copy()
-        : InternalRow
+    (r, p) => {
+      var j = 0
+      while (j < values.length) { meta.update(j, values(j)(r, p)); j += 1 }
+      proj(joined(r, meta))
     }
   }
+
+  /** One file's live rows on the DRIVER (heap files; the fallback of
+    * lazy chunks) in the shape its segment partition streams: DEAD
+    * positions skipped, never renumbered, the `project`ed columns of
+    * `schema` plus `metaCols` from [[metaProjector]]. A position view
+    * serving meta columns enumerates its BASE, so its addresses are the
+    * base's; with no meta column and a whole projection the live rows
+    * go out as they are. */
+  private[sources] def heapRows(f: GraftDataFile, schema: StructType,
+      project: Array[Int], dead: scala.collection.immutable.BitSet,
+      metaCols: Seq[String], fid: Int): Array[InternalRow] =
+    if (metaCols.isEmpty && project.sameElements(schema.indices))
+      GraftDataFile.liveRows(f.rows, dead)
+    else {
+      val meta = metaProjector(schema, project, metaCols, fid,
+        if (f.persisted && f.derive.isEmpty) f.segment.path.toString
+        else null, f.track)
+      val (rows, keep) = f.viewSel match {
+        case Some((bs, ex)) if metaCols.nonEmpty => (f.segment.load(),
+          (p: Int) => bs.contains(p) != ex && !dead.contains(p))
+        case _ => (f.rows, (p: Int) => !dead.contains(p))
+      }
+      rows.indices.iterator.filter(keep)
+        .map(p => meta(rows(p), p).copy(): InternalRow).toArray
+    }
 
   /** Operation tag of the atomic REPLACE TABLE swap commit. Marked
     * because it is the ONE commit kind whose pre/post states do not
@@ -8226,27 +8200,31 @@ object GraftMaintenance {
   }
 }
 
-/** The row-level operation's scan over a PARTITIONED [[GraftTable]]:
-  * advertises the identity partition columns as runtime-filter
-  * attributes, so Spark's row-level group-filtering rule plans a
-  * DPP-style subquery (target ⋈ source on the operation condition,
-  * projected to the partition columns) and calls [[filter]] with the
-  * partition values that actually contain matched rows. The scan then
-  * returns only those groups' rows, records the group set, and the
-  * table's commit replaces exactly that set. A predicate that
-  * [[ZonePredicate.groupKeyTest]] cannot decide exactly per group
-  * degrades to no pruning — a whole-table rewrite is correct, just not
-  * delta-sized. */
-class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
+/** The copy-on-write rewrite's scan over a [[GraftTable]], whose rows
+  * come out whole (no column pruning) followed by `trackMeta`. On a
+  * PARTITIONED table it advertises the leading identity partition
+  * column as a runtime-filter attribute, so Spark's row-level
+  * group-filtering rule plans a DPP-style subquery (target ⋈ source on
+  * the operation condition, projected to the partition column) and
+  * calls [[filter]] with the partition values that actually contain
+  * matched rows. The scan then returns only those groups' rows, records
+  * the group set, and the table's commit replaces exactly that set. A
+  * predicate that [[ZonePredicate.groupKeyTest]] cannot decide exactly
+  * per group degrades to no pruning — a whole-table rewrite is correct,
+  * just not delta-sized. An unpartitioned table (empty `partCols`) is
+  * one group: it advertises no filter attribute and reads every file. */
+class GraftRowLevelScan(tableSchema: StructType, partCols: Seq[String],
                         allFiles: Vector[GraftDataFile],
+                        dvs: Map[GraftDataFile,
+                          scala.collection.immutable.BitSet],
                         groupKeyOf: InternalRow => Seq[Any],
-                        // ROW TRACKING: serve (_row_id, _row_commit_
-                        // version) as the trailing two columns of
-                        // `schema` (already appended by the caller)
-                        serveTrack: Boolean = false)
-    extends Scan with Batch with SupportsRuntimeV2Filtering {
-  /** Data-column count (the track columns are appended past these). */
-  private val dataLen = if (serveTrack) schema.length - 3 else schema.length
+                        // ROW TRACKING: the metadata columns appended to
+                        // every row (the ones the operation requires)
+                        trackMeta: Seq[String])
+    extends Scan with Batch with SupportsRuntimeV2Filtering
+    with SupportsReportStatistics {
+  private val schema =
+    StructType(tableSchema.fields ++ trackMeta.map(GraftTable.metaField))
 
   /** Files surviving the runtime group filter. FILE-level narrowing:
     * a file wholly owned by an untouched partition group drops here
@@ -8256,7 +8234,6 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
     * table (the heap-independence half of group-based COW). Files
     * spanning groups (post-compaction) row-filter at read. */
   @volatile private var kept: Vector[GraftDataFile] = allFiles
-  @volatile private var rowPred: Option[InternalRow => Boolean] = None
   /** Groups the rewrite must replace; None = all (no runtime filter). */
   @volatile private[sources] var scannedGroups: Option[Seq[Any] => Boolean] =
     None
@@ -8271,7 +8248,7 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
     * to identical contents, so prefix narrowing is always correct —
     * exactly leading-prefix partition pruning. */
   override def filterAttributes(): Array[NamedReference] =
-    Array(Expressions.column(partCols.head))
+    partCols.take(1).map(c => Expressions.column(c): NamedReference).toArray
 
   override def filter(predicates: Array[Predicate]): Unit = {
     // NULL-SAFE membership: the runtime IN lists the matched rows' group
@@ -8289,9 +8266,8 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
     ZonePredicate.groupKeyTest(nullSafe, partCols, schema).foreach { pred =>
       kept = allFiles.filter(f => f.groupKey match {
         case Some(k) => pred(k) // file-level: untouched groups never read
-        case None => true // group-spanning: row-filtered in rowsOf
+        case None => true // group-spanning: row-filtered at read
       })
-      rowPred = Some(r => pred(groupKeyOf(r)))
       // the touched set is what the filter SELECTED (not just non-empty
       // groups): a selected group whose rows all get deleted must still
       // be replaced (with nothing)
@@ -8302,51 +8278,43 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
 
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): util.OptionalLong =
+      util.OptionalLong.of(math.max(1L, allFiles.iterator.map(_.sizeBytes).sum))
+    override def numRows(): util.OptionalLong =
+      util.OptionalLong.of(allFiles.iterator.map(f =>
+        f.rowCount.toLong - dvs.get(f).fold(0)(_.size)).sum)
+  }
+
   /** LAZY partitions: Spark calls planInputPartitions once BEFORE the
     * runtime group filter arrives (outputPartitioning needs a partition
     * count) — materializing rows there would read every group and
     * defeat the file-level skip. A persisted file therefore ships only
-    * its segment PATH; the partition reader streams the parquet at
-    * execution (also the real cluster shape: data moves executor-side,
-    * not through the driver). Heap-only files (in-JVM tables, rows not
-    * yet spilled) ship their rows, as every other scan here does. */
+    * its segment scan partition, whole-row projection, with a spanning
+    * file's group re-filter as DATA (partition-column ordinals in the
+    * SEGMENT's schema + the literal-only key predicate) — never a
+    * closure over this scan, which would drag every heap row to the
+    * executors (or fail to serialize at all). Heap-only files (in-JVM
+    * tables, rows not yet spilled) ship their rows through the same
+    * metadata projector. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val needRowFilter = rowPred
-    val needKeyPred = scannedGroups
+    val groups = scannedGroups
+    val whole = Array.tabulate(tableSchema.length)(identity)
     val parts = kept.iterator.flatMap { f =>
-      // wholly-owned file: every row belongs to a kept group; spanning
-      // file: rows re-filter at read
+      val dead = dvs.getOrElse(f, scala.collection.immutable.BitSet.empty)
+      // wholly-owned file: every row belongs to a kept group
+      val keyPred = if (f.groupKey.isDefined) None else groups
       if (f.persisted) {
-        // ship the filter as DATA (partition-column ordinals in the
-        // SEGMENT's schema + the literal-only key predicate), never a
-        // closure over this scan — an InputPartition serializes to real
-        // executors, and a scan-capturing lambda would drag every heap
-        // row with it (or fail to serialize at all)
-        val keyPred = if (f.groupKey.isDefined) None else needKeyPred
-        val ords: Array[Int] =
-          if (keyPred.isDefined) {
-            val segSchema = f.segment.schema
-            partCols.map(c =>
-              segSchema.fields.indexWhere(_.name.equalsIgnoreCase(c))).toArray
-          } else Array.emptyIntArray
-        val trk = f.track
-        Iterator.single(GraftSegmentPartition(f.segment.path.toString,
-          f.segment.schema.json, ords, keyPred,
-          trackMeta = serveTrack,
-          tracked = serveTrack && trk != null,
-          trackExplicit = trk != null && trk.explicit,
-          trackBase = if (trk != null) trk.base else -1L,
-          trackVer = if (trk != null) trk.ver else -1L): InputPartition)
+        val segSchema = f.segment.schema
+        val ords = if (keyPred.isEmpty) Array.emptyIntArray
+          else partCols.map(c =>
+            segSchema.fields.indexWhere(_.name.equalsIgnoreCase(c))).toArray
+        Iterator.single(GraftSegmentScanPartition.of(f, whole, dead.toArray,
+          trackMeta, keyOrds = ords, keyPred = keyPred): InputPartition)
       } else {
-        val pred = if (f.groupKey.isDefined) None else needRowFilter
-        val base: Array[InternalRow] =
-          if (!serveTrack) f.rows
-          else GraftTable.trackAugment(f.rows,
-            StructType(schema.fields.take(dataLen)), f.track)
-        val rows = pred match {
-          case Some(p) => base.filter(p)
-          case None => base
-        }
+        val all = GraftTable.heapRows(f, tableSchema, whole, dead, trackMeta,
+          -1)
+        val rows = keyPred.fold(all)(p => all.filter(r => p(groupKeyOf(r))))
         if (rows.isEmpty) Iterator.empty
         else Iterator.single(GraftInputPartition(rows): InputPartition)
       }
@@ -8357,25 +8325,6 @@ class GraftRowLevelScan(schema: StructType, partCols: Seq[String],
   override def createReaderFactory(): PartitionReaderFactory =
     GraftPartitionReaderFactory()
 }
-
-/** A partition that carries a parquet segment REFERENCE instead of
-  * rows: the reader opens the file at execution. For a group-spanning
-  * file under a runtime group filter, `keyOrds` (partition-column
-  * ordinals in THIS segment's schema) + `keyPred` (a literal-capturing
-  * exact group-key test, [[ZonePredicate.groupKeyTest]]) encode the re-filter
-  * as serializable data; the reader rebuilds the row predicate. */
-case class GraftSegmentPartition(ref: String, schemaJson: String,
-    keyOrds: Array[Int],
-    keyPred: Option[Seq[Any] => Boolean],
-    // ROW TRACKING: when `trackMeta` is true the reader appends
-    // (_row_id, _row_commit_version) to every emitted row — arithmetic
-    // from (trackBase, trackVer), or from the segment's .rowids
-    // sidecar (trackExplicit), loaded once per partition executor-side
-    trackMeta: Boolean = false,
-    tracked: Boolean = false,
-    trackExplicit: Boolean = false,
-    trackBase: Long = -1L,
-    trackVer: Long = -1L) extends InputPartition
 
 /** Scan builder with column pruning, v2 PREDICATE PUSHDOWN (zone-map
   * data skipping), AGGREGATE PUSHDOWN (metadata-only MIN/MAX/COUNT), LIMIT
@@ -8435,9 +8384,7 @@ class GraftScanBuilder(tableSchema: StructType,
     // schema — ignore pruning there (Spark projects above the scan).
     if (aggResult.isEmpty) {
       metaCols = requiredSchema.fieldNames.toSeq
-        .filter(n => n == "_file_id" || n == "_row_pos" ||
-          n == "_file_ref" || n == "_row_id" ||
-          n == "_row_commit_version" || n == "_row_probe")
+        .filter(GraftTable.isMetaColumn)
       required = StructType(
         tableSchema.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
     }
@@ -8790,171 +8737,44 @@ class GraftScanBuilder(tableSchema: StructType,
       () => new GraftMicroBatchStream(t, required, tests, streamOptions,
         streamChangeFeed, tableSchema)
         : org.apache.spark.sql.connector.read.streaming.MicroBatchStream)
-    if (metaCols.nonEmpty) {
-      // metadata-column read: rows augment with (_file_id, _row_pos) —
-      // the file ordinal survives pruning above, the position is the
-      // row's index within its file (the stable row address)
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-      import org.apache.spark.sql.types.{IntegerType, StructField}
-      val outSchema = StructType(required.fields ++
-        metaCols.map(n => StructField(n, GraftTable.metaTypeOf(n),
-          nullable = GraftTable.metaNullable(n))))
-      val dataRefs = required.fields.toIndexedSeq.map { f =>
-        val i = tableSchema.fieldIndex(f.name)
-        BoundReference(i, f.dataType, f.nullable)
-          : org.apache.spark.sql.catalyst.expressions.Expression
-      }
-      val metaRefs = metaCols.zipWithIndex.map { case (n, j) =>
-        BoundReference(tableSchema.length + j, GraftTable.metaTypeOf(n),
-          nullable = GraftTable.metaNullable(n))
-          : org.apache.spark.sql.catalyst.expressions.Expression
-      }
-      val proj = UnsafeProjection.create(dataRefs ++ metaRefs)
-      val joined = new JoinedRow
-      val dataIdx = required.fields.map(f => tableSchema.fieldIndex(f.name))
-      // `_row_pos` is the ORIGINAL position — the stable row address a
-      // delete vector targets — so DV'd positions are skipped, never
-      // renumbered. A position VIEW likewise reports its BASE file's
-      // positions (the view and the base agree on every shared row's
-      // address); only DERIVED pseudo-files (CDC recipes — synthesized
-      // rows with no durable address) enumerate their own output.
-      def eagerMeta(f: GraftDataFile, fid: Int): Array[InternalRow] = {
-        val dead = dvOf(f)
-        val ref: Any =
-          if (f.persisted && f.derive.isEmpty)
-            org.apache.spark.unsafe.types.UTF8String
-              .fromString(f.segment.path.toString)
-          else null
-        val trk = f.track
-        lazy val probeProj = org.apache.spark.sql.catalyst.expressions
-          .UnsafeProjection.create(
-            tableSchema.fields.toIndexedSeq.zipWithIndex.map {
-              case (fl, i) => BoundReference(i, fl.dataType, fl.nullable)
-                : org.apache.spark.sql.catalyst.expressions.Expression
-            })
-        def metaOf(p: Int, row: InternalRow) =
-          new GenericInternalRow(metaCols.map {
-          case "_file_id" => fid: Any
-          case "_row_pos" => p: Any
-          case "_file_ref" => ref
-          case "_row_id" =>
-            if (trk == null) null else (trk.idAt(p): java.lang.Long): Any
-          case "_row_commit_version" =>
-            if (trk == null) null else (trk.verAt(p): java.lang.Long): Any
-          case "_row_probe" =>
-            (GraftReplaceDataOps.probeOf(probeProj, row)
-              : java.lang.Long): Any
-        }.toArray)
-        val rows = Array.newBuilder[InternalRow]
-        f.viewSel match {
-          case Some((bs, ex)) =>
-            // view: enumerate the BASE, emitting selected originals.
-            // Views carry no delete vector by contract, but consult
-            // `dead` anyway — the lazy executor path filters both, and
-            // the two must agree whatever partitioning decision fired
-            val base = f.segment.load()
-            var p = 0
-            while (p < base.length) {
-              if (bs.contains(p) != ex && !dead.contains(p))
-                rows += proj(joined.apply(base(p), metaOf(p, base(p)))).copy()
-              p += 1
-            }
-          case None =>
-            var p = 0
-            while (p < f.rows.length) {
-              if (!dead.contains(p))
-                rows += proj(joined.apply(f.rows(p),
-                  metaOf(p, f.rows(p)))).copy()
-              p += 1
-            }
-        }
-        rows.result()
-      }
-      val chunks = surviving.map { case (f, fid) =>
-        val dead = dvOf(f)
-        f.derive match {
-          case Some(rcp) =>
-            // DERIVED pseudo-file (CDC): the recipe's partition computes
-            // the data rows executor-side; the wrapper appends the meta
-            // columns there, so the feed still never lands a row on the
-            // driver
-            ScanChunk.lazily(
-              GraftMetaWrapPartition(rcp.partition(dataIdx),
-                required.json, metaCols, fid),
-              zonesByName(f), f.groupKey, f.rowCount,
-              () => eagerMeta(f, fid))
-          case None if f.persisted =>
-            // LAZY: the metadata-augmented projection runs in the
-            // partition reader, executor-side — a MOR operation's scan
-            // over a durable table streams through tasks, it does not
-            // materialize the matched files on the driver. A position
-            // view's selection rides along (original addresses).
-            val (sel, selEx) = f.selArrays
-            val trk = f.track
-            ScanChunk.lazily(
-              GraftSegmentScanPartition(f.segment.path.toString,
-                f.segment.schema.json, dataIdx, dead.toArray, metaCols, fid,
-                sel, selEx,
-                tracked = trk != null,
-                trackExplicit = trk != null && trk.explicit,
-                trackBase = if (trk != null) trk.base else -1L,
-                trackVer = if (trk != null) trk.ver else -1L),
-              zonesByName(f), f.groupKey, f.rowCount - dead.size,
-              () => eagerMeta(f, fid))
-          case None => ScanChunk(eagerMeta(f, fid), zonesByName(f),
-            f.groupKey)
-        }
-      }.toArray
-      new GraftScan(outSchema, chunks, bytes, census,
-        pushed.map(_.toString).toSeq, spjCols, mb, spjBucket, guard,
-        streamSource.map(_.columnStatsSnapshot).getOrElse(Map.empty))
-    } else {
-      // live rows of one file (delete vector applied; no-op on COW)
-      def live(f: GraftDataFile): Array[InternalRow] =
-        GraftDataFile.liveRows(f.rows, dvOf(f))
-      val identityProj = required.length == tableSchema.length
-      val idx: Array[Int] =
-        if (identityProj) Array.tabulate(tableSchema.length)(identity)
-        else required.fields.map(f => tableSchema.fieldIndex(f.name))
-      // driver-side materializer (heap files; SPJ/metadata paths)
-      def materialize(f: GraftDataFile): Array[InternalRow] =
-        if (identityProj) live(f)
-        else {
-          val proj = org.apache.spark.sql.catalyst.expressions
-            .UnsafeProjection.create(idx.toIndexedSeq.map { i =>
-              org.apache.spark.sql.catalyst.expressions.BoundReference(
-                i, tableSchema.fields(i).dataType,
-                tableSchema.fields(i).nullable)
-            })
-          live(f).map(r => proj(r).copy(): InternalRow)
-        }
-      // persisted files plan LAZY segment partitions: the parquet
-      // streams executor-side at execution; a zone/limit/runtime-pruned
-      // file costs zero I/O anywhere (metadata decided its fate)
-      def chunkOf(f: GraftDataFile): ScanChunk = f.derive match {
+    // metadata columns (the MOR operation's row address, row tracking)
+    // trail the data columns: `_file_id` is the file ordinal, which
+    // survives pruning above, `_row_pos` the ORIGINAL position — the
+    // stable row address a delete vector targets, so DV'd positions are
+    // skipped, never renumbered. A position VIEW reports its BASE
+    // file's positions; only DERIVED pseudo-files (CDC recipes —
+    // synthesized rows with no durable address) enumerate their output.
+    val outSchema = StructType(required.fields ++
+      metaCols.map(GraftTable.metaField))
+    val idx = required.fields.map(f => tableSchema.fieldIndex(f.name))
+    // persisted files plan LAZY segment partitions: the parquet
+    // streams executor-side at execution; a zone/limit/runtime-pruned
+    // file costs zero I/O anywhere (metadata decided its fate)
+    val chunks = surviving.map { case (f, fid) =>
+      val dead = dvOf(f)
+      val rows = () =>
+        GraftTable.heapRows(f, tableSchema, idx, dead, metaCols, fid)
+      f.derive match {
         case Some(rcp) =>
           // DERIVED pseudo-file (CDC): the recipe's partition computes
-          // the rows executor-side; zones/rowCount drove pruning above
-          ScanChunk.lazily(rcp.partition(idx), zonesByName(f),
-            f.groupKey, f.rowCount, () => materialize(f))
+          // the rows executor-side, the wrapper appends the meta columns
+          // there; zones/rowCount drove pruning above
+          val part =
+            if (metaCols.isEmpty) rcp.partition(idx)
+            else GraftMetaWrapPartition(rcp.partition(idx), required.json,
+              metaCols, fid)
+          ScanChunk.lazily(part, zonesByName(f), f.groupKey, f.rowCount,
+            rows)
         case None if f.persisted =>
-          val dead = dvOf(f)
-          // a position view's selection must ship with the partition —
-          // the segment ref alone names the (larger) base file
-          val (sel, selEx) = f.selArrays
           ScanChunk.lazily(
-            GraftSegmentScanPartition(f.segment.path.toString,
-              f.segment.schema.json, idx, dead.toArray, Nil, -1,
-              sel, selEx),
-            zonesByName(f), f.groupKey, f.rowCount - dead.size,
-            () => materialize(f))
-        case None => ScanChunk(materialize(f), zonesByName(f), f.groupKey)
+            GraftSegmentScanPartition.of(f, idx, dead.toArray, metaCols, fid),
+            zonesByName(f), f.groupKey, f.rowCount - dead.size, rows)
+        case None => ScanChunk(rows(), zonesByName(f), f.groupKey)
       }
-      new GraftScan(if (identityProj) tableSchema else required,
-        surviving.map { case (f, _) => chunkOf(f) }.toArray,
-        bytes, census, pushed.map(_.toString).toSeq, spjCols, mb, spjBucket,
-        guard, streamSource.map(_.columnStatsSnapshot).getOrElse(Map.empty))
-    }
+    }.toArray
+    new GraftScan(outSchema, chunks, bytes, census,
+      pushed.map(_.toString).toSeq, spjCols, mb, spjBucket, guard,
+      streamSource.map(_.columnStatsSnapshot).getOrElse(Map.empty))
   }
 }
 
@@ -8970,9 +8790,10 @@ class GraftScanBuilder(tableSchema: StructType,
   * row, and the partition reader streams the parquet EXECUTOR-side at
   * execution. Zone/limit/runtime pruning all work off the resident
   * metadata (`zones`, `rowCount`, `groupKey`), so a pruned durable file
-  * never costs a byte of I/O anywhere. Heap-only files and paths that
-  * need driver-side rows (SPJ key grouping, metadata columns) use the
-  * `rows` materializer. */
+  * never costs a byte of I/O anywhere; metadata columns ride in the
+  * partition too. Heap-only files, and key-grouped (SPJ) groups that
+  * hold a derived file's chunk, use the `rows` materializer
+  * ([[GraftTable.heapRows]]). */
 private[sources] final class ScanChunk(
     rowsFn: () => Array[InternalRow],
     val zones: ZoneView[String],
@@ -9014,13 +8835,18 @@ private[sources] object ScanChunk {
     new ScanChunk(loader, zones, groupKey, rowCount, Some(seg))
 }
 
-/** A plain-scan partition that carries a parquet segment REFERENCE plus
-  * its read recipe (delete-vector positions to skip, column-pruning
+/** Every partition kind the catalog's scans plan. Sealed, so the
+  * compiler checks that [[GraftPartitionReaderFactory]]'s match covers
+  * each kind. */
+sealed trait GraftScanPartition extends InputPartition
+
+/** A scan partition that carries a parquet segment REFERENCE plus its
+  * read recipe (delete-vector positions to skip, column-pruning
   * ordinals into the file layout, and — for metadata-column reads —
   * the requested meta columns plus this file's ordinal): the reader
   * streams the file at execution, executor-side. Everything is plain
   * serializable data — the partition ships to a real cluster's
-  * executors unchanged. */
+  * executors unchanged. Build it with [[GraftSegmentScanPartition.of]]. */
 case class GraftSegmentScanPartition(ref: String, schemaJson: String,
     project: Array[Int], dead: Array[Int],
     metaCols: Seq[String] = Nil, fid: Int = -1,
@@ -9037,18 +8863,49 @@ case class GraftSegmentScanPartition(ref: String, schemaJson: String,
     tracked: Boolean = false,
     trackExplicit: Boolean = false,
     trackBase: Long = -1L,
-    trackVer: Long = -1L) extends InputPartition
+    trackVer: Long = -1L,
+    // the copy-on-write rewrite's group re-filter of a group-SPANNING
+    // file: `keyOrds` (partition-column ordinals in THIS segment's
+    // schema) + `keyPred` (a literal-capturing exact group-key test,
+    // [[ZonePredicate.groupKeyTest]]). Only with a whole-row `project`.
+    keyOrds: Array[Int] = Array.empty,
+    keyPred: Option[Seq[Any] => Boolean] = None) extends GraftScanPartition
 
-/** Metadata-column wrapper over any other scan partition: delegates the
-  * data rows to the inner partition's reader and appends the requested
-  * meta columns executor-side — `_file_id` = the wrapped file's scan
-  * ordinal, `_row_pos` = the position in the inner reader's output.
-  * Used for DERIVED pseudo-files (CDC recipes), whose rows are
+object GraftSegmentScanPartition {
+  /** The segment partition of persisted file `f`: its segment ref, view
+    * selection and row track come from the file, the read recipe from
+    * the caller. `schema` overrides the handle's layout (a stream lifts
+    * a pre-widen file's stored types to its bound ones). */
+  def of(f: GraftDataFile, project: Array[Int], dead: Array[Int] = Array.empty,
+      metaCols: Seq[String] = Nil, fid: Int = -1, schema: StructType = null,
+      keyOrds: Array[Int] = Array.empty,
+      keyPred: Option[Seq[Any] => Boolean] = None): GraftSegmentScanPartition = {
+    val (sel, selEx) = f.viewSel.fold((Array.empty[Int], false)) {
+      case (bs, ex) => (bs.toArray, ex)
+    }
+    val t = f.track
+    GraftSegmentScanPartition(f.segment.path.toString,
+      Option(schema).getOrElse(f.segment.schema).json, project, dead,
+      metaCols, fid, sel, selEx,
+      tracked = t != null,
+      trackExplicit = t != null && t.explicit,
+      trackBase = if (t != null) t.base else -1L,
+      trackVer = if (t != null) t.ver else -1L,
+      keyOrds, keyPred)
+  }
+}
+
+/** Metadata-column wrapper over a derived file's partition: delegates
+  * the data rows to the inner partition's reader and appends the
+  * requested meta columns executor-side — `_file_id` = the wrapped
+  * file's scan ordinal, `_row_pos` = the position in the inner reader's
+  * output. Used for DERIVED pseudo-files (CDC recipes), whose rows are
   * synthesized: there is no durable address to serve, so the position
   * is scan-relative by documented contract. `schemaJson` is the inner
   * reader's (already-projected) data schema. */
-case class GraftMetaWrapPartition(inner: InputPartition, schemaJson: String,
-    metaCols: Seq[String], fid: Int) extends InputPartition
+case class GraftMetaWrapPartition(inner: GraftScanPartition,
+    schemaJson: String, metaCols: Seq[String], fid: Int)
+    extends GraftScanPartition
 
 /** Key-grouped variant over segment REFERENCES (durable tables): all
   * of one identity-partition key's segments, reported with the key so a
@@ -9056,18 +8913,16 @@ case class GraftMetaWrapPartition(inner: InputPartition, schemaJson: String,
   * driver ever materializing a row. */
 case class GraftKeyedSegmentPartition(segs: Seq[GraftSegmentScanPartition],
                                       key: InternalRow)
-    extends InputPartition
+    extends GraftScanPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = key
 }
 
 /** Executor-side segment streaming shared by every reader that
   * consumes a [[GraftSegmentScanPartition]]: one parquet open per
-  * partition, decoding only the projected columns, with delete-vector
-  * and position-view filtering by ORIGINAL file position. */
+  * partition, decoding only the projected columns, with delete-vector,
+  * position-view and group filtering by ORIGINAL file position. */
 private[sources] object GraftSegmentReads {
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
-
   def rowsOf(s: GraftSegmentScanPartition): Iterator[InternalRow] = {
     val fileSchema = DataType.fromJson(s.schemaJson)
       .asInstanceOf[StructType]
@@ -9080,65 +8935,45 @@ private[sources] object GraftSegmentReads {
     val selBs =
       if (s.sel.isEmpty && !s.selExclude) null
       else scala.collection.immutable.BitSet(s.sel: _*)
-    def live(p: Int): Boolean =
+    // the group re-filter tests, and `_row_probe` hashes, the whole
+    // stored row, so only they make the read decode every column
+    val whole = s.keyPred.isDefined || s.metaCols.contains("_row_probe")
+    val rows = GraftSegmentIO.read(path, fileSchema,
+      if (whole) null else s.project)
+    val inGroup: InternalRow => Boolean = s.keyPred match {
+      case Some(pred) =>
+        val dts = s.keyOrds.map(i =>
+          if (i >= 0) fileSchema.fields(i).dataType
+          else org.apache.spark.sql.types.NullType)
+        r => pred(s.keyOrds.toSeq.lazyZip(dts).map((i, dt) =>
+          if (i < 0 || r.isNullAt(i)) null else r.get(i, dt)))
+      case None => _ => true
+    }
+    val kept = rows.zipWithIndex.filter { case (r, p) =>
       (dead == null || !dead.contains(p)) &&
-        (selBs == null || selBs.contains(p) != s.selExclude)
-    if (s.metaCols.nonEmpty) {
-      // metadata-augmented read: emit live positions with their
-      // ORIGINAL row addresses (_file_id, _row_pos). A position view's
-      // selection filters WHICH positions emit; the addresses stay the
-      // base file's (the view and the base agree on every shared row).
-      // `_row_probe` hashes the whole stored row, so only it makes the
-      // read decode every column
-      val probing = s.metaCols.contains("_row_probe")
-      val rows = GraftSegmentIO.read(path, fileSchema,
-        if (probing) null else s.project)
-      val width = if (probing) fileSchema.length else s.project.length
-      val proj = UnsafeProjection.create(
-        s.project.toIndexedSeq.zipWithIndex.map { case (i, j) =>
-          BoundReference(if (probing) i else j,
-            fileSchema.fields(i).dataType, fileSchema.fields(i).nullable)
-            : Expression
-        } ++
-        s.metaCols.zipWithIndex.map { case (n, j) =>
-          BoundReference(width + j, GraftTable.metaTypeOf(n),
-            nullable = GraftTable.metaNullable(n)): Expression
-        })
-      val joined = new JoinedRow
-      val refStr =
-        org.apache.spark.unsafe.types.UTF8String.fromString(s.ref)
-      // row tracking: arithmetic from the shipped (base, ver), or the
-      // explicit sidecar vectors loaded once per partition, executor-side
-      lazy val sidecar: (Array[Long], Array[Long]) =
-        GraftRowIdSidecar.read(path)
-      lazy val probeProj = UnsafeProjection.create(
-        fileSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i, f.dataType, f.nullable): Expression
-        })
-      def idOf(p: Int): Any =
-        if (!s.tracked) null
-        else if (s.trackExplicit) (sidecar._1(p): java.lang.Long): Any
-        else (s.trackBase + p: java.lang.Long): Any
-      def verOf(p: Int): Any =
-        if (!s.tracked) null
-        else if (s.trackExplicit) (sidecar._2(p): java.lang.Long): Any
-        else (s.trackVer: java.lang.Long): Any
-      rows.zipWithIndex.collect { case (r, p) if live(p) =>
-        val meta = new GenericInternalRow(s.metaCols.map {
-          case "_file_id" => s.fid: Any
-          case "_row_pos" => p: Any
-          case "_file_ref" => refStr: Any
-          case "_row_id" => idOf(p)
-          case "_row_commit_version" => verOf(p)
-          case "_row_probe" =>
-            (GraftReplaceDataOps.probeOf(probeProj, r): java.lang.Long): Any
-        }.toArray)
-        proj(joined.apply(r, meta))
-      }
+        (selBs == null || selBs.contains(p) != s.selExclude) && inGroup(r)
+    }
+    if (s.metaCols.isEmpty) {
+      // plain read: rows go out as decoded
+      if (dead == null && selBs == null && s.keyPred.isEmpty) rows
+      else kept.map(_._1)
     } else {
-      val rows = GraftSegmentIO.read(path, fileSchema, s.project)
-      if (dead == null && selBs == null) rows
-      else rows.zipWithIndex.collect { case (r, p) if live(p) => r }
+      // metadata columns carry ORIGINAL row addresses; a position
+      // view's selection filters WHICH positions emit, the addresses
+      // stay the base file's (the view and the base agree on every
+      // shared row). Row tracking is arithmetic from the shipped
+      // (base, ver), or the explicit sidecar loaded on first use
+      val track =
+        if (!s.tracked) null
+        else new GraftRowTrack(s.trackBase, s.trackVer, null, null,
+          s.trackExplicit, () => GraftRowIdSidecar.read(path))
+      val meta =
+        if (whole) GraftTable.metaProjector(fileSchema, s.project,
+          s.metaCols, s.fid, s.ref, track)
+        else GraftTable.metaProjector(
+          StructType(s.project.map(fileSchema.fields(_))),
+          s.project.indices.toArray, s.metaCols, s.fid, s.ref, track)
+      kept.map { case (r, p) => meta(r, p) }
     }
   }
 }
@@ -9175,7 +9010,7 @@ case class GraftChangeScanPartition(
     // columns; the canonical row extends with it (per-seg ordinal =
     // that seg's projected width), and the feed emits it as the
     // trailing output column
-    tracked: Boolean = false) extends InputPartition
+    tracked: Boolean = false) extends GraftScanPartition
 
 private[sources] object GraftChangeReads {
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
@@ -9548,124 +9383,42 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
     GraftPartitionReaderFactory()
 }
 
-/** The ONE reader factory for every partition kind this store plans:
+/** The ONE reader factory for every [[GraftScanPartition]] kind:
   * row-carrying (heap files, key-grouped SPJ groups), segment-reference
   * scan partitions (executor-side parquet streaming that decodes only
-  * the projected columns — every column when `_row_probe` is asked
-  * for — and skips delete-vector positions), and the row-level
-  * rewrite's group-filtered segment partitions (full-width, streamed). */
+  * the projected columns — every column when `_row_probe` or a
+  * rewrite's group re-filter needs whole rows — and skips delete-vector
+  * positions), their key-grouped bundles, change-feed partitions and
+  * the metadata wrapper over a derived file's partition. Batch scans,
+  * the row-level rewrite and streaming tails all plan through it. */
 case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-
-  private def rowsOf(p: InputPartition): Iterator[InternalRow] = p match {
+  private def rowsOf(p: GraftScanPartition): Iterator[InternalRow] = p match {
     case g: GraftInputPartition => g.rows.iterator
     case k: GraftKeyedInputPartition => k.rows.iterator
     case c: GraftChangeScanPartition => GraftChangeReads.rowsOf(c)
-    case s: GraftSegmentPartition =>
-      val schema = DataType.fromJson(s.schemaJson)
-        .asInstanceOf[StructType]
-      // every column: the key re-filter and the row probe read the
-      // whole stored row
-      val rows = GraftSegmentIO.read(
-        java.nio.file.Paths.get(s.ref), schema)
-      // enumerate (row, ORIGINAL position) first: the row-tracking
-      // append needs positions, and the group re-filter must not
-      // renumber them
-      val positioned: Iterator[(InternalRow, Int)] = s.keyPred match {
-        case Some(p) =>
-          val dts = s.keyOrds.map(i =>
-            if (i >= 0) schema.fields(i).dataType
-            else org.apache.spark.sql.types.NullType)
-          rows.zipWithIndex.filter { case (r, _) =>
-            p(s.keyOrds.toSeq.lazyZip(dts).map((i, dt) =>
-              if (i < 0 || r.isNullAt(i)) null else r.get(i, dt)))
-          }
-        case None => rows.zipWithIndex
-      }
-      if (!s.trackMeta) positioned.map(_._1)
-      else {
-        // serve (_row_id, _row_commit_version, _row_probe) — id/ver
-        // null on a file with no track yet (pre-enablement snapshots)
-        lazy val sidecar: (Array[Long], Array[Long]) =
-          GraftRowIdSidecar.read(java.nio.file.Paths.get(s.ref))
-        def longRef(i: Int) =
-          BoundReference(i, org.apache.spark.sql.types.LongType,
-            nullable = true)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        val proj = UnsafeProjection.create(
-          schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-            BoundReference(i, f.dataType, f.nullable)
-              : org.apache.spark.sql.catalyst.expressions.Expression
-          } ++ Seq(longRef(schema.length), longRef(schema.length + 1),
-            longRef(schema.length + 2)))
-        val probeProj = UnsafeProjection.create(
-          schema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-            BoundReference(i, f.dataType, f.nullable)
-              : org.apache.spark.sql.catalyst.expressions.Expression
-          })
-        val joined = new JoinedRow
-        positioned.map { case (r, pos) =>
-          val (id, ver): (Any, Any) =
-            if (!s.tracked) (null, null)
-            else if (s.trackExplicit)
-              ((sidecar._1(pos): java.lang.Long): Any,
-               (sidecar._2(pos): java.lang.Long): Any)
-            else ((s.trackBase + pos: java.lang.Long): Any,
-                  (s.trackVer: java.lang.Long): Any)
-          val probe: Any =
-            (GraftReplaceDataOps.probeOf(probeProj, r): java.lang.Long)
-          proj(joined.apply(r,
-            new GenericInternalRow(Array[Any](id, ver, probe))))
-        }
-      }
-    case s: GraftSegmentScanPartition =>
-      GraftSegmentReads.rowsOf(s)
+    case s: GraftSegmentScanPartition => GraftSegmentReads.rowsOf(s)
     case k: GraftKeyedSegmentPartition =>
       k.segs.iterator.flatMap(GraftSegmentReads.rowsOf)
     case w: GraftMetaWrapPartition =>
-      // meta augmentation over the delegate's output (derived files):
-      // position = output ordinal, executor-side like everything else
+      // position = output ordinal of the derived rows
       val dataSchema = DataType.fromJson(w.schemaJson)
         .asInstanceOf[StructType]
-      val proj = UnsafeProjection.create(
-        dataSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i, f.dataType, f.nullable)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        } ++
-        w.metaCols.zipWithIndex.map { case (n, j) =>
-          BoundReference(dataSchema.length + j, GraftTable.metaTypeOf(n),
-            nullable = GraftTable.metaNullable(n))
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        })
-      val joined = new JoinedRow
-      rowsOf(w.inner).zipWithIndex.map { case (r, pos) =>
-        val meta = new GenericInternalRow(w.metaCols.map {
-          case "_file_id" => w.fid: Any
-          case "_row_pos" => pos: Any
-          // synthesized rows have no file and no durable row identity
-          case "_file_ref" | "_row_id" | "_row_commit_version" |
-               "_row_probe" => null: Any
-        }.toArray)
-        proj(joined.apply(r, meta))
-      }
+      val meta = GraftTable.metaProjector(dataSchema,
+        dataSchema.indices.toArray, w.metaCols, w.fid, null, null)
+      rowsOf(w.inner).zipWithIndex.map { case (r, pos) => meta(r, pos) }
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val it: Iterator[InternalRow] = rowsOf(p)
+      private val it: Iterator[InternalRow] = p match {
+        case s: GraftScanPartition => rowsOf(s)
+      }
       private var cur: InternalRow = _
       override def next(): Boolean =
         if (it.hasNext) { cur = it.next(); true } else false
       override def get(): InternalRow = cur
       override def close(): Unit = ()
     }
-}
-
-object GraftScan {
-  /** Single-chunk, zone-less scan over loose rows (row-level path). */
-  def of(schema: StructType, rows: Array[InternalRow]): GraftScan =
-    new GraftScan(schema, Array(ScanChunk(rows)),
-      math.max(1L, rows.length.toLong * math.max(1, schema.defaultSize)))
 }
 
 /** Streaming offset of a [[GraftTable]] tail: the last commit version
@@ -9974,20 +9727,15 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
         tests.isEmpty || !aligned(schema) || tests.forall(_(f))
       }
       .map { case (schema, f, dead) =>
-        // persisted files ship segment REFERENCES — a streaming tail of
-        // a durable table moves its micro-batch rows executor-side, not
-        // through the driver. Projection ordinals resolve by FIELD ID
-        // against the file's own layout; an unresolvable column (a
-        // column the stream's schema has that this historical file
-        // cannot serve even as null) falls back to the driver path,
-        // whose id-projection nulls it
+        // persisted files ship segment REFERENCES (a position view with
+        // its selection) — a streaming tail of a durable table moves its
+        // micro-batch rows executor-side, not through the driver.
+        // Projection ordinals resolve by FIELD ID against the file's own
+        // layout; an unresolvable column (a column the stream's schema
+        // has that this historical file cannot serve even as null) falls
+        // back to the driver path, whose id-projection nulls it
         val lazyPart: Option[InputPartition] =
-          // position VIEWS (CDC records adopted into a clone/restore
-          // state) must not take this path: the partition carries only
-          // the base segment ref and would stream the FULL base instead
-          // of the view's selected positions — f.rows (driver path)
-          // applies the selection
-          if (!f.persisted || f.viewSel.isDefined) None
+          if (!f.persisted) None
           else {
             val fs0 = f.segment.schema
             // a restarted (wide-bound) stream reading a PRE-WIDEN file:
@@ -10005,8 +9753,8 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
             })
             val ords = required.fields.map(rf => FieldIds.ordinalOf(rf, fs))
             if (ords.forall(_ >= 0))
-              Some(GraftSegmentScanPartition(f.segment.path.toString,
-                fs.json, ords, dead.toArray))
+              Some(GraftSegmentScanPartition.of(f, ords, dead.toArray,
+                schema = fs))
             else None
           }
         lazyPart.getOrElse(GraftInputPartition(
@@ -10016,33 +9764,20 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new PartitionReader[InternalRow] {
-          private val it = p match {
-            case g: GraftInputPartition => g.rows.iterator
-            case c: GraftChangeScanPartition => GraftChangeReads.rowsOf(c)
-            case s: GraftSegmentScanPartition => GraftSegmentReads.rowsOf(s)
-          }
-          private var cur: InternalRow = _
-          override def next(): Boolean =
-            if (it.hasNext) { cur = it.next(); true } else false
-          override def get(): InternalRow = cur
-          override def close(): Unit = ()
-        }
-    }
+    GraftPartitionReaderFactory()
 }
 
 /** Rows ride inside the partition (driver → executor); UnsafeRow is
   * Externalizable, so this serializes in cluster mode too. */
-case class GraftInputPartition(rows: Array[InternalRow]) extends InputPartition
+case class GraftInputPartition(rows: Array[InternalRow])
+    extends GraftScanPartition
 
 /** Key-grouped variant for storage-partitioned joins: all rows of one
   * identity-partition key, reporting that key so Spark can align the
   * two sides of a join without shuffling either. */
 case class GraftKeyedInputPartition(rows: Array[InternalRow],
                                     key: InternalRow)
-    extends InputPartition
+    extends GraftScanPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = key
 }

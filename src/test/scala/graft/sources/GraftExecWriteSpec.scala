@@ -426,6 +426,38 @@ class GraftExecWriteSpec extends SparkSpec {
         "whole base segment")
   }
 
+  test("a streamed RESTORE revival reads the view's segment " +
+      "executor-side: no driver read of the base segment") {
+    val wh = tmpDir("graft-exec-viewtail")
+    durableCatalog("xvt", wh)
+    spark.sql("CREATE TABLE xvt.ns.vtail (id BIGINT, s STRING) " +
+      "TBLPROPERTIES ('write.rowlevel.mode'='merge-on-read')")
+    spark.sql("INSERT INTO xvt.ns.vtail VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    val v1 = GraftTableStore.lookup(Seq("ns"), "vtail").get.commitHistory
+      .map(_._1).max
+    spark.sql("DELETE FROM xvt.ns.vtail WHERE id = 2") // MOR delete vector
+    spark.sql("CREATE TABLE xvt.ns.vtaildst (id BIGINT, s STRING)")
+    val ckpt = tmpDir("graft-exec-viewtail-ckpt")
+    def drain(): Seq[Long] = {
+      spark.readStream.table("xvt.ns.vtail")
+        .writeStream.option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .toTable("xvt.ns.vtaildst").awaitTermination()
+      spark.sql("SELECT id FROM xvt.ns.vtaildst ORDER BY id")
+        .as[Long].collect().toSeq
+    }
+    assert(drain() === Seq(1L, 3L))
+    GraftMaintenance.restore(Seq("ns"), "vtail", v1) // revives id=2 (a VIEW)
+    val before = dataSegments(wh).map(p =>
+      p -> GraftSegmentIO.driverReadsOf(p)).toMap
+    assert(drain() === Seq(1L, 2L, 3L),
+      "the revival batch must be exactly the view's position")
+    dataSegments(wh).foreach { p =>
+      assert(GraftSegmentIO.driverReadsOf(p) === before.getOrElse(p, 0L),
+        s"segment $p was read on the driver by the streaming tail")
+    }
+  }
+
   test("a position view's zones stay conservative under the reduced " +
       "row count (review finding)") {
     import org.apache.spark.sql.types._
@@ -556,11 +588,11 @@ class GraftExecWriteSpec extends SparkSpec {
   test("the runtime-group-filter partition ships its re-filter as " +
       "serializable DATA, not a scan closure (ADVICE r9)") {
     val keyPred: Seq[Any] => Boolean = k => k.headOption.contains(7)
-    val part = GraftSegmentPartition("/x/data/seg-0.parquet",
+    val part = GraftSegmentScanPartition("/x/data/seg-0.parquet",
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("p",
           org.apache.spark.sql.types.IntegerType))).json,
-      Array(0), Some(keyPred))
+      Array(0), Array.empty, keyOrds = Array(0), keyPred = Some(keyPred))
     val bos = new java.io.ByteArrayOutputStream()
     val oos = new java.io.ObjectOutputStream(bos)
     oos.writeObject(part); oos.close()
@@ -569,7 +601,7 @@ class GraftExecWriteSpec extends SparkSpec {
         "captured state")
     val back = new java.io.ObjectInputStream(
       new java.io.ByteArrayInputStream(bos.toByteArray))
-      .readObject().asInstanceOf[GraftSegmentPartition]
+      .readObject().asInstanceOf[GraftSegmentScanPartition]
     assert(back.keyPred.get(Seq(7)) && !back.keyPred.get(Seq(8)),
       "the deserialized predicate must still evaluate")
   }
