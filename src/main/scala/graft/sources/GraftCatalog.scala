@@ -8764,11 +8764,12 @@ class GraftScanBuilder(tableSchema: StructType,
             else GraftMetaWrapPartition(rcp.partition(idx), required.json,
               metaCols, fid)
           ScanChunk.lazily(part, zonesByName(f), f.groupKey, f.rowCount,
-            rows)
+            f.sizeBytes, rows)
         case None if f.persisted =>
           ScanChunk.lazily(
             GraftSegmentScanPartition.of(f, idx, dead.toArray, metaCols, fid),
-            zonesByName(f), f.groupKey, f.rowCount - dead.size, rows)
+            zonesByName(f), f.groupKey, f.rowCount - dead.size, f.sizeBytes,
+            rows)
         case None => ScanChunk(rows(), zonesByName(f), f.groupKey)
       }
     }.toArray
@@ -8791,20 +8792,22 @@ class GraftScanBuilder(tableSchema: StructType,
   * execution. Zone/limit/runtime pruning all work off the resident
   * metadata (`zones`, `rowCount`, `groupKey`), so a pruned durable file
   * never costs a byte of I/O anywhere; metadata columns ride in the
-  * partition too. Heap-only files, and key-grouped (SPJ) groups that
-  * hold a derived file's chunk, use the `rows` materializer
-  * ([[GraftTable.heapRows]]). */
+  * partition too. `sizeBytes` (the file's stored size) is what
+  * [[GraftScan.planInputPartitions]] packs segment partitions by.
+  * Heap-only files, and key-grouped (SPJ) groups that hold a derived
+  * file's chunk, use the `rows` materializer ([[GraftTable.heapRows]]). */
 private[sources] final class ScanChunk(
     rowsFn: () => Array[InternalRow],
     val zones: ZoneView[String],
     val groupKey: Option[Seq[Any]],
     val rowCount: Int,
+    val sizeBytes: Long,
     val lazySeg: Option[InputPartition]) {
   lazy val rows: Array[InternalRow] = rowsFn()
   /** Runtime-filter exclusion under key-grouped reporting: same
     * partition value, zero rows, zero I/O. */
   def emptied: ScanChunk =
-    new ScanChunk(() => Array.empty, zones, groupKey, 0, None)
+    new ScanChunk(() => Array.empty, zones, groupKey, 0, 0L, None)
 }
 
 private[sources] object ScanChunk {
@@ -8827,12 +8830,12 @@ private[sources] object ScanChunk {
 
   def apply(rows: Array[InternalRow], zones: ZoneView[String] = NoZones,
             groupKey: Option[Seq[Any]] = None): ScanChunk =
-    new ScanChunk(() => rows, zones, groupKey, rows.length, None)
+    new ScanChunk(() => rows, zones, groupKey, rows.length, 0L, None)
 
   def lazily(seg: InputPartition, zones: ZoneView[String],
-             groupKey: Option[Seq[Any]], rowCount: Int,
+             groupKey: Option[Seq[Any]], rowCount: Int, sizeBytes: Long,
              loader: () => Array[InternalRow]): ScanChunk =
-    new ScanChunk(loader, zones, groupKey, rowCount, Some(seg))
+    new ScanChunk(loader, zones, groupKey, rowCount, sizeBytes, Some(seg))
 }
 
 /** Every partition kind the catalog's scans plan. Sealed, so the
@@ -8907,11 +8910,19 @@ case class GraftMetaWrapPartition(inner: GraftScanPartition,
     schemaJson: String, metaCols: Seq[String], fid: Int)
     extends GraftScanPartition
 
-/** Key-grouped variant over segment REFERENCES (durable tables): all
-  * of one identity-partition key's segments, reported with the key so a
-  * storage-partitioned join aligns without shuffling — and without the
-  * driver ever materializing a row. */
-case class GraftKeyedSegmentPartition(segs: Seq[GraftSegmentScanPartition],
+/** Several segment REFERENCES read one after another in one task, in
+  * the order given: [[GraftScan]] packs runs of small segments into
+  * these by Spark's file-split rule, so a table fragmented by appends
+  * does not pay one task per file. Each segment still opens once,
+  * executor-side. */
+case class GraftPackedSegmentPartition(segs: Seq[GraftSegmentScanPartition])
+    extends GraftScanPartition
+
+/** Key-grouped variant (durable tables): all of one identity-partition
+  * key's segments, reported with the key so a storage-partitioned join
+  * aligns without shuffling — and without the driver ever materializing
+  * a row. */
+case class GraftKeyedSegmentPartition(packed: GraftPackedSegmentPartition,
                                       key: InternalRow)
     extends GraftScanPartition
     with org.apache.spark.sql.connector.read.HasPartitionKey {
@@ -9102,9 +9113,11 @@ private[sources] object GraftChangeReads {
   }
 }
 
-/** Scan over the surviving data files (one chunk per file), split into
-  * enough input partitions that downstream operators parallelize even
-  * over a single large file. Reports `SupportsReportStatistics` — size
+/** Scan over the surviving data files (one chunk per file). Durable
+  * segments plan by Spark's file-split rule: runs of small segments
+  * pack into one input partition, a big one stays alone; a few large
+  * heap files split into slices so downstream operators still
+  * parallelize. Reports `SupportsReportStatistics` — size
   * AFTER zone pruning and column pruning, so Catalyst's join planning
   * sees the real read cost and auto-broadcasts dim-sized tables without
   * hints (the path a real format's stats serve).
@@ -9151,13 +9164,16 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
       .getOrElse(super.toMicroBatchStream(checkpointLocation))
 
   // ---- storage-partitioned join reporting ---------------------------
-  // When every chunk is wholly owned by one identity partition and the
-  // user opted into v2 bucketing, report the key-grouped layout: a join
-  // of two such tables on the partition key plans WITHOUT a shuffle on
-  // either side (Spark's storage-partitioned join, the Iceberg/Delta
-  // bucketing path) — at 100 TB the difference between a co-located
-  // merge and re-shuffling both fact tables. Opt-in by conf because
-  // key-grouping caps scan parallelism at the partition count.
+  // When every chunk is wholly owned by one identity partition and v2
+  // bucketing is on, report the key-grouped layout: a join of two such
+  // tables on the partition key plans WITHOUT a shuffle on either side
+  // (Spark's storage-partitioned join, the Iceberg/Delta bucketing
+  // path) — at 100 TB the difference between a co-located merge and
+  // re-shuffling both fact tables. Spark 4 turns
+  // `spark.sql.sources.v2.bucketing.enabled` on by DEFAULT, so every
+  // scan of an identity-partitioned table that projects its partition
+  // columns plans exactly one task per key, joined or not: a 50-state
+  // table runs 50 tasks of a few hundred rows each.
   private def spjActive: Boolean =
     (partitionCols.nonEmpty || bucketSpec.isDefined) &&
       org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled &&
@@ -9347,36 +9363,59 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
         val live = g.filter(_.rowCount > 0)
         if (live.nonEmpty && live.forall(
             _.lazySeg.exists(_.isInstanceOf[GraftSegmentScanPartition])))
-          GraftKeyedSegmentPartition(
+          GraftKeyedSegmentPartition(GraftPackedSegmentPartition(
             live.map(_.lazySeg.get.asInstanceOf[GraftSegmentScanPartition])
-              .toSeq, keyRow): InputPartition
+              .toSeq), keyRow): InputPartition
         else
           GraftKeyedInputPartition(g.flatMap(_.rows), keyRow): InputPartition
       }.toArray
     }
     val cs = chunks
-    if (cs.iterator.map(_.rowCount.toLong).sum == 0L)
-      return Array(GraftInputPartition(Array.empty))
-    // one partition per file; few big eager files additionally split so
-    // the local-mode parallelism survives compaction. Lazy (persisted)
-    // chunks plan as ONE segment partition each, materializing nothing
-    // here — the reader streams the parquet executor-side.
+    val live = cs.filter(_.rowCount > 0)
+    if (live.isEmpty) return Array(GraftInputPartition(Array.empty))
+    // Segment chunks pack by Spark's file-source split rule
+    // (FilePartition): each costs its size plus the open cost, a split
+    // holds at most maxSplitBytes = min(maxPartitionBytes, max(openCost,
+    // total / minPartitionNum)), filled next-fit in FILE order — no size
+    // sort, so an unordered scan returns rows in file order. Nothing is
+    // materialized here: the reader streams the parquet executor-side.
+    // Derived and heap chunks end a run and plan as before: one
+    // partition per derived file, and few big heap files split so the
+    // local-mode parallelism survives compaction.
+    val openCost =
+      org.apache.spark.sql.internal.SQLConf.get.filesOpenCostInBytes
+    lazy val maxSplit = org.apache.spark.sql.execution.datasources
+      .FilePartition.maxSplitBytes(
+        org.apache.spark.sql.SparkSession.active,
+        live.iterator.filter(_.lazySeg.exists(
+          _.isInstanceOf[GraftSegmentScanPartition]))
+          .map(_.sizeBytes + openCost).sum)
     val slicesPerChunk = math.max(1, 8 / math.max(1, cs.length))
-    cs.iterator.flatMap { c =>
+    val out = Array.newBuilder[InputPartition]
+    val run = scala.collection.mutable.ArrayBuffer
+      .empty[GraftSegmentScanPartition]
+    var runBytes = 0L
+    def closeRun(): Unit = {
+      if (run.length == 1) out += run.head
+      else if (run.nonEmpty) out += GraftPackedSegmentPartition(run.toList)
+      run.clear(); runBytes = 0L
+    }
+    live.foreach { c =>
       c.lazySeg match {
-        case Some(seg) if c.rowCount > 0 =>
-          Iterator.single(seg: InputPartition)
-        case Some(_) => Iterator.empty
+        case Some(seg: GraftSegmentScanPartition) =>
+          if (runBytes + c.sizeBytes > maxSplit) closeRun()
+          run += seg; runBytes += c.sizeBytes + openCost
+        case Some(part) => closeRun(); out += part
         case None =>
+          closeRun()
           val rows = c.rows
-          if (rows.isEmpty) Iterator.empty
-          else {
-            val slices = math.max(1, math.min(slicesPerChunk, rows.length))
-            rows.grouped(math.ceil(rows.length.toDouble / slices).toInt)
-              .map(GraftInputPartition.apply(_): InputPartition)
-          }
+          val slices = math.max(1, math.min(slicesPerChunk, rows.length))
+          out ++= rows.grouped(math.ceil(rows.length.toDouble / slices).toInt)
+            .map(GraftInputPartition.apply(_): InputPartition)
       }
-    }.toArray
+    }
+    closeRun()
+    out.result()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -9388,17 +9427,20 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
   * scan partitions (executor-side parquet streaming that decodes only
   * the projected columns — every column when `_row_probe` or a
   * rewrite's group re-filter needs whole rows — and skips delete-vector
-  * positions), their key-grouped bundles, change-feed partitions and
-  * the metadata wrapper over a derived file's partition. Batch scans,
-  * the row-level rewrite and streaming tails all plan through it. */
+  * positions), multi-segment partitions (packed runs, and key-grouped
+  * bundles, which are a packed run plus its key) read one segment after
+  * another, change-feed partitions and the metadata wrapper over a
+  * derived file's partition. Batch scans, the row-level rewrite and
+  * streaming tails all plan through it. */
 case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
   private def rowsOf(p: GraftScanPartition): Iterator[InternalRow] = p match {
     case g: GraftInputPartition => g.rows.iterator
     case k: GraftKeyedInputPartition => k.rows.iterator
     case c: GraftChangeScanPartition => GraftChangeReads.rowsOf(c)
     case s: GraftSegmentScanPartition => GraftSegmentReads.rowsOf(s)
-    case k: GraftKeyedSegmentPartition =>
-      k.segs.iterator.flatMap(GraftSegmentReads.rowsOf)
+    case m: GraftPackedSegmentPartition =>
+      m.segs.iterator.flatMap(GraftSegmentReads.rowsOf)
+    case k: GraftKeyedSegmentPartition => rowsOf(k.packed)
     case w: GraftMetaWrapPartition =>
       // position = output ordinal of the derived rows
       val dataSchema = DataType.fromJson(w.schemaJson)
