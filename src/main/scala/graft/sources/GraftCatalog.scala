@@ -1893,53 +1893,39 @@ class GraftTable(initialName: String, initialSchema: StructType,
   }
 
   /** Distributed twin of [[rebuildFiles]] for POSITIONAL projections
-    * (DROP COLUMN): one Spark task per file reads its segment, projects
-    * out the dropped ordinal, and writes the rebuilt segment task-side
-    * — a 100 TB drop spreads across the cluster instead of moving every
-    * row through driver heap. Row order and count are preserved, so
-    * delete vectors re-key to the new files by position. Returns false
-    * (caller falls back to the driver rebuild) on in-JVM tables, heap
-    * files, or without an active session. */
+    * (DROP COLUMN): one [[GraftRewrite.compact]] task per file reads
+    * only the kept ordinals of its segment and writes the rebuilt
+    * segment — a 100 TB drop spreads across the cluster instead of
+    * moving every row through driver heap. Row order and count are
+    * preserved, so delete vectors re-key to the new files by position
+    * and row identity carries 1:1. Returns false (caller falls back to
+    * the driver rebuild) when a file is heap-resident or a position
+    * view, on in-JVM tables, or without an active session. */
   private def rebuildFilesDistributed(newSchema: StructType,
                                       keep: Array[Int]): Boolean = {
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-    val ok = durable.isDefined && sparkOpt.isDefined &&
-      files.nonEmpty && files.forall(_.persisted)
-    if (!ok) return false
-    val d = durable.get
-    val writeId = java.util.UUID.randomUUID().toString.take(12)
-    val jobs = files.zipWithIndex.map { case (f, i) =>
-      GraftCompactJob(
-        Seq((f.segment.path.toString, f.segment.schema.json,
-          Array.emptyIntArray)),
-        d.log.dir.toString, writeId, i, newSchema.json,
-        partitionCols, bucketSpec, Nil, Int.MaxValue, keep)
+    if (!files.forall(rewritable)) return false
+    val rebuilt = runTasks()(spec => files.zipWithIndex.map { case (f, i) =>
+      GraftCompactJob(Seq(GraftSegmentScanPartition.of(f, keep)),
+        spec.copy(schemaJson = newSchema.json, rowTracking = false), i, Nil,
+        Int.MaxValue, positional = true)
+    })(GraftRewrite.compact)
+    rebuilt.foreach { metas =>
+      val pairs = files.zip(metas.toVector.map { ms =>
+        require(ms.length == 1, s"rebuild job must emit one segment, got " +
+          s"${ms.length}")
+        adoptSegments(ms.toSeq, newSchema).head
+      })
+      // explicit vectors re-materialize beside the rebuilt segment
+      pairs.foreach { case (of, nf) =>
+        nf.track = GraftRowTrack.carry(of.track, nf)
+      }
+      dvs = dvs.flatMap { case (of, bs) =>
+        pairs.find(_._1 eq of).map(_._2 -> bs)
+      }
+      files = pairs.map(_._2)
+      readState = (files, dvs)
     }
-    val metas = sparkOpt.get.sparkContext
-      .parallelize(jobs, jobs.length)
-      .map(GraftCompaction.run)
-      .collect()
-    val pairs = files.zip(metas.toVector.map { ms =>
-      require(ms.length == 1, s"rebuild job must emit one segment, got " +
-        s"${ms.length}")
-      val m = ms.head
-      val nf = GraftDataFile.fromSegment(
-        new GraftSegmentHandle(d.log.dir.resolve(m.rel), newSchema),
-        m.zones, m.bytes, m.groupKey, m.rowCount, bloomRefs = m.bloomRefs)
-      d.registry.put(m.rel, nf)
-      nf
-    })
-    // positional contract (order/count preserved): row identity carries
-    // 1:1; explicit vectors re-materialize beside the rebuilt segment
-    pairs.foreach { case (of, nf) =>
-      nf.track = GraftRowTrack.carry(of.track, nf)
-    }
-    dvs = dvs.flatMap { case (of, bs) =>
-      pairs.find(_._1 eq of).map(_._2 -> bs)
-    }
-    files = pairs.map(_._2)
-    readState = (files, dvs)
-    true
+    rebuilt.isDefined
   }
 
   /** Schema evolution under the commit lock: ADD COLUMNS (nullable,
@@ -2507,10 +2493,13 @@ class GraftTable(initialName: String, initialSchema: StructType,
     }
   }
 
+  /** A file's delete vector (empty when it has none). */
+  private def deadOf(f: GraftDataFile): scala.collection.immutable.BitSet =
+    dvs.getOrElse(f, scala.collection.immutable.BitSet.empty)
+
   /** A file's LIVE rows (delete vector applied). */
   private def effRows(f: GraftDataFile): Array[InternalRow] =
-    GraftDataFile.liveRows(f.rows,
-      dvs.getOrElse(f, scala.collection.immutable.BitSet.empty))
+    GraftDataFile.liveRows(f.rows, deadOf(f))
 
   /** Pseudo-file holding the given POSITIONS of `f` (CDC/diff helper).
     * Persisted base ⇒ a position VIEW: the commit records positions,
@@ -5457,8 +5446,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
       case GraftRowsMessage(rows, tIds, tVers) =>
         GraftRowsDelivery(rows, tIds, tVers)
       case m: GraftSegmentsMessage =>
-        val d = durable.getOrElse(throw new IllegalStateException(
-          s"$tableName: segment commit message on a non-durable table"))
+        if (durable.isEmpty) throw new IllegalStateException(
+          s"$tableName: segment commit message on a non-durable table")
         // task-side CHECK validation bound the constraint set at write
         // START; if a concurrent ADD CONSTRAINT landed since, these
         // rows were never validated against it — abort (retry
@@ -5469,27 +5458,101 @@ class GraftTable(initialName: String, initialSchema: StructType,
             s"$tableName: CHECK constraints changed while this write " +
               "was in flight; its rows were validated against the old " +
               "set — retry the statement")
-        val segSchema = DataType.fromJson(m.schemaJson)
-          .asInstanceOf[StructType]
-        GraftFilesDelivery(m.segs.iterator.map { s =>
-          val f = GraftDataFile.fromSegment(
-            new GraftSegmentHandle(d.log.dir.resolve(s.rel), segSchema),
-            s.zones, s.bytes, s.groupKey, s.rowCount, bloomRefs = s.bloomRefs)
-          // ROW TRACKING: the task's captured identity vectors attach
-          // as a PENDING track; snap() mints the sentinels and writes
-          // the segment's .rowids sidecar
-          if (s.trackIds != null)
-            f.track = new GraftRowTrack(-1L, -1L, s.trackIds, s.trackVers)
-          // a metadata-only ADD COLUMN may have widened the table
-          // between the write factory's creation and this commit —
-          // bring the adopted handle in line (no-op otherwise)
-          f.resegment(tableSchema)
-          d.registry.put(s.rel, f)
-          f
-        }.toVector)
+        // a metadata-only ADD COLUMN may have widened the table between
+        // the write factory's creation and this commit — bring the
+        // adopted handles in line (no-op otherwise)
+        GraftFilesDelivery(adoptSegments(m.segs.toSeq,
+          DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
+          .tapEach(_.resegment(tableSchema)))
       case other => throw new IllegalStateException(
         s"$tableName: unexpected commit message $other")
     }
+
+  /** Files for segments that tasks wrote under `schema`, registered in
+    * the durable registry so the log's encode/decode shares object
+    * identity. Row identity attaches as the task left it: a lazy loader
+    * for a task-written `.rowids` sidecar, or the shipped vectors as a
+    * PENDING track whose Mint sentinels snap() resolves. */
+  private def adoptSegments(metas: Seq[GraftSegmentMeta],
+      schema: StructType): Vector[GraftDataFile] = {
+    val d = durable.get
+    metas.iterator.map { m =>
+      val path = d.log.dir.resolve(m.rel)
+      val f = GraftDataFile.fromSegment(new GraftSegmentHandle(path, schema),
+        m.zones, m.bytes, m.groupKey, m.rowCount, bloomRefs = m.bloomRefs)
+      if (m.trackSidecar)
+        f.track = new GraftRowTrack(-1L, -1L, null, null, explicit = true,
+          loader = () => GraftRowIdSidecar.read(path))
+      else if (m.trackIds != null)
+        f.track = GraftRowTrack.pending(m.trackIds, m.trackVers)
+      d.registry.put(m.rel, f)
+      f
+    }.toVector
+  }
+
+  /** Runs task-side segment rewrites ([[GraftRewrite]]): `plan` turns a
+    * fresh write recipe (table directory, current schema and row-tracking
+    * state, a new write id) into one job per task, and each task runs
+    * `kernel` on its job under `session`. None — the caller rewrites on
+    * the driver — on in-JVM tables or without a session. */
+  private def runTasks[J: scala.reflect.ClassTag, R: scala.reflect.ClassTag](
+      session: Option[org.apache.spark.sql.SparkSession] =
+        org.apache.spark.sql.SparkSession.getActiveSession)(
+      plan: GraftDurableWriteSpec => Seq[J])(kernel: J => R): Option[Array[R]] =
+    for (spec <- durableWriteSpec(); sp <- session) yield {
+      val jobs = plan(spec)
+      if (jobs.isEmpty) Array.empty[R]
+      else {
+        val prev = org.apache.spark.sql.SparkSession.getActiveSession
+        org.apache.spark.sql.SparkSession.setActiveSession(sp)
+        try sp.sparkContext.parallelize(jobs, jobs.length).map(kernel)
+          .collect()
+        finally prev match {
+          case Some(x) => org.apache.spark.sql.SparkSession.setActiveSession(x)
+          case None => org.apache.spark.sql.SparkSession.clearActiveSession()
+        }
+      }
+    }
+
+  /** A file the task-side rewrites can take: persisted, and not a
+    * position view (callers gate on it before planning jobs). */
+  private def rewritable(f: GraftDataFile): Boolean =
+    f.persisted && f.viewSel.isEmpty
+
+  /** Rewrite input of persisted file `f`: whole stored rows minus `dead`. */
+  private def rewriteInput(f: GraftDataFile,
+      dead: scala.collection.immutable.BitSet): GraftSegmentScanPartition =
+    GraftSegmentScanPartition.of(f,
+      Array.tabulate(f.segment.schema.length)(identity), dead.toArray)
+
+  /** The driver twin's input: the live rows of `fs` (delete vectors
+    * applied) with each row's identity — Mint for an untracked file,
+    * null vectors when row tracking is off. */
+  private def liveEntries(fs: Seq[GraftDataFile])
+      : (Array[InternalRow], Array[Long], Array[Long]) = {
+    val tracking = rowTrackingEnabled
+    val es = fs.iterator.flatMap { f =>
+      val dead = deadOf(f)
+      val t = f.track
+      (0 until f.rowCount).iterator.filterNot(dead.contains).map { p =>
+        if (!tracking || t == null)
+          (f.rows(p), GraftRowTrack.Mint, GraftRowTrack.Mint)
+        else (f.rows(p), t.idAt(p), t.verAt(p))
+      }
+    }.toArray
+    (es.map(_._1), if (tracking) es.map(_._2) else null,
+      if (tracking) es.map(_._3) else null)
+  }
+
+  /** A heap file of `rows(idx)` carrying their identities as a PENDING
+    * track (resolved at snap) — a rewrite moves rows, never ids. */
+  private def buildPending(rows: Array[InternalRow], ids: Array[Long],
+      vers: Array[Long])(idx: Array[Int]): GraftDataFile = {
+    val nf = GraftDataFile.build(idx.map(rows(_)), tableSchema, keyOfOpt)
+    if (ids != null)
+      nf.track = GraftRowTrack.pending(idx.map(ids(_)), idx.map(vers(_)))
+    nf
+  }
 
   /** Abort/replay cleanup: delete the segments an uncommitted write's
     * tasks landed (a skipped streaming-epoch replay, or a job abort
@@ -5549,56 +5612,17 @@ class GraftTable(initialName: String, initialSchema: StructType,
       : (Vector[GraftDataFile], Vector[GraftDataFile]) = {
     val kept = Vector.newBuilder[GraftDataFile]
     val removed = Vector.newBuilder[GraftDataFile]
-    // group-SPANNING persisted files (a post-compaction layout) split
-    // EXECUTOR-side: one task per file reads its segment, routes rows
-    // by group key, writes the gone/stay segments — the driver splices
-    // references (like the OPTIMIZE / DROP COLUMN rebuilds; previously
-    // this was the one remaining driver-side row path)
-    val d0 = durable.orNull
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-    val spanning = fs.filter(f =>
-      f.groupKey.isEmpty && f.persisted && f.viewSel.isEmpty)
+    // group-SPANNING rewritable files (a post-compaction layout) split
+    // in tasks ([[GraftRewrite.split]]), one per file — the driver
+    // splices references; the rest split on the driver below
+    val spanning = fs.filter(f => f.groupKey.isEmpty && rewritable(f))
     val splitResults: Map[GraftDataFile, GraftSplitResult] =
-      if (d0 == null || sparkOpt.isEmpty || spanning.isEmpty)
-        Map.empty
-      else {
-        val writeId = java.util.UUID.randomUUID().toString.take(12)
-        val schemaJson = tableSchema.json
-        val trackingS = rowTrackingEnabled
-        val jobs = spanning.zipWithIndex.map { case (f, i) =>
-          val t = f.track
-          GraftSplitJob(
-            (f.segment.path.toString, f.segment.schema.json,
-              dvs.getOrElse(f, scala.collection.immutable.BitSet.empty)
-                .toArray),
-            d0.log.dir.toString, writeId, i, schemaJson,
-            partitionCols, bucketSpec, touched,
-            segTrack = (trackingS && t != null,
-              t != null && t.explicit,
-              if (t != null) t.base else -1L,
-              if (t != null) t.ver else -1L))
-        }
-        val rs = sparkOpt.get.sparkContext
-          .parallelize(jobs, jobs.length)
-          .map(GraftSplit.run)
-          .collect()
-        spanning.zip(rs).toMap // identity-keyed
-      }
-    def decodeMetas(ms: Array[GraftSegmentMeta]): Seq[GraftDataFile] =
-      ms.toSeq.map { m =>
-        val nf = GraftDataFile.fromSegment(
-          new GraftSegmentHandle(d0.log.dir.resolve(m.rel), tableSchema),
-          m.zones, m.bytes, m.groupKey, m.rowCount, bloomRefs = m.bloomRefs)
-        if (m.trackSidecar) {
-          val p0 = d0.log.dir.resolve(m.rel)
-          nf.track = new GraftRowTrack(-1L, -1L, null, null,
-            explicit = true,
-            loader = () => GraftRowIdSidecar.read(p0))
-        } else if (m.trackIds != null)
-          nf.track = GraftRowTrack.pending(m.trackIds, m.trackVers)
-        d0.registry.put(m.rel, nf)
-        nf
-      }
+      if (spanning.isEmpty) Map.empty
+      else runTasks()(spec => spanning.zipWithIndex.map { case (f, i) =>
+        GraftSplitJob(rewriteInput(f, deadOf(f)), spec, i, touched)
+      })(GraftRewrite.split)
+        .fold(Map.empty[GraftDataFile, GraftSplitResult])(
+          rs => spanning.zip(rs).toMap) // identity-keyed
     fs.foreach { f =>
       f.groupKey match {
         case Some(k) =>
@@ -5610,39 +5634,21 @@ class GraftTable(initialName: String, initialSchema: StructType,
             if (res.goneRows == 0) kept += f // untouched: keep identity
             else if (res.stayRows == 0) removed ++= cdcLiveView(Vector(f))
             else {
-              removed ++= decodeMetas(res.gone)
+              removed ++= adoptSegments(res.gone.toSeq, tableSchema)
               // rebuilt from live rows → the new file needs no DV
-              kept ++= decodeMetas(res.stay)
+              kept ++= adoptSegments(res.stay.toSeq, tableSchema)
             }
           case None =>
-            // heap files (and position views) keep the driver split;
-            // (row, id, ver) triples carry identity through it — a
-            // split rewrites bytes, never identities
+            // heap files and position views split on the driver; the
+            // rows carry their identity — a split moves bytes, not ids
             val keyOf = boundGroupKey()
-            val dead = dvs.getOrElse(f,
-              scala.collection.immutable.BitSet.empty)
-            val trk = if (rowTrackingEnabled) f.track else null
-            val entries = (0 until f.rowCount).iterator
-              .filterNot(dead.contains).map { pn =>
-                if (trk == null)
-                  (f.rows(pn), GraftRowTrack.Mint, GraftRowTrack.Mint)
-                else (f.rows(pn), trk.idAt(pn), trk.verAt(pn))
-              }.toArray
-            def buildT(es: Array[(InternalRow, Long, Long)])
-                : GraftDataFile = {
-              val nf = GraftDataFile.build(es.map(_._1), tableSchema,
-                keyOfOpt)
-              if (trk != null)
-                nf.track = GraftRowTrack.pending(es.map(_._2),
-                  es.map(_._3))
-              nf
-            }
+            val (rows, ids, vers) = liveEntries(Seq(f))
             val (gone, stay) =
-              entries.partition(e => touched(keyOf(e._1)))
+              rows.indices.toArray.partition(i => touched(keyOf(rows(i))))
             if (gone.isEmpty) kept += f
             else {
-              removed += buildT(gone)
-              if (stay.nonEmpty) kept += buildT(stay)
+              removed += buildPending(rows, ids, vers)(gone)
+              if (stay.nonEmpty) kept += buildPending(rows, ids, vers)(stay)
             }
         }
       }
@@ -5727,12 +5733,14 @@ class GraftTable(initialName: String, initialSchema: StructType,
     *
     *  1. PLAN under a short fresh lease: re-census the trigger against
     *     the CURRENT state (the enqueue-time observation may be stale)
-    *     and bin-pack the offending groups' sub-target files,
-    *     snapshotting each input's delete vector.
-    *  2. REWRITE outside any lock or lease: the bins rebuild
-    *     executor-side ([[GraftCompaction.run]] — the same distributed
-    *     kernel OPTIMIZE uses, including the per-live-group-key
-    *     regroup split). Concurrent commits proceed freely.
+    *     and bin-pack the offending groups' sub-target files with
+    *     OPTIMIZE's planner ([[compactionPlan]]), snapshotting each
+    *     input's delete vector.
+    *  2. REWRITE outside any lock or lease: the bins rebuild in tasks
+    *     ([[runTasks]] under the session captured at enqueue,
+    *     [[GraftRewrite.compact]] — the kernel OPTIMIZE uses, including
+    *     the per-live-group-key regroup). Concurrent commits proceed
+    *     freely.
     *  3. SPLICE under a second fresh lease, optimistically: if an
     *     intervening commit rewrote/removed ANY planned input, folded
     *     new deletes into one (splicing would resurrect rows the
@@ -5741,8 +5749,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
     *     the next commit's hook re-plans. Otherwise the new files
     *     swap in by reference as an ordinary OPTIMIZE commit.
     *
-    * Tables whose files cannot rebuild in tasks (in-JVM heap tables,
-    * or no live session) fall back to the ordinary scoped
+    * Bins the tasks cannot take (in-JVM tables, heap files, position
+    * views, or no live session) fall back to the ordinary scoped
     * [[optimizeCompact]] under one lease — still on the daemon thread,
     * so the triggering commit remains unaffected. */
   private def autoCompactPass(
@@ -5750,118 +5758,52 @@ class GraftTable(initialName: String, initialSchema: StructType,
     final case class Plan(bins: Vector[Seq[GraftDataFile]],
         dvSnap: Map[GraftDataFile, scala.collection.immutable.BitSet],
         schema: StructType)
+    val target = GraftTable.AutoCompactTargetRows
     val planned: Option[Plan] = mutate {
       GraftTable.autoCompactEncoded(tableSchema).flatMap { enc =>
         val trigger = autoCompactTrigger(enc)
-        if (trigger.isEmpty) None
-        else {
-          val bins = Vector.newBuilder[Vector[GraftDataFile]]
-          trigger.foreach { k =>
-            var bin = Vector.empty[GraftDataFile]
-            var rows = 0L
-            files.iterator.filter(f => f.groupKey == k &&
-                f.rowCount < GraftTable.AutoCompactTargetRows)
-              .foreach { f =>
-                if (bin.nonEmpty &&
-                    rows + f.rowCount > GraftTable.AutoCompactTargetRows) {
-                  bins += bin; bin = Vector.empty; rows = 0L
-                }
-                bin :+= f; rows += f.rowCount
-              }
-            if (bin.nonEmpty) bins += bin
-          }
-          // a lone DV-less file gains nothing from a rewrite
-          val bs = bins.result()
-            .filter(b => b.length >= 2 || b.exists(dvs.contains))
-            .map(b => b: Seq[GraftDataFile])
-          if (bs.isEmpty) None
-          else Some(Plan(bs, bs.flatten.map(f =>
-            f -> dvs.getOrElse(f,
-              scala.collection.immutable.BitSet.empty)).toMap,
-            tableSchema))
-        }
+        val bins = compactionPlan(target, f => trigger.contains(f.groupKey))
+          .collect { case Right(fs) => fs }
+        if (bins.isEmpty) None
+        else Some(Plan(bins, bins.flatten.map(f => f -> deadOf(f)).toMap,
+          tableSchema))
       }
     }
     planned.foreach { p =>
-      val d0 = durable
-      // position views (viewSel) must not distribute: GraftCompactJob
-      // ships only (path, dead) — the executor would read the FULL base
-      // segment and resurrect rows the view excludes. The driver
-      // rebuild reads through f.rows, which applies the selection.
-      val distributable = d0.isDefined && session.isDefined &&
-        p.bins.forall(_.forall(f => f.persisted && f.viewSel.isEmpty))
-      if (!distributable) {
-        val scope = p.bins.flatten
-        optimizeCompact(GraftTable.AutoCompactTargetRows,
-          f => scope.exists(_ eq f), Map("trigger" -> "auto"))
-        ()
-      } else {
-        val d = d0.get
-        val sp = session.get
-        val writeId = java.util.UUID.randomUUID().toString.take(12)
-        val schemaJson = p.schema.json
-        val trackingAc = rowTrackingEnabled
-        val jobs = p.bins.zipWithIndex.map { case (fs, i) =>
-          GraftCompactJob(
-            fs.map(f => (f.segment.path.toString, f.segment.schema.json,
-              p.dvSnap(f).toArray)),
-            d.log.dir.toString, writeId, i, schemaJson,
-            partitionCols, bucketSpec, Nil,
-            GraftTable.AutoCompactTargetRows,
-            segTracks =
-              if (!trackingAc) Nil
-              else fs.map { f =>
-                val t = f.track
-                (t != null, t != null && t.explicit,
-                  if (t != null) t.base else -1L,
-                  if (t != null) t.ver else -1L)
-              })
-        }
-        val prevSession = org.apache.spark.sql.SparkSession.getActiveSession
-        org.apache.spark.sql.SparkSession.setActiveSession(sp)
-        val metas =
-          try sp.sparkContext.parallelize(jobs, jobs.length)
-            .map(GraftCompaction.run).collect().flatten.toVector
-          finally prevSession match {
-            case Some(x) => org.apache.spark.sql.SparkSession.setActiveSession(x)
-            case None => org.apache.spark.sql.SparkSession.clearActiveSession()
-          }
-        GraftAutoCompact.reachedSplice.foreach(_.countDown())
-        GraftAutoCompact.holdBeforeSplice.foreach(_.await())
-        val committed = mutate {
-          val inputs = p.bins.flatten
-          val schemaOk = tableSchema == p.schema
-          val present = inputs.forall(f => files.exists(_ eq f))
-          val dvsSame = inputs.forall(f =>
-            dvs.getOrElse(f, scala.collection.immutable.BitSet.empty) ==
-              p.dvSnap(f))
-          if (!(schemaOk && present && dvsSame)) false
-          else {
-            val newFiles = metas.map { m =>
-              val nf = GraftDataFile.fromSegment(
-                new GraftSegmentHandle(d.log.dir.resolve(m.rel), p.schema),
-                m.zones, m.bytes, m.groupKey, m.rowCount,
-                bloomRefs = m.bloomRefs)
-              if (m.trackSidecar) {
-                val p0 = d.log.dir.resolve(m.rel)
-                nf.track = new GraftRowTrack(-1L, -1L, null, null,
-                  explicit = true,
-                  loader = () => GraftRowIdSidecar.read(p0))
-              } else if (m.trackIds != null)
-                nf.track = GraftRowTrack.pending(m.trackIds, m.trackVers)
-              d.registry.put(m.rel, nf)
-              nf
+      val rewritten =
+        if (!p.bins.forall(_.forall(rewritable))) None
+        else runTasks(session)(spec => p.bins.zipWithIndex.map {
+          case (fs, i) =>
+            GraftCompactJob(fs.map(f => rewriteInput(f, p.dvSnap(f))),
+              spec.copy(schemaJson = p.schema.json), i, Nil, target)
+        })(GraftRewrite.compact)
+      rewritten match {
+        case None =>
+          val scope = p.bins.flatten
+          optimizeCompact(target, f => scope.exists(_ eq f),
+            Map("trigger" -> "auto"))
+        case Some(out) =>
+          val metas = out.toSeq.flatten
+          GraftAutoCompact.reachedSplice.foreach(_.countDown())
+          GraftAutoCompact.holdBeforeSplice.foreach(_.await())
+          val committed = mutate {
+            val inputs = p.bins.flatten
+            val schemaOk = tableSchema == p.schema
+            val present = inputs.forall(f => files.exists(_ eq f))
+            val dvsSame = inputs.forall(f => deadOf(f) == p.dvSnap(f))
+            if (!(schemaOk && present && dvsSame)) false
+            else {
+              files = files.filterNot(f => inputs.exists(_ eq f)) ++
+                adoptSegments(metas, p.schema)
+              pruneDvs()
+              snap("OPTIMIZE", params = Map("trigger" -> "auto"))
+              true
             }
-            files = files.filterNot(f => inputs.exists(_ eq f)) ++ newFiles
-            pruneDvs()
-            snap("OPTIMIZE", params = Map("trigger" -> "auto"))
-            true
           }
-        }
-        if (!committed) {
-          GraftAutoCompact.aborts.incrementAndGet()
-          discardSegments(metas.iterator.map(_.rel))
-        }
+          if (!committed) {
+            GraftAutoCompact.aborts.incrementAndGet()
+            discardSegments(metas.iterator.map(_.rel))
+          }
       }
     }
   }
@@ -5974,14 +5916,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
     maybeAutoCompact()
   }
 
-  /** `OPTIMIZE` (bin-packing compaction), the Delta/Iceberg small-file
-    * maintenance op: files below `targetRows` merge greedily (per
-    * partition group — a packed file never spans partitions it didn't
-    * already span) until bins reach the target; files at or above the
-    * target carry over BY REFERENCE. The row multiset is UNCHANGED — the
-    * merged files hold the same row objects — and the rewrite is recorded
-    * as a commit, so time travel serves the pre- and post-compaction
-    * layouts with identical data. Returns (filesBefore, filesAfter). */
   /** Compile an `OPTIMIZE … WHERE` / `REORG … WHERE` partition
     * predicate into a file-scope test. The predicate binds against a
     * schema of the PARTITION COLUMNS ONLY (Delta's contract — a
@@ -6009,42 +5943,57 @@ class GraftTable(initialName: String, initialSchema: StructType,
     }
   }
 
+  /** The bin plan of OPTIMIZE and auto-compaction, metadata-only (row
+    * counts and group keys — no row loads): in-scope files below
+    * `targetRows` merge greedily per partition group, in file order,
+    * until a bin would pass the target (a packed file never spans
+    * partitions it didn't already span); other files carry over BY
+    * REFERENCE (Left), in encounter order. A lone bin file with no
+    * delete vector has nothing to gain from a rewrite and carries over
+    * too; anything else rebuilds from LIVE rows — compaction purges the
+    * delete vectors of the small files it touches (Delta's OPTIMIZE +
+    * REORG PURGE behavior). */
+  private def compactionPlan(targetRows: Int,
+      inScope: GraftDataFile => Boolean)
+      : Vector[Either[GraftDataFile, Seq[GraftDataFile]]] = {
+    val plan = Vector.newBuilder[Either[GraftDataFile, Seq[GraftDataFile]]]
+    val bins = scala.collection.mutable.LinkedHashMap
+      .empty[Option[Seq[Any]], scala.collection.mutable.ArrayBuffer[GraftDataFile]]
+    def flush(key: Option[Seq[Any]]): Unit =
+      bins.remove(key).filter(_.nonEmpty).foreach { fs =>
+        if (fs.length == 1 && !dvs.contains(fs.head)) plan += Left(fs.head)
+        else plan += Right(fs.toSeq)
+      }
+    files.foreach { f =>
+      if (!inScope(f) || f.rowCount >= targetRows) plan += Left(f)
+      else {
+        val buf = bins.getOrElseUpdate(f.groupKey,
+          scala.collection.mutable.ArrayBuffer.empty)
+        if (buf.iterator.map(_.rowCount).sum + f.rowCount > targetRows)
+          flush(f.groupKey)
+        bins.getOrElseUpdate(f.groupKey,
+          scala.collection.mutable.ArrayBuffer.empty) += f
+      }
+    }
+    bins.keys.toSeq.foreach(flush)
+    plan.result()
+  }
+
+  /** `OPTIMIZE` (bin-packing compaction), the Delta/Iceberg small-file
+    * maintenance op: [[compactionPlan]] bins the in-scope files below
+    * `targetRows`; files at or above the target carry over BY
+    * REFERENCE. The row multiset is UNCHANGED and the rewrite is
+    * recorded as a commit, so time travel serves the pre- and
+    * post-compaction layouts with identical data. Returns (filesBefore,
+    * filesAfter). */
   private[sources] def optimizeCompact(targetRows: Int,
       inScope: GraftDataFile => Boolean = _ => true,
       params: Map[String, String] = Map.empty): (Int, Int) =
     mutate {
       require(targetRows > 0, "targetRows must be positive")
       val before = files
-      // the PLAN is metadata-only (row counts / group keys — no row
-      // loads): files carry over or join a merge bin, in encounter order
-      val plan = Vector.newBuilder[Either[GraftDataFile, Seq[GraftDataFile]]]
-      val bins = scala.collection.mutable.LinkedHashMap
-        .empty[Option[Seq[Any]], scala.collection.mutable.ArrayBuffer[GraftDataFile]]
-      def flush(key: Option[Seq[Any]]): Unit =
-        bins.remove(key).filter(_.nonEmpty).foreach { fs =>
-          // a lone file with no delete vector has nothing to gain from a
-          // rewrite; anything else rebuilds from LIVE rows — compaction
-          // purges the delete vectors of the small files it touches
-          // (Delta's OPTIMIZE + REORG PURGE behavior)
-          if (fs.length == 1 && !dvs.contains(fs.head))
-            plan += Left(fs.head)
-          else plan += Right(fs.toSeq)
-        }
-      before.foreach { f =>
-        if (!inScope(f) || f.rowCount >= targetRows) plan += Left(f)
-        else {
-          val buf = bins.getOrElseUpdate(f.groupKey,
-            scala.collection.mutable.ArrayBuffer.empty)
-          if (buf.iterator.map(_.rowCount).sum + f.rowCount > targetRows)
-            flush(f.groupKey)
-          bins.getOrElseUpdate(f.groupKey,
-            scala.collection.mutable.ArrayBuffer.empty) += f
-        }
-      }
-      bins.keys.toSeq.foreach(flush)
-      val planned = plan.result()
-      val mergeBins = planned.collect { case Right(fs) => fs }
-      files = runCompaction(planned, mergeBins, Nil, targetRows)
+      files = runCompaction(compactionPlan(targetRows, inScope), Nil,
+        targetRows)
       pruneDvs()
       // layout-only: zero logical row changes
       snap("OPTIMIZE",
@@ -6071,140 +6020,90 @@ class GraftTable(initialName: String, initialSchema: StructType,
       val mergeBins = planned.collect { case Right(fs) => fs }
       val purgedRows = mergeBins.iterator
         .map(fs => dvs.get(fs.head).map(_.size.toLong).getOrElse(0L)).sum
-      files = runCompaction(planned, mergeBins, Nil, Int.MaxValue)
+      files = runCompaction(planned, Nil, Int.MaxValue)
       pruneDvs()
       // layout-only: zero logical row changes
       snap("REORG", params = Map("apply" -> "PURGE"))
       (mergeBins.length, purgedRows)
     }
 
-  /** Execute a compaction plan. Durable tables with an active session
-    * rebuild EXECUTOR-SIDE — one Spark task per merge bin reads its
-    * segments, applies delete vectors, (optionally z-orders,) writes
-    * merged segment(s), and reports file refs + stats; the driver
+  /** Execute a compaction plan: carried files (Left) stay, each merge
+    * bin (Right) is replaced by its live rows regrouped under
+    * [[GraftRewrite.regroup]] — split by the current group key, then
+    * (with `zorderCols`) z-ordered and cut into `targetRows`-row files.
+    * When every bin file is rewritable the bins rebuild in tasks, one
+    * per bin ([[runTasks]] → [[GraftRewrite.compact]]), and the driver
     * splices references (the Delta distributed-OPTIMIZE shape — at
     * 100 TB, rebuild cost spreads across the cluster and the driver
-    * never holds rows). In-JVM tables (and heap-resident files) keep
-    * the driver rebuild. */
+    * never holds rows). Otherwise the driver twin applies the same rule
+    * to the same live rows, identities riding along. */
   private def runCompaction(
       planned: Vector[Either[GraftDataFile, Seq[GraftDataFile]]],
-      mergeBins: Vector[Seq[GraftDataFile]],
       zorderCols: Seq[String], targetRows: Int): Vector[GraftDataFile] = {
-    val sparkOpt = org.apache.spark.sql.SparkSession.getActiveSession
-    // viewSel gate: same full-base-read hazard as the async pass — a
-    // position view's selection does not ship in GraftCompactJob
-    val distributable = durable.isDefined && sparkOpt.isDefined &&
-      mergeBins.nonEmpty &&
-      mergeBins.forall(_.forall(f => f.persisted && f.viewSel.isEmpty))
-    val tracking = rowTrackingEnabled
-    val merged: Map[Int, Seq[GraftDataFile]] =
-      if (distributable) {
-        val d = durable.get
-        val writeId = java.util.UUID.randomUUID().toString.take(12)
-        val schemaJson = tableSchema.json
-        val jobs = mergeBins.zipWithIndex.map { case (fs, i) =>
-          GraftCompactJob(
-            fs.map { f =>
-              (f.segment.path.toString, f.segment.schema.json,
-                dvs.getOrElse(f, scala.collection.immutable.BitSet.empty)
-                  .toArray)
-            },
-            d.log.dir.toString, writeId, i, schemaJson,
-            partitionCols, bucketSpec, zorderCols, targetRows,
-            segTracks =
-              if (!tracking) Nil
-              else fs.map { f =>
-                val t = f.track
-                (t != null, t != null && t.explicit,
-                  if (t != null) t.base else -1L,
-                  if (t != null) t.ver else -1L)
-              })
-        }
-        val metas = sparkOpt.get.sparkContext
-          .parallelize(jobs, jobs.length)
-          .map(GraftCompaction.run)
-          .collect()
-        val schema = tableSchema
-        metas.zipWithIndex.map { case (ms, i) =>
-          i -> ms.toSeq.map { m =>
-            val f = GraftDataFile.fromSegment(
-              new GraftSegmentHandle(d.log.dir.resolve(m.rel), schema),
-              m.zones, m.bytes, m.groupKey, m.rowCount, bloomRefs = m.bloomRefs)
-            if (m.trackSidecar) {
-              // the task wrote the vectors beside its segment; attach
-              // a lazy loader — nothing row-sized crossed the driver
-              val p0 = d.log.dir.resolve(m.rel)
-              f.track = new GraftRowTrack(-1L, -1L, null, null,
-                explicit = true,
-                loader = () => GraftRowIdSidecar.read(p0))
-            } else if (m.trackIds != null)
-              f.track = GraftRowTrack.pending(m.trackIds, m.trackVers)
-            d.registry.put(m.rel, f)
-            f
-          }
-        }.toMap
-      } else {
-        mergeBins.zipWithIndex.map { case (fs, i) =>
-          // (row, id, ver) triples so a regroup/sort carries identity
-          val entries = fs.iterator.flatMap { f =>
-            val dead = dvs.getOrElse(f,
-              scala.collection.immutable.BitSet.empty)
-            val t = f.track
-            (0 until f.rowCount).iterator.filterNot(dead.contains)
-              .map { p =>
-                if (!tracking || t == null)
-                  (f.rows(p), GraftRowTrack.Mint, GraftRowTrack.Mint)
-                else (f.rows(p), t.idAt(p), t.verAt(p))
-              }
-          }.toArray
-          def buildT(es: Array[(InternalRow, Long, Long)]): GraftDataFile = {
-            val nf = GraftDataFile.build(es.map(_._1), tableSchema,
-              keyOfOpt)
-            if (tracking)
-              nf.track = GraftRowTrack.pending(es.map(_._2), es.map(_._3))
-            nf
-          }
-          val built: Seq[GraftDataFile] =
-            if (zorderCols.isEmpty) {
-              // split per CURRENT group key (the executor twin does the
-              // same): a mixed legacy-remainder bin REGROUPS under the
-              // live spec instead of re-merging spanning
-              val groups: Seq[Array[(InternalRow, Long, Long)]] =
-                keyOfOpt match {
-                  case Some(k) if entries.nonEmpty =>
-                    entries.groupBy(e => k(e._1)).toSeq
-                      .sortBy(_._1.mkString("|")).map(_._2)
-                  case _ => Seq(entries)
-                }
-              groups.map(buildT)
-            } else {
-              val key = GraftZCurve.keyFn(tableSchema, zorderCols,
-                entries.map(_._1))
-              GraftZCurve.sortedByCode(entries, (e: (InternalRow, Long, Long)) => key(e._1))
-                .grouped(targetRows)
-                .map(buildT).toSeq
-            }
-          i -> built
-        }.toMap
+    val mergeBins = planned.collect { case Right(fs) => fs }
+    val rewritten =
+      if (!mergeBins.forall(_.forall(rewritable))) None
+      else runTasks()(spec => mergeBins.zipWithIndex.map { case (fs, i) =>
+        GraftCompactJob(fs.map(f => rewriteInput(f, deadOf(f))), spec, i,
+          zorderCols, targetRows)
+      })(GraftRewrite.compact)
+    val merged = rewritten match {
+      case Some(out) => out.iterator.map(ms => adoptSegments(ms.toSeq,
+        tableSchema))
+      case None => mergeBins.iterator.map { fs =>
+        val (rows, ids, vers) = liveEntries(fs)
+        GraftRewrite.regroup(rows, tableSchema, keyOfOpt, zorderCols,
+          targetRows).map(buildPending(rows, ids, vers))
       }
-    var binIdx = -1
+    }
     planned.flatMap {
       case Left(f) => Vector(f)
-      case Right(_) => binIdx += 1; merged(binIdx)
+      case Right(_) => merged.next()
     }
   }
 
   /** `OPTIMIZE ZORDER BY (cols...)`: rewrite the file LAYOUT along the
     * Morton curve — 16-bin order-preserving quantization per clustering
-    * column (from the current global min/max), bits interleaved, rows
-    * sorted by curve position and re-packed into `targetRows`-sized
-    * files. Each file then covers a RECTANGLE in clustering space, so
-    * its zone maps prune multi-dimensional selective scans (the
-    * s31-census effect, now served by the real read path on demand).
-    * Partitioned tables cluster WITHIN each partition group (the Delta
-    * semantics — ZORDER never mixes partitions). Row multiset unchanged
-    * (same row objects); recorded as a commit. Clustering columns must
-    * be integral-valued (int/long/short/byte/date/timestamp). */
+    * column (from the scope's min/max), bits interleaved, rows sorted by
+    * curve position and re-packed into `targetRows`-sized files. Each
+    * file then covers a RECTANGLE in clustering space, so its zone maps
+    * prune multi-dimensional selective scans (the s31-census effect,
+    * now served by the real read path on demand). Partitioned tables
+    * cluster WITHIN each partition group (the Delta semantics — ZORDER
+    * never mixes partitions): each group's files form one bin, and a
+    * scope holding group-SPANNING files (legacy remainders after a spec
+    * evolution) is one bin that [[runCompaction]] regroups. Row
+    * multiset unchanged; recorded as a commit. Clustering columns must
+    * be integral-valued (int/long/short/byte/date/timestamp) or
+    * strings. */
+  private[sources] def zorderCompact(cols: Seq[String],
+      targetRows: Int,
+      inScope: GraftDataFile => Boolean = _ => true,
+      params: Map[String, String] = Map.empty): (Int, Int) =
+    mutate {
+      require(cols.nonEmpty, "ZORDER BY needs at least one column")
+      require(targetRows > 0, "targetRows must be positive")
+      GraftZCurve.checkCols(tableSchema, cols) // validate before any work
+      val all = files
+      val before = all.filter(inScope)
+      val scopes: Vector[Seq[GraftDataFile]] =
+        if (before.isEmpty) Vector.empty
+        else if (partitionCols.isEmpty || before.exists(_.groupKey.isEmpty))
+          Vector(before)
+        else
+          before.groupBy(_.groupKey).toVector
+            .sortBy(_._1.map(_.mkString("|")).getOrElse(""))
+            .map(_._2.toSeq)
+      files = runCompaction(all.filterNot(inScope).map(Left(_)) ++
+        scopes.map(Right(_)), cols, targetRows)
+      pruneDvs()
+      // layout-only: zero logical row changes
+      snap("ZORDER", params = params +
+        ("zorder_by" -> cols.mkString(",")) +
+        ("target_rows" -> targetRows.toString))
+      (all.length, files.length)
+    }
+
   /** Incremental-clustering scope for a CLUSTER BY table's defaulted
     * OPTIMIZE (r18): everything NOT already laid out by the newest
     * retained FULL-table ZORDER over the same keys. That commit's
@@ -6265,79 +6164,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
         f => !clustered.contains(f)
     }
   }
-
-  private[sources] def zorderCompact(cols: Seq[String],
-      targetRows: Int,
-      inScope: GraftDataFile => Boolean = _ => true,
-      params: Map[String, String] = Map.empty): (Int, Int) =
-    mutate {
-      require(cols.nonEmpty, "ZORDER BY needs at least one column")
-      require(targetRows > 0, "targetRows must be positive")
-      val schema = tableSchema
-      GraftZCurve.checkCols(schema, cols) // validate before any work
-      val all = files
-      val carried = all.filterNot(inScope)
-      val before = all.filter(inScope)
-      // clustering scopes: whole table (unpartitioned), or one scope
-      // per partition group. Files wholly owned by a group form the
-      // scope directly (metadata-only planning — the executor path can
-      // take them); group-SPANNING files (post-compaction of the None
-      // bin) force the row-level driver split for their groups.
-      val allGrouped = partitionCols.isEmpty ||
-        before.forall(_.groupKey.isDefined)
-      if (allGrouped) {
-        val scopes: Vector[Seq[GraftDataFile]] =
-          if (partitionCols.isEmpty) {
-            if (before.isEmpty) Vector.empty else Vector(before)
-          } else
-            before.groupBy(_.groupKey).toVector
-              .sortBy(_._1.map(_.mkString("|")).getOrElse(""))
-              .map(_._2.toSeq)
-        val planned: Vector[Either[GraftDataFile, Seq[GraftDataFile]]] =
-          carried.map(Left(_)) ++ scopes.map(Right(_))
-        files = runCompaction(planned, scopes, cols, targetRows)
-      } else {
-        // row-level scope split (driver): rare spanning-file layout
-        val trackingZ = rowTrackingEnabled
-        def pack(es: Array[(InternalRow, Long, Long)])
-            : Iterator[GraftDataFile] = {
-          if (es.isEmpty) return Iterator.empty
-          val key = GraftZCurve.keyFn(schema, cols, es.map(_._1))
-          GraftZCurve.sortedByCode(es, (e: (InternalRow, Long, Long)) => key(e._1))
-            .grouped(targetRows).map { chunk =>
-            val nf = GraftDataFile.build(chunk.map(_._1), schema, keyOfOpt)
-            if (trackingZ)
-              nf.track = GraftRowTrack.pending(chunk.map(_._2),
-                chunk.map(_._3))
-            nf
-          }
-        }
-        // live rows only: the re-layout purges delete vectors — each
-        // row's identity rides as a (row, id, ver) triple through the
-        // sort so the re-layout never re-mints
-        val entriesZ = before.toArray.flatMap { f =>
-          val dead = dvs.getOrElse(f,
-            scala.collection.immutable.BitSet.empty)
-          val t = f.track
-          (0 until f.rowCount).iterator.filterNot(dead.contains).map { p =>
-            if (!trackingZ || t == null)
-              (f.rows(p), GraftRowTrack.Mint, GraftRowTrack.Mint)
-            else (f.rows(p), t.idAt(p), t.verAt(p))
-          }
-        }
-        val gk = boundGroupKey()
-        files = carried ++
-          entriesZ.groupBy(e => gk(e._1)).toSeq
-            .sortBy(_._1.mkString("|"))
-            .iterator.flatMap { case (_, es) => pack(es) }.toVector
-      }
-      pruneDvs()
-      // layout-only: zero logical row changes
-      snap("ZORDER", params = params +
-        ("zorder_by" -> cols.mkString(",")) +
-        ("target_rows" -> targetRows.toString))
-      (all.length, files.length)
-    }
 
   // ---- metadata-only DELETE ------------------------------------------
   // A DELETE whose condition is expressible over the identity partition
@@ -8849,7 +8675,9 @@ sealed trait GraftScanPartition extends InputPartition
   * the requested meta columns plus this file's ordinal): the reader
   * streams the file at execution, executor-side. Everything is plain
   * serializable data — the partition ships to a real cluster's
-  * executors unchanged. Build it with [[GraftSegmentScanPartition.of]]. */
+  * executors unchanged; the task-side rewrites ([[GraftRewrite]]) take
+  * their inputs in the same form. Build it with
+  * [[GraftSegmentScanPartition.of]]. */
 case class GraftSegmentScanPartition(ref: String, schemaJson: String,
     project: Array[Int], dead: Array[Int],
     metaCols: Seq[String] = Nil, fid: Int = -1,
@@ -8872,7 +8700,26 @@ case class GraftSegmentScanPartition(ref: String, schemaJson: String,
     // schema) + `keyPred` (a literal-capturing exact group-key test,
     // [[ZonePredicate.groupKeyTest]]). Only with a whole-row `project`.
     keyOrds: Array[Int] = Array.empty,
-    keyPred: Option[Seq[Any] => Boolean] = None) extends GraftScanPartition
+    keyPred: Option[Seq[Any] => Boolean] = None) extends GraftScanPartition {
+
+  /** Whether ORIGINAL position `p` is read: off the delete vector and,
+    * for a position view, inside (or, with `selExclude`, outside) its
+    * selection. */
+  def liveAt: Int => Boolean = {
+    val deadBs = scala.collection.immutable.BitSet(dead: _*)
+    val selBs = scala.collection.immutable.BitSet(sel: _*)
+    val isView = sel.nonEmpty || selExclude
+    p => !deadBs.contains(p) && (!isView || selBs.contains(p) != selExclude)
+  }
+
+  /** The segment's row track (null when untracked): arithmetic from the
+    * shipped (base, ver), or the `.rowids` sidecar, loaded on first use
+    * wherever this partition runs. */
+  def rowTrack: GraftRowTrack =
+    if (!tracked) null
+    else new GraftRowTrack(trackBase, trackVer, null, null, trackExplicit,
+      () => GraftRowIdSidecar.read(java.nio.file.Paths.get(ref)))
+}
 
 object GraftSegmentScanPartition {
   /** The segment partition of persisted file `f`: its segment ref, view
@@ -8938,14 +8785,7 @@ private[sources] object GraftSegmentReads {
     val fileSchema = DataType.fromJson(s.schemaJson)
       .asInstanceOf[StructType]
     val path = java.nio.file.Paths.get(s.ref)
-    // live positions: off the delete vector and, for a position view,
-    // inside (or, with `selExclude`, outside) its selection
-    val dead =
-      if (s.dead.isEmpty) null
-      else scala.collection.immutable.BitSet(s.dead: _*)
-    val selBs =
-      if (s.sel.isEmpty && !s.selExclude) null
-      else scala.collection.immutable.BitSet(s.sel: _*)
+    val live = s.liveAt
     // the group re-filter tests, and `_row_probe` hashes, the whole
     // stored row, so only they make the read decode every column
     val whole = s.keyPred.isDefined || s.metaCols.contains("_row_probe")
@@ -8961,29 +8801,24 @@ private[sources] object GraftSegmentReads {
       case None => _ => true
     }
     val kept = rows.zipWithIndex.filter { case (r, p) =>
-      (dead == null || !dead.contains(p)) &&
-        (selBs == null || selBs.contains(p) != s.selExclude) && inGroup(r)
+      live(p) && inGroup(r)
     }
     if (s.metaCols.isEmpty) {
       // plain read: rows go out as decoded
-      if (dead == null && selBs == null && s.keyPred.isEmpty) rows
+      if (s.dead.isEmpty && s.sel.isEmpty && !s.selExclude &&
+          s.keyPred.isEmpty) rows
       else kept.map(_._1)
     } else {
       // metadata columns carry ORIGINAL row addresses; a position
       // view's selection filters WHICH positions emit, the addresses
       // stay the base file's (the view and the base agree on every
-      // shared row). Row tracking is arithmetic from the shipped
-      // (base, ver), or the explicit sidecar loaded on first use
-      val track =
-        if (!s.tracked) null
-        else new GraftRowTrack(s.trackBase, s.trackVer, null, null,
-          s.trackExplicit, () => GraftRowIdSidecar.read(path))
+      // shared row)
       val meta =
         if (whole) GraftTable.metaProjector(fileSchema, s.project,
-          s.metaCols, s.fid, s.ref, track)
+          s.metaCols, s.fid, s.ref, s.rowTrack)
         else GraftTable.metaProjector(
           StructType(s.project.map(fileSchema.fields(_))),
-          s.project.indices.toArray, s.metaCols, s.fid, s.ref, track)
+          s.project.indices.toArray, s.metaCols, s.fid, s.ref, s.rowTrack)
       kept.map { case (r, p) => meta(r, p) }
     }
   }

@@ -1566,8 +1566,16 @@ private[sources] object GraftLogCodec {
               GraftSegmentIO.read(partReader(i, n), CheckpointPartSchema,
                 Array(3)).map(_.getUTF8String(0).toString).toVector
             })
-            Await.result(Future.sequence(slices), Duration.Inf)
+            // finite barrier: a hung part read fails the table load
+            // after a generous bound instead of wedging it forever
+            try Await.result(Future.sequence(slices), Duration(30, "min"))
               .toVector.flatten
+            catch {
+              case e: java.util.concurrent.TimeoutException =>
+                throw new IllegalStateException(s"durable table at $dir: " +
+                  s"decoding its $n checkpoint parts did not finish " +
+                  "within 30 minutes", e)
+            }
         }
       metas.map(m =>
         decodeFile(JsonMethods.parse(m), schema, kts, dir, registry))

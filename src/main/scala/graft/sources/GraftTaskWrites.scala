@@ -52,6 +52,8 @@ final case class GraftDurableWriteSpec(
     rowTracking: Boolean = false) {
   @transient lazy val schema: StructType =
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
+  @transient lazy val keyOf: Option[InternalRow => Seq[Any]] =
+    GraftGroupKeys.keyOf(schema, partitionCols, bucketSpec)
 }
 
 /** One task-written segment, as its commit message reports it: stats
@@ -183,8 +185,6 @@ private[sources] final class GraftSegmentDataWriter(
 
   private val schema = spec.schema
   private val checks = spec.checks
-  private val keyOfOpt =
-    GraftGroupKeys.keyOf(schema, spec.partitionCols, spec.bucketSpec)
   private lazy val stripOp = UnsafeProjection.create(
     schema.fields.zipWithIndex.map { case (f, i) =>
       BoundReference(i + 1, f.dataType, f.nullable)
@@ -255,7 +255,7 @@ private[sources] final class GraftSegmentDataWriter(
     // rows (a partitioned COW rewrite routes each row's identity to
     // the segment that row lands in)
     val idxAll = buf.indices.toArray
-    val groups: Seq[Array[Int]] = keyOfOpt match {
+    val groups: Seq[Array[Int]] = spec.keyOf match {
       case None => if (buf.isEmpty) Nil else Seq(idxAll)
       case Some(keyOf) =>
         idxAll.groupBy(i => keyOf(buf(i))).toSeq
@@ -266,7 +266,7 @@ private[sources] final class GraftSegmentDataWriter(
       val rs = idx.map(buf(_))
       // stats ride the SAME kernel as driver-side builds; the heap file
       // object is task-local scaffolding and drops with the task
-      val f = GraftDataFile.build(rs, schema, keyOfOpt)
+      val f = GraftDataFile.build(rs, schema, spec.keyOf)
       val rel = s"data/seg-${spec.writeId}-e$epochId-p$partitionId" +
         s"-t$taskId-$n.parquet"
       val abs = java.nio.file.Paths.get(spec.tableDir).resolve(rel)
@@ -419,208 +419,143 @@ private[sources] object GraftZCurve {
   }
 }
 
-/** One executor-side compaction job: read the listed segments in order,
-  * drop dead (delete-vector) positions, optionally z-order the scope,
-  * chunk, write merged segment(s) into the warehouse, report metas.
-  * Everything is serializable DATA — the task never sees the table. */
+/** One executor-side compaction job: read the inputs in order, keep
+  * their live rows, regroup them by [[GraftRewrite.regroup]], write the
+  * merged segment(s) under `spec` and report metas. With `positional`
+  * the job is a schema-evolution REBUILD instead (DROP COLUMN: the
+  * input's `project` keeps the surviving ordinals) — row order and
+  * count are preserved, so delete vectors re-key by position, and it
+  * emits exactly ONE segment (1:1 file pairing). Everything is
+  * serializable DATA — the task never sees the table. */
 private[sources] final case class GraftCompactJob(
-    segs: Seq[(String, String, Array[Int])], // (absPath, schemaJson, dead)
-    outDir: String, writeId: String, binId: Int,
-    schemaJson: String,
-    partitionCols: Seq[String], bucketSpec: Option[(Int, String)],
-    zorderCols: Seq[String], targetRows: Int,
-    // non-empty = schema-evolution REBUILD: keep exactly these input
-    // ordinals per row (DROP COLUMN's positional projection), preserve
-    // row order/count (delete vectors re-key by position), and emit
-    // exactly ONE segment (1:1 file pairing)
-    rewriteProject: Array[Int] = Array.emptyIntArray,
-    // ROW TRACKING, aligned with `segs`: (tracked, explicit, base,
-    // ver) per input — the task computes each OUTPUT row's preserved
-    // identity (loading explicit inputs' .rowids sidecars locally) and
-    // writes each output segment's sidecar in the task; only when some
-    // input is UNTRACKED (pre-enablement) do Mint sentinels force the
-    // vectors through the commit message for driver minting
-    segTracks: Seq[(Boolean, Boolean, Long, Long)] = Nil)
+    segs: Seq[GraftSegmentScanPartition], spec: GraftDurableWriteSpec,
+    binId: Int, zorderCols: Seq[String], targetRows: Int,
+    positional: Boolean = false)
 
-/** Executor-side COW split of ONE group-spanning file: read the
-  * segment, apply the delete vector, route each live row's group key
-  * through the partition predicate, and write the touched rows (the
-  * CDC preimage, `gone`) and untouched rows (`stay`) as fresh
-  * segments. Degenerate outcomes write NOTHING — an untouched file
-  * reports zero gone rows (the driver keeps the original by
+/** Executor-side COW split of ONE group-spanning file: route each live
+  * row's group key through the partition predicate and write the
+  * touched rows (the CDC preimage, `gone`) and untouched rows (`stay`)
+  * as fresh segments. Degenerate outcomes write NOTHING — an untouched
+  * file reports zero gone rows (the driver keeps the original by
   * reference), a wholly-touched file reports zero stay rows (the
-  * driver removes the original by reference). Everything is
-  * serializable data; the task never sees the table. */
+  * driver removes the original by reference). */
 private[sources] final case class GraftSplitJob(
-    seg: (String, String, Array[Int]), // (absPath, schemaJson, dead)
-    outDir: String, writeId: String, binId: Int,
-    schemaJson: String,
-    partitionCols: Seq[String], bucketSpec: Option[(Int, String)],
-    touched: Seq[Any] => Boolean,
-    // ROW TRACKING of the input file: (tracked, explicit, base, ver) —
-    // a split never mints, so both output sides carry fully-preserved
-    // vectors in task-written sidecars (only a flag rides the message)
-    segTrack: (Boolean, Boolean, Long, Long) = (false, false, -1L, -1L))
+    seg: GraftSegmentScanPartition, spec: GraftDurableWriteSpec,
+    binId: Int, touched: Seq[Any] => Boolean)
 
 private[sources] final case class GraftSplitResult(
     goneRows: Int, stayRows: Int,
     gone: Array[GraftSegmentMeta], stay: Array[GraftSegmentMeta])
 
-private[sources] object GraftSplit {
-  def run(job: GraftSplitJob): GraftSplitResult = {
-    val schema = DataType.fromJson(job.schemaJson).asInstanceOf[StructType]
-    val keyOf =
-      GraftGroupKeys.keyOf(schema, job.partitionCols, job.bucketSpec)
-    val keyFn = keyOf.getOrElse((_: InternalRow) => Nil: Seq[Any])
-    val (p, sj, dead) = job.seg
-    val segSchema = DataType.fromJson(sj).asInstanceOf[StructType]
-    val path = java.nio.file.Paths.get(p)
-    val all = GraftSegmentIO.readAll(path, segSchema)
-    val deadBs =
-      if (dead.isEmpty) scala.collection.immutable.BitSet.empty
-      else scala.collection.immutable.BitSet.fromSpecific(dead)
-    // split INDICES (original positions) so row identity rides with
-    // its rows — a split rewrites bytes, never identities
-    val liveIdx = (0 until all.length).filterNot(deadBs.contains).toArray
-    val (goneIdx, stayIdx) =
-      liveIdx.partition(pn => job.touched(keyFn(all(pn))))
-    if (goneIdx.isEmpty)
-      return GraftSplitResult(0, stayIdx.length, Array.empty, Array.empty)
-    if (stayIdx.isEmpty)
-      return GraftSplitResult(goneIdx.length, 0, Array.empty, Array.empty)
-    val (tracked, explicit, base, ver) = job.segTrack
-    lazy val sidecar = GraftRowIdSidecar.read(path)
-    def writeSide(idx: Array[Int],
-        side: String): Array[GraftSegmentMeta] = {
-      val rows = idx.map(all(_))
-      val f = GraftDataFile.build(rows, schema, keyOf)
-      val rel = s"data/spl-${job.writeId}-b${job.binId}-$side.parquet"
-      val abs = java.nio.file.Paths.get(job.outDir).resolve(rel)
-      val bytes = GraftSegmentIO.write(abs, schema, rows)
-      val refs = GraftBloomSidecar.write(abs, f.blooms)
-      if (tracked) {
-        val ids = idx.map(pn =>
-          if (explicit) sidecar._1(pn) else base + pn)
-        val vers = idx.map(pn =>
-          if (explicit) sidecar._2(pn) else ver)
-        GraftRowIdSidecar.write(abs, ids, vers)
-        Array(GraftSegmentMeta(rel, rows.length, bytes, f.zones,
-          f.groupKey, refs, trackSidecar = true))
-      } else
-        Array(GraftSegmentMeta(rel, rows.length, bytes, f.zones,
-          f.groupKey, refs))
-    }
-    GraftSplitResult(goneIdx.length, stayIdx.length,
-      writeSide(goneIdx, "g"), writeSide(stayIdx, "s"))
-  }
-}
-
-/** Runs [[GraftCompactJob]]s inside Spark tasks: the 100 TB OPTIMIZE /
-  * ZORDER shape — rebuild cost spreads across the cluster and the
+/** The task-side segment rewrites behind OPTIMIZE, ZORDER, REORG PURGE,
+  * auto-compaction, DROP COLUMN and the copy-on-write split — the 100 TB
+  * maintenance shape: rebuild cost spreads across the cluster and the
   * driver handles only file references, like Delta's distributed
-  * OPTIMIZE. Reuses the stats kernel and the shared z-curve. */
-private[sources] object GraftCompaction {
-  def run(job: GraftCompactJob): Array[GraftSegmentMeta] = {
-    val schema = DataType.fromJson(job.schemaJson).asInstanceOf[StructType]
-    val keyOf =
-      GraftGroupKeys.keyOf(schema, job.partitionCols, job.bucketSpec)
-    val tracking = job.segTracks.nonEmpty
-    val idB = Array.newBuilder[Long]
-    val verB = Array.newBuilder[Long]
-    val raw: Array[InternalRow] = job.segs.iterator.zipWithIndex.flatMap {
-      case ((p, sj, dead), segIdx) =>
-        val segSchema = DataType.fromJson(sj).asInstanceOf[StructType]
-        val path = java.nio.file.Paths.get(p)
-        val all = GraftSegmentIO.readAll(path, segSchema)
-        val deadBs =
-          if (dead.isEmpty) scala.collection.immutable.BitSet.empty
-          else scala.collection.immutable.BitSet.fromSpecific(dead)
-        if (tracking) {
-          // per-row identity aligned with the LIVE rows, in position
-          // order — sidecars load LOCALLY in this task
-          val (tracked, explicit, base, ver) = job.segTracks(segIdx)
-          lazy val sidecar = GraftRowIdSidecar.read(path)
-          var pos = 0
-          while (pos < all.length) {
-            if (!deadBs.contains(pos)) {
-              if (!tracked) {
-                idB += GraftRowTrack.Mint; verB += GraftRowTrack.Mint
-              } else if (explicit) {
-                idB += sidecar._1(pos); verB += sidecar._2(pos)
-              } else { idB += base + pos; verB += ver }
-            }
-            pos += 1
+  * OPTIMIZE. Every input is a [[GraftSegmentScanPartition]]; rows carry
+  * their identity from its row track; one writer lands every output. */
+private[sources] object GraftRewrite {
+  /** The live rows of `inputs`, in input and position order, copied,
+    * with each row's (`_row_id`, `_row_commit_version`) when `tracking`
+    * — Mint for an untracked input, so the commit mints — and null
+    * vectors otherwise. */
+  private def liveRows(inputs: Seq[GraftSegmentScanPartition],
+      tracking: Boolean): (Array[InternalRow], Array[Long], Array[Long]) = {
+    val rows = Array.newBuilder[InternalRow]
+    val ids = Array.newBuilder[Long]
+    val vers = Array.newBuilder[Long]
+    inputs.foreach { s =>
+      val live = s.liveAt
+      val track = if (tracking) s.rowTrack else null
+      val in = GraftSegmentIO.read(java.nio.file.Paths.get(s.ref),
+        DataType.fromJson(s.schemaJson).asInstanceOf[StructType], s.project)
+      try in.zipWithIndex.foreach { case (r, p) =>
+        if (live(p)) {
+          rows += r.copy()
+          if (tracking) {
+            ids += (if (track == null) GraftRowTrack.Mint else track.idAt(p))
+            vers += (if (track == null) GraftRowTrack.Mint else track.verAt(p))
           }
         }
-        (if (dead.isEmpty) all
-         else GraftDataFile.liveRows(all, deadBs)).iterator
-    }.toArray
-    val ids: Array[Long] = if (tracking) idB.result() else null
-    val vers: Array[Long] = if (tracking) verB.result() else null
-    val rows: Array[InternalRow] =
-      if (job.rewriteProject.isEmpty) raw
-      else {
-        val proj = UnsafeProjection.create(
-          job.rewriteProject.toIndexedSeq.zipWithIndex.map { case (in, j) =>
-            BoundReference(in, schema.fields(j).dataType,
-              schema.fields(j).nullable)
-          })
-        raw.map(r => proj(r).copy(): InternalRow)
-      }
-    // chunk by INDEX so the identity vectors split with their rows
+      } finally in.close()
+    }
+    if (tracking) (rows.result(), ids.result(), vers.result())
+    else (rows.result(), null, null)
+  }
+
+  /** The regroup rule of every compaction, task-side and on the driver:
+    * split the rows by the CURRENT group key — a legacy spanning file
+    * regroups under the live spec after a partition-spec evolution, an
+    * ordinary single-group bin passes through — then z-order each group
+    * and cut it into `targetRows`-row chunks. Returns the non-empty
+    * chunks as row indices, so identity vectors split with their rows. */
+  def regroup(rows: Array[InternalRow], schema: StructType,
+      keyOf: Option[InternalRow => Seq[Any]], zorderCols: Seq[String],
+      targetRows: Int): Seq[Array[Int]] = {
     val idxAll = rows.indices.toArray
-    val chunks: Iterator[Array[Int]] =
-      if (job.rewriteProject.nonEmpty) Iterator.single(idxAll) // 1:1
-      else {
-        // split per CURRENT group key FIRST: compaction is the REGROUP
-        // path for legacy spanning files after a partition-spec
-        // evolution — a packed file must land inside one group of the
-        // live spec (SPJ re-engages only when every chunk is keyed;
-        // without the split a mixed remainder would re-merge spanning).
-        // Ordinary bins are single-group already — the split is a no-op.
-        val groups: Seq[Array[Int]] = keyOf match {
-          case Some(k) if rows.nonEmpty =>
-            idxAll.groupBy(i => k(rows(i))).toSeq
-              .sortBy(_._1.mkString("|")).map(_._2)
-          case _ => Seq(idxAll)
-        }
-        if (job.zorderCols.isEmpty) groups.iterator
-        else groups.iterator.flatMap { g =>
-          val key = GraftZCurve.keyFn(schema, job.zorderCols,
-            g.map(rows(_)))
-          GraftZCurve.sortedByCode(g, (i: Int) => key(rows(i)))
-            .grouped(job.targetRows)
-        }
+    val groups: Seq[Array[Int]] = keyOf match {
+      case Some(k) if rows.nonEmpty =>
+        idxAll.groupBy(i => k(rows(i))).toSeq
+          .sortBy(_._1.mkString("|")).map(_._2)
+      case _ => Seq(idxAll)
+    }
+    val chunks =
+      if (zorderCols.isEmpty) groups
+      else groups.flatMap { g =>
+        val key = GraftZCurve.keyFn(schema, zorderCols, g.map(rows(_)))
+        GraftZCurve.sortedByCode(g, (i: Int) => key(rows(i)))
+          .grouped(targetRows)
       }
-    val keepEmpty = job.rewriteProject.nonEmpty // 1:1 pairing contract
-    chunks.filter(c => keepEmpty || c.nonEmpty).zipWithIndex
-      .map { case (idx, n) =>
-        val chunk = idx.map(rows(_))
-        val f = GraftDataFile.build(chunk, schema, keyOf)
-        val rel = s"data/opt-${job.writeId}-b${job.binId}-$n.parquet"
-        val abs = java.nio.file.Paths.get(job.outDir).resolve(rel)
-        val bytes = GraftSegmentIO.write(abs, schema, chunk)
-        val refs = GraftBloomSidecar.write(abs, f.blooms)
-        if (!tracking)
-          GraftSegmentMeta(rel, chunk.length, bytes, f.zones, f.groupKey,
-            refs)
-        else {
-          val cIds = idx.map(ids(_))
-          val cVers = idx.map(vers(_))
-          if (cIds.forall(_ != GraftRowTrack.Mint)) {
-            // fully-preserved chunk: the sidecar lands task-side and
-            // only a FLAG rides the commit message — O(stats), the
-            // posture every task write here keeps
-            GraftRowIdSidecar.write(abs, cIds, cVers)
-            GraftSegmentMeta(rel, chunk.length, bytes, f.zones,
-              f.groupKey, refs, trackSidecar = true)
-          } else
-            // an untracked (pre-enablement) input: its rows need
-            // driver-minted ids, so the vectors ride the message and
-            // settle() finalizes + writes the sidecar
-            GraftSegmentMeta(rel, chunk.length, bytes, f.zones,
-              f.groupKey, refs, trackIds = cIds, trackVers = cVers)
-        }
-      }.toArray
+    chunks.filter(_.nonEmpty)
+  }
+
+  /** The one rewrite segment writer: zone stats through the shared
+    * kernel, the segment and its Bloom sidecar, then the rows' identity
+    * — with every id preserved the `.rowids` sidecar lands here and only
+    * a flag rides the message; with some to mint the vectors ride the
+    * message and the commit mints. `ids` null = untracked. */
+  private def write(spec: GraftDurableWriteSpec, rel: String,
+      rows: Array[InternalRow], ids: Array[Long],
+      vers: Array[Long]): GraftSegmentMeta = {
+    val f = GraftDataFile.build(rows, spec.schema, spec.keyOf)
+    val abs = java.nio.file.Paths.get(spec.tableDir).resolve(rel)
+    val bytes = GraftSegmentIO.write(abs, spec.schema, rows)
+    val meta = GraftSegmentMeta(rel, rows.length, bytes, f.zones,
+      f.groupKey, GraftBloomSidecar.write(abs, f.blooms))
+    if (ids == null) meta
+    else if (ids.forall(_ != GraftRowTrack.Mint)) {
+      GraftRowIdSidecar.write(abs, ids, vers)
+      meta.copy(trackSidecar = true)
+    } else meta.copy(trackIds = ids, trackVers = vers)
+  }
+
+  private def pick(v: Array[Long], idx: Array[Int]): Array[Long] =
+    if (v == null) null else idx.map(v(_))
+
+  def compact(job: GraftCompactJob): Array[GraftSegmentMeta] = {
+    val spec = job.spec
+    val (rows, ids, vers) = liveRows(job.segs, spec.rowTracking)
+    val chunks =
+      if (job.positional) Seq(rows.indices.toArray)
+      else regroup(rows, spec.schema, spec.keyOf, job.zorderCols,
+        job.targetRows)
+    chunks.zipWithIndex.map { case (idx, n) =>
+      write(spec, s"data/opt-${spec.writeId}-b${job.binId}-$n.parquet",
+        idx.map(rows(_)), pick(ids, idx), pick(vers, idx))
+    }.toArray
+  }
+
+  def split(job: GraftSplitJob): GraftSplitResult = {
+    val spec = job.spec
+    val (rows, ids, vers) = liveRows(Seq(job.seg), spec.rowTracking)
+    val keyFn = spec.keyOf.getOrElse((_: InternalRow) => Nil: Seq[Any])
+    val (gone, stay) =
+      rows.indices.toArray.partition(i => job.touched(keyFn(rows(i))))
+    def side(idx: Array[Int], name: String): Array[GraftSegmentMeta] =
+      if (gone.isEmpty || stay.isEmpty) Array.empty
+      else Array(write(spec,
+        s"data/spl-${spec.writeId}-b${job.binId}-$name.parquet",
+        idx.map(rows(_)), pick(ids, idx), pick(vers, idx)))
+    GraftSplitResult(gone.length, stay.length, side(gone, "g"),
+      side(stay, "s"))
   }
 }
