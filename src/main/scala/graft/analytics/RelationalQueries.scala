@@ -36,6 +36,18 @@ object RelationalQueries {
       |                count(*) AS run_len
       |         FROM g GROUP BY user_id, grp)""".stripMargin
 
+  /** Waits for one AvailableNow drain for at most 30 minutes, the cap the
+    * pool barriers use; past it the query is stopped and the statement
+    * fails, naming `label` and the drain's checkpoint directory. */
+  private def awaitDrain(label: String,
+      q: org.apache.spark.sql.streaming.StreamingQuery,
+      checkpoint: String): Unit =
+    if (!q.awaitTermination(30L * 60 * 1000)) {
+      q.stop()
+      throw new IllegalStateException(s"$label: streaming query ${q.id} " +
+        s"did not drain within 30 minutes (checkpoint $checkpoint)")
+    }
+
   /** Deterministic snapshot pair for the CDC family (s18 diff, s19 apply):
     * v1 = keys with hash < 90, v2 = keys with hash ≥ 5 and prices bumped
     * on hash ∈ [50, 60) — both derived from one orders scan so the oracle
@@ -4515,7 +4527,7 @@ object RelationalQueries {
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
+        awaitDrain("s39", q, ckpt)
       }
       drain() // initial snapshot: commits 1-3
       orders.filter(col("h") === 3).drop("h").writeTo(src).append()
@@ -4670,7 +4682,7 @@ object RelationalQueries {
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(dst)
-        q.awaitTermination()
+        awaitDrain("s42", q, ckpt)
       }
       pipe() // initial snapshot: commits 1-3
       orders.filter(col("h") === 3).drop("h").writeTo(src).append()
@@ -4764,7 +4776,7 @@ object RelationalQueries {
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable(acc)
-        q.awaitTermination()
+        awaitDrain("s44", q, ckpt)
       }
       drain() // CTAS inserts + the update's delete/insert deltas
       s.sql(s"DELETE FROM $t WHERE h = 3")

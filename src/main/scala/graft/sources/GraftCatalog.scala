@@ -1177,22 +1177,6 @@ object ColZone {
     a.asInstanceOf[Comparable[Any]].compareTo(b)
 }
 
-/** One immutable data file of a [[GraftTable]]: the rows one writer task
-  * delivered in one commit (split per partition group on partitioned
-  * tables), plus the file-level statistics a real table format keeps in
-  * its transaction log — per-column zone maps for data skipping, a byte
-  * size for `SupportsReportStatistics`, and the partition-group key when
-  * the whole file belongs to a single identity partition (which lets
-  * partition deletes/overwrites drop whole files by reference).
-  *
-  * ROW STORAGE is tiered: a freshly-written file holds its rows on heap;
-  * once a durable commit persists the rows to a parquet segment
-  * ([[spill]]) the strong reference drops — the heap copy becomes a
-  * SoftReference cache the GC reclaims under pressure, and later reads
-  * stream the segment back from disk. A table's resident set is its
-  * WORKING set, not its size: the heap wall the in-memory store had is
-  * gone. Metadata (zones, size, group key, row count) always stays
-  * resident — pruning and planning never touch a segment. */
 /** ROW TRACKING state of one data file (Delta's row-tracking /
   * Iceberg-v3 row-lineage design, reproduced Spark-side): every row of
   * a tracked table carries a STABLE `_row_id` minted at first insert
@@ -1270,6 +1254,22 @@ object GraftRowTrack {
     new GraftRowTrack(-1L, -1L, ids, vers)
 }
 
+/** One immutable data file of a [[GraftTable]]: the rows one writer task
+  * delivered in one commit (split per partition group on partitioned
+  * tables), plus the file-level statistics a real table format keeps in
+  * its transaction log — per-column zone maps for data skipping, a byte
+  * size for `SupportsReportStatistics`, and the partition-group key when
+  * the whole file belongs to a single identity partition (which lets
+  * partition deletes/overwrites drop whole files by reference).
+  *
+  * ROW STORAGE is tiered: a freshly-written file holds its rows on heap;
+  * once a durable commit persists the rows to a parquet segment
+  * ([[spill]]) the strong reference drops — the heap copy becomes a
+  * SoftReference cache the GC reclaims under pressure, and later reads
+  * stream the segment back from disk. A table's resident set is its
+  * WORKING set, not its size: the heap wall the in-memory store had is
+  * gone. Metadata (zones, size, group key, row count) always stays
+  * resident — pruning and planning never touch a segment. */
 final class GraftDataFile private (
     rows0: Array[InternalRow],
     val zones: Array[ColZone], // index = schema ordinal; null = no stats
@@ -1373,9 +1373,13 @@ final class GraftDataFile private (
     }
     val d = derive.orNull
     if (d != null) {
-      // driver-side fallback of a derived file (heap-only consumers);
-      // the scan path never lands here — it plans the recipe's partition
-      val computed = d.driverRows()
+      // a derived file's rows on the driver (the key-grouped chunks and
+      // a stream's unprojectable commits): the recipe's whole-width
+      // partition through the one reader; the scan path plans the
+      // partition instead and never lands here
+      val computed = GraftPartitionReaderFactory
+        .rowsOf(d.partition(Array.range(0, d.width)))
+        .map(_.copy()).toArray
       soft = new java.lang.ref.SoftReference(computed)
       return computed
     }
@@ -1422,17 +1426,19 @@ final class GraftDataFile private (
 }
 
 /** How a DERIVED pseudo-file materializes: `partition` builds the
-  * serializable InputPartition for the scan (given the required
-  * ordinals into the file's logical schema) — the executor-side path;
-  * `driverRows` is the driver fallback for heap-only consumers.
-  * `exactCount` is false when the file's claimed rowCount is an upper
-  * bound (a cancel recipe cannot know the surviving count without
-  * reading) — limit pruning treats such files as contributing nothing
-  * toward the limit, which only ever errs toward reading more. */
+  * serializable InputPartition (given the required ordinals into the
+  * file's logical schema, `width` columns wide) that computes the rows
+  * in the partition reader. Scans plan it executor-side; a driver
+  * consumer of [[GraftDataFile.rows]] runs the whole-width partition
+  * through the same reader. `exactCount` is false when the file's
+  * claimed rowCount is an upper bound (a cancel recipe cannot know the
+  * surviving count without reading) — limit pruning treats such files
+  * as contributing nothing toward the limit, which only ever errs
+  * toward reading more. */
 private[sources] final class GraftDeriveRecipe(
     val exactCount: Boolean,
+    val width: Int,
     val partition: Array[Int] => GraftScanPartition,
-    val driverRows: () => Array[InternalRow],
     // true only when BOTH the row count and every zone (min/max AND
     // nullCount) describe the emitted rows exactly — what aggregate
     // pushdown needs. A pure file over a position VIEW keeps the
@@ -4969,110 +4975,16 @@ class GraftTable(initialName: String, initialSchema: StructType,
     else StructType(base.toArray)
   }
 
-  /** One commit's minimal row delta in [[changesSchema]] layout —
-    * the DRIVER-side materializer (heap tables; derived-file fallback;
-    * the streaming CDF's micro-batch builder). */
-  private[sources] def changeRowsOf(e: CommitEntry): Array[InternalRow] =
-    changeRowsSubset(e.added, e.removed, e)
-
-  private def changeRowsSubset(adds: Seq[GraftDataFile],
-      rems: Seq[GraftDataFile], e: CommitEntry): Array[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, Literal, UnsafeProjection, UnsafeRow}
-    if (adds.isEmpty && rems.isEmpty)
-      return Array.empty[InternalRow]
-    val dataSchema = tableSchema
-    val tracked = rowTrackingEnabled
-    // canonicalize both sides to UnsafeRows of the CURRENT data schema
-    // (append-only evolution: match columns by name, pad missing with
-    // NULL) so the multiset diff compares bytes. On a TRACKED table the
-    // canonical row carries the row's `_row_id` as a trailing column —
-    // cancellation then keys on (data, identity), and what survives
-    // serves the id to the feed
-    val toCanonical = UnsafeProjection.create(
-      dataSchema.fields.toIndexedSeq.map { f =>
-        FieldIds.ordinalOf(f, e.schema) match {
-          case -1 => Literal.create(null, f.dataType)
-              : org.apache.spark.sql.catalyst.expressions.Expression
-          case i => BoundReference(i, f.dataType, nullable = true)
-        }
-      })
-    // (canonical data row, id) -> one canonical row of width n+1; the
-    // two-step build keeps the id ordinal fixed even when stored rows
-    // are wider than the commit's schema
-    val withId = UnsafeProjection.create(
-      dataSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, nullable = true)
-          : org.apache.spark.sql.catalyst.expressions.Expression
-      } :+ (BoundReference(dataSchema.length, LongType, nullable = true)
-          : org.apache.spark.sql.catalyst.expressions.Expression))
-    val joined = new JoinedRow
-    // per-file (row, id) enumeration: positions are the file's OWN for
-    // plain files, the BASE's originals for position views
-    def idRows(f: GraftDataFile): Iterator[(InternalRow, Any)] = {
-      val t = f.track
-      def idAt(p: Int): Any =
-        if (!tracked || t == null) null
-        else (t.idAt(p): java.lang.Long): Any
-      if (f.derive.isDefined) f.rows.iterator.map(r => (r, null: Any))
-      else f.viewSel match {
-        case Some((bs, ex)) =>
-          val ps: Iterator[Int] =
-            if (!ex) bs.iterator
-            else (0 until (bs.size + f.rowCount)).iterator
-              .filterNot(bs.contains)
-          f.rows.iterator.zip(ps).map { case (r, p) => (r, idAt(p)) }
-        case None =>
-          f.rows.iterator.zipWithIndex.map { case (r, p) => (r, idAt(p)) }
-      }
-    }
-    // signed multiset: +1 per added row, −1 per removed; what cancels
-    // was carried through the rewrite unchanged
-    val counts = new java.util.LinkedHashMap[UnsafeRow, Int]()
-    def bump(fs: Seq[GraftDataFile], d: Int): Unit =
-      fs.iterator.flatMap(idRows).foreach { case (r, id) =>
-        val cd = toCanonical(r)
-        val k =
-          if (!tracked) cd.copy()
-          else withId(joined.apply(cd,
-            new GenericInternalRow(Array[Any](id)))).copy()
-        counts.merge(k, d, (a, b) => a + b)
-      }
-    bump(adds, 1)
-    bump(rems, -1)
-    val emitWidth = if (tracked) dataSchema.length + 1 else dataSchema.length
-    def emit(ct: String) = UnsafeProjection.create(
-      (Literal(utf8(ct), StringType)
-          : org.apache.spark.sql.catalyst.expressions.Expression) +:
-      (Literal(e.version, IntegerType)
-          : org.apache.spark.sql.catalyst.expressions.Expression) +:
-      (Literal(e.tsMicros, LongType)
-          : org.apache.spark.sql.catalyst.expressions.Expression) +:
-      (0 until emitWidth).map { i =>
-        val dt = if (i < dataSchema.length) dataSchema.fields(i).dataType
-          else LongType
-        BoundReference(i, dt, nullable = true)
-          : org.apache.spark.sql.catalyst.expressions.Expression
-      })
-    val ins = emit("insert")
-    val del = emit("delete")
-    val rows = Vector.newBuilder[InternalRow]
-    counts.forEach { (row, c) =>
-      val (proj, n) = if (c > 0) (ins, c) else (del, -c)
-      var i = 0
-      while (i < n) { rows += proj(row).copy(); i += 1 }
-    }
-    rows.result().toArray
-  }
-
   // (last version, schema identity) -> materialized CDC files; the feed
   // is read far more often than it changes (every t$changes scan and
   // every CDF micro-batch planner builds against it)
   @volatile private var changesCache
       : Option[(Int, StructType, Vector[GraftDataFile])] = None
 
-  /** Current CDC files, one or more per change-carrying retained commit
-    * (the `_commit_version` zones make version-range reads skip every
-    * other commit's files). Memoized per (version, schema) — retention
+  /** Current CDC files: the derived files [[changeFilesOf]] plans for
+    * each change-carrying retained commit, on every store (the
+    * `_commit_version` zones make version-range reads skip every other
+    * commit's files). Memoized per (version, schema) — retention
     * dropping OLD entries between same-version reads cannot occur
     * (retention only moves when a commit bumps the version). */
   private[sources] def changesFiles: Vector[GraftDataFile] = {
@@ -5100,30 +5012,26 @@ class GraftTable(initialName: String, initialSchema: StructType,
     }
   }
 
-  /** CDC pseudo-files of ONE commit. When every change record is
-    * persisted (durable tables), the plan is METADATA-ONLY: no segment
-    * row is read on the driver. The multiset cancellation the feed's
-    * semantics demand is decomposed by zone metadata —
+  /** CDC pseudo-files of ONE commit, planned from metadata alone on
+    * every store: no change row is computed on the driver. The multiset
+    * cancellation the feed's semantics demand is decomposed by zone
+    * metadata —
     *  1. a file present on BOTH sides cancels whole (identity);
     *  2. an (added, removed) file pair with a provably DISJOINT zone
     *     range on any surviving column shares no row, so a file with no
     *     overlapping partner on the other side emits directly (a pure
     *     insert/delete DERIVED file, one partition per file);
     *  3. only genuinely overlapping files group into cancel components,
-    *     whose signed-multiset diff runs in the PARTITION READER.
-    * An overwrite with fresh keys is case 2 throughout: its t$changes
-    * read plans like any other scan and streams executor-side. Heap
-    * tables (and mid-flight unpersisted records) keep the driver
-    * materializer. */
+    *     whose signed-multiset diff runs in the PARTITION READER,
+    *     hash-sliced past [[GraftTable.cdcCancelSliceRows]].
+    * A persisted file enters its partition as a segment reference; any
+    * other (an in-JVM table's heap file, a mid-flight record) ships its
+    * rows in the commit's layout. An overwrite with fresh keys is case 2
+    * throughout: its t$changes read plans like any other scan. */
   private[sources] def changeFilesOf(e: CommitEntry): Seq[GraftDataFile] = {
     if (e.added.isEmpty && e.removed.isEmpty) return Nil
     val outSchema = changesSchema
     val dataSchema = tableSchema
-    if (!(e.added.iterator ++ e.removed.iterator).forall(_.persisted)) {
-      val rows = changeRowsOf(e)
-      return if (rows.isEmpty) Nil
-        else Seq(GraftDataFile.build(rows, outSchema, None))
-    }
     // current-schema ordinal -> commit-schema ordinal (-1 = null-pad)
     val ordMap = dataSchema.fields.map(f => FieldIds.ordinalOf(f, e.schema))
     def idSet(fs: Seq[GraftDataFile]) = {
@@ -5172,10 +5080,17 @@ class GraftTable(initialName: String, initialSchema: StructType,
       ai += 1
     }
     val trackedCdc = rowTrackingEnabled
-    def segOf(f: GraftDataFile): GraftSegmentScanPartition =
-      GraftSegmentScanPartition.of(f,
-        Array.tabulate(f.segment.schema.length)(identity),
-        metaCols = if (trackedCdc) Seq("_row_id") else Nil)
+    val idCol = if (trackedCdc) Seq("_row_id") else Nil
+    // one change input: a persisted file's whole-width segment read, or
+    // any other file's rows in the commit's layout; a tracked input's
+    // rows end in their `_row_id`
+    def inputOf(f: GraftDataFile): GraftScanPartition =
+      if (f.persisted)
+        GraftSegmentScanPartition.of(f,
+          Array.range(0, f.segment.schema.length), metaCols = idCol)
+      else GraftInputPartition(GraftTable.heapRows(f, e.schema,
+        Array.range(0, e.schema.length),
+        scala.collection.immutable.BitSet.empty, idCol, -1))
     def zonesFor(tagMin: String, tagMax: String,
         members: Seq[GraftDataFile], claimed: Int): Array[ColZone] = {
       val z = new Array[ColZone](outSchema.length)
@@ -5216,14 +5131,12 @@ class GraftTable(initialName: String, initialSchema: StructType,
     def pureFile(f: GraftDataFile, insert: Boolean): GraftDataFile = {
       val tag = if (insert) "insert" else "delete"
       val recipe = new GraftDeriveRecipe(
-        exactCount = true,
+        exactCount = true, width = outSchema.length,
         partition = proj => GraftChangeScanPartition(
-          if (insert) Seq(segOf(f)) else Nil,
-          if (insert) Nil else Seq(segOf(f)),
+          if (insert) Seq(inputOf(f)) else Nil,
+          if (insert) Nil else Seq(inputOf(f)),
           cancel = false, ordMap, dataSchema.json,
           e.version, e.tsMicros, proj, tracked = trackedCdc),
-        driverRows = () => changeRowsSubset(
-          if (insert) Seq(f) else Nil, if (insert) Nil else Seq(f), e),
         // a position view's zones are the base's superset envelope
         statsExact = f.viewSel.isEmpty)
       GraftDataFile.derived(recipe, zonesFor(tag, tag, Seq(f), f.rowCount),
@@ -5234,7 +5147,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
       val claimed = (as.iterator ++ rs.iterator).map(_.rowCount.toLong).sum
       // hash-slice big components so no single task holds a
       // table-sized multiset: each slice re-reads the component's
-      // segments but counts only its share of the canonical row space
+      // inputs but counts only its share of the canonical row space
       val target = math.max(1L, GraftTable.cdcCancelSliceRows.toLong)
       val nSlices = math.max(1L, math.min(64L,
         (claimed + target - 1L) / target)).toInt
@@ -5245,34 +5158,11 @@ class GraftTable(initialName: String, initialSchema: StructType,
       (0 until nSlices).map { i =>
         val recipe = new GraftDeriveRecipe(
           exactCount = false, // survivors unknown without reading
-          partition = proj => GraftChangeScanPartition(as.map(segOf),
-            rs.map(segOf), cancel = true, ordMap, dataSchema.json,
+          width = outSchema.length,
+          partition = proj => GraftChangeScanPartition(as.map(inputOf),
+            rs.map(inputOf), cancel = true, ordMap, dataSchema.json,
             e.version, e.tsMicros, proj, slice = i, nSlices = nSlices,
             tracked = trackedCdc),
-          driverRows = () => {
-            // driver fallback of one slice: the full subset diff,
-            // filtered to this slice's share (heap consumers only)
-            val all = changeRowsSubset(as, rs, e)
-            if (nSlices <= 1) all
-            else {
-              // slice on the DATA projection of the emitted row — the
-              // same canonical key the reader hashes
-              // tracked feeds canonicalize (data, id): the slice key
-              // must match the reader's exactly or a row lands in no
-              // slice (or two)
-              val dataLen = dataSchema.length +
-                (if (trackedCdc) 1 else 0)
-              val csch = changesSchema
-              val keyProj = org.apache.spark.sql.catalyst.expressions
-                .UnsafeProjection.create((0 until dataLen).toIndexedSeq
-                  .map(j => org.apache.spark.sql.catalyst.expressions
-                    .BoundReference(3 + j, csch.fields(3 + j).dataType,
-                      nullable = true)
-                    : org.apache.spark.sql.catalyst.expressions.Expression))
-              all.filter(r => java.lang.Math.floorMod(
-                keyProj(r).hashCode, nSlices) == i)
-            }
-          },
           statsExact = false)
         GraftDataFile.derived(recipe, zones,
           math.max(1L, bytes / nSlices), math.max(1, perSlice))
@@ -8209,8 +8099,10 @@ class GraftScanBuilder(tableSchema: StructType,
     // legal. After an aggregate pushdown the scan output IS the agg
     // schema — ignore pruning there (Spark projects above the scan).
     if (aggResult.isEmpty) {
-      metaCols = requiredSchema.fieldNames.toSeq
-        .filter(GraftTable.isMetaColumn)
+      // a data column of the same name (the tracked change feed's
+      // `_row_id`) is read as data, not appended again as metadata
+      metaCols = requiredSchema.fieldNames.toSeq.filter(n =>
+        GraftTable.isMetaColumn(n) && !tableSchema.fieldNames.contains(n))
       required = StructType(
         tableSchema.fields.filter(f => requiredSchema.fieldNames.contains(f.name)))
     }
@@ -8825,19 +8717,20 @@ private[sources] object GraftSegmentReads {
 }
 
 /** CDC partition: one commit's change rows — or one overlap COMPONENT
-  * of them — materialized in the PARTITION READER from segment
-  * references. Added rows emit as inserts, removed as deletes; with
-  * `cancel` set the reader first cancels the signed row multiset (the
-  * rows a COW rewrite carried through unchanged), all executor-side.
-  * The driver plans this from zone metadata alone — a t$changes read
-  * over a durable table never loads a segment on the driver.
-  * `ordMap` canonicalizes file rows to the CURRENT data schema
+  * of them — computed in the PARTITION READER from its inputs. Added
+  * rows emit as inserts, removed as deletes; with `cancel` set the
+  * reader first cancels the signed row multiset (the rows a COW rewrite
+  * carried through unchanged). An input is any partition the one reader
+  * serves: a persisted file's segment reference, or an in-JVM file's
+  * rows in its commit's layout — so the driver plans every store's feed
+  * from zone metadata alone and never computes a change row.
+  * `ordMap` canonicalizes input rows to the CURRENT data schema
   * (append-only evolution: -1 = null-pad); `project` selects the
   * required ordinals of the changes schema (0 = _change_type,
   * 1 = _commit_version, 2 = _commit_timestamp, 3+i = data column i). */
 case class GraftChangeScanPartition(
-    addSegs: Seq[GraftSegmentScanPartition],
-    remSegs: Seq[GraftSegmentScanPartition],
+    adds: Seq[GraftScanPartition],
+    rems: Seq[GraftScanPartition],
     cancel: Boolean,
     ordMap: Array[Int],
     dataSchemaJson: String,
@@ -8849,92 +8742,85 @@ case class GraftChangeScanPartition(
     // VALUE, so slicing the row space partitions the diff exactly —
     // a whole-table rewrite's multiset spreads over nSlices tasks with
     // bounded memory each, instead of one table-sized map (the cost is
-    // nSlices re-reads of the component's segments)
+    // nSlices re-reads of the component's inputs)
     slice: Int = 0,
     nSlices: Int = 1,
-    // ROW TRACKING: each seg's reader appends `_row_id` after its file
-    // columns; the canonical row extends with it (per-seg ordinal =
-    // that seg's projected width), and the feed emits it as the
-    // trailing output column
+    // ROW TRACKING: each input's rows end in `_row_id`; the canonical
+    // row extends with it, and the feed emits it as the trailing output
+    // column
     tracked: Boolean = false) extends GraftScanPartition
 
 private[sources] object GraftChangeReads {
-  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
+  import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, UnsafeProjection, UnsafeRow}
   import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
   import org.apache.spark.unsafe.types.UTF8String
 
   def rowsOf(p: GraftChangeScanPartition): Iterator[InternalRow] = {
     val dataSchema = DataType.fromJson(p.dataSchemaJson)
       .asInstanceOf[StructType]
-    // file row -> current data schema (null-pad columns the commit's
-    // schema did not have)
-    def canonExprs = dataSchema.fields.toIndexedSeq.zipWithIndex.map {
-      case (f, i) => p.ordMap(i) match {
-        case -1 => Literal.create(null, f.dataType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        case j => BoundReference(j, f.dataType, nullable = true)
-            : org.apache.spark.sql.catalyst.expressions.Expression
+    // canonical row: the current data schema (null-padding columns the
+    // commit's schema did not have), then `_row_id` on a tracked feed
+    def inputExprs(in: GraftScanPartition): IndexedSeq[Expression] = {
+      val data = dataSchema.fields.toIndexedSeq.zipWithIndex.map {
+        case (f, i) => p.ordMap(i) match {
+          case -1 => Literal.create(null, f.dataType): Expression
+          case j => BoundReference(j, f.dataType, nullable = true): Expression
+        }
+      }
+      if (!p.tracked) data
+      else {
+        // an input's rows arrive [columns..., _row_id]: the id ordinal
+        // is that input's own projected width
+        val width = in match {
+          case s: GraftSegmentScanPartition => s.project.length
+          case g: GraftInputPartition =>
+            g.rows.headOption.fold(0)(_.numFields - 1)
+          case other => throw new IllegalArgumentException(
+            s"not a change input: $other")
+        }
+        data :+ BoundReference(width, LongType, nullable = true)
       }
     }
-    // TRACKED feed: each seg's rows arrive [fileCols..., _row_id] —
-    // the id ordinal is that seg's own projected width
-    def idExpr(seg: GraftSegmentScanPartition) =
-      BoundReference(seg.project.length, LongType, nullable = true)
-        : org.apache.spark.sql.catalyst.expressions.Expression
-    def outProj(tag: String, overCanonical: Boolean,
-        seg: GraftSegmentScanPartition): UnsafeProjection =
+    val canonical: IndexedSeq[Expression] =
+      (dataSchema.fields.map(_.dataType) ++ Option.when(p.tracked)(LongType))
+        .toIndexedSeq.zipWithIndex.map { case (dt, i) =>
+          BoundReference(i, dt, nullable = true): Expression
+        }
+    def outProj(tag: String, cols: IndexedSeq[Expression]): UnsafeProjection =
       UnsafeProjection.create(p.project.toIndexedSeq.map {
-        case 0 => Literal(UTF8String.fromString(tag), StringType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        case 1 => Literal(p.version, IntegerType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        case 2 => Literal(p.tsMicros, LongType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        case r =>
-          val i = r - 3
-          if (i == dataSchema.length) // the trailing _row_id column
-            (if (overCanonical)
-              BoundReference(i, LongType, nullable = true)
-                : org.apache.spark.sql.catalyst.expressions.Expression
-            else idExpr(seg))
-          else if (overCanonical)
-            BoundReference(i, dataSchema.fields(i).dataType, nullable = true)
-          else canonExprs(i)
+        case 0 => Literal(UTF8String.fromString(tag), StringType): Expression
+        case 1 => Literal(p.version, IntegerType): Expression
+        case 2 => Literal(p.tsMicros, LongType): Expression
+        case r => cols(r - 3)
       })
     if (!p.cancel) {
-      def emit(segs: Seq[GraftSegmentScanPartition], tag: String)
+      def emit(ins: Seq[GraftScanPartition], tag: String)
           : Iterator[InternalRow] =
-        segs.iterator.flatMap { seg =>
-          val proj = outProj(tag, overCanonical = false, seg)
-          GraftSegmentReads.rowsOf(seg).map(proj(_))
+        ins.iterator.flatMap { in =>
+          val proj = outProj(tag, inputExprs(in))
+          GraftPartitionReaderFactory.rowsOf(in).map(proj(_))
         }
-      emit(p.addSegs, "insert") ++ emit(p.remSegs, "delete")
+      emit(p.adds, "insert") ++ emit(p.rems, "delete")
     } else {
       // signed multiset over FULL canonical rows (cancellation is
       // defined on whole rows regardless of column pruning — and, on a
       // tracked table, on the row's identity too), then the pruned
       // projection on the survivors
-      def canonFor(seg: GraftSegmentScanPartition) =
-        UnsafeProjection.create(
-          if (p.tracked) canonExprs :+ idExpr(seg) else canonExprs)
       val counts = new java.util.LinkedHashMap[UnsafeRow, Int]()
       def mine(r: UnsafeRow): Boolean = p.nSlices <= 1 ||
         java.lang.Math.floorMod(r.hashCode, p.nSlices) == p.slice
-      def bump(segs: Seq[GraftSegmentScanPartition], d: Int): Unit =
-        segs.foreach { seg =>
-          val canon = canonFor(seg)
-          GraftSegmentReads.rowsOf(seg).foreach { r =>
+      def bump(ins: Seq[GraftScanPartition], d: Int): Unit =
+        ins.foreach { in =>
+          val canon = UnsafeProjection.create(inputExprs(in))
+          GraftPartitionReaderFactory.rowsOf(in).foreach { r =>
             val k = canon(r)
             if (mine(k)) counts.merge(k.copy(), d, (a, b) => a + b)
           }
         }
-      bump(p.addSegs, 1)
-      bump(p.remSegs, -1)
-      // survivors are CANONICAL rows — any seg works as the projection
-      // template (the id is at the fixed canonical ordinal)
-      val tpl = (p.addSegs ++ p.remSegs).head
-      val ins = outProj("insert", overCanonical = true, tpl)
-      val del = outProj("delete", overCanonical = true, tpl)
+      bump(p.adds, 1)
+      bump(p.rems, -1)
+      val ins = outProj("insert", canonical)
+      val del = outProj("delete", canonical)
       import scala.jdk.CollectionConverters._
       counts.entrySet().iterator().asScala.flatMap { en =>
         val c = en.getValue.intValue()
@@ -9268,33 +9154,39 @@ class GraftScan(schema: StructType, chunks0: Array[ScanChunk],
   * derived file's partition. Batch scans, the row-level rewrite and
   * streaming tails all plan through it. */
 case class GraftPartitionReaderFactory() extends PartitionReaderFactory {
-  private def rowsOf(p: GraftScanPartition): Iterator[InternalRow] = p match {
-    case g: GraftInputPartition => g.rows.iterator
-    case k: GraftKeyedInputPartition => k.rows.iterator
-    case c: GraftChangeScanPartition => GraftChangeReads.rowsOf(c)
-    case s: GraftSegmentScanPartition => GraftSegmentReads.rowsOf(s)
-    case m: GraftPackedSegmentPartition =>
-      m.segs.iterator.flatMap(GraftSegmentReads.rowsOf)
-    case k: GraftKeyedSegmentPartition => rowsOf(k.packed)
-    case w: GraftMetaWrapPartition =>
-      // position = output ordinal of the derived rows
-      val dataSchema = DataType.fromJson(w.schemaJson)
-        .asInstanceOf[StructType]
-      val meta = GraftTable.metaProjector(dataSchema,
-        dataSchema.indices.toArray, w.metaCols, w.fid, null, null)
-      rowsOf(w.inner).zipWithIndex.map { case (r, pos) => meta(r, pos) }
-  }
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val it: Iterator[InternalRow] = p match {
-        case s: GraftScanPartition => rowsOf(s)
+        case s: GraftScanPartition => GraftPartitionReaderFactory.rowsOf(s)
       }
       private var cur: InternalRow = _
       override def next(): Boolean =
         if (it.hasNext) { cur = it.next(); true } else false
       override def get(): InternalRow = cur
       override def close(): Unit = ()
+    }
+}
+
+object GraftPartitionReaderFactory {
+  /** The rows of one partition, wherever it runs: the executor reader
+    * above, a change partition's inputs and a derived file's driver
+    * materialization all read through here. */
+  private[sources] def rowsOf(p: GraftScanPartition): Iterator[InternalRow] =
+    p match {
+      case g: GraftInputPartition => g.rows.iterator
+      case k: GraftKeyedInputPartition => k.rows.iterator
+      case c: GraftChangeScanPartition => GraftChangeReads.rowsOf(c)
+      case s: GraftSegmentScanPartition => GraftSegmentReads.rowsOf(s)
+      case m: GraftPackedSegmentPartition =>
+        m.segs.iterator.flatMap(GraftSegmentReads.rowsOf)
+      case k: GraftKeyedSegmentPartition => rowsOf(k.packed)
+      case w: GraftMetaWrapPartition =>
+        // position = output ordinal of the derived rows
+        val dataSchema = DataType.fromJson(w.schemaJson)
+          .asInstanceOf[StructType]
+        val meta = GraftTable.metaProjector(dataSchema,
+          dataSchema.indices.toArray, w.metaCols, w.fid, null, null)
+        rowsOf(w.inner).zipWithIndex.map { case (r, pos) => meta(r, pos) }
     }
 }
 
@@ -9516,9 +9408,10 @@ class GraftMicroBatchStream(table: GraftTable, required: StructType,
       // batch — change commits are consumable deltas here, never errors;
       // layout commits yield nothing. Initial position replays every
       // RETAINED commit's changes (bounded by history retention).
-      // Durable commits plan DERIVED partitions (the executor-side
-      // multiset diff, same as the batch t$changes scan); heap commits
-      // keep the driver materializer.
+      // Every commit plans its DERIVED partitions (the executor-side
+      // multiset diff, same as the batch t$changes scan); only a stream
+      // bound to a column the feed has since dropped reads the derived
+      // rows on the driver and projects them by name.
       val entries =
         if (s < 0) table.entriesUpTo(e) else table.entriesBetween(s, e)
       val csch = table.changesSchema
