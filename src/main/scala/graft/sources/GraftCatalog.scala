@@ -2444,15 +2444,16 @@ class GraftTable(initialName: String, initialSchema: StructType,
       snap("ANALYZE") // stats change, zero logical row changes
     }
 
-  /** Row-level fill recipe for identity/generated tables (None when the
-    * table has neither): carried identity values pass through,
-    * merge-INSERTED rows mint from THIS rewrite's own reserved value
-    * block (reserved off the persisted high-water here, verified at
-    * commit by [[installIdentityReserved]] — the same optimistic
-    * contract as the plain write path), and generated columns
-    * RECOMPUTE on delivery, so an UPDATE touching a generation source
-    * never leaves the derived column stale (Delta's semantics). */
-  private[sources] def rowLevelFillSpec: Option[GraftFillSpec] = {
+  /** Identity/generated-column fill recipe of one write (None when the
+    * table has neither): identity value blocks reserve off the
+    * persisted high-water ledger here, and the commit verifies the
+    * reservation still holds ([[withIdentityReserved]]). With
+    * `rowLevel` (a row-level rewrite) carried identity values pass
+    * through, merge-INSERTED rows mint from the rewrite's own block,
+    * and generated columns RECOMPUTE on delivery, so an UPDATE touching
+    * a generation source never leaves the derived column stale
+    * (Delta's semantics). */
+  private[sources] def fillSpecOf(rowLevel: Boolean): Option[GraftFillSpec] = {
     val ids = GraftFill.identityCols(tableSchema)
     val gens = GraftFill.generatedCols(tableSchema)
     if (ids.isEmpty && gens.isEmpty) None
@@ -2462,10 +2463,19 @@ class GraftTable(initialName: String, initialSchema: StructType,
         math.max(id.start, epochLedger.getOrElse(
           GraftFill.IdentityLedgerPrefix + id.name, id.start))
       }
-      Some(GraftFillSpec(tableSchema.json, ids, bases, gens,
-        rowLevel = true))
+      Some(GraftFillSpec(tableSchema.json, ids, bases, gens, rowLevel))
     }
   }
+
+  /** `base` behind the identity reservation check of `fs` — unchanged
+    * when the write mints no identity values. */
+  private def withIdentityReserved(fs: Option[GraftFillSpec],
+      base: Array[GraftDelivery] => Unit): Array[GraftDelivery] => Unit =
+    fs match {
+      case Some(f) if f.identities.nonEmpty =>
+        ds => installIdentityReserved(f, ds, base)
+      case _ => base
+    }
 
   /** DELETE VECTORS (merge-on-read): per data file, the positions a MOR
     * row-level operation has deleted WITHOUT rewriting the file — the
@@ -2477,27 +2487,17 @@ class GraftTable(initialName: String, initialSchema: StructType,
   @volatile private var dvs: Map[GraftDataFile, scala.collection.immutable.BitSet] =
     Map.empty
 
-  /** CHECK constraints (name -> compiled check); every commit's
-    * incoming rows validate against ALL of them BEFORE the state swaps,
-    * and adding one validates the existing rows first — the table can
-    * never hold a violating row. */
+  /** CHECK constraints (name -> compiled check). Every write's rows
+    * validate against ALL of them in the writer task, which fails on
+    * the first violating row, and the commit refuses rows validated
+    * against a set that has since changed ([[adoptDeliveries]] compares
+    * the fingerprints). Adding one validates the existing rows first —
+    * the table can never hold a violating row. */
   @volatile private var checks: Map[String, GraftConstraints.Check] =
     initialChecks
 
   private[sources] def currentChecks: Map[String, GraftConstraints.Check] =
     checks
-
-  private def validateChecks(rows: Iterator[InternalRow]): Unit = {
-    val cs = checks
-    if (cs.nonEmpty) rows.foreach { r =>
-      cs.foreach { case (cname, chk) =>
-        if (chk.violates(r))
-          throw new IllegalStateException(
-            s"$tableName: CHECK constraint '$cname' (" +
-              s"${chk.text}) violated by an incoming row — commit refused")
-      }
-    }
-  }
 
   /** A file's delete vector (empty when it has none). */
   private def deadOf(f: GraftDataFile): scala.collection.immutable.BitSet =
@@ -5264,90 +5264,62 @@ class GraftTable(initialName: String, initialSchema: StructType,
 
   /** Per-task deliveries → data files. A rows delivery (heap mode)
     * builds one file per non-empty task batch here, split per partition
-    * group on partitioned tables (a real format's writer does exactly
-    * this), zone maps computed here — the "stats at commit time" half of
-    * data skipping. File deliveries are ALREADY split/stat'd/persisted
-    * by their writer task and adopt by reference — the driver never
-    * touches their rows. */
+    * group on partitioned tables by the rule the durable writer task
+    * applies ([[GraftRewrite.regroup]]), zone maps computed here — the
+    * "stats at commit time" half of data skipping. File deliveries are
+    * ALREADY split/stat'd/persisted by their writer task and adopt by
+    * reference — the driver never touches their rows. */
   private def buildFiles(ds: Array[GraftDelivery]): Vector[GraftDataFile] =
     ds.iterator.flatMap {
       case GraftFilesDelivery(fs) => fs.iterator
-      case GraftRowsDelivery(batch, _, _) if batch.isEmpty => Iterator.empty
       case GraftRowsDelivery(batch, tIds, tVers) =>
-        def withTrack(f: GraftDataFile, idx: Array[Int]): GraftDataFile = {
-          // PENDING track (ids != null, explicit = false): Mint
-          // sentinels resolve — and the track finalizes — at snap()
-          if (tIds != null)
-            f.track = new GraftRowTrack(-1L, -1L,
-              idx.map(tIds(_)), idx.map(tVers(_)))
-          f
-        }
-        keyOfOpt match {
-          case None =>
-            Iterator.single(withTrack(
-              GraftDataFile.build(batch, tableSchema, None),
-              batch.indices.toArray))
-          case Some(keyOf) =>
-            batch.indices.toArray.groupBy(i => keyOf(batch(i))).toSeq
-              .sortBy(_._1.mkString("|")) // deterministic file order
-              .iterator.map { case (_, idx) =>
-                withTrack(GraftDataFile.build(idx.map(batch(_)),
-                  tableSchema, keyOfOpt), idx)
-              }
-        }
+        GraftRewrite.regroup(batch, tableSchema, keyOfOpt, Nil, Int.MaxValue)
+          .iterator.map(buildPending(batch, tIds, tVers))
     }.toVector
 
-  /** Rows of the deliveries that still need DRIVER-side CHECK
-    * validation: file deliveries validated task-side (fail-fast in
-    * [[GraftSegmentDataWriter.write]]) and never re-read here. */
-  private def validateDeliveries(ds: Array[GraftDelivery]): Unit =
-    validateChecks(ds.iterator.collect {
-      case GraftRowsDelivery(rows, _, _) => rows
-    }.flatten)
-
-  // ---- executor-side segment writes (durable tables) -----------------
-  /** Fresh per-write recipe for executor-side segment writes; None on
-    * in-JVM tables, whose rows ride back in the commit message (the
-    * test fast-path). A new writeId per call keeps concurrent writes'
-    * segment names disjoint. */
+  // ---- executor-side writes -------------------------------------------
   /** Stable name of the current constraint set (order-free). */
   private def checksFingerprint: String =
     checks.toSeq.sortBy(_._1)
       .map { case (n, c) => s"$n=${c.text}" }.mkString(";")
 
-  private[sources] def durableWriteSpec(): Option[GraftDurableWriteSpec] =
-    durable.map { d =>
-      GraftDurableWriteSpec(d.log.dir.toString, tableSchema.json,
-        partitionCols, bucketSpec,
-        checks.toSeq.sortBy(_._1),
-        java.util.UUID.randomUUID().toString.take(12),
-        checksFingerprint,
-        rowTracking = rowTrackingEnabled)
-    }
+  /** Fresh per-write recipe for the writer tasks and the task-side
+    * rewrites; `tableDir` is None on in-JVM tables, whose rows ride
+    * back in the commit message. A new writeId per call keeps
+    * concurrent writes' segment names disjoint. */
+  private[sources] def writeSpec(): GraftWriteSpec =
+    GraftWriteSpec(durable.map(_.log.dir.toString), tableSchema.json,
+      partitionCols, bucketSpec,
+      checks.toSeq.sortBy(_._1),
+      java.util.UUID.randomUUID().toString.take(12),
+      checksFingerprint,
+      rowTracking = rowTrackingEnabled)
 
   /** Driver-side adoption of commit messages: rows messages pass
     * through; segment messages become lazily-loadable files referencing
     * the parquet their TASK already wrote (registered in the durable
     * registry so the log's encode/decode shares object identity). The
-    * commit that follows is a log entry — data never crosses here. */
+    * commit that follows is a log entry — data never crosses here.
+    * Either kind's rows were CHECK-validated task-side against the set
+    * bound at write START; if a concurrent ADD CONSTRAINT landed since,
+    * they were never validated against it — abort (retry revalidates),
+    * never let them slip in (Delta's metadata-conflict abort). */
   private[sources] def adoptDeliveries(
-      messages: Array[WriterCommitMessage]): Array[GraftDelivery] =
+      messages: Array[WriterCommitMessage]): Array[GraftDelivery] = {
+    def checked(fingerprint: String): Unit =
+      if (fingerprint != checksFingerprint)
+        throw new java.util.ConcurrentModificationException(
+          s"$tableName: CHECK constraints changed while this write " +
+            "was in flight; its rows were validated against the old " +
+            "set — retry the statement")
     messages.map {
-      case GraftRowsMessage(rows, tIds, tVers) =>
-        GraftRowsDelivery(rows, tIds, tVers)
+      case m: GraftRowsMessage =>
+        checked(m.checksFingerprint)
+        GraftRowsDelivery(m.rows, m.trackIds, m.trackVers)
       case m: GraftSegmentsMessage =>
         if (durable.isEmpty) throw new IllegalStateException(
           s"$tableName: segment commit message on a non-durable table")
-        // task-side CHECK validation bound the constraint set at write
-        // START; if a concurrent ADD CONSTRAINT landed since, these
-        // rows were never validated against it — abort (retry
-        // revalidates), never let them slip in (Delta's
-        // metadata-conflict abort)
-        if (m.checksFingerprint != checksFingerprint)
-          throw new java.util.ConcurrentModificationException(
-            s"$tableName: CHECK constraints changed while this write " +
-              "was in flight; its rows were validated against the old " +
-              "set — retry the statement")
+        checked(m.checksFingerprint)
         // a metadata-only ADD COLUMN may have widened the table between
         // the write factory's creation and this commit — bring the
         // adopted handles in line (no-op otherwise)
@@ -5357,6 +5329,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
       case other => throw new IllegalStateException(
         s"$tableName: unexpected commit message $other")
     }
+  }
 
   /** Files for segments that tasks wrote under `schema`, registered in
     * the durable registry so the log's encode/decode shares object
@@ -5388,9 +5361,9 @@ class GraftTable(initialName: String, initialSchema: StructType,
   private def runTasks[J: scala.reflect.ClassTag, R: scala.reflect.ClassTag](
       session: Option[org.apache.spark.sql.SparkSession] =
         org.apache.spark.sql.SparkSession.getActiveSession)(
-      plan: GraftDurableWriteSpec => Seq[J])(kernel: J => R): Option[Array[R]] =
-    for (spec <- durableWriteSpec(); sp <- session) yield {
-      val jobs = plan(spec)
+      plan: GraftWriteSpec => Seq[J])(kernel: J => R): Option[Array[R]] =
+    for (_ <- durable; sp <- session) yield {
+      val jobs = plan(writeSpec())
       if (jobs.isEmpty) Array.empty[R]
       else {
         val prev = org.apache.spark.sql.SparkSession.getActiveSession
@@ -5435,7 +5408,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
   }
 
   /** A heap file of `rows(idx)` carrying their identities as a PENDING
-    * track (resolved at snap) — a rewrite moves rows, never ids. */
+    * track (Mint sentinels resolve, and the track finalizes, at snap) —
+    * a rewrite moves rows, never ids. Null `ids` = nothing preserved. */
   private def buildPending(rows: Array[InternalRow], ids: Array[Long],
       vers: Array[Long])(idx: Array[Int]): GraftDataFile = {
     val nf = GraftDataFile.build(idx.map(rows(_)), tableSchema, keyOfOpt)
@@ -5483,8 +5457,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
           val abs = d.log.dir.resolve(rel)
           if (!live.contains(abs.toString)) {
             d.registry.remove(rel)
-            java.nio.file.Files.deleteIfExists(abs)
-            GraftBloomSidecar.deleteAlongside(abs)
+            GraftRewrite.delete(abs)
           }
         }
       }
@@ -5557,7 +5530,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
       ds: Array[GraftDelivery],
       params: Map[String, String] = Map.empty): Unit =
     mutate {
-      validateDeliveries(ds)
       val nf = buildFiles(ds)
       files = files ++ nf
       snap(op, added = nf, params = params)
@@ -5699,7 +5671,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
   }
   private[sources] def installReplace(ds: Array[GraftDelivery]): Unit =
     mutate {
-      validateDeliveries(ds)
       val old = cdcLiveView(files)
       val nf = buildFiles(ds)
       files = nf
@@ -5732,7 +5703,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
       touched: Option[Seq[Any] => Boolean],
       op: String = "MERGE",
       expectedBase: Vector[GraftDataFile]): Unit = mutate {
-    validateDeliveries(ds)
     val fsnap = files
     if (fsnap.length < expectedBase.length ||
         !expectedBase.indices.forall(i => fsnap(i) eq expectedBase(i)))
@@ -5775,7 +5745,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
     * partition predicate): delete the matching groups, then append. */
   private[sources] def installOverwriteGroups(ds: Array[GraftDelivery],
       touched: Seq[Any] => Boolean): Unit = mutate {
-    validateDeliveries(ds)
     val (kept, gone) = dropGroupRows(files, touched)
     val nf = buildFiles(ds)
     files = kept ++ nf
@@ -5789,7 +5758,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
     * `partitionOverwriteMode=dynamic`). */
   private[sources] def installDynamicOverwrite(
       ds: Array[GraftDelivery]): Unit = mutate {
-    validateDeliveries(ds)
     val keyOf = boundGroupKey()
     // a task-written file's key comes from its metadata — the touched
     // set never needs the segment's rows
@@ -6196,7 +6164,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
       // ledger advances BEFORE the install so the commit's log entry
       // carries the post-epoch ledger (the durable exactly-once state a
       // restarted process replays — Delta's txn-version dedup); a
-      // refused install (CHECK violation) rolls the ledger back so the
+      // refused install (a write conflict) rolls the ledger back so the
       // epoch stays retryable
       val prev = streamEpochs.get(queryId)
       streamEpochs.put(queryId, epochId)
@@ -6503,29 +6471,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
             copyForce)
       }
 
-      /** Identity/generated-column fill recipe for THIS write (None on
-        * tables without either): identity value blocks reserve off the
-        * persisted high-water ledger at build time; the commit verifies
-        * the reservation still holds (see [[installIdentityReserved]]). */
-      private lazy val fillSpec: Option[GraftFillSpec] = {
-        val ids = GraftFill.identityCols(tableSchema)
-        val gens = GraftFill.generatedCols(tableSchema)
-        if (ids.isEmpty && gens.isEmpty) None
-        else {
-          refreshIfStale() // reserve off the latest foreign high-water
-          val bases = ids.map { id =>
-            math.max(id.start, epochLedger.getOrElse(
-              GraftFill.IdentityLedgerPrefix + id.name, id.start))
-          }
-          Some(GraftFillSpec(tableSchema.json, ids, bases, gens))
-        }
-      }
-      private def withIdentity(base: Array[GraftDelivery] => Unit)
-          : Array[GraftDelivery] => Unit = fillSpec match {
-        case Some(fs) if fs.identities.nonEmpty =>
-          ds => installIdentityReserved(fs, ds, base)
-        case _ => base
-      }
+      /** The fill recipe of THIS write, reserved at build time. */
+      private lazy val fillSpec = fillSpecOf(rowLevel = false)
 
       override def truncate(): WriteBuilder = { install = installReplace; this }
 
@@ -6558,7 +6505,8 @@ class GraftTable(initialName: String, initialSchema: StructType,
 
       override def build(): Write = new GraftWrite(clusterTransforms,
         () => new GraftBatchWrite(GraftTable.this,
-          withIdentity(withCopy(withTxn(install))), fillSpec),
+          withIdentityReserved(fillSpec, withCopy(withTxn(install))),
+          fillSpec),
         // streaming sink (writeStream.toTable): same install modes —
         // append per epoch, or replace per epoch under Complete output
         // (Spark calls truncate() once at build time for that mode)
@@ -6598,7 +6546,6 @@ class GraftTable(initialName: String, initialSchema: StructType,
   private[sources] def installDelta(deletes: Array[(Int, Int)],
       inserts: Array[GraftDelivery], op: String,
       expectedBase: Vector[GraftDataFile]): Unit = mutate {
-    validateDeliveries(inserts)
     val fsnap = files
     if (fsnap.length < expectedBase.length ||
         !expectedBase.indices.forall(i => fsnap(i) eq expectedBase(i)))
@@ -6679,18 +6626,10 @@ class GraftTable(initialName: String, initialSchema: StructType,
           new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
             override def build()
                 : org.apache.spark.sql.connector.write.DeltaWrite = {
-              val fs = rowLevelFillSpec
-              val base: (Array[(Int, Int)], Array[GraftDelivery]) => Unit =
-                (dels, ins) => installDelta(dels, ins,
-                  command().toString, scannedState._1)
-              val commit = fs match {
-                case Some(f) if f.identities.nonEmpty =>
-                  (dels: Array[(Int, Int)], ins: Array[GraftDelivery]) =>
-                    installIdentityReserved(f, ins,
-                      ds => base(dels, ds))
-                case _ => base
-              }
-              new GraftDeltaWrite(GraftTable.this, commit, fs)
+              val fs = fillSpecOf(rowLevel = true)
+              new GraftDeltaWrite(GraftTable.this, (dels, ins) =>
+                withIdentityReserved(fs, ds => installDelta(dels, ds,
+                  command().toString, scannedState._1))(ins), fs)
             }
           }
       }
@@ -6731,28 +6670,22 @@ class GraftTable(initialName: String, initialSchema: StructType,
       // (plus inserted rows, which ride along in the delivery regardless
       // of group). Physical rows arrive prefixed with Spark's
       // __row_operation column (WRITE / WRITE_WITH_METADATA; deleted rows
-      // simply don't arrive) — [[GraftRowLevelBatchWrite]] strips it.
+      // simply don't arrive) — the writer strips it (`opPrefixed`).
       override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
         new WriteBuilder {
           override def build(): Write = {
             // ONE spec instance: the writers mint from the same reserved
             // block the commit verifies (plan-time reservation, commit-
             // time optimistic check — the plain path's contract)
-            val fs = rowLevelFillSpec
-            val base: Array[GraftDelivery] => Unit =
+            val fs = fillSpecOf(rowLevel = true)
+            val installAll = withIdentityReserved(fs,
               delivered => installReplaceGroups(delivered,
                 Option(rlScan).flatMap(_.scannedGroups),
                 op = command().toString,
-                expectedBase = scannedFiles)
-            val installAll = fs match {
-              case Some(f) if f.identities.nonEmpty =>
-                (ds: Array[GraftDelivery]) =>
-                  installIdentityReserved(f, ds, base)
-              case _ => base
-            }
+                expectedBase = scannedFiles))
             new GraftWrite(clusterTransforms,
-              () => new GraftRowLevelBatchWrite(GraftTable.this,
-                tableSchema, installAll, fs),
+              () => new GraftBatchWrite(GraftTable.this, installAll, fs,
+                opPrefixed = true),
               orderExprs = clusterOrdering)
           }
         }
@@ -7376,7 +7309,7 @@ class GraftStreamingWrite(table: GraftTable, queryId: String,
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    GraftStreamingWriterFactory(table.durableWriteSpec(), fill)
+    GraftWriterFactory(table.writeSpec(), fill = fill)
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit =
@@ -7386,21 +7319,6 @@ class GraftStreamingWrite(table: GraftTable, queryId: String,
   override def abort(epochId: Long,
                      messages: Array[WriterCommitMessage]): Unit =
     table.discardDeliveries(messages)
-}
-
-/** Executor-side streaming writer factory: same writers as the batch
-  * path (epoch identity lives in the commit, not the writer); on a
-  * durable table the epoch id joins the segment name so every epoch's
-  * files stay disjoint. */
-case class GraftStreamingWriterFactory(
-    durableSpec: Option[GraftDurableWriteSpec] = None,
-    fill: Option[GraftFillSpec] = None)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    GraftWriterFactory(None, durableSpec, fill)
-      .createWriter(partitionId, taskId, epochId)
 }
 
 /** Merge-on-read row-level write ([[org.apache.spark.sql.connector.write.DeltaWrite]]):
@@ -7421,8 +7339,7 @@ class GraftDeltaWrite(table: GraftTable,
         info: PhysicalWriteInfo): DeltaWriterFactory =
       // the SAME spec instance the commit verifies — writers must mint
       // from the block the reservation check covers
-      GraftDeltaWriterFactory(table.durableWriteSpec(), fill,
-        tracked = table.rowTrackingEnabled)
+      GraftDeltaWriterFactory(table.writeSpec(), fill)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val ms = messages.map(_.asInstanceOf[GraftDeltaMessage])
@@ -7439,21 +7356,18 @@ class GraftDeltaWrite(table: GraftTable,
 
 /** MOR delta writer: delete/update addresses buffer (tiny — two ints per
   * action) and fold into delete vectors at commit; INSERT rows route
-  * through the same path as appends — on a durable table a nested
-  * [[GraftSegmentDataWriter]] writes them as task-side segments, so MOR
+  * through a nested [[GraftSegmentDataWriter]], the same writer appends
+  * use — on a durable table it writes them as task-side segments, so MOR
   * insert data never crosses to the driver either. */
-case class GraftDeltaWriterFactory(
-    durableSpec: Option[GraftDurableWriteSpec] = None,
-    guard: Option[GraftFillSpec] = None,
-    tracked: Boolean = false)
+case class GraftDeltaWriterFactory(spec: GraftWriteSpec,
+    guard: Option[GraftFillSpec] = None)
     extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
     new org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
       private val dels = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-      private val insWriter: DataWriter[InternalRow] =
-        GraftWriterFactory(None, durableSpec, guard, rowTracking = tracked)
-          .createWriter(partitionId, taskId)
+      private val insWriter = new GraftSegmentDataWriter(spec,
+        opPrefixed = false, partitionId, taskId, epochId = -1L, guard)
       override def delete(meta: InternalRow, id: InternalRow): Unit =
         dels += ((id.getInt(0), id.getInt(1)))
       override def update(meta: InternalRow, id: InternalRow,
@@ -7462,13 +7376,9 @@ case class GraftDeltaWriterFactory(
         // ROW TRACKING: an update's postimage KEEPS the preimage's
         // `_row_id` (read off the projected metadata row) and takes
         // the committing version — Delta's MOR row-tracking contract
-        if (tracked && meta != null && meta.numFields >= 1 &&
+        if (spec.rowTracking && meta != null && meta.numFields >= 1 &&
             !meta.isNullAt(0))
-          insWriter match {
-            case sink: GraftTrackSink =>
-              sink.noteTrack(meta.getLong(0), GraftRowTrack.Mint)
-            case _ => ()
-          }
+          insWriter.noteTrack(meta.getLong(0), GraftRowTrack.Mint)
         insert(row)
       }
       override def insert(row: InternalRow): Unit = insWriter.write(row)
@@ -7479,8 +7389,9 @@ case class GraftDeltaWriterFactory(
     }
 }
 
-/** `inserts` is the nested payload message — [[GraftRowsMessage]] (in-
-  * JVM) or [[GraftSegmentsMessage]] (durable, file refs only). */
+/** `inserts` is the nested writer's commit message — rows on an in-JVM
+  * table ([[GraftRowsMessage]]), file refs only on a durable one
+  * ([[GraftSegmentsMessage]]). */
 case class GraftDeltaMessage(deletes: Array[(Int, Int)],
                              inserts: WriterCommitMessage)
     extends WriterCommitMessage
@@ -9552,25 +9463,32 @@ case class GraftKeyedInputPartition(rows: Array[InternalRow],
   override def partitionKey(): InternalRow = key
 }
 
-/** In-JVM tables: per-task writers buffer copies and commit messages
-  * carry them back — EACH TASK'S BATCH BECOMES ONE DATA FILE (with
-  * commit-time zone maps). DURABLE tables: the factory carries a
-  * [[GraftDurableWriteSpec]] and tasks write their own parquet segments
-  * ([[GraftSegmentDataWriter]]) — commit messages carry file refs +
-  * stats, never rows, and the driver-side commit is a log entry. The
-  * factory is a standalone serializable value; the table stays
-  * driver-side. */
+/** Batch write of a [[GraftTable]]: every task runs the one
+  * [[GraftSegmentDataWriter]] under a fresh [[GraftWriteSpec]], and the
+  * commit adopts the tasks' messages — file refs + stats on a durable
+  * table (its tasks wrote their own parquet segments, and the driver-side
+  * commit is a log entry), rows on an in-JVM table (EACH TASK'S BATCH
+  * BECOMES ONE DATA FILE per partition group, zone maps computed at
+  * commit). `opPrefixed` marks a group-based row-level (replace-data)
+  * write, whose rows arrive as `[__row_operation:int] ++ tableColumns`
+  * (RowDeltaUtils contract — WRITE(5) / WRITE_WITH_METADATA(6) rows are
+  * the group's surviving contents; deleted rows never arrive): the writer
+  * keeps surviving rows, projected back to the table schema, so a COW
+  * group rewrite streams through the tasks instead of materializing the
+  * post-merge groups on the driver. The factory is a standalone
+  * serializable value; the table stays driver-side. */
 class GraftBatchWrite(table: GraftTable,
                       install: Array[GraftDelivery] => Unit,
-                      fill: Option[GraftFillSpec] = None)
+                      fill: Option[GraftFillSpec] = None,
+                      opPrefixed: Boolean = false)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriterFactory(None, table.durableWriteSpec(), fill)
+    GraftWriterFactory(table.writeSpec(), opPrefixed, fill)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     install(table.adoptDeliveries(messages))
 
-  /** A failed job (or a commit whose install refused — CHECK violation,
+  /** A failed job (or a commit whose install refused — CHECK drift,
     * write conflict) leaves only task-written segments behind; delete
     * them so aborts reclaim immediately instead of waiting for the
     * retention sweep. */
@@ -9578,129 +9496,27 @@ class GraftBatchWrite(table: GraftTable,
     table.discardDeliveries(messages)
 }
 
-/** The replace-data variant: group-based row-level writes deliver rows as
-  * `[__row_operation:int] ++ tableColumns` (RowDeltaUtils contract —
-  * WRITE(5) / WRITE_WITH_METADATA(6) rows are the group's surviving
-  * contents; deleted rows never arrive). The writer keeps surviving rows,
-  * projected back to the table schema as compact UnsafeRows — on durable
-  * tables straight into task-written parquet segments, so a COW group
-  * rewrite streams through the tasks instead of materializing the
-  * post-merge groups on the driver. */
-class GraftRowLevelBatchWrite(table: GraftTable, schema: StructType,
-                              install: Array[GraftDelivery] => Unit,
-                              guard: Option[GraftFillSpec] = None)
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftWriterFactory(Some(schema), table.durableWriteSpec(), guard,
-      rowTracking = table.rowTrackingEnabled)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    install(table.adoptDeliveries(messages))
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    table.discardDeliveries(messages)
-}
-
-/** Executor-side writer factory. `opPrefixedSchema` = Some(tableSchema)
-  * for row-level (replace-data) writes, whose incoming rows carry the
-  * __row_operation prefix; None for plain appends. A row-level row that
-  * arrives un-prefixed (numFields == schema size) passes through
-  * unchanged, guarding against rewrite-rule variants that pre-project. */
-case class GraftWriterFactory(opPrefixedSchema: Option[StructType],
-                              durableSpec: Option[GraftDurableWriteSpec] = None,
-                              fill: Option[GraftFillSpec] = None,
-                              rowTracking: Boolean = false)
-    extends DataWriterFactory {
+/** Executor-side writer factory of batch and streaming writes (epoch
+  * identity lives in the commit, not the writer; on a durable table the
+  * epoch id joins the segment name so every epoch's files stay
+  * disjoint). `opPrefixed` = the rows carry the __row_operation prefix
+  * (row-level replace-data writes); a row that arrives un-prefixed
+  * (numFields == schema size) passes through unchanged, guarding
+  * against rewrite-rule variants that pre-project. */
+case class GraftWriterFactory(spec: GraftWriteSpec,
+                              opPrefixed: Boolean = false,
+                              fill: Option[GraftFillSpec] = None)
+    extends DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming
+      .StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     createWriter(partitionId, taskId, epochId = -1L)
 
-  def createWriter(partitionId: Int, taskId: Long,
-                   epochId: Long): DataWriter[InternalRow] = durableSpec match {
-    case Some(spec) =>
-      // durable table: the task writes its own segments; rows never
-      // ride a commit message
-      new GraftSegmentDataWriter(spec, opPrefixedSchema.isDefined,
-        partitionId, taskId, epochId, fill)
-    case None => new DataWriter[InternalRow] with GraftTrackSink {
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-      import org.apache.spark.sql.catalyst.util.RowDeltaUtils
-      // canonical probe schema: the data columns a rewrite writes
-      // (plain appends never receive the two-arg write)
-      private def dataSchemaForProbe: StructType = opPrefixedSchema.get
-      private val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-      // row tracking: one (id, ver) per admitted row, Mint default
-      private val trackBuf =
-        if (rowTracking) scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        else null
-      private var pendingTrack: (Long, Long) = null
-      override def noteTrack(id: Long, ver: Long): Unit =
-        pendingTrack = (id, ver)
-      private var filled = 0L
-      private lazy val stripOp = UnsafeProjection.create(
-        opPrefixedSchema.get.fields.zipWithIndex.map { case (f, i) =>
-          BoundReference(i + 1, f.dataType, f.nullable)
-        }.toIndexedSeq)
-      private def admit(row: InternalRow, copied: Boolean): Unit = {
-        fill match {
-          case Some(fs) =>
-            // copy BEFORE filling — fill's materialized row aliases the
-            // input buffer's value-typed contents, and Spark reuses
-            // that buffer across write() calls
-            val base = if (copied) row else row.copy()
-            val out = fs.fill(base, partitionId, filled)
-            filled += 1
-            buf += out
-          case None => buf += (if (copied) row else row.copy())
-        }
-        if (trackBuf != null) {
-          trackBuf += (if (pendingTrack != null) pendingTrack
-            else (GraftRowTrack.Mint, GraftRowTrack.Mint))
-          pendingTrack = null
-        }
-      }
-      private lazy val probeProj = UnsafeProjection.create(
-        dataSchemaForProbe.fields.zipWithIndex.map { case (f, i) =>
-          BoundReference(i, f.dataType, f.nullable)
-        }.toIndexedSeq)
-      override def write(meta: InternalRow, record: InternalRow): Unit = {
-        // group-based rewrite with metadata (row tracking): capture
-        // the row's identity from the metadata view, then write data
-        if (trackBuf != null) pendingTrack =
-          GraftReplaceDataOps.captureOf(meta, record, probeProj)
-        write(record)
-      }
-      override def write(record: InternalRow): Unit = opPrefixedSchema match {
-        case Some(schema) if record.numFields != schema.length =>
-          val op = record.getInt(0)
-          if (op == RowDeltaUtils.WRITE_OPERATION ||
-            op == RowDeltaUtils.WRITE_WITH_METADATA_OPERATION)
-            admit(stripOp(record).copy(), copied = true)
-        case Some(_) => admit(record, copied = false)
-        case None => admit(record, copied = false)
-      }
-      override def commit(): WriterCommitMessage = {
-        val (tIds, tVers) =
-          if (trackBuf == null ||
-              trackBuf.forall(_._1 == GraftRowTrack.Mint)) (null, null)
-          else (trackBuf.map(_._1).toArray, trackBuf.map(_._2).toArray)
-        GraftRowsMessage(buf.toArray, tIds, tVers)
-      }
-      override def abort(): Unit = {
-        buf.clear()
-        if (trackBuf != null) trackBuf.clear()
-      }
-      override def close(): Unit = ()
-    }
-  }
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    new GraftSegmentDataWriter(spec, opPrefixed, partitionId, taskId,
+      epochId, fill)
 }
-
-case class GraftRowsMessage(rows: Array[InternalRow],
-    // ROW TRACKING capture (rewrite writes only; null = all-mint):
-    // per-row preserved (_row_id, _row_commit_version), Mint-sentinel
-    // where the commit mints — see GraftSegmentMeta.trackIds
-    trackIds: Array[Long] = null,
-    trackVers: Array[Long] = null)
-    extends WriterCommitMessage
 
 /** The `t$changes` relation as a live TABLE: batch reads serve the
   * retained change data feed (one zone-mapped file per change-carrying

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
   * spelled as table properties: `constraints.<name> = '<boolean expr>'`
   * at CREATE or via `ALTER TABLE ... SET TBLPROPERTIES`). The expression
   * compiles ONCE against the table schema into an interpreted predicate;
-  * every commit validates its incoming rows BEFORE the state swaps, and
-  * adding a constraint validates the existing rows first — so the table
-  * can never hold a violating row. SQL CHECK semantics: only a result of
+  * every write validates its rows in its writer tasks, the commit
+  * refuses rows validated against a since-changed set, and adding a
+  * constraint validates the existing rows first — so the table can
+  * never hold a violating row. SQL CHECK semantics: only a result of
   * literal FALSE violates (NULL/unknown passes).
   *
   * Deliberately small expression language — column refs, literals,

@@ -6,16 +6,21 @@ import org.apache.spark.sql.catalyst.util.RowDeltaUtils
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Executor-side write path for DURABLE tables: each writer task writes
-  * its own parquet segment file(s) straight into the warehouse and its
-  * commit message carries ONLY metadata — (relative path, row count,
-  * byte size, zone maps, partition-group key). The driver's commit
-  * adopts the file references and writes a log entry; table DATA never
-  * funnels through the driver, so a table write is bounded by task
-  * partition size, not driver heap — the Delta/Iceberg executor-write
-  * contract (the reference's Delta writes are executor-side the same
-  * way: Notebooks/Batch_Bronze_to_Silver.Notebook/notebook-content.py:200
-  * `saveAsTable`).
+/** The write path of every table, in-JVM or durable: one executor-side
+  * writer ([[GraftSegmentDataWriter]]) strips Spark's row-operation
+  * prefix, fills identity and generated columns, validates CHECK
+  * constraints and captures row identity in the task. Storage differs
+  * only at the task's commit. A durable table's task writes its own
+  * parquet segment file(s) straight into the warehouse, and its commit
+  * message carries ONLY metadata — (relative path, row count, byte
+  * size, zone maps, partition-group key); the driver's commit adopts
+  * the file references and writes a log entry, so table DATA never
+  * funnels through the driver and a write is bounded by task partition
+  * size, not driver heap — the Delta/Iceberg executor-write contract
+  * (the reference's Delta writes are executor-side the same way:
+  * Notebooks/Batch_Bronze_to_Silver.Notebook/notebook-content.py:200
+  * `saveAsTable`). An in-JVM table keeps its data on the heap, so its
+  * task ships the validated rows instead.
   *
   * Crash/abort safety: segment names are unique per (write, epoch,
   * partition, task), [[GraftSegmentIO.write]] lands them by atomic
@@ -24,12 +29,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * entry pointing at missing data); the retention reclaim sweeps those.
   */
 
-/** Serializable recipe a durable table hands its writer factories: where
-  * segments land and everything the task needs to reproduce the
-  * driver-side write semantics (group split, zone maps, CHECK
-  * validation) without the table object. */
-final case class GraftDurableWriteSpec(
-    tableDir: String,
+/** Serializable recipe a table hands its writer factories and its
+  * task-side rewrites: where segments land (`tableDir`, None on an
+  * in-JVM table) and everything the task needs to reproduce the table's
+  * write semantics (group split, zone maps, CHECK validation) without
+  * the table object. */
+final case class GraftWriteSpec(
+    tableDir: Option[String],
     schemaJson: String,
     partitionCols: Seq[String],
     bucketSpec: Option[(Int, String)],
@@ -46,9 +52,10 @@ final case class GraftDurableWriteSpec(
     checksFingerprint: String,
     // ROW TRACKING on: writers capture each written row's preserved
     // (_row_id, _row_commit_version) — from the trailing metadata
-    // columns of a COW replace-data row, or via [[GraftTrackSink]] for
-    // MOR update postimages — and report them per segment; unseen rows
-    // report the Mint sentinel and the commit mints fresh ids
+    // columns of a COW replace-data row, or via
+    // [[GraftSegmentDataWriter.noteTrack]] for MOR update postimages —
+    // and report them; unseen rows report the Mint sentinel and the
+    // commit mints fresh ids
     rowTracking: Boolean = false) {
   @transient lazy val schema: StructType =
     DataType.fromJson(schemaJson).asInstanceOf[StructType]
@@ -72,12 +79,12 @@ final case class GraftSegmentMeta(rel: String, rowCount: Int, bytes: Long,
     // arithmetic ids), riding the message the way position-view "sel"
     // arrays ride the log; a cluster deployment would instead reserve
     // id blocks per task (the identity-column reservation pattern,
-    // installIdentityReserved) and write the sidecar task-side
+    // installIdentityReserved) and always write the sidecar task-side
     trackIds: Array[Long] = null,
     trackVers: Array[Long] = null,
-    // the task already wrote the output's .rowids sidecar (all ids
-    // preserved — no driver minting needed): attach a lazy-loading
-    // explicit track, ship nothing row-sized
+    // the task already wrote the output's .rowids sidecar (every id and
+    // version preserved — no driver minting needed): attach a
+    // lazy-loading explicit track, ship nothing row-sized
     trackSidecar: Boolean = false)
 
 /** Commit message of a segment-writing task: file references + stats.
@@ -87,6 +94,16 @@ final case class GraftSegmentMeta(rel: String, rowCount: Int, bytes: Long,
   * against (the commit aborts if the table's set drifted). */
 final case class GraftSegmentsMessage(schemaJson: String,
     segs: Array[GraftSegmentMeta],
+    checksFingerprint: String = "") extends WriterCommitMessage
+
+/** Commit message of an in-JVM table's writer task: the task's rows,
+  * already stripped, filled and CHECK-validated, with their row
+  * identity (null vectors = all-Mint; see [[GraftSegmentMeta.trackIds]])
+  * and the fingerprint of the constraint set they were validated
+  * against. The driver splits them per partition group. */
+final case class GraftRowsMessage(rows: Array[InternalRow],
+    trackIds: Array[Long] = null,
+    trackVers: Array[Long] = null,
     checksFingerprint: String = "") extends WriterCommitMessage
 
 /** The partition-group key kernel, shared by the driver (buildFiles,
@@ -109,15 +126,6 @@ private[sources] object GraftGroupKeys {
         Some(r => ords.lazyZip(dts).map((i, dt) => r.get(i, dt)))
       case None => None
     }
-}
-
-/** Capture channel for ROW-TRACKING writers: a delta (MOR) write calls
-  * [[noteTrack]] with the original row's identity immediately before
-  * handing an update POSTIMAGE to `write()` — the postimage keeps the
-  * preimage's `_row_id` (Delta's row-tracking update semantics). Rows
-  * written without a note default to the Mint sentinel. */
-private[sources] trait GraftTrackSink {
-  def noteTrack(id: Long, ver: Long): Unit
 }
 
 /** ROW-TRACKING view of a group-based (ReplaceData) write row. With
@@ -161,26 +169,33 @@ private[sources] object GraftReplaceDataOps {
   }
 }
 
-/** The executor-side writer itself. Buffers this TASK's rows (bounded
-  * by the task's input split — `maxPartitionBytes`-sized, the same
-  * bound a real parquet writer's row-group buffer has), then at commit
-  * splits them per partition group, computes zone maps through the
-  * column-major stats kernel, writes one parquet segment per group, and
-  * reports metadata. CHECK constraints validate PER ROW as they arrive
-  * (fail fast: a violating row aborts the task before any segment
-  * lands, and abort removes partials). */
+/** The executor-side writer of every table. Buffers this TASK's rows
+  * (bounded by the task's input split — `maxPartitionBytes`-sized, the
+  * same bound a real parquet writer's row-group buffer has). CHECK
+  * constraints validate PER ROW as they arrive (fail fast: a violating
+  * row aborts the task before any segment lands, and abort removes
+  * partials). At commit a durable table's rows split per partition
+  * group ([[GraftRewrite.regroup]]) and land through the rewrites' one
+  * segment writer ([[GraftRewrite.write]]), which reports metadata; an
+  * in-JVM table's rows ride the message. */
 private[sources] final class GraftSegmentDataWriter(
-    spec: GraftDurableWriteSpec, opPrefixed: Boolean,
+    spec: GraftWriteSpec, opPrefixed: Boolean,
     partitionId: Int, taskId: Long, epochId: Long,
     fill: Option[GraftFillSpec] = None)
-    extends DataWriter[InternalRow] with GraftTrackSink {
+    extends DataWriter[InternalRow] {
   private var filled = 0L
   // row-tracking capture: one (id, ver) per buffered row, Mint default
   private val trackBuf =
     if (spec.rowTracking) scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     else null
   private var pendingTrack: (Long, Long) = null
-  override def noteTrack(id: Long, ver: Long): Unit =
+
+  /** Capture channel for a delta (MOR) write: called with the original
+    * row's identity immediately before an update POSTIMAGE goes to
+    * `write()` — the postimage keeps the preimage's `_row_id` (Delta's
+    * row-tracking update semantics). Rows written without a note
+    * default to the Mint sentinel. */
+  def noteTrack(id: Long, ver: Long): Unit =
     pendingTrack = (id, ver)
 
   private val schema = spec.schema
@@ -250,50 +265,42 @@ private[sources] final class GraftSegmentDataWriter(
     }
   }
 
+  /** The identity vectors of the rows at `idx`: null when no row
+    * PRESERVES an id — an all-Mint batch (plain append) takes
+    * arithmetic assignment at the commit. */
+  private def trackOf(idx: Array[Int]): (Array[Long], Array[Long]) =
+    if (trackBuf == null || idx.forall(trackBuf(_)._1 == GraftRowTrack.Mint))
+      (null, null)
+    else (idx.map(trackBuf(_)._1), idx.map(trackBuf(_)._2))
+
   override def commit(): WriterCommitMessage = {
-    // group-split INDICES so the row-tracking capture splits with its
-    // rows (a partitioned COW rewrite routes each row's identity to
-    // the segment that row lands in)
-    val idxAll = buf.indices.toArray
-    val groups: Seq[Array[Int]] = spec.keyOf match {
-      case None => if (buf.isEmpty) Nil else Seq(idxAll)
-      case Some(keyOf) =>
-        idxAll.groupBy(i => keyOf(buf(i))).toSeq
-          .sortBy(_._1.mkString("|")) // deterministic file order
-          .map(_._2)
-    }
-    val metas = groups.zipWithIndex.map { case (idx, n) =>
-      val rs = idx.map(buf(_))
-      // stats ride the SAME kernel as driver-side builds; the heap file
-      // object is task-local scaffolding and drops with the task
-      val f = GraftDataFile.build(rs, schema, spec.keyOf)
-      val rel = s"data/seg-${spec.writeId}-e$epochId-p$partitionId" +
-        s"-t$taskId-$n.parquet"
-      val abs = java.nio.file.Paths.get(spec.tableDir).resolve(rel)
-      val bytes = GraftSegmentIO.write(abs, schema, rs)
-      written += abs
-      // filter words land task-side beside the segment; only the refs
-      // ride the commit message
-      val refs = GraftBloomSidecar.write(abs, f.blooms)
-      if (refs != null) written += GraftBloomSidecar.pathFor(abs)
-      // tracking capture: ship only when some row PRESERVES an id —
-      // an all-Mint segment (plain append) takes arithmetic assignment
-      val (tIds, tVers) =
-        if (trackBuf == null ||
-            idx.forall(i => trackBuf(i)._1 == GraftRowTrack.Mint))
-          (null, null)
-        else (idx.map(i => trackBuf(i)._1), idx.map(i => trackBuf(i)._2))
-      GraftSegmentMeta(rel, rs.length, bytes, f.zones, f.groupKey, refs,
-        trackIds = tIds, trackVers = tVers)
+    val rows = buf.toArray
+    val msg = spec.tableDir match {
+      case None =>
+        val (ids, vers) = trackOf(rows.indices.toArray)
+        GraftRowsMessage(rows, ids, vers, spec.checksFingerprint)
+      case Some(dir) =>
+        // group-split INDICES so the row-tracking capture splits with
+        // its rows (a partitioned COW rewrite routes each row's identity
+        // to the segment that row lands in)
+        val metas = GraftRewrite.regroup(rows, schema, spec.keyOf, Nil,
+          Int.MaxValue).zipWithIndex.map { case (idx, n) =>
+          val rel = s"data/seg-${spec.writeId}-e$epochId-p$partitionId" +
+            s"-t$taskId-$n.parquet"
+          written += java.nio.file.Paths.get(dir).resolve(rel)
+          val (ids, vers) = trackOf(idx)
+          GraftRewrite.write(spec, rel, idx.map(rows(_)), ids, vers)
+        }
+        GraftSegmentsMessage(spec.schemaJson, metas.toArray,
+          spec.checksFingerprint)
     }
     buf.clear()
     if (trackBuf != null) trackBuf.clear()
-    GraftSegmentsMessage(spec.schemaJson, metas.toArray,
-      spec.checksFingerprint)
+    msg
   }
 
   override def abort(): Unit = {
-    written.foreach(java.nio.file.Files.deleteIfExists)
+    written.foreach(GraftRewrite.delete)
     written.clear()
     buf.clear()
   }
@@ -301,9 +308,10 @@ private[sources] final class GraftSegmentDataWriter(
   override def close(): Unit = ()
 }
 
-/** What a commit message unpacks to on the driver: either the task's
-  * rows (in-JVM tables — the test fast-path) or ready-made file
-  * references the task already persisted (durable tables). */
+/** What a commit message unpacks to on the driver: the task's
+  * validated rows (in-JVM tables, whose data lives on the heap) or
+  * ready-made file references the task already persisted (durable
+  * tables). */
 private[sources] sealed trait GraftDelivery
 private[sources] final case class GraftRowsDelivery(rows: Array[InternalRow],
     // ROW TRACKING capture aligned with `rows` (null = all-mint)
@@ -428,7 +436,7 @@ private[sources] object GraftZCurve {
   * emits exactly ONE segment (1:1 file pairing). Everything is
   * serializable DATA — the task never sees the table. */
 private[sources] final case class GraftCompactJob(
-    segs: Seq[GraftSegmentScanPartition], spec: GraftDurableWriteSpec,
+    segs: Seq[GraftSegmentScanPartition], spec: GraftWriteSpec,
     binId: Int, zorderCols: Seq[String], targetRows: Int,
     positional: Boolean = false)
 
@@ -440,7 +448,7 @@ private[sources] final case class GraftCompactJob(
   * reference), a wholly-touched file reports zero stay rows (the
   * driver removes the original by reference). */
 private[sources] final case class GraftSplitJob(
-    seg: GraftSegmentScanPartition, spec: GraftDurableWriteSpec,
+    seg: GraftSegmentScanPartition, spec: GraftWriteSpec,
     binId: Int, touched: Seq[Any] => Boolean)
 
 private[sources] final case class GraftSplitResult(
@@ -508,24 +516,35 @@ private[sources] object GraftRewrite {
     chunks.filter(_.nonEmpty)
   }
 
-  /** The one rewrite segment writer: zone stats through the shared
-    * kernel, the segment and its Bloom sidecar, then the rows' identity
-    * — with every id preserved the `.rowids` sidecar lands here and only
-    * a flag rides the message; with some to mint the vectors ride the
-    * message and the commit mints. `ids` null = untracked. */
-  private def write(spec: GraftDurableWriteSpec, rel: String,
+  /** The one segment writer of table writes and rewrites: zone stats
+    * through the shared kernel, the segment and its Bloom sidecar, then
+    * the rows' identity — with every id AND every version preserved
+    * the `.rowids` sidecar lands here and only a flag rides the
+    * message; with some to mint (a fresh id, or a changed row's
+    * committing version) the vectors ride the message and the commit
+    * mints. `ids` null = untracked, or nothing preserved. */
+  private[sources] def write(spec: GraftWriteSpec, rel: String,
       rows: Array[InternalRow], ids: Array[Long],
       vers: Array[Long]): GraftSegmentMeta = {
     val f = GraftDataFile.build(rows, spec.schema, spec.keyOf)
-    val abs = java.nio.file.Paths.get(spec.tableDir).resolve(rel)
+    val abs = java.nio.file.Paths.get(spec.tableDir.get).resolve(rel)
     val bytes = GraftSegmentIO.write(abs, spec.schema, rows)
     val meta = GraftSegmentMeta(rel, rows.length, bytes, f.zones,
       f.groupKey, GraftBloomSidecar.write(abs, f.blooms))
     if (ids == null) meta
-    else if (ids.forall(_ != GraftRowTrack.Mint)) {
+    else if (ids.forall(_ != GraftRowTrack.Mint) &&
+        vers.forall(_ != GraftRowTrack.Mint)) {
       GraftRowIdSidecar.write(abs, ids, vers)
       meta.copy(trackSidecar = true)
     } else meta.copy(trackIds = ids, trackVers = vers)
+  }
+
+  /** Undo of [[write]]: the segment at `abs` and both its sidecars
+    * (each a no-op when absent). */
+  private[sources] def delete(abs: java.nio.file.Path): Unit = {
+    java.nio.file.Files.deleteIfExists(abs)
+    GraftBloomSidecar.deleteAlongside(abs)
+    java.nio.file.Files.deleteIfExists(GraftRowIdSidecar.pathFor(abs))
   }
 
   private def pick(v: Array[Long], idx: Array[Int]): Array[Long] =

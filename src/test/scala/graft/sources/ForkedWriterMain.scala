@@ -193,8 +193,8 @@ object ForkedWriterMain {
       case "crash" =>
         val t = spark.sessionState.catalogManager.catalog(cat)
           .asInstanceOf[GraftCatalog].store.tables((Seq("ns"), tbl))
-        val spec = t.durableWriteSpec().get
-        val w = GraftWriterFactory(None, Some(spec)).createWriter(0, 0L)
+        val spec = t.writeSpec()
+        val w = GraftWriterFactory(spec).createWriter(0, 0L)
         w.write(new GenericInternalRow(Array[Any](999L,
           UTF8String.fromString("crash"))))
         w.commit() // the segment lands; the table commit never happens

@@ -134,8 +134,8 @@ class GraftExecWriteSpec extends SparkSpec {
     // replayed epoch: its tasks wrote fresh segments that will never be
     // referenced — the skip must delete them, not leak them
     val segsBefore = dataSegments(wh).size
-    val spec = table.durableWriteSpec().get
-    val w = GraftWriterFactory(None, Some(spec)).createWriter(0, 99L)
+    val spec = table.writeSpec()
+    val w = GraftWriterFactory(spec).createWriter(0, 99L)
     w.write(new GenericInternalRow(Array[Any](42L)))
     val msg = w.commit()
     assert(dataSegments(wh).size === segsBefore + 1)
@@ -492,8 +492,8 @@ class GraftExecWriteSpec extends SparkSpec {
     val table = spark.sessionState.catalogManager.catalog("xf")
       .asInstanceOf[GraftCatalog].store.tables((Seq("ns"), "f"))
     // write starts: factory bound to the constraint-free set
-    val spec = table.durableWriteSpec().get
-    val w = GraftWriterFactory(None, Some(spec)).createWriter(0, 5L)
+    val spec = table.writeSpec()
+    val w = GraftWriterFactory(spec).createWriter(0, 5L)
     w.write(new GenericInternalRow(Array[Any](1L, -5))) // would violate!
     val msg = w.commit()
     // the constraint lands while the write is in flight
@@ -512,8 +512,8 @@ class GraftExecWriteSpec extends SparkSpec {
       "PARTITIONED BY (v)")
     val table = spark.sessionState.catalogManager.catalog("xc")
       .asInstanceOf[GraftCatalog].store.tables((Seq("ns"), "c"))
-    val spec = table.durableWriteSpec().get
-    val w = GraftWriterFactory(None, Some(spec)).createWriter(3, 17L)
+    val spec = table.writeSpec()
+    val w = GraftWriterFactory(spec).createWriter(3, 17L)
     (1L to 10000L).foreach { i =>
       w.write(new GenericInternalRow(Array[Any](i,
         UTF8String.fromString(s"g${i % 3}"))))
@@ -552,14 +552,60 @@ class GraftExecWriteSpec extends SparkSpec {
     spark.sql("CREATE TABLE xa.ns.a (id BIGINT)")
     val table = spark.sessionState.catalogManager.catalog("xa")
       .asInstanceOf[GraftCatalog].store.tables((Seq("ns"), "a"))
-    val spec = table.durableWriteSpec().get
-    val w = GraftWriterFactory(None, Some(spec)).createWriter(0, 1L)
+    val spec = table.writeSpec()
+    val w = GraftWriterFactory(spec).createWriter(0, 1L)
     w.write(new GenericInternalRow(Array[Any](1L)))
     val msg = w.commit()
     assert(dataSegments(wh).nonEmpty)
     table.discardDeliveries(Array(msg))
     assert(dataSegments(wh).isEmpty,
       "an aborted write's segments must be reclaimed immediately")
+  }
+
+  test("a writer's all-preserved .rowids sidecar goes with its segment " +
+      "on discard and on abort") {
+    val wh = tmpDir("graft-exec-rowids")
+    durableCatalog("xr", wh)
+    spark.sql("CREATE TABLE xr.ns.r (id BIGINT) " +
+      "TBLPROPERTIES ('row.tracking'='true')")
+    val table = spark.sessionState.catalogManager.catalog("xr")
+      .asInstanceOf[GraftCatalog].store.tables((Seq("ns"), "r"))
+    val dataDir = java.nio.file.Paths.get(table.writeSpec().tableDir.get)
+      .resolve("data")
+    def filesIn(suffix: String): Seq[String] =
+      if (!java.nio.file.Files.isDirectory(dataDir)) Nil
+      else java.nio.file.Files.list(dataDir).toArray.toSeq
+        .map(_.toString).filter(_.endsWith(suffix))
+    // a copied row: id and version preserved (the metadata view's probe
+    // equals the written data's), so the task lands the sidecar
+    def preservedWrite(taskId: Long)
+        : (org.apache.spark.sql.connector.write.DataWriter[
+            org.apache.spark.sql.catalyst.InternalRow],
+           org.apache.spark.sql.connector.write.WriterCommitMessage) = {
+      val spec = table.writeSpec()
+      val w = GraftWriterFactory(spec).createWriter(0, taskId)
+      val record = new GenericInternalRow(Array[Any](7L))
+      val probe = GraftReplaceDataOps.probeOf(
+        org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+          .create(spec.schema), record)
+      w.write(new GenericInternalRow(Array[Any](41L, 3L, probe)), record)
+      val msg = w.commit()
+      assert(msg.asInstanceOf[GraftSegmentsMessage].segs.forall(_.trackSidecar))
+      (w, msg)
+    }
+    val (_, msg) = preservedWrite(1L)
+    assert(filesIn(GraftRowIdSidecar.Suffix).size === 1)
+    table.discardDeliveries(Array(msg))
+    assert(filesIn(".parquet").isEmpty)
+    assert(filesIn(GraftRowIdSidecar.Suffix).isEmpty,
+      "a discarded segment's .rowids sidecar must go with it")
+    // a task whose commit is followed by its abort removes its files too
+    val (w, _) = preservedWrite(2L)
+    assert(filesIn(GraftRowIdSidecar.Suffix).size === 1)
+    w.abort()
+    assert(filesIn(".parquet").isEmpty &&
+      filesIn(GraftRowIdSidecar.Suffix).isEmpty,
+      "an aborted task's segment and sidecars must go")
   }
 
   test("CHECK constraints enforce task-side: the violating write fails " +
