@@ -121,22 +121,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // fresh warehouse per run (see Verify): the write-path round-trip
-      // queries create managed tables. Routed through TempDirs so the
-      // managed-table copies are reclaimed at JVM exit.
-      .config("spark.sql.warehouse.dir",
-        graft.analytics.TempDirs.scratch("graft-bench-wh"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.registerAll(spark)
+    val cpus = SparkEntry.cpus
+    val spark = SparkEntry.session("graft-bench-wh")
     // Registry-independent host-speed canary: fixed PER-CORE CPU+shuffle
     // work with EXPLICIT partitioning at the RDD layer — deliberately
     // outside Spark SQL, so no conf (shuffle.partitions, AQE, codegen

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.analytics.{CurationQueries, MultimodalQueries, PipelineQueries, Q, RelationalQueries, TextQueries, VectorQueries}
+import graft.analytics.{CurationQueries, MultimodalQueries, PipelineQueries, Q, RelationalQueries, TempDirs, TextQueries, VectorQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
@@ -24,4 +24,29 @@ object SparkEntry {
     * the same parquet tables. */
   def oracleSql: Map[String, String] =
     registry.map(q => q.name -> q.oracle).toMap
+
+  /** Local cores the drivers run on (`SPARK_GRAFT_CPUS`, default 4). */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The one session recipe of Bench, Verify and the dev tools:
+    * `local[cpus]` with as many shuffle partitions, the graft extensions
+    * and functions, nanosecond parquet timestamps read as longs, UTC, no
+    * UI, and a fresh warehouse per JVM — the write-path queries create
+    * managed tables, and a warehouse reused across JVMs throws
+    * LOCATION_ALREADY_EXISTS (the catalog forgets, the directory
+    * remains). TempDirs reclaims the warehouse at JVM exit. */
+  def session(warehousePrefix: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", TempDirs.scratch(warehousePrefix))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.plans.GraftFunctions.registerAll(spark)
+    spark
+  }
 }

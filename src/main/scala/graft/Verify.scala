@@ -1,27 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // fresh warehouse per run: managed-table queries (s23/s24) must not
-      // trip over LOCATION_ALREADY_EXISTS from a previous JVM's leftovers;
-      // TempDirs reclaims the table copies at JVM exit
-      .config("spark.sql.warehouse.dir",
-        graft.analytics.TempDirs.scratch("graft-verify-wh"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.registerAll(spark)
+    val spark = SparkEntry.session("graft-verify-wh")
     new java.io.File(outDir).mkdirs()
     // dev-only: SPARK_GRAFT_ONLY=q1,q2 restricts the dump (and the
     // oracle json) to named queries for fast iteration; the driver

@@ -1008,7 +1008,8 @@ object CurationQueries {
       // cache but never joined at shingle grain
       // hash INSIDE the persisted projection, explode the cached arrays:
       // an expensive HOF expression as a generator child re-evaluates per
-      // generated row (the ProfileT5 landmine ngramScored documents)
+      // generated row (the r18 landmine ngramScored documents;
+      // OPTIMIZATION_r20.md, LSH banding)
       val sh = Caches.persistTracked(
         Tables.documents(s, dir)
           .select(col("doc_id"),

@@ -295,7 +295,8 @@ object PipelineQueries {
       // DAG-shaped materialization (r20 — the g2 publish pattern, opt
       // guide §2.6, applied to the in-memory route): left lazy, the
       // final gold job materializes bronze → measurement → dims
-      // SERIALLY (g1p2 stage times: dims alone ~3.5 s, dimLocation's
+      // SERIALLY (OPTIMIZATION_r20.md stage times: dims alone ~3.5 s,
+      // dimLocation's
       // four bronze passes 2.4-3.0 s of it). All three bronze-derived
       // dims are independent of the measurement dedup, so after bronze
       // materializes once they fill the cluster concurrently with the
@@ -341,7 +342,7 @@ object PipelineQueries {
         .groupBy("year", "region", "parameter_name", "category", "aqi_category")
         .agg(
           count(lit(1)).as("n_meas"),
-          // exact distinct counts as set sizes (r20, GoldAggProbe): two
+          // exact distinct counts as set sizes (r20, OPTIMIZATION_r20.md): two
           // countDistinct columns planned as Expand 3x — every fact row
           // tripled through the aggregate (agg stage 1.9-2.5 s); a
           // collect_set per group is ONE pass at the same shuffle bytes
@@ -474,7 +475,7 @@ object PipelineQueries {
         .groupBy("year", "region", "parameter_name", "category", "aqi_category")
         .agg(
           count(lit(1)).as("n_meas"),
-          // exact distinct counts as set sizes (r20, GoldAggProbe): two
+          // exact distinct counts as set sizes (r20, OPTIMIZATION_r20.md): two
           // countDistinct columns planned as Expand 3x — every fact row
           // tripled through the aggregate (agg stage 1.9-2.5 s); a
           // collect_set per group is ONE pass at the same shuffle bytes

@@ -1987,7 +1987,7 @@ object RelationalQueries {
          |GROUP BY 1 ORDER BY p""".stripMargin
     }) { (s, dir) =>
       graft.plans.GraftFunctions.registerAll(s)
-      val wh = java.nio.file.Files.createTempDirectory("graft-s49").toString
+      val wh = TempDirs.scratch("graft-s49")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gdw_$tag" // writer "process"
       val r = s"gdr_$tag" // reader "process" (isolated store = restart)
@@ -2028,7 +2028,7 @@ object RelationalQueries {
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
         |FROM lineitem
         |GROUP BY l_returnflag ORDER BY rf""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s50").toString
+      val wh = TempDirs.scratch("graft-s50")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gcw_$tag"
       val r = s"gcr_$tag"
@@ -2066,7 +2066,7 @@ object RelationalQueries {
       """SELECT n_regionkey AS rk, count(*) AS n,
         |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation GROUP BY n_regionkey ORDER BY rk""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s51").toString
+      val wh = TempDirs.scratch("graft-s51")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"grw_$tag"
       val r = s"grr_$tag"
@@ -2102,7 +2102,7 @@ object RelationalQueries {
         |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation WHERE n_regionkey <= 3 GROUP BY n_regionkey
         |ORDER BY rk""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s52").toString
+      val wh = TempDirs.scratch("graft-s52")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gtw_$tag"
       val r = s"gtr_$tag"
@@ -2142,7 +2142,7 @@ object RelationalQueries {
         |  count(*) AS cnt
         |FROM nation GROUP BY n_regionkey ORDER BY rk""".stripMargin) {
       (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s54").toString
+      val wh = TempDirs.scratch("graft-s54")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gdw_$tag"
       val r = s"gdr_$tag"
@@ -2175,7 +2175,7 @@ object RelationalQueries {
         |  CAST(n_nationkey AS BIGINT) AS rk,
         |  CAST(n_nationkey * 2 + 1 AS BIGINT) AS twice
         |FROM nation ORDER BY id""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s56").toString
+      val wh = TempDirs.scratch("graft-s56")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"giw_$tag"
       val r = s"gir_$tag"
@@ -2214,7 +2214,7 @@ object RelationalQueries {
         |  count(*) AS n, CAST(sum(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation WHERE n_nationkey % 3 <> 2
         |GROUP BY nk_mod ORDER BY nk_mod""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s57").toString
+      val wh = TempDirs.scratch("graft-s57")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gew_$tag"
       val r = s"ger_$tag"
@@ -2260,7 +2260,7 @@ object RelationalQueries {
         |           ELSE n_nationkey + 3000000000 END) AS BIGINT) AS key_sum
         |FROM nation GROUP BY n_regionkey ORDER BY rk""".stripMargin) {
       (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s58").toString
+      val wh = TempDirs.scratch("graft-s58")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gww_$tag"
       val r = s"gwr_$tag"
@@ -2307,7 +2307,7 @@ object RelationalQueries {
         |  CASE WHEN n_nationkey >= 10 THEN CAST(n_regionkey AS BIGINT)
         |       END AS rk
         |FROM nation ORDER BY nk""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s59").toString
+      val wh = TempDirs.scratch("graft-s59")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gmw_$tag"
       val r = s"gmr_$tag"
@@ -2357,9 +2357,8 @@ object RelationalQueries {
       """SELECT CAST(n_regionkey AS BIGINT) AS rk, count(*) AS n,
         |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation GROUP BY rk ORDER BY rk""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s60").toString
-      val src = java.nio.file.Files.createTempDirectory("graft-s60src")
-        .toString
+      val wh = TempDirs.scratch("graft-s60")
+      val src = TempDirs.scratch("graft-s60src")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gcw_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2404,9 +2403,8 @@ object RelationalQueries {
       """SELECT CAST(n_regionkey AS BIGINT) AS rk, count(*) AS n,
         |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation GROUP BY rk ORDER BY rk""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s61").toString
-      val src = java.nio.file.Files.createTempDirectory("graft-s61src")
-        .toString
+      val wh = TempDirs.scratch("graft-s61")
+      val src = TempDirs.scratch("graft-s61src")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gcc_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2461,9 +2459,8 @@ object RelationalQueries {
       """SELECT CAST(n_regionkey AS BIGINT) AS rk, count(*) AS n,
         |  CAST(sum(n_nationkey) AS BIGINT) AS key_sum
         |FROM nation GROUP BY rk ORDER BY rk""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s62").toString
-      val src = java.nio.file.Files.createTempDirectory("graft-s62src")
-        .toString
+      val wh = TempDirs.scratch("graft-s62")
+      val src = TempDirs.scratch("graft-s62src")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gcj_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2513,7 +2510,7 @@ object RelationalQueries {
         |SELECT 'net', CAST((SELECT n FROM kept) + 1 AS BIGINT),
         |  CAST(1 AS BIGINT)
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s63").toString
+      val wh = TempDirs.scratch("graft-s63")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"ghm_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2569,7 +2566,7 @@ object RelationalQueries {
         |  CAST(COALESCE(sum(n_nationkey), 0) AS BIGINT)
         |FROM nation WHERE n_nationkey % 7 <> 0
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s65").toString
+      val wh = TempDirs.scratch("graft-s65")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gwp_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2624,7 +2621,7 @@ object RelationalQueries {
         |  CAST(COALESCE(sum(n_nationkey), 0) AS BIGINT)
         |FROM nation
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s66").toString
+      val wh = TempDirs.scratch("graft-s66")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gbr_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2675,7 +2672,7 @@ object RelationalQueries {
         |  CAST(COALESCE(sum(k), 0) AS BIGINT)
         |FROM all_rows WHERE k % 3 <> 0
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s67").toString
+      val wh = TempDirs.scratch("graft-s67")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gff_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2731,7 +2728,7 @@ object RelationalQueries {
         |SELECT 'main', CAST(count(*) AS BIGINT),
         |  CAST(sum(k) AS BIGINT) FROM m
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s69").toString
+      val wh = TempDirs.scratch("graft-s69")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gcp_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2790,7 +2787,7 @@ object RelationalQueries {
         |SELECT 'main', CAST(count(*) AS BIGINT),
         |  CAST(sum(k) AS BIGINT) FROM merged
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s71").toString
+      val wh = TempDirs.scratch("graft-s71")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gmb_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2861,7 +2858,7 @@ object RelationalQueries {
         |  CAST(sum(k) AS BIGINT) FROM (SELECT n_nationkey AS k
         |                               FROM nation) m
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s73").toString
+      val wh = TempDirs.scratch("graft-s73")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gbb_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2913,7 +2910,7 @@ object RelationalQueries {
         |UNION ALL SELECT 'head_rows', c + 10 FROM n
         |UNION ALL SELECT 'retained', CAST(4 AS BIGINT) FROM n
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s74").toString
+      val wh = TempDirs.scratch("graft-s74")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gab_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -2961,7 +2958,7 @@ object RelationalQueries {
         |UNION ALL
         |SELECT CAST(7 AS INT), c + 1, s + 100 FROM n
         |ORDER BY score_g""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s76").toString
+      val wh = TempDirs.scratch("graft-s76")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gdf_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3000,7 +2997,7 @@ object RelationalQueries {
         |UNION ALL SELECT 'retained_after', CAST(5 AS DOUBLE) FROM n
         |UNION ALL SELECT 'retained_mid', CAST(3 AS DOUBLE) FROM n
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s78").toString
+      val wh = TempDirs.scratch("graft-s78")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gtr_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3067,7 +3064,7 @@ object RelationalQueries {
         |UNION ALL SELECT 'live', row_id, k,
         |  CASE WHEN k % 5 = 0 THEN name || '+' ELSE name END FROM base
         |ORDER BY probe, row_id""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s77").toString
+      val wh = TempDirs.scratch("graft-s77")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"grt_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3137,7 +3134,7 @@ object RelationalQueries {
         |  CAST((SELECT count(*) FROM upd) AS BIGINT),
         |  CAST((SELECT sum(k) FROM upd) AS BIGINT)
         |ORDER BY change_class""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s79").toString
+      val wh = TempDirs.scratch("graft-s79")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gma_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3203,7 +3200,7 @@ object RelationalQueries {
         |  ('MERGE_BRANCH', 'b2', 'branch', 3))
         |AS t(action, ref, kind, version)
         |ORDER BY action, ref""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s75").toString
+      val wh = TempDirs.scratch("graft-s75")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"grl_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3258,7 +3255,7 @@ object RelationalQueries {
         |  SELECT 'v1', 'tag', 1, 1, CAST(NULL AS INTEGER),
         |    CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), c FROM n)
         |ORDER BY name""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s68").toString
+      val wh = TempDirs.scratch("graft-s68")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gbf_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3321,7 +3318,7 @@ object RelationalQueries {
         |FROM nation WHERE n_nationkey % 2 = 0
         |GROUP BY region_key ORDER BY region_key""".stripMargin) {
       (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s70").toString
+      val wh = TempDirs.scratch("graft-s70")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gvw_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3368,7 +3365,7 @@ object RelationalQueries {
         |UNION ALL
         |SELECT 'zorder_default', 1, 1
         |ORDER BY probe""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s72").toString
+      val wh = TempDirs.scratch("graft-s72")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gcl_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3415,7 +3412,7 @@ object RelationalQueries {
         |    AS BIGINT) AS live_rows
         |FROM nation GROUP BY part_key ORDER BY part_key""".stripMargin) {
       (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s64").toString
+      val wh = TempDirs.scratch("graft-s64")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gpm_$tag"
       s.conf.set(s"spark.sql.catalog.$w",
@@ -3457,7 +3454,7 @@ object RelationalQueries {
         |    CAST(COALESCE(max(length(text)), 0) AS BIGINT)
         |  FROM documents)
         |ORDER BY col_name""".stripMargin) { (s, dir) =>
-      val wh = java.nio.file.Files.createTempDirectory("graft-s55").toString
+      val wh = TempDirs.scratch("graft-s55")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gaw_$tag"
       s.conf.set(s"spark.sql.catalog.$w",

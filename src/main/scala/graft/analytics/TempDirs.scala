@@ -2,10 +2,12 @@ package graft.analytics
 
 import java.nio.file.{Files, Path}
 
-/** Scratch directories for the write-path round-trip queries (s21/s22/
-  * s27/s28): created under java.io.tmpdir and deleted recursively at JVM
-  * exit, so repeated Verify/Bench runs don't accumulate copies of the
-  * written tables on the host. Deletion is at-exit (not post-query)
+/** The only way the program makes a temporary directory: session
+  * warehouses, the write-path round-trip queries' outputs and the
+  * catalog queries' warehouses (s21 onward), and test scratch space.
+  * Each is created under java.io.tmpdir and deleted recursively at JVM
+  * exit, so repeated Verify/Bench/test runs don't accumulate copies of
+  * the written tables on the host. Deletion is at-exit (not post-query)
   * because the returned DataFrames scan the files lazily — the caller's
   * action may run long after the query builder returned. */
 object TempDirs {

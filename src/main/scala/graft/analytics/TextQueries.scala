@@ -372,7 +372,7 @@ object TextQueries {
     * signature/hash expressions would run on as many cores as files).
     * UNPERSISTED — the single-pipeline callers ([[ngramScoredOver]],
     * t5) persist one projection PAST their hash/minhash expressions
-    * (the HOF-generator re-eval landmine, see ProfileT5), so for them
+    * (the HOF-generator re-eval landmine, OPTIMIZATION_r20.md), so for them
     * this projection collapses into that one corpus pass; qa6 persists
     * THIS frame once and feeds both pipelines, saving the second
     * tokenize+shingle pass over the corpus (opt guide §1.2: don't
@@ -390,9 +390,9 @@ object TextQueries {
     * single shuffle. The persist is a hard materialization boundary
     * between the HOF signature expressions and the Generate: an
     * expensive array expression feeding explode re-evaluates per
-    * generated row (~8× measured — ProfileT5), while cached rows
-    * explode at memory speed. At scale this stage would be checkpointed
-    * for the same reason. */
+    * generated row (~8× measured in r18 — OPTIMIZATION_r20.md), while
+    * cached rows explode at memory speed. At scale this stage would be
+    * checkpointed for the same reason. */
   private[analytics] def lshPairsOverShingles(
       shingles: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -456,7 +456,7 @@ object TextQueries {
     // (hash collisions hit both engines identically, so the oracle stays
     // exact); hashing INSIDE the persisted projection means the explode
     // generator below is a bare cached attribute — an expensive HOF
-    // generator re-evaluates per generated row (see ProfileT5).
+    // generator re-evaluates per generated row (OPTIMIZATION_r20.md).
     val sh = Caches.persistTracked(
       shingles.select(col("doc_id"),
         transform(col("sh"), x => TF.polyHash(x)).as("hs")))
@@ -472,7 +472,7 @@ object TextQueries {
     // cache scan. GatedBroadcast keeps the 100 TB posture: a corpus
     // whose hot set outgrows the driver ceiling degrades to the keyed
     // shuffle this join used to pay always. Measured at sf0.1
-    // (ProfilePairs, checksum-identical): full pipeline ~1.5 → ~1.3 s.
+    // (OPTIMIZATION_r20.md, checksum-identical): full pipeline ~1.5 → ~1.3 s.
     val hot = Caches.persistTracked(
       ex.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") > MaxShingleDf).select("h"))

@@ -1,24 +1,17 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
+import graft.SparkEntry
 
-/** Dev-only: dump formatted physical plans for every registered query so
-  * pushdown (PushedFilters/ReadSchema), join strategies, and exchange
-  * counts can be reviewed. Usage: runMain graft.dev.Explain [queryName]. */
+/** Dev-only: dump formatted physical plans for every registered query,
+  * on the Bench session, so pushdown (PushedFilters/ReadSchema), join
+  * strategies, and exchange counts can be reviewed. Usage:
+  * runMain graft.dev.Explain [queryName]. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftFunctions.registerAll(spark)
+    val spark = SparkEntry.session("graft-explain-wh")
     val dir = "/root/testdata/sf0.001"
     val only = args.headOption
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_ == q._1))
       .foreach { case (name, fn) =>
         println(s"\n========== $name ==========")

@@ -1,43 +1,36 @@
 package graft.dev
 
 import org.apache.spark.sql.SparkSession
+import graft.{QueryProfile, SparkEntry}
 
-/** Dev-only: time one named registry query repeatedly at a given sf dir
-  * (steady-state isolation for a single query — `TimeTwice` for the full
-  * suite). Usage: runMain graft.dev.ProfileQuery <name> [sfDir] [reps]. */
+/** Dev-only: profile registry queries on the Bench session, `reps`
+  * times each — builder, action and Catalyst time, then jobs, stages,
+  * tasks, executor time and shuffle per Spark call site
+  * ([[graft.QueryProfile]]). Usage:
+  * runMain graft.dev.ProfileQuery [name] [sfDir] [reps]; an empty or
+  * missing name profiles every registry query. */
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
-    val name = args.headOption.getOrElse("t5_minhash_lsh")
+    val names = args.headOption.filter(_.nonEmpty).toSeq
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val builder0 = SparkSession.builder()
-    // PROFILE_EXTENSIONS=1 reproduces the Bench session shape (the
-    // injected parser/rule/function extensions); unset isolates a
-    // query from extension-rule analysis cost for A/B attribution
-    val builder =
-      if (sys.env.contains("PROFILE_EXTENSIONS"))
-        builder0.config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      else builder0
-    val spark = builder
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-profwh").toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftFunctions.registerAll(spark)
-    val fn = graft.SparkEntry.queries(name)
-    if (sys.env.contains("PROFILE_EXPLAIN"))
-      fn(spark, sfDir).explain("formatted")
-    (1 to reps).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
-      graft.analytics.Caches.release()
-      println(f"$name rep $i: ${(System.nanoTime() - t0) / 1e9}%6.2fs rows=$n")
+    val spark = SparkEntry.session("graft-profile-wh")
+    try profile(spark, names, sfDir, reps) finally spark.stop()
+  }
+
+  /** Profile `names` (every registry query when empty) `reps` times
+    * each on `spark`, printing each profile as it completes. */
+  def profile(spark: SparkSession, names: Seq[String], sfDir: String,
+              reps: Int): Seq[(String, QueryProfile)] = {
+    val queries = SparkEntry.queries
+    for {
+      name <- if (names.isEmpty) queries.keys.toSeq.sorted else names
+      rep <- 1 to reps
+    } yield {
+      val p = try QueryProfile.run(spark)(queries(name)(spark, sfDir))
+        finally graft.analytics.Caches.release()
+      println(p.render(s"$name rep $rep"))
+      name -> p
     }
-    spark.stop()
   }
 }

@@ -21,7 +21,7 @@ object TestSpark {
       .config("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+        graft.analytics.TempDirs.scratch("graft-wh"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     graft.plans.GraftFunctions.registerAll(s)
@@ -31,6 +31,6 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh directory, reclaimed at test-JVM exit. */
+  def tmpDir(prefix: String): String = graft.analytics.TempDirs.scratch(prefix)
 }
