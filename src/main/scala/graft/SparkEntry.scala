@@ -30,10 +30,10 @@ object SparkEntry {
 
   /** The one session recipe of Bench, Verify and the dev tools:
     * `local[cpus]` with as many shuffle partitions, the graft extensions
-    * and functions, nanosecond parquet timestamps read as longs, UTC, no
-    * UI, and a fresh warehouse per JVM — the write-path queries create
-    * managed tables, and a warehouse reused across JVMs throws
-    * LOCATION_ALREADY_EXISTS (the catalog forgets, the directory
+    * (which inject the functions), nanosecond parquet timestamps read as
+    * longs, UTC, no UI, and a fresh warehouse per JVM — the write-path
+    * queries create managed tables, and a warehouse reused across JVMs
+    * throws LOCATION_ALREADY_EXISTS (the catalog forgets, the directory
     * remains). TempDirs reclaims the warehouse at JVM exit. */
   def session(warehousePrefix: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -46,7 +46,6 @@ object SparkEntry {
       .config("spark.sql.warehouse.dir", TempDirs.scratch(warehousePrefix))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftFunctions.registerAll(spark)
     spark
   }
 }

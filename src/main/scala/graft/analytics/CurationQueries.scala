@@ -103,7 +103,6 @@ object CurationQueries {
          |LEFT JOIN (SELECT * FROM capped WHERE rk <= ${TextQueries.SourceCap})
          |  c ON k.doc_id = c.doc_id
          |GROUP BY k.source ORDER BY k.source""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val docs = Tables.documents(s, dir)
       // stage 1: exact dedup (t4's key, min-doc_id keeper) — the
       // min-over-window is spelled row_number() = 1 (r21, opt guide
@@ -273,7 +272,6 @@ object CurationQueries {
          |LEFT JOIN fin c ON k.doc_id = c.doc_id
          |LEFT JOIN budget bu ON k.doc_id = bu.doc_id
          |GROUP BY k.source ORDER BY k.source""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val cat = s"c2c_${java.util.UUID.randomUUID().toString.take(8)}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.GraftCatalog].getName)
@@ -526,7 +524,6 @@ object CurationQueries {
          |    AS weight
          |FROM st CROSS JOIN g ORDER BY source""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // stage 1: BPE train — the SHARED t48 loop (one train per
       // invocation; vocab is the persisted (tokenization, word-count)
       // table the encode reads)
@@ -665,7 +662,6 @@ object CurationQueries {
          |  CAST((cum - 1) // $ChunkTokens
          |       - (cum - n_tokens) // $ChunkTokens + 1 AS BIGINT) AS n_chunks
          |FROM w ORDER BY shard, doc_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val shard = pmod(
         TF.polyHash(concat(lit("pack|"), col("doc_id").cast("string"))),
         lit(PackShards)).cast("int")
@@ -814,7 +810,6 @@ object CurationQueries {
          |FROM newc JOIN sizes s ON newc.centroid_id = s.centroid_id
          |ORDER BY 1, 2""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -888,7 +883,6 @@ object CurationQueries {
          |JOIN sig b ON c.index_doc = b.doc_id
          |ORDER BY new_doc, index_doc""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val toks = TF.tokens(col("text"))
       val isNew = pmod(
         TF.polyHash(concat(lit("smpl|"), col("doc_id").cast("string"))),
@@ -960,7 +954,6 @@ object CurationQueries {
          |    AS chunk_hash
          |FROM c ORDER BY doc_id, chunk_idx""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val W = ChunkWords.toInt; val S = ChunkStride.toInt
       val toks = TF.tokens(col("text"))
       val nch = when(col("n") <= W, lit(1L))
@@ -999,7 +992,6 @@ object CurationQueries {
          |FROM sh JOIN f USING (h)
          |GROUP BY sh.doc_id ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // the oracle's shingle-level join-back is the semantic statement;
       // the plan reformulates it as two DOC-cardinality aggregates
       // (n_novel = ownership count of first-occurrence groups; shingles
@@ -1049,7 +1041,6 @@ object CurationQueries {
          |    AS scrub_hash
          |FROM k ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val blockArr = array(Blocklist.map(lit): _*)
       val toks = TF.tokens(col("text"))
       val kept = filter(toks, t => !array_contains(blockArr, t))

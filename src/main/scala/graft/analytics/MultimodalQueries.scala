@@ -315,7 +315,6 @@ object MultimodalQueries {
          |    AS duration_us
          |FROM a ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val media = Multimodal.attachPayload(
         Tables.documents(s, dir).repartition(col("doc_id")), "doc_id", "text")
       media.filter(col("modality") === "audio")
@@ -358,7 +357,6 @@ object MultimodalQueries {
          |  CAST($imgWSql AS BIGINT) * $imgHSql AS n_pixels
          |FROM i ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val media = Multimodal.attachPayload(
         Tables.documents(s, dir).repartition(col("doc_id")), "doc_id", "text")
       media.filter(col("modality") === "image")
@@ -398,7 +396,6 @@ object MultimodalQueries {
          |  CAST($nFrameSql AS BIGINT) * $vidUsSql AS duration_us
          |FROM v ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val media = Multimodal.attachPayload(
         Tables.documents(s, dir).repartition(col("doc_id")), "doc_id", "text")
       media.filter(col("modality") === "video")

@@ -1444,7 +1444,6 @@ object RelationalQueries {
       s"""SELECT o_orderpriority AS priority, COUNT(*) AS n_orders,
          |  ${Exact.sqlSum("o_totalprice")} AS total
          |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val isDelta = pmod(
         TF.polyHash(concat(lit("incr|"), col("o_orderkey").cast("string"))),
         lit(100L)) < 10
@@ -1575,7 +1574,6 @@ object RelationalQueries {
          |WHERE v1.k IS NULL OR v2.k IS NULL OR v1.price <> v2.price
          |ORDER BY k""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val (v1, v2) = cdcSnapshots(s, dir)
       cdcChangelog(v1, v2).orderBy("k")
     },
@@ -1596,7 +1594,6 @@ object RelationalQueries {
          |       ELSE CAST(o_totalprice AS DOUBLE) END AS price
          |FROM orders WHERE $h >= 5 ORDER BY k""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val (v1, v2) = cdcSnapshots(s, dir)
       val changes = cdcChangelog(v1, v2)
         .select(col("k"), col("new_price").as("price"), col("change_type"))
@@ -1621,7 +1618,6 @@ object RelationalQueries {
          |       ELSE CAST(o_totalprice AS DOUBLE) END AS price
          |FROM orders WHERE $h >= 5 ORDER BY k""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val (v1, v2) = cdcSnapshots(s, dir)
@@ -1668,7 +1664,6 @@ object RelationalQueries {
          |FROM t WHERE pr = '1-URGENT' AND h >= 30 AND h < 35
          |ORDER BY k""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val target = Tables.orders(s, dir)
@@ -1776,7 +1771,6 @@ object RelationalQueries {
          |SELECT 3, count(*), ${Exact.sqlSum("price", 3)} FROM v3
          |ORDER BY version""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s32_target"
@@ -1951,7 +1945,6 @@ object RelationalQueries {
          |       ELSE CAST(o_totalprice AS DOUBLE) END AS price
          |FROM orders WHERE NOT ($h >= 80) ORDER BY k""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val h = pmod(TF.polyHash(
@@ -1986,7 +1979,6 @@ object RelationalQueries {
          |FROM orders WHERE $h <> 3
          |GROUP BY 1 ORDER BY p""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val wh = TempDirs.scratch("graft-s49")
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val w = s"gdw_$tag" // writer "process"
@@ -3959,7 +3951,6 @@ object RelationalQueries {
         |SELECT c_mktsegment, CAST(rk AS INT) AS rank, c_acctbal AS bal
         |FROM r WHERE rk <= 5
         |ORDER BY c_mktsegment, rank""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       Tables.customer(s, dir)
         .groupBy("c_mktsegment")
         .agg(graft.plans.GraftFunctions.topK(col("c_acctbal"), 5).as("tk"))
@@ -4235,7 +4226,6 @@ object RelationalQueries {
          |SELECT 4, count(*), ${Exact.sqlSum("price", 3)} FROM v3
          |ORDER BY probe""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s34_target"
@@ -4297,7 +4287,6 @@ object RelationalQueries {
          |SELECT 'pre', count(*), ${Exact.sqlSum("price", 2)} FROM src
          |ORDER BY state""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s35_target"
@@ -4350,7 +4339,6 @@ object RelationalQueries {
          |SELECT 'src', count(*), ${Exact.sqlSum("price", 2)} FROM src
          |ORDER BY side""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s36_src"
@@ -4497,7 +4485,6 @@ object RelationalQueries {
         |""".stripMargin +
         s"  ${Exact.sqlSum("price", 2)} AS total FROM src"
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val src = "graft_cat.ns.s39_src"
@@ -4561,7 +4548,6 @@ object RelationalQueries {
          |SELECT 'insert', count(*), ${Exact.sqlSum("price", 3)} FROM ins
          |ORDER BY change_type""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s40_t"
@@ -4607,7 +4593,6 @@ object RelationalQueries {
          |SELECT 'undone', count(*), ${Exact.sqlSum("price", 3)} FROM upd
          |ORDER BY probe""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s41_t"
@@ -4655,7 +4640,6 @@ object RelationalQueries {
         |""".stripMargin +
         s"  ${Exact.sqlSum("price", 2)} AS total FROM src"
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val src = "graft_cat.ns.s42_src"
@@ -4745,7 +4729,6 @@ object RelationalQueries {
          |SELECT count(*) AS n, ${Exact.sqlSum("price", 3)} AS total
          |FROM fin""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s44_t"
@@ -4806,7 +4789,6 @@ object RelationalQueries {
          |SELECT 'v1', count(*), ${Exact.sqlSum("price", 3)} FROM src
          |ORDER BY probe""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s45_t"
@@ -4955,7 +4937,6 @@ object RelationalQueries {
          |  CAST(min(price) >= 0 AS INT) AS all_valid
          |FROM src""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       s.conf.set("spark.sql.catalog.graft_cat",
         classOf[graft.sources.GraftCatalog].getName)
       val t = "graft_cat.ns.s48_t"

@@ -362,7 +362,6 @@ object TextQueries {
     * MaxShingleDf². */
   private def ngramScored(s: org.apache.spark.sql.SparkSession,
                           dir: String): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.registerAll(s)
     ngramScoredOver(Tables.documents(s, dir))
   }
 
@@ -632,7 +631,6 @@ object TextQueries {
          |JOIN lsig b ON c.doc_b = b.doc_id
          |ORDER BY doc_a, doc_b""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       lshPairsOverShingles(shingled3(Tables.documents(s, dir)))
         .orderBy("doc_a", "doc_b")
     },
@@ -643,7 +641,6 @@ object TextQueries {
          |h AS (SELECT doc_id, list_transform(l, tk -> ${TS.hash("tk")}) AS hs FROM t)
          |SELECT doc_id, ${TS.simhash("hs")} AS simhash
          |FROM h ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val toks = TF.tokens(col("text"))
       Tables.documents(s, dir).repartition(col("doc_id"))
         .withColumn("hs", transform(toks, t => TF.polyHash(t)))
@@ -686,7 +683,6 @@ object TextQueries {
          |SELECT doc_a, doc_b, CAST(bit_count(xor(sha, shb)) AS INT) AS hamming
          |FROM cand WHERE bit_count(xor(sha, shb)) <= 3
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val toks = TF.tokens(col("text"))
       // signatures feed both sides of the band join: persist once
       val sig = Caches.persistTracked(
@@ -808,7 +804,6 @@ object TextQueries {
          |FROM documents
          |WHERE ${TS.hash("'smpl|' || doc_id")} % 100 < 10
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val bucket = pmod(
         TF.polyHash(concat(lit("smpl|"), col("doc_id").cast("string"))), lit(100L))
       Tables.documents(s, dir)
@@ -982,7 +977,6 @@ object TextQueries {
          |SELECT doc_id, unnest(fps) AS fp
          |FROM fp ORDER BY doc_id, fp""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // the codegen-native one-pass winnow (monotonic-deque sliding min
       // over compositional shingle hashes — no per-window slice allocs);
       // FunctionsSpec pins it against the HOF formulation the oracle
@@ -1018,7 +1012,6 @@ object TextQueries {
          |FROM shared s JOIN tot t ON s.source_a = t.source
          |ORDER BY source_a, source_b""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val toks = TF.tokens(col("text"))
       // persist: fp feeds three consumers (both self-join sides + totals);
       // uncached, each would re-scan and re-fingerprint the corpus
@@ -1112,7 +1105,6 @@ object TextQueries {
          |SELECT doc_id, fingerprint,
          |  count(*) OVER (PARTITION BY fingerprint) AS cluster_size
          |FROM fp ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val toks = TF.tokens(col("text"))
       Tables.documents(s, dir)
         .select(col("doc_id"), TF.fingerprint(toks).as("fingerprint"))
@@ -1263,7 +1255,6 @@ object TextQueries {
          |$joins
          |ORDER BY true_n DESC, term""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val counts = Caches.persistTracked(
         Tables.documents(s, dir)
           .select(explode(TF.tokens(col("text"))).as("term"))
@@ -1346,7 +1337,6 @@ object TextQueries {
          |  round(f.hll_est / x.n_exact - 1, 4) AS rel_err
          |FROM x JOIN f USING (source) ORDER BY source""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // one token explode feeds both the register build and the exact
       // yardstick — persist it (unpersisted, the explode runs twice)
       val toks = Caches.persistTracked(
@@ -1404,7 +1394,6 @@ object TextQueries {
          |FROM c JOIN b ON c.h = b.h
          |GROUP BY 1 ORDER BY 1""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // hash inside the persisted projection; explode from cache (the
       // generator-re-eval landmine, same rationale as the t7 pipeline)
       val sh = Caches.persistTracked(
@@ -1447,7 +1436,6 @@ object TextQueries {
          |FROM r WHERE rank <= 50
          |ORDER BY lang, rank""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val k = 50
       val h = pmod(
         TF.polyHash(concat(lit("strat|"), col("doc_id").cast("string"))),
@@ -1730,7 +1718,6 @@ object TextQueries {
          |  CAST((SELECT count(*) FROM hit) AS DOUBLE)
          |    / (SELECT count(*) FROM cand) AS prec""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // ONE shared tokenize+shingle pass (r20, opt guide §1.2): both
       // pair sets start from the same 3-token shingle stage, so it
       // persists once and feeds the exact pipeline's hash projection
@@ -1875,7 +1862,6 @@ object TextQueries {
          |    THEN n_chars ELSE 0 END) AS BIGINT) AS kept_chars
          |FROM g GROUP BY source ORDER BY source""".stripMargin
     ) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // per-doc stats in one narrow pass (see gateStats); words == 0
       // docs drop here exactly as the explode shape's missing rows did
       val d = Tables.documents(s, dir)
@@ -1950,7 +1936,6 @@ object TextQueries {
          |SELECT bucket, n_clusters, n_docs FROM hist
          |ORDER BY bucket""".stripMargin
     ) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val comp = Caches.persistTracked(
         graft.operators.ConnectedComponents(
           ngramScored(s, dir).filter(col("jac") >= 0.2)
@@ -2522,7 +2507,6 @@ object TextQueries {
          |  CAST(sum(n_chars) AS BIGINT) AS n_chars
          |FROM sp GROUP BY split ORDER BY split""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val edges = ngramScored(s, dir)
         .filter(col("jac") >= 0.2)
         .select("doc_a", "doc_b")
@@ -2591,7 +2575,6 @@ object TextQueries {
          |  CAST(sum(nt) AS BIGINT) AS total_tokens
          |FROM d GROUP BY source ORDER BY source""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       // hash INSIDE the persisted projection (generator-children
       // gotcha), one explode shuffle reused by both censuses and the
       // per-token probe

@@ -118,7 +118,6 @@ object VectorQueries {
          |       round(cos, 6) AS cosine
          |FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -156,7 +155,6 @@ object VectorQueries {
          |       round(cos, 6) AS cosine
          |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -216,7 +214,6 @@ object VectorQueries {
          |       round(cos, 6) AS cosine
          |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -292,7 +289,6 @@ object VectorQueries {
          |       round(cos, 6) AS cosine
          |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -357,7 +353,6 @@ object VectorQueries {
          |       round(cos, 6) AS cosine
          |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val bucket = hpBucket(col("v"))
       val b = Tables.embeddings(s, dir)
         .select(col("vec_id"), VF.toDoubleArr(col("embedding")).as("v"))
@@ -413,7 +408,6 @@ object VectorQueries {
          |WHERE $cos >= 0.25
          |ORDER BY vec_a, vec_b""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -471,7 +465,6 @@ object VectorQueries {
          |FROM n LEFT JOIN removedv p ON n.vec_id = p.r
          |GROUP BY n.label ORDER BY n.label""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))
@@ -594,7 +587,6 @@ object VectorQueries {
          |       round(n_hits / 3.0, 6) AS recall_at_3
          |FROM hits ORDER BY query_id""".stripMargin
     }) { (s, dir) =>
-      graft.plans.GraftFunctions.registerAll(s)
       val b = Tables.embeddings(s, dir)
         .select(col("vec_id"), VF.toDoubleArr(col("embedding")).as("v"))
         .withColumn("nrm", VF.norm(col("v")))

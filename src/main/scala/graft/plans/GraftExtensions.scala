@@ -8,10 +8,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * `spark.sql.extensions=graft.plans.GraftExtensions` (cluster-wide via
   * `--conf`, no code change in the consuming job) and `poly_hash`,
   * `vec_dot` and `topk` resolve in SQL and `call_function` from session
-  * construction on — the production route to the same registry entries
-  * that [[GraftFunctions.registerAll]] installs per-session (Verify, Bench
-  * and the test harness keep using the latter because their sessions are
-  * built before the library is on `spark.sql.extensions`).
+  * construction on — the same registry entries that
+  * [[GraftFunctions.registerAll]] installs into one existing session.
+  * `SparkEntry.session` (Verify, Bench, the dev tools) relies on this
+  * route alone; query builders never register functions themselves.
   *
   * Unlike `createOrReplaceTempFunction`, injected builders are part of the
   * session state builder, so `SparkSession.newSession()` and cloned

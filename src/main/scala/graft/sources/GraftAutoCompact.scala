@@ -4,9 +4,10 @@ import java.util.concurrent.{CountDownLatch, Executors, ThreadFactory}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** The auto-compaction daemon: one background thread per JVM runs every
-  * table's queued passes (serialized — a compaction storm across many
-  * tables degrades to a queue, never to N concurrent rewrites fighting
-  * the same executors). Passes take their own leases
+  * durable table's queued passes (serialized — a compaction storm
+  * across many tables degrades to a queue, never to N concurrent
+  * rewrites fighting the same executors); an in-JVM table compacts
+  * inside its triggering commit. Passes take their own leases
   * ([[GraftTable]].autoCompactPass), so nothing here holds table locks;
   * the thread is a daemon, so a JVM exit never waits on maintenance.
   *

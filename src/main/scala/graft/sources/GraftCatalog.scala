@@ -1870,68 +1870,72 @@ class GraftTable(initialName: String, initialSchema: StructType,
   private def keyOfOpt: Option[InternalRow => Seq[Any]] =
     boundGroupKeyFor(tableSchema)
 
-  /** Rebuild every file through `rewrite` (a positional row transform
-    * that PRESERVES row order and count) under `newSchema`; delete
-    * vectors follow their file (positions preserved). The group key
-    * binds against the NEW schema — the rewritten rows' layout — never
-    * the table's current one (a DROP COLUMN before the partition column
-    * would otherwise read the key from a shifted ordinal). */
+  /** In-JVM ADD COLUMN and ALTER COLUMN TYPE: rebuild every heap file
+    * through `rewrite` (a positional row transform that PRESERVES row
+    * order and count) under `newSchema`. The group key binds against the
+    * NEW schema — the rewritten rows' layout — never the table's current
+    * one. */
   private def rebuildFiles(newSchema: StructType,
       rewrite: InternalRow => InternalRow): Unit = {
     val keyOf = boundGroupKeyFor(newSchema)
-    val pairs = files.map { f =>
+    installRebuilt(files.map { f =>
       val nf = GraftDataFile.build(f.rows.map(rewrite), newSchema, keyOf)
       nf.track = f.track // positional contract: same rows, same order
       f -> nf
-    }
+    })
+  }
+
+  /** Swap in the positional rebuild `pairs` (old file -> new file):
+    * delete vectors follow their file (positions preserved), and the
+    * rebuilt state publishes BEFORE the caller swaps the schema — a
+    * scan builder created in the window between the two assignments
+    * must pair the new files with the OLD schema (safe for adds — old
+    * ordinals resolve against wider rows; loud for drops — out of
+    * bounds), never the NEW (narrower) schema with the old files, which
+    * would silently read shifted ordinals. snap() republishes at the end
+    * of the change as before. */
+  private def installRebuilt(
+      pairs: Vector[(GraftDataFile, GraftDataFile)]): Unit = {
     dvs = dvs.flatMap { case (of, bs) =>
       pairs.find(_._1 eq of).map(_._2 -> bs)
     }
     files = pairs.map(_._2)
-    // publish the rebuilt state BEFORE the caller swaps the schema: a
-    // scan builder created in the window between the two assignments
-    // must pair the new files with the OLD schema (safe for adds — old
-    // ordinals resolve against wider rows; loud for drops — out of
-    // bounds), never the NEW (narrower) schema with the old files,
-    // which would silently read shifted ordinals. snap() republishes
-    // at the end of the change as before.
     readState = (files, dvs)
   }
 
-  /** Distributed twin of [[rebuildFiles]] for POSITIONAL projections
-    * (DROP COLUMN): one [[GraftRewrite.compact]] task per file reads
-    * only the kept ordinals of its segment and writes the rebuilt
-    * segment — a 100 TB drop spreads across the cluster instead of
-    * moving every row through driver heap. Row order and count are
-    * preserved, so delete vectors re-key to the new files by position
-    * and row identity carries 1:1. Returns false (caller falls back to
-    * the driver rebuild) when a file is heap-resident or a position
-    * view, on in-JVM tables, or without an active session. */
+  /** DROP COLUMN's rebuild, on either store: one positional
+    * [[GraftRewrite.compact]] job per file ([[runTasks]]) reads the
+    * `keep` ordinals of every stored row — from the segment where it
+    * lies, or a heap file's rows — and lands the rebuilt file, so a
+    * 100 TB drop spreads across the cluster instead of moving every row
+    * through driver heap. Row order and count are preserved, so delete
+    * vectors re-key to the new files by position and row identity
+    * carries 1:1. A position view rebuilds its whole base segment and
+    * becomes the same view over the rebuilt one: its selection,
+    * `_row_id`s and delete vector keep their original positions exactly
+    * (a durable table's; an in-JVM table cannot hold the rebuilt base,
+    * and `viewOf` refuses). */
   private def rebuildFilesDistributed(newSchema: StructType,
-                                      keep: Array[Int]): Boolean = {
-    if (!files.forall(rewritable)) return false
+      keep: Array[Int]): Unit = {
     val rebuilt = runTasks()(spec => files.zipWithIndex.map { case (f, i) =>
-      GraftCompactJob(Seq(GraftSegmentScanPartition.of(f, keep)),
-        spec.copy(schemaJson = newSchema.json, rowTracking = false), i, Nil,
-        Int.MaxValue, positional = true)
+      val in = GraftTable.inputOf(f, tableSchema,
+        scala.collection.immutable.BitSet.empty, Nil, keep) match {
+        // a view reads its base's every position
+        case s: GraftSegmentScanPartition =>
+          s.copy(sel = Array.empty, selExclude = false)
+        case heap => heap
+      }
+      GraftCompactJob(Seq(in), spec.copy(schemaJson = newSchema.json,
+        rowTracking = false), i, Nil, Int.MaxValue, positional = true)
     })(GraftRewrite.compact)
-    rebuilt.foreach { metas =>
-      val pairs = files.zip(metas.toVector.map { ms =>
-        require(ms.length == 1, s"rebuild job must emit one segment, got " +
-          s"${ms.length}")
-        adoptSegments(ms.toSeq, newSchema).head
-      })
+    installRebuilt(files.zip(rebuilt).map { case (of, out) =>
+      val nf = adopt(out.toSeq, newSchema).head
       // explicit vectors re-materialize beside the rebuilt segment
-      pairs.foreach { case (of, nf) =>
-        nf.track = GraftRowTrack.carry(of.track, nf)
+      nf.track = GraftRowTrack.carry(of.track, nf)
+      of -> of.viewSel.fold(nf) { case (bs, ex) =>
+        GraftDataFile.viewOf(nf, bs, ex)
       }
-      dvs = dvs.flatMap { case (of, bs) =>
-        pairs.find(_._1 eq of).map(_._2 -> bs)
-      }
-      files = pairs.map(_._2)
-      readState = (files, dvs)
-    }
-    rebuilt.isDefined
+    })
   }
 
   /** Schema evolution under the commit lock: ADD COLUMNS (nullable,
@@ -2116,20 +2120,7 @@ class GraftTable(initialName: String, initialSchema: StructType,
           val newSchema = StructType(
             oldFields.zipWithIndex.filter(_._2 != idx).map(_._1))
           val keep = oldFields.indices.filter(_ != idx).toArray
-          if (!rebuildFilesDistributed(newSchema, keep)) {
-            val dts = oldFields.map(_.dataType)
-            rebuildFiles(newSchema, { r =>
-              val vals = new Array[Any](oldFields.length - 1)
-              var i = 0
-              var o = 0
-              while (i < oldFields.length) {
-                if (i != idx) { vals(o) = r.get(i, dts(i)); o += 1 }
-                i += 1
-              }
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                vals): InternalRow
-            })
-          }
+          rebuildFilesDistributed(newSchema, keep)
           tableSchema = newSchema // after the narrow rows — loud, not wrong
 
         case sp: TableChange.SetProperty
@@ -5081,16 +5072,11 @@ class GraftTable(initialName: String, initialSchema: StructType,
     }
     val trackedCdc = rowTrackingEnabled
     val idCol = if (trackedCdc) Seq("_row_id") else Nil
-    // one change input: a persisted file's whole-width segment read, or
-    // any other file's rows in the commit's layout; a tracked input's
-    // rows end in their `_row_id`
+    // one change input: the file's whole rows in the commit's layout; a
+    // tracked input's rows end in their `_row_id`
     def inputOf(f: GraftDataFile): GraftScanPartition =
-      if (f.persisted)
-        GraftSegmentScanPartition.of(f,
-          Array.range(0, f.segment.schema.length), metaCols = idCol)
-      else GraftInputPartition(GraftTable.heapRows(f, e.schema,
-        Array.range(0, e.schema.length),
-        scala.collection.immutable.BitSet.empty, idCol, -1))
+      GraftTable.inputOf(f, e.schema, scala.collection.immutable.BitSet.empty,
+        idCol)
     def zonesFor(tagMin: String, tagMax: String,
         members: Seq[GraftDataFile], claimed: Int): Array[ColZone] = {
       val z = new Array[ColZone](outSchema.length)
@@ -5274,7 +5260,9 @@ class GraftTable(initialName: String, initialSchema: StructType,
       case GraftFilesDelivery(fs) => fs.iterator
       case GraftRowsDelivery(batch, tIds, tVers) =>
         GraftRewrite.regroup(batch, tableSchema, keyOfOpt, Nil, Int.MaxValue)
-          .iterator.map(buildPending(batch, tIds, tVers))
+          .iterator.map(idx => buildPending(idx.map(batch(_)),
+            GraftRewrite.pick(tIds, idx), GraftRewrite.pick(tVers, idx),
+            tableSchema))
     }.toVector
 
   // ---- executor-side writes -------------------------------------------
@@ -5323,49 +5311,61 @@ class GraftTable(initialName: String, initialSchema: StructType,
         // a metadata-only ADD COLUMN may have widened the table between
         // the write factory's creation and this commit — bring the
         // adopted handles in line (no-op otherwise)
-        GraftFilesDelivery(adoptSegments(m.segs.toSeq,
-          DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-          .tapEach(_.resegment(tableSchema)))
+        val schema = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+        GraftFilesDelivery(m.segs.iterator.map(adoptSegment(_, schema))
+          .tapEach(_.resegment(tableSchema)).toVector)
       case other => throw new IllegalStateException(
         s"$tableName: unexpected commit message $other")
     }
   }
 
-  /** Files for segments that tasks wrote under `schema`, registered in
+  /** The file for a segment a task wrote under `schema`, registered in
     * the durable registry so the log's encode/decode shares object
     * identity. Row identity attaches as the task left it: a lazy loader
     * for a task-written `.rowids` sidecar, or the shipped vectors as a
     * PENDING track whose Mint sentinels snap() resolves. */
-  private def adoptSegments(metas: Seq[GraftSegmentMeta],
-      schema: StructType): Vector[GraftDataFile] = {
+  private def adoptSegment(m: GraftSegmentMeta,
+      schema: StructType): GraftDataFile = {
     val d = durable.get
-    metas.iterator.map { m =>
-      val path = d.log.dir.resolve(m.rel)
-      val f = GraftDataFile.fromSegment(new GraftSegmentHandle(path, schema),
-        m.zones, m.bytes, m.groupKey, m.rowCount, bloomRefs = m.bloomRefs)
-      if (m.trackSidecar)
-        f.track = new GraftRowTrack(-1L, -1L, null, null, explicit = true,
-          loader = () => GraftRowIdSidecar.read(path))
-      else if (m.trackIds != null)
-        f.track = GraftRowTrack.pending(m.trackIds, m.trackVers)
-      d.registry.put(m.rel, f)
-      f
-    }.toVector
+    val path = d.log.dir.resolve(m.rel)
+    val f = GraftDataFile.fromSegment(new GraftSegmentHandle(path, schema),
+      m.zones, m.bytes, m.groupKey, m.rowCount, bloomRefs = m.bloomRefs)
+    if (m.trackSidecar)
+      f.track = new GraftRowTrack(-1L, -1L, null, null, explicit = true,
+        loader = () => GraftRowIdSidecar.read(path))
+    else if (m.trackIds != null)
+      f.track = GraftRowTrack.pending(m.trackIds, m.trackVers)
+    d.registry.put(m.rel, f)
+    f
   }
 
-  /** Runs task-side segment rewrites ([[GraftRewrite]]): `plan` turns a
-    * fresh write recipe (table directory, current schema and row-tracking
-    * state, a new write id) into one job per task, and each task runs
-    * `kernel` on its job under `session`. None — the caller rewrites on
-    * the driver — on in-JVM tables or without a session. */
+  /** The driver's side of every rewrite, either store: a task-written
+    * segment becomes a file reference ([[adoptSegment]]), an in-JVM
+    * chunk a heap file carrying its rows' identities ([[buildPending]]). */
+  private def adopt(chunks: Seq[GraftChunk],
+      schema: StructType): Vector[GraftDataFile] =
+    chunks.iterator.map {
+      case m: GraftSegmentMeta => adoptSegment(m, schema)
+      case GraftRowsChunk(rows, ids, vers) =>
+        buildPending(rows, ids, vers, schema)
+    }.toVector
+
+  /** Runs the rewrites ([[GraftRewrite]]) of either store: `plan` turns
+    * a fresh write recipe (table directory — none on an in-JVM table —,
+    * current schema and row-tracking state, a new write id) into jobs,
+    * and `kernel` runs on each. A durable table's jobs run as Spark
+    * tasks under `session`, one per job. An in-JVM table's run on the
+    * calling thread, where its rows live — its heap files share row
+    * objects across versions, and a task boundary would copy every row
+    * — and so does any job without a session: the same kernel either
+    * way. */
   private def runTasks[J: scala.reflect.ClassTag, R: scala.reflect.ClassTag](
       session: Option[org.apache.spark.sql.SparkSession] =
         org.apache.spark.sql.SparkSession.getActiveSession)(
-      plan: GraftWriteSpec => Seq[J])(kernel: J => R): Option[Array[R]] =
-    for (_ <- durable; sp <- session) yield {
-      val jobs = plan(writeSpec())
-      if (jobs.isEmpty) Array.empty[R]
-      else {
+      plan: GraftWriteSpec => Seq[J])(kernel: J => R): Array[R] = {
+    val jobs = plan(writeSpec())
+    session match {
+      case Some(sp) if durable.isDefined && jobs.nonEmpty =>
         val prev = org.apache.spark.sql.SparkSession.getActiveSession
         org.apache.spark.sql.SparkSession.setActiveSession(sp)
         try sp.sparkContext.parallelize(jobs, jobs.length).map(kernel)
@@ -5374,47 +5374,33 @@ class GraftTable(initialName: String, initialSchema: StructType,
           case Some(x) => org.apache.spark.sql.SparkSession.setActiveSession(x)
           case None => org.apache.spark.sql.SparkSession.clearActiveSession()
         }
-      }
+      case _ => jobs.map(kernel).toArray
     }
-
-  /** A file the task-side rewrites can take: persisted, and not a
-    * position view (callers gate on it before planning jobs). */
-  private def rewritable(f: GraftDataFile): Boolean =
-    f.persisted && f.viewSel.isEmpty
-
-  /** Rewrite input of persisted file `f`: whole stored rows minus `dead`. */
-  private def rewriteInput(f: GraftDataFile,
-      dead: scala.collection.immutable.BitSet): GraftSegmentScanPartition =
-    GraftSegmentScanPartition.of(f,
-      Array.tabulate(f.segment.schema.length)(identity), dead.toArray)
-
-  /** The driver twin's input: the live rows of `fs` (delete vectors
-    * applied) with each row's identity — Mint for an untracked file,
-    * null vectors when row tracking is off. */
-  private def liveEntries(fs: Seq[GraftDataFile])
-      : (Array[InternalRow], Array[Long], Array[Long]) = {
-    val tracking = rowTrackingEnabled
-    val es = fs.iterator.flatMap { f =>
-      val dead = deadOf(f)
-      val t = f.track
-      (0 until f.rowCount).iterator.filterNot(dead.contains).map { p =>
-        if (!tracking || t == null)
-          (f.rows(p), GraftRowTrack.Mint, GraftRowTrack.Mint)
-        else (f.rows(p), t.idAt(p), t.verAt(p))
-      }
-    }.toArray
-    (es.map(_._1), if (tracking) es.map(_._2) else null,
-      if (tracking) es.map(_._3) else null)
   }
 
-  /** A heap file of `rows(idx)` carrying their identities as a PENDING
-    * track (Mint sentinels resolve, and the track finalizes, at snap) —
-    * a rewrite moves rows, never ids. Null `ids` = nothing preserved. */
+  /** A rewrite's input: file `f`'s live rows (`dead` skipped) in
+    * `spec`'s layout, ending in their identity when `spec` tracks rows.
+    * A durable table's tasks read what [[GraftTable.inputOf]] gives
+    * them; an in-JVM table's kernel runs on the driver, so it takes
+    * every file's rows as the driver caches them. */
+  private def rewriteInput(f: GraftDataFile,
+      dead: scala.collection.immutable.BitSet,
+      spec: GraftWriteSpec): GraftScanPartition = {
+    val meta =
+      if (spec.rowTracking) Seq("_row_id", "_row_commit_version") else Nil
+    if (durable.isDefined) GraftTable.inputOf(f, spec.schema, dead, meta)
+    else GraftInputPartition(GraftTable.heapRows(f, spec.schema,
+      Array.range(0, spec.schema.length), dead, meta, -1))
+  }
+
+  /** A heap file of `rows` in `schema` carrying their identities as a
+    * PENDING track (Mint sentinels resolve, and the track finalizes, at
+    * snap) — a rewrite moves rows, never ids. Null `ids` = nothing
+    * preserved. */
   private def buildPending(rows: Array[InternalRow], ids: Array[Long],
-      vers: Array[Long])(idx: Array[Int]): GraftDataFile = {
-    val nf = GraftDataFile.build(idx.map(rows(_)), tableSchema, keyOfOpt)
-    if (ids != null)
-      nf.track = GraftRowTrack.pending(idx.map(ids(_)), idx.map(vers(_)))
+      vers: Array[Long], schema: StructType): GraftDataFile = {
+    val nf = GraftDataFile.build(rows, schema, boundGroupKeyFor(schema))
+    if (ids != null) nf.track = GraftRowTrack.pending(ids, vers)
     nf
   }
 
@@ -5465,55 +5451,37 @@ class GraftTable(initialName: String, initialSchema: StructType,
 
   /** Remove all rows of the partition groups matching `touched`. Files
     * wholly owned by a dropped group (the common, writer-aligned case)
-    * drop BY REFERENCE; files spanning groups (post-compaction) rebuild
-    * from survivors. Returns (kept files, removed row sets): the second
-    * component feeds the commit's CDC record — whole dropped files ride
-    * by reference, a partially-dropped file contributes a pseudo-file
-    * holding exactly its dropped rows. */
+    * drop BY REFERENCE; files spanning groups (post-compaction) split in
+    * tasks ([[GraftRewrite.split]]), one per file, whatever the file is.
+    * Returns (kept files, removed row sets): the second component feeds
+    * the commit's CDC record — whole dropped files ride by reference, a
+    * partially-dropped file contributes a pseudo-file holding exactly
+    * its dropped rows. */
   private def dropGroupRows(fs: Vector[GraftDataFile],
       touched: Seq[Any] => Boolean)
       : (Vector[GraftDataFile], Vector[GraftDataFile]) = {
     val kept = Vector.newBuilder[GraftDataFile]
     val removed = Vector.newBuilder[GraftDataFile]
-    // group-SPANNING rewritable files (a post-compaction layout) split
-    // in tasks ([[GraftRewrite.split]]), one per file — the driver
-    // splices references; the rest split on the driver below
-    val spanning = fs.filter(f => f.groupKey.isEmpty && rewritable(f))
-    val splitResults: Map[GraftDataFile, GraftSplitResult] =
-      if (spanning.isEmpty) Map.empty
-      else runTasks()(spec => spanning.zipWithIndex.map { case (f, i) =>
-        GraftSplitJob(rewriteInput(f, deadOf(f)), spec, i, touched)
-      })(GraftRewrite.split)
-        .fold(Map.empty[GraftDataFile, GraftSplitResult])(
-          rs => spanning.zip(rs).toMap) // identity-keyed
+    val spanning = fs.filter(_.groupKey.isEmpty)
+    val splits: Map[GraftDataFile, GraftSplitResult] = spanning.zip(
+      runTasks()(spec => spanning.zipWithIndex.map { case (f, i) =>
+        GraftSplitJob(rewriteInput(f, deadOf(f), spec), spec, i, touched)
+      })(GraftRewrite.split)).toMap // identity-keyed
     fs.foreach { f =>
       f.groupKey match {
         case Some(k) =>
           // `removed` feeds ONLY the CDC record, so a DV'd file reports
           // its live rows; a kept file keeps its identity (and its DV)
           if (touched(k)) removed ++= cdcLiveView(Vector(f)) else kept += f
-        case None => splitResults.get(f) match {
-          case Some(res) =>
-            if (res.goneRows == 0) kept += f // untouched: keep identity
-            else if (res.stayRows == 0) removed ++= cdcLiveView(Vector(f))
-            else {
-              removed ++= adoptSegments(res.gone.toSeq, tableSchema)
-              // rebuilt from live rows → the new file needs no DV
-              kept ++= adoptSegments(res.stay.toSeq, tableSchema)
-            }
-          case None =>
-            // heap files and position views split on the driver; the
-            // rows carry their identity — a split moves bytes, not ids
-            val keyOf = boundGroupKey()
-            val (rows, ids, vers) = liveEntries(Seq(f))
-            val (gone, stay) =
-              rows.indices.toArray.partition(i => touched(keyOf(rows(i))))
-            if (gone.isEmpty) kept += f
-            else {
-              removed += buildPending(rows, ids, vers)(gone)
-              if (stay.nonEmpty) kept += buildPending(rows, ids, vers)(stay)
-            }
-        }
+        case None =>
+          val res = splits(f)
+          if (res.goneRows == 0) kept += f // untouched: keep identity
+          else if (res.stayRows == 0) removed ++= cdcLiveView(Vector(f))
+          else {
+            removed ++= adopt(res.gone.toSeq, tableSchema)
+            // rebuilt from live rows → the new file needs no DV
+            kept ++= adopt(res.stay.toSeq, tableSchema)
+          }
       }
     }
     (kept.result(), removed.result())
@@ -5560,32 +5528,37 @@ class GraftTable(initialName: String, initialSchema: StructType,
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Post-commit AUTO-COMPACTION hook (`auto.compact`, Delta's
-    * autoCompact): called INSIDE the committing mutate, but it only
-    * census-checks and ENQUEUES — the rewrite itself runs on the
-    * [[GraftAutoCompact]] daemon, outside this commit's lease, so a
-    * large pending compaction never inflates an INSERT's or a
+    * autoCompact): called INSIDE the committing mutate, but on a durable
+    * table it only census-checks and ENQUEUES — the rewrite itself runs
+    * on the [[GraftAutoCompact]] daemon, outside this commit's lease, so
+    * a large pending compaction never inflates an INSERT's or a
     * streaming epoch's commit latency and never blocks concurrent
-    * commits. BEST-EFFORT by contract, like Delta's: the triggering
-    * write has already committed, so a compaction failure (or a
-    * conflict-abort against an intervening commit) surfaces as a
-    * missed maintenance pass — the next commit's hook retries — never
-    * as a failed INSERT. */
+    * commits. An in-JVM table's pass is short and in-process on its
+    * heap rows: it runs right here, so the next statement sees the
+    * compacted layout instead of racing it. BEST-EFFORT by contract,
+    * like Delta's: the triggering write has already committed, so a
+    * compaction failure (or a conflict-abort against an intervening
+    * commit) surfaces as a missed maintenance pass — the next commit's
+    * hook retries — never as a failed INSERT. */
   private def maybeAutoCompact(): Unit =
     GraftTable.autoCompactEncoded(tableSchema).foreach { enc =>
-      if (autoCompactTrigger(enc).nonEmpty &&
-          autoCompactQueued.compareAndSet(false, true)) {
-        // capture the session HERE: getActiveSession is thread-local
-        // and the daemon thread has none
-        val session = org.apache.spark.sql.SparkSession.getActiveSession
-        GraftAutoCompact.submit { () =>
-          autoCompactQueued.set(false)
-          try autoCompactPass(session)
-          catch {
-            case scala.util.control.NonFatal(e) => // retried next commit
-              System.err.println(
-                s"[graft:auto-compact] $tableName: pass skipped: $e")
-          }
+      // capture the session HERE: getActiveSession is thread-local and
+      // the daemon thread has none
+      val session = org.apache.spark.sql.SparkSession.getActiveSession
+      def pass(): Unit =
+        try autoCompactPass(session)
+        catch {
+          case scala.util.control.NonFatal(e) => // retried next commit
+            System.err.println(
+              s"[graft:auto-compact] $tableName: pass skipped: $e")
         }
+      if (autoCompactTrigger(enc).nonEmpty) {
+        if (durable.isEmpty) pass()
+        else if (autoCompactQueued.compareAndSet(false, true))
+          GraftAutoCompact.submit { () =>
+            autoCompactQueued.set(false)
+            pass()
+          }
       }
     }
 
@@ -5598,23 +5571,19 @@ class GraftTable(initialName: String, initialSchema: StructType,
     *     and bin-pack the offending groups' sub-target files with
     *     OPTIMIZE's planner ([[compactionPlan]]), snapshotting each
     *     input's delete vector.
-    *  2. REWRITE outside any lock or lease: the bins rebuild in tasks
-    *     ([[runTasks]] under the session captured at enqueue,
-    *     [[GraftRewrite.compact]] — the kernel OPTIMIZE uses, including
-    *     the per-live-group-key regroup). Concurrent commits proceed
-    *     freely.
+    *  2. REWRITE outside any lock or lease (an in-JVM table's pass runs
+    *     inside its triggering commit, see [[maybeAutoCompact]]): the
+    *     bins rebuild through [[runTasks]] under the session captured at
+    *     enqueue, with [[GraftRewrite.compact]] — the kernel OPTIMIZE
+    *     uses, including the per-live-group-key regroup. Concurrent
+    *     commits proceed freely.
     *  3. SPLICE under a second fresh lease, optimistically: if an
     *     intervening commit rewrote/removed ANY planned input, folded
     *     new deletes into one (splicing would resurrect rows the
     *     rewrite never saw deleted), or changed the schema, the
     *     compaction ABORTS — segments discarded, ingest untouched,
     *     the next commit's hook re-plans. Otherwise the new files
-    *     swap in by reference as an ordinary OPTIMIZE commit.
-    *
-    * Bins the tasks cannot take (in-JVM tables, heap files, position
-    * views, or no live session) fall back to the ordinary scoped
-    * [[optimizeCompact]] under one lease — still on the daemon thread,
-    * so the triggering commit remains unaffected. */
+    *     swap in as an ordinary OPTIMIZE commit. */
   private def autoCompactPass(
       session: Option[org.apache.spark.sql.SparkSession]): Unit = {
     final case class Plan(bins: Vector[Seq[GraftDataFile]],
@@ -5632,40 +5601,34 @@ class GraftTable(initialName: String, initialSchema: StructType,
       }
     }
     planned.foreach { p =>
-      val rewritten =
-        if (!p.bins.forall(_.forall(rewritable))) None
-        else runTasks(session)(spec => p.bins.zipWithIndex.map {
-          case (fs, i) =>
-            GraftCompactJob(fs.map(f => rewriteInput(f, p.dvSnap(f))),
-              spec.copy(schemaJson = p.schema.json), i, Nil, target)
-        })(GraftRewrite.compact)
-      rewritten match {
-        case None =>
-          val scope = p.bins.flatten
-          optimizeCompact(target, f => scope.exists(_ eq f),
-            Map("trigger" -> "auto"))
-        case Some(out) =>
-          val metas = out.toSeq.flatten
-          GraftAutoCompact.reachedSplice.foreach(_.countDown())
-          GraftAutoCompact.holdBeforeSplice.foreach(_.await())
-          val committed = mutate {
-            val inputs = p.bins.flatten
-            val schemaOk = tableSchema == p.schema
-            val present = inputs.forall(f => files.exists(_ eq f))
-            val dvsSame = inputs.forall(f => deadOf(f) == p.dvSnap(f))
-            if (!(schemaOk && present && dvsSame)) false
-            else {
-              files = files.filterNot(f => inputs.exists(_ eq f)) ++
-                adoptSegments(metas, p.schema)
-              pruneDvs()
-              snap("OPTIMIZE", params = Map("trigger" -> "auto"))
-              true
-            }
-          }
-          if (!committed) {
-            GraftAutoCompact.aborts.incrementAndGet()
-            discardSegments(metas.iterator.map(_.rel))
-          }
+      val out = runTasks(session)(spec0 => {
+        val spec = spec0.copy(schemaJson = p.schema.json)
+        p.bins.zipWithIndex.map { case (fs, i) =>
+          GraftCompactJob(fs.map(f => rewriteInput(f, p.dvSnap(f), spec)),
+            spec, i, Nil, target)
+        }
+      })(GraftRewrite.compact).toSeq.flatten
+      GraftAutoCompact.reachedSplice.foreach(_.countDown())
+      GraftAutoCompact.holdBeforeSplice.foreach(_.await())
+      val committed = mutate {
+        val inputs = p.bins.flatten
+        val schemaOk = tableSchema == p.schema
+        val present = inputs.forall(f => files.exists(_ eq f))
+        val dvsSame = inputs.forall(f => deadOf(f) == p.dvSnap(f))
+        if (!(schemaOk && present && dvsSame)) false
+        else {
+          files = files.filterNot(f => inputs.exists(_ eq f)) ++
+            adopt(out, p.schema)
+          pruneDvs()
+          snap("OPTIMIZE", params = Map("trigger" -> "auto"))
+          true
+        }
+      }
+      if (!committed) {
+        GraftAutoCompact.aborts.incrementAndGet()
+        discardSegments(out.iterator.collect {
+          case m: GraftSegmentMeta => m.rel
+        })
       }
     }
   }
@@ -5889,31 +5852,21 @@ class GraftTable(initialName: String, initialSchema: StructType,
     * bin (Right) is replaced by its live rows regrouped under
     * [[GraftRewrite.regroup]] — split by the current group key, then
     * (with `zorderCols`) z-ordered and cut into `targetRows`-row files.
-    * When every bin file is rewritable the bins rebuild in tasks, one
-    * per bin ([[runTasks]] → [[GraftRewrite.compact]]), and the driver
-    * splices references (the Delta distributed-OPTIMIZE shape — at
-    * 100 TB, rebuild cost spreads across the cluster and the driver
-    * never holds rows). Otherwise the driver twin applies the same rule
-    * to the same live rows, identities riding along. */
+    * Each bin is one [[GraftRewrite.compact]] job ([[runTasks]]),
+    * whatever its files are, and the driver adopts the outputs (the
+    * Delta distributed-OPTIMIZE shape — at 100 TB, rebuild cost spreads
+    * across the cluster and the driver never holds a durable table's
+    * rows). */
   private def runCompaction(
       planned: Vector[Either[GraftDataFile, Seq[GraftDataFile]]],
       zorderCols: Seq[String], targetRows: Int): Vector[GraftDataFile] = {
     val mergeBins = planned.collect { case Right(fs) => fs }
-    val rewritten =
-      if (!mergeBins.forall(_.forall(rewritable))) None
-      else runTasks()(spec => mergeBins.zipWithIndex.map { case (fs, i) =>
-        GraftCompactJob(fs.map(f => rewriteInput(f, deadOf(f))), spec, i,
-          zorderCols, targetRows)
-      })(GraftRewrite.compact)
-    val merged = rewritten match {
-      case Some(out) => out.iterator.map(ms => adoptSegments(ms.toSeq,
-        tableSchema))
-      case None => mergeBins.iterator.map { fs =>
-        val (rows, ids, vers) = liveEntries(fs)
-        GraftRewrite.regroup(rows, tableSchema, keyOfOpt, zorderCols,
-          targetRows).map(buildPending(rows, ids, vers))
-      }
-    }
+    val merged = runTasks()(spec => mergeBins.zipWithIndex.map {
+      case (fs, i) =>
+        GraftCompactJob(fs.map(f => rewriteInput(f, deadOf(f), spec)), spec,
+          i, zorderCols, targetRows)
+    })(GraftRewrite.compact).iterator.map(out => adopt(out.toSeq,
+      tableSchema))
     planned.flatMap {
       case Left(f) => Vector(f)
       case Right(_) => merged.next()
@@ -6936,6 +6889,24 @@ object GraftTable {
       rows.indices.iterator.filter(keep)
         .map(p => meta(rows(p), p).copy(): InternalRow).toArray
     }
+
+  /** One file as a task input — the one rule of the change feed and the
+    * rewrites: a persisted file (a position view included) is a
+    * reference to its segment, read where the task runs; any other file
+    * ships its rows, laid out in `schema`. Either way the input yields
+    * the live rows (`dead` skipped, positions never renumbered) of the
+    * `project`ed columns — every stored column when null — followed by
+    * `metaCols`. */
+  private[sources] def inputOf(f: GraftDataFile, schema: StructType,
+      dead: scala.collection.immutable.BitSet, metaCols: Seq[String],
+      project: Array[Int] = null): GraftScanPartition =
+    if (f.persisted)
+      GraftSegmentScanPartition.of(f,
+        Option(project).getOrElse(Array.range(0, f.segment.schema.length)),
+        dead.toArray, metaCols)
+    else GraftInputPartition(heapRows(f, schema,
+      Option(project).getOrElse(Array.range(0, schema.length)), dead,
+      metaCols, -1))
 
   /** Operation tag of the atomic REPLACE TABLE swap commit. Marked
     * because it is the ONE commit kind whose pre/post states do not

@@ -22,6 +22,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * `saveAsTable`). An in-JVM table keeps its data on the heap, so its
   * task ships the validated rows instead.
   *
+  * The maintenance rewrites ([[GraftRewrite]]) are one code path for
+  * both stores: every OPTIMIZE, ZORDER, REORG PURGE, auto-compaction,
+  * DROP COLUMN and copy-on-write split runs the same kernels, whatever
+  * its input files are (segments, position views or heap rows) — as
+  * Spark tasks on a durable table, on the driver thread that holds an
+  * in-JVM table's rows — and only [[GraftRewrite.write]] knows the
+  * store: a durable table's kernel writes a segment and reports its
+  * meta, an in-JVM table's hands back the rows.
+  *
   * Crash/abort safety: segment names are unique per (write, epoch,
   * partition, task), [[GraftSegmentIO.write]] lands them by atomic
   * rename, and a task abort deletes its own files. A driver crash after
@@ -63,6 +72,16 @@ final case class GraftWriteSpec(
     GraftGroupKeys.keyOf(schema, partitionCols, bucketSpec)
 }
 
+/** One output chunk of a rewrite, as [[GraftRewrite.write]] hands it
+  * to the driver: a segment the task wrote (durable tables) or the
+  * chunk's rows (in-JVM tables). */
+sealed trait GraftChunk extends Serializable
+
+/** An in-JVM table's rewrite chunk: the rows with their identity
+  * vectors (null = untracked; Mint sentinels where the commit mints). */
+final case class GraftRowsChunk(rows: Array[InternalRow], ids: Array[Long],
+    vers: Array[Long]) extends GraftChunk
+
 /** One task-written segment, as its commit message reports it: stats
   * and identity only, zero rows. Zone values are catalyst-internal
   * (UTF8String / Decimal / primitives) — all Serializable, so the
@@ -85,7 +104,7 @@ final case class GraftSegmentMeta(rel: String, rowCount: Int, bytes: Long,
     // the task already wrote the output's .rowids sidecar (every id and
     // version preserved — no driver minting needed): attach a
     // lazy-loading explicit track, ship nothing row-sized
-    trackSidecar: Boolean = false)
+    trackSidecar: Boolean = false) extends GraftChunk
 
 /** Commit message of a segment-writing task: file references + stats.
   * `schemaJson` is the layout the segments were written with (the
@@ -176,8 +195,8 @@ private[sources] object GraftReplaceDataOps {
   * row aborts the task before any segment lands, and abort removes
   * partials). At commit a durable table's rows split per partition
   * group ([[GraftRewrite.regroup]]) and land through the rewrites' one
-  * segment writer ([[GraftRewrite.write]]), which reports metadata; an
-  * in-JVM table's rows ride the message. */
+  * segment writer ([[GraftRewrite.writeSegment]]), which reports
+  * metadata; an in-JVM table's rows ride the message. */
 private[sources] final class GraftSegmentDataWriter(
     spec: GraftWriteSpec, opPrefixed: Boolean,
     partitionId: Int, taskId: Long, epochId: Long,
@@ -289,7 +308,7 @@ private[sources] final class GraftSegmentDataWriter(
             s"-t$taskId-$n.parquet"
           written += java.nio.file.Paths.get(dir).resolve(rel)
           val (ids, vers) = trackOf(idx)
-          GraftRewrite.write(spec, rel, idx.map(rows(_)), ids, vers)
+          GraftRewrite.writeSegment(spec, rel, idx.map(rows(_)), ids, vers)
         }
         GraftSegmentsMessage(spec.schemaJson, metas.toArray,
           spec.checksFingerprint)
@@ -328,11 +347,11 @@ private[sources] object GraftDeliveries {
 
 /** The Morton-curve key kernel (`OPTIMIZE ZORDER BY`): 16-bin
   * order-preserving quantization per clustering column from the
-  * SCOPE's min/max, bits interleaved. ONE implementation shared by the
-  * driver-side compaction (in-JVM tables) and the executor-side
-  * compaction tasks (durable tables), so both layouts are
-  * bit-identical. Strings quantize by their first 7 bytes big-endian —
-  * the order the zone maps' UTF8String min/max compare by. */
+  * SCOPE's min/max, bits interleaved, applied by every compaction
+  * ([[GraftRewrite.regroup]]), so an in-JVM and a durable table get
+  * bit-identical layouts. Strings quantize by their first 7 bytes
+  * big-endian — the order the zone maps' UTF8String min/max compare
+  * by. */
 private[sources] object GraftZCurve {
   import org.apache.spark.sql.types._
 
@@ -427,70 +446,78 @@ private[sources] object GraftZCurve {
   }
 }
 
-/** One executor-side compaction job: read the inputs in order, keep
-  * their live rows, regroup them by [[GraftRewrite.regroup]], write the
-  * merged segment(s) under `spec` and report metas. With `positional`
-  * the job is a schema-evolution REBUILD instead (DROP COLUMN: the
-  * input's `project` keeps the surviving ordinals) — row order and
-  * count are preserved, so delete vectors re-key by position, and it
-  * emits exactly ONE segment (1:1 file pairing). Everything is
-  * serializable DATA — the task never sees the table. */
+/** One compaction job: read the inputs in order, keep their live rows,
+  * regroup them by [[GraftRewrite.regroup]] and land each chunk through
+  * [[GraftRewrite.write]]. With `positional` the job is a
+  * schema-evolution REBUILD instead (DROP COLUMN: each input projects
+  * the surviving ordinals) — row order and count are preserved, so
+  * delete vectors re-key by position, and it emits exactly ONE chunk
+  * (1:1 file pairing). An input is any file's rows — a segment
+  * reference, a position view or heap rows ([[GraftTable.inputOf]]) —
+  * ending in (`_row_id`, `_row_commit_version`) when
+  * `spec.rowTracking`. Everything is serializable DATA — the task never
+  * sees the table. */
 private[sources] final case class GraftCompactJob(
-    segs: Seq[GraftSegmentScanPartition], spec: GraftWriteSpec,
+    inputs: Seq[GraftScanPartition], spec: GraftWriteSpec,
     binId: Int, zorderCols: Seq[String], targetRows: Int,
     positional: Boolean = false)
 
-/** Executor-side COW split of ONE group-spanning file: route each live
-  * row's group key through the partition predicate and write the
-  * touched rows (the CDC preimage, `gone`) and untouched rows (`stay`)
-  * as fresh segments. Degenerate outcomes write NOTHING — an untouched
-  * file reports zero gone rows (the driver keeps the original by
-  * reference), a wholly-touched file reports zero stay rows (the
-  * driver removes the original by reference). */
+/** COW split of ONE group-spanning file: route each live row's group
+  * key through the partition predicate and write the touched rows (the
+  * CDC preimage, `gone`) and untouched rows (`stay`) as fresh chunks.
+  * Degenerate outcomes write NOTHING — an untouched file reports zero
+  * gone rows (the driver keeps the original by reference), a
+  * wholly-touched file reports zero stay rows (the driver removes the
+  * original by reference). `input` is read as in [[GraftCompactJob]]. */
 private[sources] final case class GraftSplitJob(
-    seg: GraftSegmentScanPartition, spec: GraftWriteSpec,
+    input: GraftScanPartition, spec: GraftWriteSpec,
     binId: Int, touched: Seq[Any] => Boolean)
 
 private[sources] final case class GraftSplitResult(
     goneRows: Int, stayRows: Int,
-    gone: Array[GraftSegmentMeta], stay: Array[GraftSegmentMeta])
+    gone: Array[GraftChunk], stay: Array[GraftChunk])
 
-/** The task-side segment rewrites behind OPTIMIZE, ZORDER, REORG PURGE,
-  * auto-compaction, DROP COLUMN and the copy-on-write split — the 100 TB
-  * maintenance shape: rebuild cost spreads across the cluster and the
-  * driver handles only file references, like Delta's distributed
-  * OPTIMIZE. Every input is a [[GraftSegmentScanPartition]]; rows carry
-  * their identity from its row track; one writer lands every output. */
+/** The task-side rewrites behind OPTIMIZE, ZORDER, REORG PURGE,
+  * auto-compaction, DROP COLUMN and the copy-on-write split, for both
+  * stores — the 100 TB maintenance shape: rebuild cost spreads across
+  * the cluster and the driver handles only the outputs, like Delta's
+  * distributed OPTIMIZE. Inputs are [[GraftScanPartition]]s read through
+  * the scans' one reader; rows carry their identity in trailing
+  * metadata columns; [[write]] lands every output. */
 private[sources] object GraftRewrite {
-  /** The live rows of `inputs`, in input and position order, copied,
-    * with each row's (`_row_id`, `_row_commit_version`) when `tracking`
-    * — Mint for an untracked input, so the commit mints — and null
-    * vectors otherwise. */
-  private def liveRows(inputs: Seq[GraftSegmentScanPartition],
-      tracking: Boolean): (Array[InternalRow], Array[Long], Array[Long]) = {
+  /** The live rows of `inputs`, in input and position order — a
+    * reader's rows copied (it may reuse its buffers), heap rows by
+    * reference (an in-JVM table's versions share them) — with each
+    * row's (`_row_id`, `_row_commit_version`) when `spec.rowTracking`,
+    * taken from the rows' two trailing columns, a NULL (an untracked
+    * file) becoming Mint so the commit mints; null vectors otherwise. */
+  private def liveRows(inputs: Seq[GraftScanPartition],
+      spec: GraftWriteSpec): (Array[InternalRow], Array[Long], Array[Long]) = {
     val rows = Array.newBuilder[InternalRow]
+    val all = inputs.iterator.flatMap {
+      case g: GraftInputPartition => g.rows.iterator
+      case in => GraftPartitionReaderFactory.rowsOf(in).map(_.copy())
+    }
+    if (!spec.rowTracking) {
+      rows ++= all
+      return (rows.result(), null, null)
+    }
+    val width = spec.schema.length
+    val data = UnsafeProjection.create(spec.schema.fields.indices.map(i =>
+      BoundReference(i, spec.schema(i).dataType, nullable = true)))
     val ids = Array.newBuilder[Long]
     val vers = Array.newBuilder[Long]
-    inputs.foreach { s =>
-      val live = s.liveAt
-      val track = if (tracking) s.rowTrack else null
-      val in = GraftSegmentIO.read(java.nio.file.Paths.get(s.ref),
-        DataType.fromJson(s.schemaJson).asInstanceOf[StructType], s.project)
-      try in.zipWithIndex.foreach { case (r, p) =>
-        if (live(p)) {
-          rows += r.copy()
-          if (tracking) {
-            ids += (if (track == null) GraftRowTrack.Mint else track.idAt(p))
-            vers += (if (track == null) GraftRowTrack.Mint else track.verAt(p))
-          }
-        }
-      } finally in.close()
+    def idAt(r: InternalRow, i: Int): Long =
+      if (r.isNullAt(i)) GraftRowTrack.Mint else r.getLong(i)
+    all.foreach { r =>
+      rows += data(r).copy() // the projection reuses its row
+      ids += idAt(r, width)
+      vers += idAt(r, width + 1)
     }
-    if (tracking) (rows.result(), ids.result(), vers.result())
-    else (rows.result(), null, null)
+    (rows.result(), ids.result(), vers.result())
   }
 
-  /** The regroup rule of every compaction, task-side and on the driver:
+  /** The regroup rule of every compaction and of the writer's commit:
     * split the rows by the CURRENT group key — a legacy spanning file
     * regroups under the live spec after a partition-spec evolution, an
     * ordinary single-group bin passes through — then z-order each group
@@ -523,7 +550,7 @@ private[sources] object GraftRewrite {
     * message; with some to mint (a fresh id, or a changed row's
     * committing version) the vectors ride the message and the commit
     * mints. `ids` null = untracked, or nothing preserved. */
-  private[sources] def write(spec: GraftWriteSpec, rel: String,
+  private[sources] def writeSegment(spec: GraftWriteSpec, rel: String,
       rows: Array[InternalRow], ids: Array[Long],
       vers: Array[Long]): GraftSegmentMeta = {
     val f = GraftDataFile.build(rows, spec.schema, spec.keyOf)
@@ -539,20 +566,29 @@ private[sources] object GraftRewrite {
     } else meta.copy(trackIds = ids, trackVers = vers)
   }
 
-  /** Undo of [[write]]: the segment at `abs` and both its sidecars
-    * (each a no-op when absent). */
+  /** The rewrites' one sink, and their only store-dependent code: a
+    * durable table's chunk lands as segment `rel` ([[writeSegment]]), an
+    * in-JVM table's goes back to the driver as rows. */
+  private def write(spec: GraftWriteSpec, rel: String,
+      rows: Array[InternalRow], ids: Array[Long],
+      vers: Array[Long]): GraftChunk =
+    if (spec.tableDir.isDefined) writeSegment(spec, rel, rows, ids, vers)
+    else GraftRowsChunk(rows, ids, vers)
+
+  /** Undo of [[writeSegment]]: the segment at `abs` and both its
+    * sidecars (each a no-op when absent). */
   private[sources] def delete(abs: java.nio.file.Path): Unit = {
     java.nio.file.Files.deleteIfExists(abs)
     GraftBloomSidecar.deleteAlongside(abs)
     java.nio.file.Files.deleteIfExists(GraftRowIdSidecar.pathFor(abs))
   }
 
-  private def pick(v: Array[Long], idx: Array[Int]): Array[Long] =
+  private[sources] def pick(v: Array[Long], idx: Array[Int]): Array[Long] =
     if (v == null) null else idx.map(v(_))
 
-  def compact(job: GraftCompactJob): Array[GraftSegmentMeta] = {
+  def compact(job: GraftCompactJob): Array[GraftChunk] = {
     val spec = job.spec
-    val (rows, ids, vers) = liveRows(job.segs, spec.rowTracking)
+    val (rows, ids, vers) = liveRows(job.inputs, spec)
     val chunks =
       if (job.positional) Seq(rows.indices.toArray)
       else regroup(rows, spec.schema, spec.keyOf, job.zorderCols,
@@ -565,11 +601,11 @@ private[sources] object GraftRewrite {
 
   def split(job: GraftSplitJob): GraftSplitResult = {
     val spec = job.spec
-    val (rows, ids, vers) = liveRows(Seq(job.seg), spec.rowTracking)
+    val (rows, ids, vers) = liveRows(Seq(job.input), spec)
     val keyFn = spec.keyOf.getOrElse((_: InternalRow) => Nil: Seq[Any])
     val (gone, stay) =
       rows.indices.toArray.partition(i => job.touched(keyFn(rows(i))))
-    def side(idx: Array[Int], name: String): Array[GraftSegmentMeta] =
+    def side(idx: Array[Int], name: String): Array[GraftChunk] =
       if (gone.isEmpty || stay.isEmpty) Array.empty
       else Array(write(spec,
         s"data/spl-${spec.writeId}-b${job.binId}-$name.parquet",

@@ -15,12 +15,12 @@ class GraftBranchSpec extends SparkSpec {
 
   private def durableCatalog(name: String,
                              isolated: Boolean = false): String = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    val wh = tmpDir(s"graft-$name")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh.toString)
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)
     if (isolated)
       spark.conf.set(s"spark.sql.catalog.$name.warehouse.isolated", "true")
-    wh.toString
+    wh
   }
 
   private def reopen(name: String, wh: String): Unit = {
@@ -210,8 +210,7 @@ class GraftBranchSpec extends SparkSpec {
   test("a stream on main's change feed reads the fast-forwarded " +
       "commits as separate micro-batch versions") {
     durableCatalog("brE")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-brE-ckpt").toString
+    val ckpt = tmpDir("graft-brE-ckpt")
     spark.sql("CREATE TABLE brE.ns.t (id BIGINT, v STRING)")
     spark.sql("INSERT INTO brE.ns.t VALUES (1,'a')")
     def drain(): Seq[(String, Int, Long)] = {
@@ -281,8 +280,7 @@ class GraftBranchSpec extends SparkSpec {
       "own change feed delivers its audited commits and never main's; " +
       "writeStream lands on the branch chain only") {
     durableCatalog("brS")
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-brS-ckpt").toString
+    val ckpt = tmpDir("graft-brS-ckpt")
     spark.sql("CREATE TABLE brS.ns.t (id BIGINT, v STRING)")
     spark.sql("INSERT INTO brS.ns.t VALUES (1,'a')")
     GraftMaintenance.sql(spark,
@@ -316,8 +314,7 @@ class GraftBranchSpec extends SparkSpec {
     val mem = MemoryStream[(Long, String)]
     val wq = mem.toDF().toDF("id", "v")
       .writeStream
-      .option("checkpointLocation", java.nio.file.Files
-        .createTempDirectory("graft-brS-wr").toString)
+      .option("checkpointLocation", tmpDir("graft-brS-wr"))
       .toTable("brS.ns.`t@audit`")
     mem.addData((3L, "c"))
     wq.processAllAvailable()

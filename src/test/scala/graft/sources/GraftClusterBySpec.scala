@@ -13,10 +13,10 @@ class GraftClusterBySpec extends SparkSpec {
   import spark.implicits._
 
   private def durableCatalog(name: String): String = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    val wh = tmpDir(s"graft-$name")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh.toString)
-    wh.toString
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)
+    wh
   }
 
   private def graftTable(cat: String, t: String): GraftTable =

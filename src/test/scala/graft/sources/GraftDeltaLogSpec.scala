@@ -541,7 +541,7 @@ class GraftDeltaLogSpec extends SparkSpec {
   test("reclaim frees CAS names: parts swept as orphans can be " +
       "re-installed with real bytes on the conditional-put backend") {
     val store = new GraftLogStore.InMemoryCas
-    val dir = Files.createTempDirectory("graft-casdel")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-casdel"))
     val log = new GraftTableLog(dir, store)
     Files.createDirectories(log.ckptDir)
     // a checkpointer lands its parts then dies before the manifest

@@ -1,13 +1,16 @@
 package graft.sources
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Row, SparkSession}
 
 /** The maintenance rewrites (OPTIMIZE, ZORDER, REORG PURGE,
   * `auto.compact`, DROP COLUMN and the copy-on-write split of a
-  * group-spanning file) run on one task-side path for durable tables
-  * and on its driver twin for in-JVM tables. Both apply the same
-  * regroup rule, so one script leaves the same rows, row identities and
-  * file layout on either catalog. */
+  * group-spanning file) run the same kernels on both stores and for
+  * every kind of input file; only the sink differs (a durable table's
+  * kernel writes segments in Spark tasks, an in-JVM table's hands back
+  * rows on the driver). One script therefore leaves the same rows, row
+  * identities and file layout on either catalog, position views keep
+  * their identities and delete vectors, and a call without a session
+  * runs the same kernel in-process. */
 class GraftRewriteSpec extends graft.SparkSpec {
 
   private lazy val durableWh: String = {
@@ -175,5 +178,112 @@ class GraftRewriteSpec extends graft.SparkSpec {
       "the UPDATE did not split a spanning file in a task")
     outs.foreach(p => assert(GraftSegmentIO.driverWritesOf(p) === 0L,
       s"$p was encoded on the driver"))
+  }
+
+  /** `dst` on catalog `cat`, whose one file is a position view: the
+    * rows (2, 3) that a RESTORE of durable table `src` revived, held by
+    * its change record as a view over the insert's segment, adopted by
+    * reference; then a DELETE of row 3 puts a delete vector on the view.
+    * Returns the table and the view. */
+  private def viewTable(cat: String, src: String, dst: String)
+      : (GraftTable, GraftDataFile) = {
+    val props = "TBLPROPERTIES ('row.tracking'='true', " +
+      "'write.rowlevel.mode'='merge-on-read')"
+    Seq(s"rw_dur.ns.$src", s"$cat.ns.$dst").foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (id BIGINT, junk STRING, v STRING) $props")
+    }
+    spark.sql("SELECT id, 'x' AS junk, CAST(id AS STRING) AS v " +
+      "FROM range(1, 5)").repartition(1).writeTo(s"rw_dur.ns.$src")
+      .append() // one file
+    val srcT = table("rw_dur", src)
+    val inserted = srcT.commitHistory.map(_._1).max
+    spark.sql(s"DELETE FROM rw_dur.ns.$src WHERE id IN (2, 3)")
+    GraftMaintenance.restore(Seq("ns"), src, inserted)
+    val view = srcT.entriesUpTo(srcT.commitHistory.map(_._1).max).last
+      .added.find(_.viewSel.isDefined).get
+    val dstT = table(cat, dst)
+    dstT.adoptFiles(Vector(view), Map.empty)
+    spark.sql(s"DELETE FROM $cat.ns.$dst WHERE id = 3")
+    assert(dstT.dvCensus.nonEmpty)
+    (dstT, view)
+  }
+
+  private def viewRows(t: String): Seq[Row] = spark.sql("SELECT id, v, " +
+    s"_row_id, _row_commit_version FROM $t ORDER BY id").collect().toSeq
+
+  test("OPTIMIZE on an in-JVM table whose file is a position view keeps " +
+      "the view's rows, row identities and delete vector") {
+    durableWh
+    val (dstT, _) = viewTable("rw_heap", "hview_src", "hview_dst")
+    val before = viewRows("rw_heap.ns.hview_dst")
+    assert(before.map(_.getLong(0)) === Seq(2L))
+    assert(before ===
+      viewRows("rw_dur.ns.hview_src").filter(_.getLong(0) == 2L))
+    sql("OPTIMIZE rw_heap.ns.hview_dst")
+    assert(dstT.dataFiles.forall(_.viewSel.isEmpty) && dstT.dvCensus.isEmpty)
+    assert(viewRows("rw_heap.ns.hview_dst") === before,
+      "OPTIMIZE moved rows or identities")
+  }
+
+  test("DROP COLUMN and OPTIMIZE over a position view keep its rows, " +
+      "row identities and delete vector, reading no segment on the " +
+      "driver") {
+    durableWh
+    val dst = "rw_dur.ns.view_dst"
+    val (dstT, view) = viewTable("rw_dur", "view_src", "view_dst")
+    val base = view.segment.path
+    val before = viewRows(dst)
+    assert(before.map(_.getLong(0)) === Seq(2L))
+    val (sel, dv) = (view.viewSel, dstT.dvCensus)
+    val baseReads = GraftSegmentIO.driverReadsOf(base)
+
+    spark.sql(s"ALTER TABLE $dst DROP COLUMN junk")
+    // re-keyed as the same view over the rebuilt base segment
+    assert(dstT.dataFiles.map(_.viewSel) === Vector(sel))
+    assert(dstT.dataFiles.head.segment.path.getFileName.toString
+      .startsWith("opt-"))
+    assert(dstT.dvCensus === dv)
+    assert(viewRows(dst) === before, "DROP COLUMN moved rows or identities")
+    sql(s"OPTIMIZE $dst")
+    assert(dstT.dataFiles.forall(_.viewSel.isEmpty) && dstT.dvCensus.isEmpty)
+    assert(viewRows(dst) === before, "OPTIMIZE moved rows or identities")
+    assert(GraftSegmentIO.driverReadsOf(base) === baseReads,
+      "the view's base segment was read on the driver")
+  }
+
+  test("optimizeCompact without an active session runs the same kernel " +
+      "in-process: same rows and ids, opt-* segments") {
+    durableWh
+    def load(name: String): GraftTable = {
+      val t = s"rw_dur.ns.$name"
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (id BIGINT, p INT, v STRING) " +
+        "PARTITIONED BY (p) TBLPROPERTIES ('row.tracking'='true')")
+      Seq("(1, 1, 'a'), (2, 2, 'b')", "(3, 1, 'c')", "(4, 2, 'd')")
+        .foreach(rows => spark.sql(s"INSERT INTO $t VALUES $rows"))
+      table("rw_dur", name)
+    }
+    val withSession = load("nosess_a")
+    val without = load("nosess_b")
+    SparkSession.setActiveSession(spark)
+    withSession.optimizeCompact(1000)
+    var failure: Option[Throwable] = None
+    val th = new Thread(() => {
+      SparkSession.clearActiveSession()
+      try without.optimizeCompact(1000)
+      catch { case e: Throwable => failure = Some(e) }
+    })
+    th.start()
+    th.join()
+    failure.foreach(throw _)
+    assert(identityRows("rw_dur.ns.nosess_b") ===
+      identityRows("rw_dur.ns.nosess_a"))
+    Seq(withSession, without).foreach { t =>
+      assert(t.dataFiles.length === 2)
+      t.dataFiles.foreach(f => assert(
+        f.segment.path.getFileName.toString.startsWith("opt-"),
+        s"${f.segment.path} is not a compaction output"))
+    }
   }
 }

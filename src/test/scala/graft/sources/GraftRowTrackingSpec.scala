@@ -134,8 +134,7 @@ class GraftRowTrackingSpec extends graft.SparkSpec {
     spark.sql(s"UPDATE $t SET v = 'u' WHERE id = 1")
     val got = java.util.Collections.synchronizedList(
       new java.util.ArrayList[(String, Long, Long)]())
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("ckpt-rt-cdf").toString
+    val ckpt = tmpDir("ckpt-rt-cdf")
     val q = spark.readStream.table(s"rt_cat.ns.`t_rt_stream$$changes`")
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -184,7 +183,7 @@ class GraftRowTrackingSpec extends graft.SparkSpec {
   }
 
   private def tmpWh(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
+    tmpDir(tag)
 
   private def durableCatalog(name: String, dir: String,
       isolated: Boolean = false): Unit = {

@@ -470,7 +470,7 @@ class GraftSqlCommandsSpec extends SparkSpec {
 
   test("t$history parameters: operations record what they were ASKED " +
       "to do, and the record survives a restart fold") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-opparams")
+    val wh = tmpDir("graft-opparams")
     spark.conf.set("spark.sql.catalog.prm", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.prm.warehouse", wh.toString)
     val t = "prm.ns.t"
@@ -513,11 +513,11 @@ class GraftSqlCommandsSpec extends SparkSpec {
   test("COPY INTO and PUBLISH record their full ask in t$history " +
       "parameters: source/fileformat/pattern/force, and the pinned " +
       "source version") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-opparams2")
+    val wh = tmpDir("graft-opparams2")
     spark.conf.set("spark.sql.catalog.prc", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.prc.warehouse", wh.toString)
     spark.sql("CREATE TABLE prc.ns.t_prms (n BIGINT)")
-    val src = java.nio.file.Files.createTempDirectory("graft-opparams2-src")
+    val src = tmpDir("graft-opparams2-src")
     spark.range(3).selectExpr("id AS n").coalesce(1)
       .write.parquet(s"$src/b1")
     def lastParams(t: String): String =

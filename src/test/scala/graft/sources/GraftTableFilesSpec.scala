@@ -413,7 +413,7 @@ class GraftTableFilesSpec extends SparkSpec {
 
   test("metadata columns on the durable lakehouse: lazy time travel and " +
       "the t$changes feed (derived files) serve addresses executor-side") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-metacdc")
+    val wh = tmpDir("graft-metacdc")
     spark.conf.set("spark.sql.catalog.mcdc", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.mcdc.warehouse", wh.toString)
     val t = "mcdc.ns.t"

@@ -12,10 +12,10 @@ class GraftViewSpec extends SparkSpec {
   import spark.implicits._
 
   private def durableCatalog(name: String): String = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft-$name")
+    val wh = tmpDir(s"graft-$name")
     spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh.toString)
-    wh.toString
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)
+    wh
   }
 
   private def reopen(name: String, wh: String): Unit = {
